@@ -13,13 +13,6 @@ object Bench {
   private def num(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", v)
 
-  /** Render the two-line stdout protocol from per-key outcomes.
-    * Right(seconds) = timed success; Left(message) = the key FAILED —
-    * it appears in the `errors` map, is excluded from the total, and is
-    * counted in `n_errors`. Before this channel existed a broken key
-    * swallowed its exception and benched as a small positive time — the
-    * r5 incident where a regression hid inside a "fast" number.
-    */
   /** Per-key merge across repeated passes: keep the MIN time of any
     * successful run (sandbox weather only ever ADDS time — r8/r9 both
     * burned a judge cycle re-litigating between-session machine-load
@@ -74,6 +67,13 @@ object Bench {
     def results: Seq[(String, Either[String, Double])] = best.toSeq
   }
 
+  /** Render the two-line stdout protocol from per-key outcomes.
+    * Right(seconds) = timed success; Left(message) = the key FAILED —
+    * it appears in the `errors` map, is excluded from the total, and is
+    * counted in `n_errors`. Before this channel existed a broken key
+    * swallowed its exception and benched as a small positive time — the
+    * r5 incident where a regression hid inside a "fast" number.
+    */
   private[graft] def renderLines(
       results: Seq[(String, Either[String, Double])],
       sfDir: String,
@@ -96,52 +96,56 @@ object Bench {
     (line1, line2)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's core count: a benchmark main that silently
-    // runs on 4 threads when the env var is absent reports 3-8x-slow
-    // numbers that look like regressions
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warm-up at the smallest sf: JVM/codegen/parquet-footer costs
-    // are one-off session costs, not per-query costs
+  /** Untimed warm-up at the smallest sf: JVM/codegen/parquet-footer
+    * costs are one-off session costs, not per-query costs. A failure goes
+    * to stderr (stdout is the protocol): a silently skipped warm-up
+    * inflates the first measured key. */
+  private[graft] def warmUp(spark: SparkSession): Unit =
     try {
       SparkEntry.queries("c1_join_broadcast")(spark, "/root/testdata/sf0.001").count()
       SparkEntry.queries("e1_win_rank")(spark, "/root/testdata/sf0.001").count()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[warmup] failed, the first key runs cold: ${errorText(e)}")
+    }
+
+  // first line of the exception is the actionable part
+  private def errorText(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: " +
+      Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200)
+
+  /** One key, timed the bench's way: count the result, then drop its
+    * persist()ed blocks BEFORE taking the time, so the unpersist cost is
+    * counted against the query that cached — fair, since a lone run
+    * would pay it too — and the suite's memory footprint stays flat.
+    * Returns Right(rows) or Left(error text), and the seconds. */
+  private[graft] def timeKey(spark: SparkSession, key: String,
+      sfDir: String): (Either[String, Long], Double) = {
+    val t0 = System.nanoTime()
+    val outcome =
+      try Right(SparkEntry.queries(key)(spark, sfDir).count())
+      catch { case e: Throwable =>
+        // the full stack goes to stderr so the stdout protocol stays two-line
+        e.printStackTrace()
+        Left(errorText(e))
+      }
+    spark.catalog.clearCache()
+    (outcome, (System.nanoTime() - t0) / 1e9)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Sessions.local(Sessions.cpus())
+    warmUp(spark)
     // r9 judge protocol: two back-to-back passes, per-key MIN recorded,
     // so round-over-round diffs stop absorbing sandbox weather
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2")
       .toInt.max(1)
     val emitter = new Emitter(sfDir, repeats)
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    for (_ <- 1 to repeats; (name, fn) <- sorted) {
-      val t0 = System.nanoTime()
-      val outcome =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          // first line of the exception is the actionable part; the full
-          // stack goes to stderr so the stdout protocol stays two-line
-          e.printStackTrace()
-          Some(s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator
-              .take(1).mkString.take(200))
-        }
-      // drop per-query persist()ed blocks BEFORE taking the time, so the
-      // unpersist cost is counted against the query that cached — fair,
-      // since a lone run would pay it too — and the suite's memory
-      // footprint stays flat
-      spark.catalog.clearCache()
-      val dt = (System.nanoTime() - t0) / 1e9
+    for (_ <- 1 to repeats; name <- SparkEntry.queries.keys.toSeq.sorted) {
+      val (outcome, dt) = timeKey(spark, name, sfDir)
       // print the protocol pair NOW (kill-survivability — see Emitter):
       // a SIGTERM between keys leaves the last complete pair in the tail
-      val (line1, line2) = emitter.record(name, outcome.toLeft(dt))
+      val (line1, line2) = emitter.record(name, outcome.map(_ => dt))
       println(line1)
       println(line2)
       Console.out.flush()

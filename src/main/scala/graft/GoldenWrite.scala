@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 
 /** Regenerate the golden manifest: per-key row count + MD5 over the
   * ordered row text of every query at sf0.001.
@@ -34,13 +33,8 @@ object GoldenWrite {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else defaultPath
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores: the width the manifest was made at, and SparkSpec's
+    val spark = Sessions.local(4)
     val entries = SparkEntry.all.sortBy(_.key).map { d =>
       val (n, h) = rowsHash(d.fn(spark, sfDir))
       spark.catalog.clearCache() // drop per-query persist()ed blocks

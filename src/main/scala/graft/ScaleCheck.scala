@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale audit: materialize a k×-scaled copy of the corpus
   * (union of k id-shifted copies, written as multi-file parquet) and
   * compare per-query wall-clock against the base — a query whose cost is
-  * linear shows ratio ≈ k on 32 cores; anything super-linear is a bug the
+  * linear shows ratio ≈ k; anything super-linear is a bug the
   * 100 TB deployment would hit.
   *
   * Id shifts are large (1e7) so banded self-joins do not pair across
@@ -72,13 +72,7 @@ object ScaleCheck {
       "a21_verdict_snapshot")
     val out = s"/tmp/graft_scale_${k}x"
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus())
 
     // ids are shifted per copy; text is SALTED per copy (one appended
     // token) so content-hash pipelines (minhash/simhash/fingerprints) do
@@ -123,17 +117,13 @@ object ScaleCheck {
     }
     println(s"[scale] wrote ${k}x corpus to $out")
 
-    def time(fn: => Long): Double = {
-      val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
-    }
-    // warm-up
-    SparkEntry.queries("d1_agg_group")(spark, base).count()
+    Bench.warmUp(spark)
     println(f"${"key"}%-22s ${"base_s"}%8s ${"scaled_s"}%9s ${"ratio"}%6s  (k=$k)")
     for (key <- keys) {
-      val fn = SparkEntry.queries(key)
-      val tb = time(fn(spark, base).count())
-      val ts = time(fn(spark, out).count())
-      println(f"$key%-22s $tb%8.2f $ts%9.2f ${ts / tb}%6.1f")
+      val (b, tb) = Bench.timeKey(spark, key, base)
+      val (s, ts) = Bench.timeKey(spark, key, out)
+      val err = Seq(b, s).collectFirst { case Left(e) => e }
+      println(err.fold(f"$key%-22s $tb%8.2f $ts%9.2f ${ts / tb}%6.1f")(e => s"$key FAILED $e"))
     }
     spark.stop()
   }

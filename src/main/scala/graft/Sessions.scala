@@ -1,0 +1,34 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one SparkSession factory for every graft main and the test suites.
+  *
+  * Every session is `local[cores]` with one shuffle partition per core,
+  * UTC, the UI off, WARN logging and a per-process warehouse under
+  * `/tmp/graft_wh/<pid>` (so two JVMs never share `spark-warehouse/`).
+  * The width is the only thing a caller chooses: the golden manifest and
+  * the test suites pin 4, Verify defaults to 4 (the driver's contract),
+  * and Bench, Probe and ScaleCheck default to the machine's cores.
+  */
+object Sessions {
+
+  /** Core count from `SPARK_GRAFT_CPUS`, else `fallback` (the machine's
+    * cores): a benchmark main that silently runs on 4 threads when the
+    * env var is absent reports 3-8x-slow numbers that look like
+    * regressions. */
+  def cpus(fallback: Int = Runtime.getRuntime.availableProcessors): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(fallback)
+
+  def local(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", sources.TmpDirs.perPidRoot("graft_wh"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

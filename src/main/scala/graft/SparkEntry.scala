@@ -28,12 +28,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("d1_agg_group")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Built once:
+    * the harnesses and specs look it up once per key. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(d => d.key -> d.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     all.flatMap(d => d.oracle.map(d.key -> _)).toMap
 }

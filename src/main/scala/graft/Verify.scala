@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,30 @@ object Verify {
     // without sweeping all ~130 (the driver never passes them).
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(fallback = 4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        val failure =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(name)
+          }
+        // queries may persist() intermediates for intra-query reuse; drop
+        // them here so cached blocks don't accumulate across the full suite
+        spark.catalog.clearCache()
+        failure
       }
-      // queries may persist() intermediates for intra-query reuse; drop
-      // them here so cached blocks don't accumulate across the full suite
-      spark.catalog.clearCache()
-    }
+    // a missing parquet is never silent: every failing key, one a line,
+    // and an empty file when all succeed. The leading `_` makes
+    // Hadoop-style directory readers skip it.
+    Files.writeString(Paths.get(s"$outDir/_failed_keys.txt"),
+      failed.map(_ + "\n").mkString)
     // a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness —
     // Protocol holds the one escape rule shared with Bench's stdout lines

@@ -1505,7 +1505,7 @@ object EventTime {
 
   // distinct in-memory sink per streaming-key invocation (all five
   // graded streaming keys share the counter): a memory-sink query name is
-  // a registered temp view, and a re-run (RunOne's two timed passes, a
+  // a registered temp view, and a re-run (Probe's two timed passes, a
   // bench after a verify in one JVM) must not collide with a finished
   // query's still-registered table
   private val streamSinkRuns = new java.util.concurrent.atomic.AtomicLong(0)
@@ -1560,7 +1560,7 @@ object EventTime {
     * it unloads EVERY loaded provider and kills the shared maintenance
     * thread, so a concurrent streaming query in the same JVM would have
     * its state yanked mid-run. Safe here because the h34–h42 keys run
-    * strictly sequentially (Bench/Verify/RunSeq are single-threaded and
+    * strictly sequentially (Bench/Verify/Probe are single-threaded and
     * the test suites drive one stream at a time — the same documented
     * contract as Components.lastRunNonEmptyRounds); a multi-tenant
     * deployment would scope the unload to the drained query's providers
@@ -1807,8 +1807,8 @@ object EventTime {
   // h34–h38 family: the staged events landing dir is drained as a
   // multi-micro-batch file stream (maxFilesPerTrigger=1) whose foreachBatch
   // sink appends each batch to a REAL parquet table through
-  // StreamingJobs.idempotentAppend (dynamic overwrite of the batch's own
-  // batch_id partition — a20's write discipline on the stream side). The
+  // StreamingJobs.idempotentAppend (a plain overwrite written straight
+  // into the batch's own batch_id= directory). The
   // graded row then DELIBERATELY RETRIES the last batch — re-appending the
   // same rows under the same batchId, exactly what Spark does after a sink
   // failure — before aggregating the table into h1's tumbling report

@@ -1828,7 +1828,7 @@ object Dedup {
     // stage 1: per-shard truncated suffix array → run-boundary tuples.
     // Consumed by both stage-2 rounds; Spark's ReusedExchange dedupes
     // the identical subtree, so the text shards once and the suffix
-    // arrays build once per action (verified with ShuffleAudit — an
+    // arrays build once per action (verified with Probe — an
     // eager checkpoint here changes no shuffle byte, only adds cost).
     val runs = docs.select($"doc_id", $"text").as[(Long, String)]
       .mapPartitions(SuffixDup.shardRuns).toDF()

@@ -97,14 +97,19 @@ object StreamingJobs {
     * the production write discipline h34–h38's memory sinks stand in
     * for. Structured Streaming guarantees each batchId is REPLAYED with
     * the same data after a failure, so exactly-once reduces to making
-    * the per-batch write idempotent: every batch lands under its own
-    * `batch_id=<id>` partition via DYNAMIC partition overwrite (a20's
-    * mechanism applied to the stream side) — a retried batch replaces
-    * its own partition instead of appending duplicates, and batches
-    * never touch each other's partitions. At 100 TB the same call
-    * writes a partitioned landing table; downstream readers just prune
-    * on their own predicates (batch_id is a physical idempotency key,
-    * not a query key).
+    * the per-batch write idempotent: every batch is written with a plain
+    * overwrite straight into its own `batch_id=<id>` directory — a
+    * retried batch replaces its own partition instead of appending
+    * duplicates, and batches never touch each other's partitions. At
+    * 100 TB the same call writes a partitioned landing table; downstream
+    * readers just prune on their own predicates (batch_id is a physical
+    * idempotency key, not a query key).
+    *
+    * Failure window: the overwrite deletes the directory before it
+    * writes, so while the write runs the partition is empty or partial
+    * to a concurrent reader, and after a crash mid-write it stays so
+    * until the batch is replayed. An empty batch still creates its (empty)
+    * `batch_id=<id>` directory.
     */
   def idempotentAppend(batch: DataFrame, batchId: Long,
       tablePath: String): Unit =

@@ -1528,4 +1528,28 @@ class PropertySpec extends SparkSpec {
       assert(r.getLong(3) <= r.getLong(4), "first_doc <= last_doc")
     }
   }
+
+  test("two-pass bucketed vocab rank equals the one-pass global " +
+      "row_number() rank, both ways, on a Zipf table with tied tails") {
+    import org.apache.spark.sql.expressions.Window
+    // Zipf-ish: n = V div (id + 1) — a long head and heavy ties in the
+    // tail, where many tokens share one log2(n) bucket (the two-pass
+    // rank's hardest case)
+    val v = 20000L
+    val freq = spark.range(v)
+      .select(concat(lit("tok_"), lpad(col("id").cast("string"), 9, "0"))
+        .as("token"),
+        (lit(v) / (col("id") + 1)).cast("long").as("n"))
+    val onePass = freq.select(col("token"),
+      (row_number().over(Window.orderBy(col("n").desc, col("token"))) - 1)
+        .cast("bigint").as("token_id"),
+      col("n"))
+    val twoPass = pipeline.TextAnalysis.rankTokens(freq)
+    // exceptAll in BOTH directions plus equal counts: a one-way except
+    // passes when the two-pass rank drops or duplicates rows
+    assert(twoPass.exceptAll(onePass).count() === 0L)
+    assert(onePass.exceptAll(twoPass).count() === 0L)
+    assert(twoPass.count() === v)
+    assert(onePass.count() === v)
+  }
 }

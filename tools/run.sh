@@ -14,5 +14,5 @@ done
 exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CP" "$@"
