@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryDef.{benchOnly, graded}
+import graft.pipeline.Tokens
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -225,7 +226,7 @@ object Aggregates {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"doc_id",
-        array_join(sort_array(array_distinct(split($"text", " "))), "|").as("uniq_toks"))
+        array_join(sort_array(array_distinct(Tokens.words($"text"))), "|").as("uniq_toks"))
       .orderBy("doc_id")
   }
 
@@ -1912,8 +1913,7 @@ object Aggregates {
       |ORDER BY cnt DESC, token""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val k = 200
-    val toks = Tables.documentsDist(spark, dir)
-      .select(explode(split($"text", " ")).as("token"))
+    val toks = Tokens.docWords(Tables.documentsDist(spark, dir), "token", Nil)
     // the total token count rides the SAME pass as the sketch (a wrapped
     // counting iterator + one (null, n_p) row per partition), so the
     // corpus is scanned exactly TWICE — once for the sketch, once for

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryDef.graded
+import graft.pipeline.Tokens
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -240,7 +241,7 @@ object Reports {
     import spark.implicits._
     Tables.documentsDist(spark, dir)
       .select($"lang", md5($"text").as("fp"),
-        size(split($"text", " ")).cast("bigint").as("nt"),
+        size(Tokens.words($"text")).cast("bigint").as("nt"),
         length($"text").cast("bigint").as("nc"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -340,9 +341,8 @@ object Reports {
   // per-lang counts are 5-key aggregates — nothing global anywhere.
   private val r8 = graded(
     "r8_report_curation_funnel", {
-      val stopIn = graft.pipeline.TextAnalysis.stopSqlIn
-      val stopList = graft.pipeline.TextAnalysis.stopList
-        .map(w => s"'$w'").mkString("[", ", ", "]")
+      val stopIn = Tokens.stopSqlIn
+      val stopList = Tokens.stopSqlList
       s"""WITH base AS (
          |  SELECT doc_id, lang, text FROM documents),
          |ex AS (
@@ -393,8 +393,6 @@ object Reports {
          |ORDER BY b.lang""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    val stopArr = array(graft.pipeline.TextAnalysis.stopList.map(lit): _*)
-    val inList = graft.pipeline.TextAnalysis.stopSqlIn
     val base = Tables.documentsDist(spark, dir)
       .select($"doc_id", $"lang", $"text")
     val wExact = Window.partitionBy(md5($"text")).orderBy($"doc_id")
@@ -405,22 +403,10 @@ object Reports {
     val wNorm = Window.partitionBy(normKey).orderBy($"doc_id")
     val norm = exact.withColumn("rn", row_number().over(wNorm))
       .where($"rn" === 1).drop("rn")
-    val qual = norm
-      .withColumn("n_words", size(split($"text", " ")).cast("double"))
-      .withColumn("n_stop",
-        expr(s"size(filter(split(text, ' '), t -> t IN $inList))")
-          .cast("double"))
-      .withColumn("n_uniq",
-        size(array_distinct(split($"text", " "))).cast("double"))
-      .withColumn("q",
-        lit(0.4) * least($"n_words" / 50.0, lit(1.0))
-          + lit(0.3) * least(lit(10.0) * $"n_stop" / $"n_words", lit(1.0))
-          + lit(0.3) * ($"n_uniq" / $"n_words"))
-      .where($"q" >= 0.5)
+    val qual = Tokens.withQuality(norm).where($"q" >= 0.5)
     val lid = qual
-      .withColumn("tk", array_distinct(split($"text", " ")))
-      .withColumn("sc", size(array_intersect($"tk", stopArr)).cast("double")
-        / size($"tk").cast("double"))
+      .withColumn("tk", array_distinct(Tokens.words($"text")))
+      .withColumn("sc", Tokens.langScore($"tk"))
       .withColumn("pred", when($"sc" >= 0.05, "en").otherwise("other"))
       .where(($"lang" === "en") === ($"pred" === "en"))
     def cnt(df: org.apache.spark.sql.DataFrame, name: String) =
@@ -551,11 +537,7 @@ object Reports {
       |ORDER BY bucket""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val q = Tables.documents(spark, dir)
-      .select($"doc_id",
-        (lit(0.5) * least(size(split($"text", " ")).cast("double") / 50.0,
-          lit(1.0))
-          + lit(0.5) * (size(array_distinct(split($"text", " "))).cast("double")
-            / size(split($"text", " ")).cast("double"))).as("q"),
+      .select($"doc_id", Tokens.qualityLenUniq(Tokens.nWords, Tokens.nUniq).as("q"),
         ($"doc_id" % 2 === 0).as("is_ref"))
     val c = q
       .select(least(floor($"q" * 10).cast("bigint"), lit(9L)).as("bucket"),
@@ -617,7 +599,7 @@ object Reports {
     import spark.implicits._
     val tok = Tables.documents(spark, dir)
       .select($"lang", $"doc_id", md5($"text").as("h"),
-        size(split($"text", " ")).cast("bigint").as("n_tok"))
+        size(Tokens.words($"text")).cast("bigint").as("n_tok"))
     val dup = tok.groupBy($"h").agg(count(lit(1)).cast("bigint").as("nh"))
     val base = tok.join(dup, "h")
       .groupBy($"lang")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryDef.graded
+import graft.pipeline.Tokens
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -175,8 +176,7 @@ object SortSetScalar {
       |GROUP BY word
       |ORDER BY word""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(explode(split($"text", " ")).as("word"))
+    Tokens.docWords(Tables.documents(spark, dir), keys = Nil)
       .groupBy($"word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")

@@ -81,15 +81,9 @@ object Curation {
       |WHERE d.doc_id >= 50
       |ORDER BY d.doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // short-doc guard: Spark's sequence(1, n<1) descends instead of being
-    // empty (g18 lesson) — sub-13-token docs contribute no grams
     val grams = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t")) // tokenize once
-      .select($"doc_id", explode(expr(
-        """CASE WHEN size(t) >= 13 THEN
-          |  transform(sequence(1, size(t) - 12),
-          |    i -> array_join(slice(t, i, 13), ' '))
-          |ELSE cast(array() as array<string>) END""".stripMargin)).as("gr"))
+      .select($"doc_id", Tokens.words($"text").as("t"))
+      .select($"doc_id", explode(Tokens.window13("t")).as("gr"))
     val bench = grams.where($"doc_id" < 50).select($"gr").distinct()
     val hits = grams.where($"doc_id" >= 50)
       .join(broadcast(bench), "gr")
@@ -179,7 +173,7 @@ object Curation {
       |ORDER BY w""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val tok = Tables.documentsDist(spark, dir)
-      .select(size(split($"text", " ")).cast("bigint").as("n"))
+      .select(size(Tokens.words($"text")).cast("bigint").as("n"))
     val ws = Seq(128L, 512L, 2048L).toDF("w")
     tok.crossJoin(broadcast(ws))
       .withColumn("wins", expr("(n + w - 1) div w"))
@@ -219,7 +213,7 @@ object Curation {
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val t = Tables.documents(spark, dir)
-      .select($"doc_id", size(split($"text", " ")).cast("bigint").as("n_tok"),
+      .select($"doc_id", size(Tokens.words($"text")).cast("bigint").as("n_tok"),
         expr("doc_id div 1000").as("rng"))
     // pass 1: cumsum WITHIN each id range (parallel across ranges)
     val wLocal = Window.partitionBy($"rng").orderBy($"doc_id")
@@ -320,7 +314,7 @@ object Curation {
   // aggregate; the quality signals are per-row projections.
   private val g39 = graded(
     "g39_source_report", {
-      val inList = TextAnalysis.stopSqlIn
+      val inList = Tokens.stopSqlIn
       s"""WITH f AS (
       |  SELECT doc_id, source, md5(text) AS fp,
       |    len(string_split(text, ' '))::DOUBLE AS n_words,
@@ -345,19 +339,14 @@ object Curation {
       |ORDER BY source""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    val inList = TextAnalysis.stopSqlIn
     val f = Tables.documentsDist(spark, dir)
       .select($"doc_id", $"source", md5($"text").as("fp"),
-        size(split($"text", " ")).cast("double").as("n_words"),
-        expr(s"size(filter(split(text, ' '), t -> t IN $inList))")
-          .cast("double").as("n_stop"),
-        size(array_distinct(split($"text", " "))).cast("double").as("n_uniq"))
+        Tokens.nWords.as("n_words"),
+        Tokens.stopHits.cast("double").as("n_stop"),
+        Tokens.nUniq.as("n_uniq"))
     val d = f.groupBy($"fp").agg(count(lit(1)).as("n_same"))
     f.join(d, "fp")
-      .withColumn("q",
-        lit(0.4) * least($"n_words" / 50.0, lit(1.0))
-          + lit(0.3) * least(lit(10.0) * $"n_stop" / $"n_words", lit(1.0))
-          + lit(0.3) * ($"n_uniq" / $"n_words"))
+      .withColumn("q", Tokens.quality)
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         count(when($"n_same" > 1, 1)).as("n_dup_docs"),
@@ -411,14 +400,10 @@ object Curation {
     val s = Tables.documentsDist(spark, dir)
       .withColumn("h",
         conv(substring(md5($"text"), 1, 8), 16, 10).cast("bigint") % 100)
-      .select($"doc_id", split($"text", " ").as("t"),
+      .select($"doc_id", Tokens.words($"text").as("t"),
         when($"h" < 80, "train").when($"h" < 90, "val")
           .otherwise("test").as("split"))
-    val g = s.select($"doc_id", $"split", explode(expr(
-      """CASE WHEN size(t) >= 13 THEN
-        |  transform(sequence(1, size(t) - 12),
-        |    i -> array_join(slice(t, i, 13), ' '))
-        |ELSE cast(array() as array<string>) END""".stripMargin)).as("gr"))
+    val g = s.select($"doc_id", $"split", explode(Tokens.window13("t")).as("gr"))
     val ev = g.where($"split" =!= "train")
       .select($"split".as("eval_split"), $"gr").distinct()
     val tr = g.where($"split" === "train")
@@ -463,7 +448,7 @@ object Curation {
       |ORDER BY doc_id, chunk_i""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
+      .select($"doc_id", Tokens.words($"text").as("t"))
       .withColumn("n", size($"t"))
       // `div` yields BIGINT — both sequence bounds must agree on the type
       .withColumn("i", explode(expr(
@@ -641,7 +626,7 @@ object Curation {
       |FROM c ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
+      .select($"doc_id", Tokens.words($"text").as("t"))
       .withColumn("n_tok", size($"t").cast("bigint"))
       .withColumn("corrupted", expr(
         """filter(
@@ -697,7 +682,7 @@ object Curation {
     val l = Tables.documents(spark, dir)
       .groupBy($"lang")
       .agg(count(lit(1)).cast("bigint").as("n_docs"),
-        sum(size(split($"text", " "))).cast("bigint").as("n_tok"))
+        sum(size(Tokens.words($"text"))).cast("bigint").as("n_tok"))
     val w = l.withColumn("wt",
       floor(sqrt($"n_tok".cast("double"))).cast("bigint"))
     val t = w.agg(sum($"wt").cast("bigint").as("wt_sum"))
@@ -746,11 +731,8 @@ object Curation {
     import spark.implicits._
     val m = Tables.documents(spark, dir)
       .select($"doc_id", $"source",
-        size(split($"text", " ")).cast("double").as("n_words"),
-        size(array_distinct(split($"text", " "))).cast("double").as("n_uniq"))
-    val q = m.withColumn("q",
-      lit(0.5) * least($"n_words" / 50.0, lit(1.0))
-        + lit(0.5) * ($"n_uniq" / $"n_words"))
+        Tokens.nWords.as("n_words"), Tokens.nUniq.as("n_uniq"))
+    val q = m.withColumn("q", Tokens.qualityLenUniq($"n_words", $"n_uniq"))
     q.withColumn("rk", row_number().over(
         Window.partitionBy($"source").orderBy($"q".desc, $"doc_id")))
       .where($"rk" <= CapPerSource)
@@ -803,7 +785,7 @@ object Curation {
   // a 6-cell aggregate; the 1-row corpus total crosses (allowlisted).
   private val g82 = graded(
     "g82_quality_dup_matrix", {
-      val inList = TextAnalysis.stopSqlIn
+      val inList = Tokens.stopSqlIn
       s"""WITH q AS (
       |  SELECT doc_id,
       |    0.4 * least(len(string_split(text, ' ')) / 50.0, 1.0)
@@ -840,18 +822,8 @@ object Curation {
       |ORDER BY bucket, is_neardup""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    val inList = TextAnalysis.stopSqlIn
-    val q = Tables.documentsDist(spark, dir)
-      .withColumn("n_words", size(split($"text", " ")).cast("double"))
-      .withColumn("n_stop",
-        expr(s"size(filter(split(text, ' '), t -> t IN $inList))")
-          .cast("double"))
-      .withColumn("n_uniq",
-        size(array_distinct(split($"text", " "))).cast("double"))
-      .select($"doc_id",
-        (lit(0.4) * least($"n_words" / 50.0, lit(1.0))
-          + lit(0.3) * least(lit(10.0) * $"n_stop" / $"n_words", lit(1.0))
-          + lit(0.3) * ($"n_uniq" / $"n_words")).as("qv"))
+    val q = Tokens.withQuality(Tables.documentsDist(spark, dir))
+      .select($"doc_id", $"q".as("qv"))
     // the shared ≥0.9-Jaccard pair table (snapshot-served after a21,
     // g2's banded kernel inline otherwise)
     val pairs = Dedup.jaccPairs(spark, dir)

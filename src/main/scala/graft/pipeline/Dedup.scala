@@ -77,8 +77,7 @@ object Dedup {
     // strings; the corpus vocabulary is 31 words, so 64-bit collisions are
     // impossible in practice). |A∪B| = |A|+|B|−|A∩B| (arrays distinct).
     val toks = Tables.documentsDist(spark, dir)
-      .select($"doc_id", sort_array(array_distinct(
-        expr("transform(split(text, ' '), w -> xxhash64(w))"))).as("tk"))
+      .select($"doc_id", Tokens.hashedSet.as("tk"))
       .persist() // read by both join sides; avoids recomputing the hash+sort
     val a = toks.select($"doc_id".as("doc_a"), $"tk".as("tk_a"))
     val b = toks.select($"doc_id".as("doc_b"), $"tk".as("tk_b"))
@@ -165,7 +164,7 @@ object Dedup {
   private val g3 = benchOnly("g3_minhash_lsh") { (spark, dir) =>
     import spark.implicits._
     val toks = Tables.documentsDist(spark, dir)
-      .select($"doc_id", array_distinct(split($"text", " ")).as("tk"))
+      .select($"doc_id", array_distinct(Tokens.words($"text")).as("tk"))
     val verified = lshVerifiedEdges(toks)
     // exact connected components over the verified edges
     // ([[graft.operators.Components]]: neighbor-min propagation + multi-
@@ -235,7 +234,7 @@ object Dedup {
     }) { (spark, dir) =>
     import spark.implicits._
     val tok = Tables.documents(spark, dir)
-      .select($"doc_id", explode(array_distinct(split($"text", " "))).as("word"))
+      .select($"doc_id", explode(array_distinct(Tokens.words($"text"))).as("word"))
     val hashed = tok.withColumn("h", conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
     val mins = mhAB.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
@@ -327,7 +326,7 @@ object Dedup {
   private def simhashSig(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     import spark.implicits._
     val tok = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(array_distinct(split($"text", " "))).as("word"))
+      .select($"doc_id", explode(array_distinct(Tokens.words($"text"))).as("word"))
     val hh = tok
       .withColumn("m", md5($"word"))
       .withColumn("h1", conv(substring($"m", 1, 8), 16, 10).cast("bigint"))
@@ -519,8 +518,7 @@ object Dedup {
     // after every key) — a long-lived-session caller reads a21's parquet
     // snapshot via jaccPairs() instead, which never takes this inline path
     val toks = Tables.documentsDist(spark, dir)
-      .select($"doc_id", sort_array(array_distinct(
-        expr("transform(split(text, ' '), w -> xxhash64(w))"))).as("tk"))
+      .select($"doc_id", Tokens.hashedSet.as("tk"))
       .persist()
     val a = toks.select($"doc_id".as("doc_a"), $"tk".as("tk_a"))
     val b = toks.select($"doc_id".as("doc_b"), $"tk".as("tk_b"))
@@ -855,7 +853,7 @@ object Dedup {
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", $"text", md5($"text").as("fp"),
-        array_distinct(split($"text", " ")).as("tk"))
+        array_distinct(Tokens.words($"text")).as("tk"))
       .persist()
     // stage 1: exact dedup — keep min doc_id per fingerprint
     val wFp = Window.partitionBy($"fp").orderBy($"doc_id")
@@ -876,7 +874,7 @@ object Dedup {
     val quality = docs
       .join(exactDups.select($"doc_id"), Seq("doc_id"), "left_anti")
       .join(nearDups.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .withColumn("n_words", size(split($"text", " ")).cast("double"))
+      .withColumn("n_words", Tokens.nWords)
       .withColumn("q",
         lit(0.4) * least($"n_words" / 50.0, lit(1.0))
           + lit(0.6) * (size($"tk") / $"n_words"))
@@ -935,8 +933,7 @@ object Dedup {
     import spark.implicits._
     graft.functions.SortedIntersectSize.register(spark)
     val toks = Tables.documentsDist(spark, dir)
-      .select($"doc_id", sort_array(array_distinct(
-        expr("transform(split(text, ' '), w -> xxhash64(w))"))).as("tk"))
+      .select($"doc_id", Tokens.hashedSet.as("tk"))
       .persist()
     val a = toks.select($"doc_id".as("doc_a"), $"tk".as("tk_a"))
     val b = toks.select($"doc_id".as("doc_b"), $"tk".as("tk_b"))
@@ -1070,7 +1067,7 @@ object Dedup {
     import spark.implicits._
     graft.functions.SortedIntersectSize.register(spark)
     val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", array_distinct(split($"text", " ")).as("t"))
+      .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
     // signatures: one token shuffle keyed on doc_id (g13's machinery, k=8)
     val hashed = docs.select($"doc_id", explode($"t").as("word"))
       .withColumn("h",
@@ -1256,7 +1253,7 @@ object Dedup {
       |ORDER BY sz, span""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables.documents(spark, dir)
-      .groupBy(md5(array_join(sort_array(array_distinct(split($"text", " "))),
+      .groupBy(md5(array_join(sort_array(array_distinct(Tokens.words($"text"))),
         " ")).as("fp"))
       .agg(count(lit(1)).as("sz"),
         countDistinct($"doc_id" % ShardCount).as("span"))
@@ -1292,7 +1289,7 @@ object Dedup {
       |ORDER BY n_docs DESC, tpl""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     Tables.documentsDist(spark, dir)
-      .select($"doc_id", $"lang", $"source", split($"text", " ").as("w"))
+      .select($"doc_id", $"lang", $"source", Tokens.words($"text").as("w"))
       .where(size($"w") >= 6)
       .select($"doc_id", $"lang", $"source",
         concat_ws(" ", slice($"w", 1, 3)).as("tpl"))
@@ -1365,7 +1362,7 @@ object Dedup {
     }) { (spark, dir) =>
     import spark.implicits._
     val hashed = Tables.documentsDist(spark, dir)
-      .select($"doc_id", array_distinct(split($"text", " ")).as("t"))
+      .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
       .select($"doc_id", explode($"t").as("word"))
       .withColumn("h",
         conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
@@ -2075,7 +2072,7 @@ object Dedup {
     import spark.implicits._
     graft.functions.SortedIntersectSize.register(spark)
     val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", array_distinct(split($"text", " ")).as("t"))
+      .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
     val hashed = docs.select($"doc_id", explode($"t").as("word"))
       .withColumn("h",
         conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))

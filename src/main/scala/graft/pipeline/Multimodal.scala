@@ -952,7 +952,7 @@ object Multimodal {
     val sig = dhashSigDf(spark, dir)
     val fps = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5(array_join(array_sort(array_distinct(
-        split($"text", " "))), " ")).as("fp"))
+        Tokens.words($"text"))), " ")).as("fp"))
     val tp = fps.as("a")
       .join(fps.as("b"),
         $"a.fp" === $"b.fp" && $"a.doc_id" < $"b.doc_id")

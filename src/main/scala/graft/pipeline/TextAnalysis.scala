@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.QueryDef
 import graft.QueryDef.graded
+import graft.pipeline.Tokens.{stopSqlIn, stopSqlList}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * exploded relation for DF; the document-count side is a 1-row broadcast.
   */
 object TextAnalysis {
-
-  private[graft] val stopList = Seq("the", "a", "of", "and", "in", "to", "is")
-  private[graft] val stopSqlIn = stopList.map(w => s"'$w'").mkString("(", ", ", ")")
 
   // g6 — TF-IDF scoring, pure relational pipeline (no MLlib needed):
   // explode → TF per (doc, word), DF per word, idf = ln(N/df).
@@ -35,8 +33,7 @@ object TextAnalysis {
       |FROM tf JOIN df USING (word) CROSS JOIN n
       |ORDER BY doc_id, word""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val words = Tables.documents(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val words = Tokens.docWords(Tables.documents(spark, dir))
     val tf = words.groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
     val dfreq = words.distinct().groupBy($"word").agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, dir).agg(count(lit(1)).as("n"))
@@ -62,7 +59,7 @@ object TextAnalysis {
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         round(avg($"n_chars"), 6).as("avg_chars"),
-        round(avg(size(split($"text", " "))), 6).as("avg_words"),
+        round(avg(size(Tokens.words($"text"))), 6).as("avg_words"),
         sum($"n_chars").as("total_chars"))
       .orderBy("lang")
   }
@@ -71,8 +68,6 @@ object TextAnalysis {
   // (an n-gram/wordlist classifier reduced to set arithmetic; the corpus
   // vocabulary is synthetic, so the score, not the label accuracy, is the
   // graded behavior).
-  private val stopSqlList = stopList.map(w => s"'$w'").mkString("[", ", ", "]")
-
   private val g9 = graded(
     "g9_langid",
     s"""SELECT doc_id,
@@ -87,11 +82,9 @@ object TextAnalysis {
       |ORDER BY doc_id""".stripMargin) {
     (spark, dir) =>
     import spark.implicits._
-    val stopArr = array(stopList.map(lit): _*)
     Tables.documents(spark, dir)
-      .withColumn("tk", array_distinct(split($"text", " ")))
-      .withColumn("en_score0",
-        size(array_intersect($"tk", stopArr)).cast("double") / size($"tk").cast("double"))
+      .withColumn("tk", array_distinct(Tokens.words($"text")))
+      .withColumn("en_score0", Tokens.langScore($"tk"))
       .select($"doc_id",
         round($"en_score0", 6).as("en_score"),
         when($"en_score0" >= 0.05, "en").otherwise("other").as("pred_lang"),
@@ -122,16 +115,7 @@ object TextAnalysis {
       |    FROM documents) m) s
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val inList = stopSqlIn
-    Tables.documents(spark, dir)
-      .withColumn("n_words", size(split($"text", " ")).cast("double"))
-      .withColumn("n_stop",
-        expr(s"size(filter(split(text, ' '), t -> t IN $inList))").cast("double"))
-      .withColumn("n_uniq", size(array_distinct(split($"text", " "))).cast("double"))
-      .withColumn("q",
-        lit(0.4) * least($"n_words" / 50.0, lit(1.0))
-          + lit(0.3) * least(lit(10.0) * $"n_stop" / $"n_words", lit(1.0))
-          + lit(0.3) * ($"n_uniq" / $"n_words"))
+    Tokens.withQuality(Tables.documents(spark, dir))
       .select($"doc_id", $"n_words",
         round($"q", 6).as("quality"),
         ($"q" >= 0.5).as("keep"))
@@ -153,11 +137,11 @@ object TextAnalysis {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"doc_id",
-        size(split($"text", " ")).as("n_ws"),
+        size(Tokens.words($"text")).as("n_ws"),
         size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)")).as("n_re"),
         length($"text").as("n_chars_m"),
         round(length($"text").cast("double")
-          / size(split($"text", " ")).cast("double"), 6).as("chars_per_tok"))
+          / size(Tokens.words($"text")).cast("double"), 6).as("chars_per_tok"))
       .orderBy("doc_id")
   }
 
@@ -181,8 +165,7 @@ object TextAnalysis {
       |GROUP BY tf.doc_id
       |ORDER BY tf.doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val tf = Tables.documents(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val tf = Tokens.docWords(Tables.documents(spark, dir))
       .groupBy($"doc_id", $"word")
       .agg(count(lit(1)).cast("double").as("n"))
     val tot = tf.groupBy($"doc_id").agg(sum($"n").as("total"))
@@ -236,18 +219,14 @@ object TextAnalysis {
       |LIMIT 50""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
-    // size >= 2 guard: Spark's sequence(1, n-1) DESCENDS for 1-token docs
-    // (g18 lesson) where the oracle's generate_series is simply empty
-    val toks = docs.select($"doc_id", split($"text", " ").as("tk"))
-      .where(size($"tk") >= 2)
-    val bg = toks
-      .select(explode(expr(
-        """transform(sequence(1, size(tk) - 1),
-          |  i -> struct(concat(tk[i - 1], ' ', tk[i]) AS bigram,
-          |              tk[i - 1] AS w1, tk[i] AS w2))""".stripMargin)).as("p"))
-      .select($"p.bigram", $"p.w1", $"p.w2")
-    val bc = bg.groupBy($"bigram", $"w1", $"w2").agg(count(lit(1)).as("n_ab"))
-    val uni = docs.select(explode(split($"text", " ")).as("word"))
+    // counted on the bigram alone; tokens hold no space, so its two words
+    // split back out exactly, once per distinct bigram
+    val bc = docs.select(Tokens.words($"text").as("tk"))
+      .select(explode(Tokens.ngrams("tk", 2)).as("bigram"))
+      .groupBy($"bigram").agg(count(lit(1)).as("n_ab"))
+      .withColumn("w1", split_part($"bigram", lit(" "), lit(1)))
+      .withColumn("w2", split_part($"bigram", lit(" "), lit(2)))
+    val uni = docs.select(explode(Tokens.words($"text")).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("n"))
     val tot = uni.agg(sum($"n").as("n_uni"))
       .crossJoin(bc.agg(sum($"n_ab").as("n_bi")))
@@ -298,16 +277,11 @@ object TextAnalysis {
       |ORDER BY b.doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val toks = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("tk"))
+      .select($"doc_id", Tokens.words($"text").as("tk"))
     val base = toks.select($"doc_id",
       size($"tk").cast("bigint").as("n_tokens"),
       size(array_distinct($"tk")).cast("bigint").as("n_distinct"))
-    // sequence(0, n-2) DESCENDS when n < 2 (known trap) — the n >= 2
-    // filter runs before the generator ever sees such a doc
-    val top = toks.where(size($"tk") >= 2)
-      .select($"doc_id", explode(expr(
-        "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))"))
-        .as("bg"))
+    val top = toks.select($"doc_id", explode(Tokens.ngrams("tk", 2)).as("bg"))
       .groupBy($"doc_id", $"bg").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id").agg(max($"c").as("top_n"))
     base.join(top, Seq("doc_id"), "left")
@@ -344,8 +318,7 @@ object TextAnalysis {
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val w = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val w = Tokens.docWords(Tables.documentsDist(spark, dir))
     val uni = w.groupBy($"word").agg(count(lit(1)).cast("double").as("n"))
     val tot = uni.agg(sum($"n").as("total"))
     w.join(broadcast(uni), "word")
@@ -385,8 +358,7 @@ object TextAnalysis {
       |FROM r WHERE rank <= 3
       |ORDER BY doc_id, rank""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val words = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val words = Tokens.docWords(Tables.documentsDist(spark, dir))
     val tf = words.groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
     val dfreq = words.distinct().groupBy($"word").agg(count(lit(1)).as("df"))
     val n = Tables.documents(spark, dir).agg(count(lit(1)).as("n"))
@@ -426,8 +398,7 @@ object TextAnalysis {
       |FROM r
       |ORDER BY vocab""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val uni = Tables.documentsDist(spark, dir)
-      .select(explode(split($"text", " ")).as("word"))
+    val uni = Tokens.docWords(Tables.documentsDist(spark, dir), keys = Nil)
       .groupBy($"word").agg(count(lit(1)).cast("double").as("n"))
     val ranked = uni.withColumn("rnk",
       row_number().over(org.apache.spark.sql.expressions.Window
@@ -474,11 +445,8 @@ object TextAnalysis {
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val p = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("tk"))
-      .where(size($"tk") >= 2)
-      .select($"doc_id", explode(expr(
-        "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))"))
-        .as("b"))
+      .select($"doc_id", Tokens.words($"text").as("tk"))
+      .select($"doc_id", explode(Tokens.ngrams("tk", 2)).as("b"))
       .withColumn("w1", split_part($"b", lit(" "), lit(1)))
     val c2 = p.groupBy($"b").agg(count(lit(1)).cast("double").as("n2"))
     val c1 = p.groupBy($"w1").agg(count(lit(1)).cast("double").as("n1"))
@@ -516,8 +484,7 @@ object TextAnalysis {
       |LIMIT 20""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     graft.functions.CharShingles.register(spark)
-    Tables.documentsDist(spark, dir)
-      .select(explode(split($"text", " ")).as("word"))
+    Tokens.docWords(Tables.documentsDist(spark, dir), keys = Nil)
       .where(length($"word") >= 2)
       .groupBy($"word").agg(count(lit(1)).as("wn"))
       .select($"wn", expr("char_shingles(word, 2)").as("pair"))
@@ -552,12 +519,10 @@ object TextAnalysis {
       |GROUP BY lang, pred_lang
       |ORDER BY lang, pred_lang""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val stopArr = array(stopList.map(lit): _*)
     val p = Tables.documentsDist(spark, dir)
-      .withColumn("tk", array_distinct(split($"text", " ")))
+      .withColumn("tk", array_distinct(Tokens.words($"text")))
       .select($"lang",
-        when(size(array_intersect($"tk", stopArr)).cast("double")
-          / size($"tk").cast("double") >= 0.05, "en").otherwise("other")
+        when(Tokens.langScore($"tk") >= 0.05, "en").otherwise("other")
           .as("pred_lang"))
     val perLang = p.groupBy($"lang").agg(count(lit(1)).as("lang_total"))
     p.groupBy($"lang", $"pred_lang").agg(count(lit(1)).as("n_docs"))
@@ -595,8 +560,7 @@ object TextAnalysis {
       |SELECT doc_id, n_tok, n_oov, (10000 * n_oov) // n_tok AS oov_bp
       |FROM per ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val tok = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("w"))
+    val tok = Tokens.docWords(Tables.documentsDist(spark, dir), "w")
     val vocab = tok.groupBy($"w").agg(count(lit(1)).as("c"))
       .orderBy($"c".desc, $"w").limit(25)
       .select($"w".as("vw"))
@@ -639,8 +603,7 @@ object TextAnalysis {
       |    AS bucket
       |FROM b ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val w = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val w = Tokens.docWords(Tables.documentsDist(spark, dir))
     val uni = w.groupBy($"word").agg(count(lit(1)).cast("double").as("n"))
     val tot = uni.agg(sum($"n").as("total"))
     val lp = w.join(broadcast(uni), "word")
@@ -693,14 +656,9 @@ object TextAnalysis {
       |FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
       |ORDER BY d.doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // sub-13-token docs contribute no grams (g26's descending-sequence guard)
     val grams = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .select($"doc_id", explode(expr(
-        """CASE WHEN size(t) >= 13 THEN
-          |  transform(sequence(1, size(t) - 12),
-          |    i -> array_join(slice(t, i, 13), ' '))
-          |ELSE cast(array() as array<string>) END""".stripMargin)).as("gr"))
+      .select($"doc_id", Tokens.words($"text").as("t"))
+      .select($"doc_id", explode(Tokens.window13("t")).as("gr"))
     val dg = grams.distinct()
     val cnt = dg.groupBy($"gr").agg(count(lit(1)).as("nd"))
     val per = dg.join(cnt, "gr")
@@ -746,7 +704,7 @@ object TextAnalysis {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"lang",
-        size(split($"text", " ")).cast("bigint").as("n_ws"),
+        size(Tokens.words($"text")).cast("bigint").as("n_ws"),
         size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
           .cast("bigint").as("n_re"),
         length($"text").cast("bigint").as("n_ch"))
@@ -788,7 +746,7 @@ object TextAnalysis {
     import spark.implicits._
     val x = Tables.documents(spark, dir)
       .select($"lang", $"doc_id",
-        size(split($"text", " ")).cast("bigint").as("x"))
+        size(Tokens.words($"text")).cast("bigint").as("x"))
       .withColumn("i", row_number().over(
         Window.partitionBy($"lang").orderBy($"x", $"doc_id")).cast("bigint"))
     x.groupBy($"lang")
@@ -847,15 +805,15 @@ object TextAnalysis {
       |ORDER BY word, rnk""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
-    val words = docs.select($"doc_id", explode(split($"text", " ")).as("word"))
+    val words = Tokens.docWords(docs)
     val tf = words.groupBy($"doc_id", $"word")
       .agg(count(lit(1)).cast("bigint").as("tf"))
     val dfreq = words.distinct().groupBy($"word")
       .agg(count(lit(1)).cast("bigint").as("df"))
     val dl = docs.select($"doc_id",
-      size(split($"text", " ")).cast("bigint").as("dl"))
+      size(Tokens.words($"text")).cast("bigint").as("dl"))
     val n = docs.agg(count(lit(1)).cast("bigint").as("n"),
-      (sum(size(split($"text", " ")).cast("bigint")).cast("double")
+      (sum(size(Tokens.words($"text")).cast("bigint")).cast("double")
         / count(lit(1)).cast("double")).as("avgdl"))
     val terms = dfreq.orderBy($"df".desc, $"word").limit(10)
     val w = Window.partitionBy($"word").orderBy($"bm25".desc, $"doc_id")
@@ -936,8 +894,6 @@ object TextAnalysis {
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
     val q = docs.where($"doc_id" < 5).select($"doc_id".as("qid"), $"text")
-    def words(df: org.apache.spark.sql.DataFrame, id: String) =
-      df.select(col(id), explode(split($"text", " ")).as("w")).distinct()
     def grams(df: org.apache.spark.sql.DataFrame, id: String) =
       df.where(length($"text") >= 3)
         .select(col(id), explode(expr(
@@ -953,7 +909,8 @@ object TextAnalysis {
         .where($"r" <= 20)
         .select($"qid", $"doc_id", $"r")
     }
-    val ta = ranked(words(q, "qid"), words(docs, "doc_id"), "w")
+    val ta = ranked(Tokens.docWords(q, "w", Seq("qid")).distinct(),
+      Tokens.docWords(docs, "w").distinct(), "w")
     val tb = ranked(grams(q, "qid"), grams(docs, "doc_id"), "g")
     val fused = ta.withColumnRenamed("r", "ra")
       .join(tb.withColumnRenamed("r", "rb"), Seq("qid", "doc_id"), "full")
@@ -1003,7 +960,7 @@ object TextAnalysis {
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
     val w = docs.select($"doc_id", $"lang",
-      explode(split($"text", " ")).as("word"))
+      explode(Tokens.words($"text")).as("word"))
     val v = w.agg(countDistinct($"word").cast("double").as("v"))
     val tgt = w.where($"lang" === "en").groupBy($"word")
       .agg(count(lit(1)).cast("double").as("nt"))
@@ -1096,8 +1053,7 @@ object TextAnalysis {
       |GROUP BY co.cutoff, t.total
       |ORDER BY cutoff""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val w = Tables.documentsDist(spark, dir)
-      .select(explode(split($"text", " ")).as("word"))
+    val w = Tokens.docWords(Tables.documentsDist(spark, dir), keys = Nil)
     val c = w.groupBy($"word").agg(count(lit(1)).cast("bigint").as("n"))
     val t = c.agg(sum($"n").cast("bigint").as("total"))
     val r = c.withColumn("rk",
@@ -1146,20 +1102,9 @@ object TextAnalysis {
       |GROUP BY g.doc_id
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // size >= 3 guard mirrors the oracle's empty generate_series on
-    // sub-trigram docs (Spark's sequence would descend through 0).
-    // The words array is MATERIALIZED in its own projection first:
-    // inlining split() into the lambda re-tokenizes the document once
-    // per element_at (measured 5.5 s → 1.3 s at sf0.1 for this key).
     val g = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", explode(expr(
-        """CASE WHEN size(w) >= 3 THEN
-          |  transform(sequence(1, size(w) - 2),
-          |    i -> concat(element_at(w, i), ' ',
-          |                element_at(w, i + 1), ' ',
-          |                element_at(w, i + 2)))
-          |ELSE cast(array() as array<string>) END""".stripMargin)).as("gr"))
+      .select($"doc_id", Tokens.words($"text").as("w"))
+      .select($"doc_id", explode(Tokens.ngrams("w", 3)).as("gr"))
       .select($"doc_id", md5($"gr").as("h"))
       .distinct()
     val f = g.groupBy($"h").agg(min($"doc_id").as("first_doc"))
@@ -1215,15 +1160,14 @@ object TextAnalysis {
       |  (r_len AND r_wordlen AND r_alpha AND r_stop AND r_rep) AS keep
       |FROM r ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val inList = stopSqlIn
     val m = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"), length($"text").as("lc"))
+      .select($"doc_id", Tokens.words($"text").as("w"), length($"text").as("lc"))
       .select($"doc_id",
         size($"w").cast("bigint").as("n_words"),
         ($"lc" - size($"w") + 1).cast("bigint").as("char_mass"),
         size(expr("filter(w, x -> x rlike '[a-zA-Z]')")).cast("bigint")
           .as("n_alpha"),
-        size(expr(s"filter(w, x -> x IN $inList)")).cast("bigint")
+        size(expr(s"filter(w, x -> x IN $stopSqlIn)")).cast("bigint")
           .as("n_stop"),
         size(array_distinct($"w")).cast("bigint").as("n_uniq"))
     m.select($"doc_id", $"n_words",
@@ -1280,19 +1224,9 @@ object TextAnalysis {
       |ORDER BY n_occ DESC, gram
       |LIMIT 20""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // words materialized first — the g71 lesson: inlining split() into
-    // the transform lambda re-tokenizes the doc once per element_at
     val g = Tables.documentsDist(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .select($"doc_id", explode(expr(
-        """CASE WHEN size(w) >= 5 THEN
-          |  transform(sequence(1, size(w) - 4),
-          |    i -> concat(element_at(w, i), ' ',
-          |                element_at(w, i + 1), ' ',
-          |                element_at(w, i + 2), ' ',
-          |                element_at(w, i + 3), ' ',
-          |                element_at(w, i + 4)))
-          |ELSE cast(array() as array<string>) END""".stripMargin)).as("gr"))
+      .select($"doc_id", Tokens.words($"text").as("w"))
+      .select($"doc_id", explode(Tokens.ngrams("w", 5)).as("gr"))
     val c = g.groupBy($"gr")
       .agg(count(lit(1)).cast("bigint").as("n_occ"),
         countDistinct($"doc_id").cast("bigint").as("n_docs"))
@@ -1347,9 +1281,10 @@ object TextAnalysis {
       |ORDER BY c12 DESC, w1, w2
       |LIMIT 30""".stripMargin) { (spark, dir) =>
     import spark.implicits._
+    // (w1, w2) element refs, not Tokens.ngrams: no string per occurrence
     val p = Tables.documentsDist(spark, dir)
-      .select(split($"text", " ").as("tk"))
-      .where(size($"tk") >= 2)
+      .select(Tokens.words($"text").as("tk"))
+      .where(size($"tk") >= 2) // short-doc guard: see Tokens.ngrams
       .select(explode(expr(
         """transform(sequence(1, size(tk) - 1),
           |  i -> struct(element_at(tk, i) AS w1,
@@ -1412,8 +1347,7 @@ object TextAnalysis {
     (spark, dir) =>
     import spark.implicits._
     val ln2 = log(lit(2.0))
-    val wc = Tables.documentsDist(spark, dir)
-      .select($"source", explode(split($"text", " ")).as("w"))
+    val wc = Tokens.docWords(Tables.documentsDist(spark, dir), "w", Seq("source"))
       .groupBy($"source", $"w")
       .agg(count(lit(1)).cast("bigint").as("c"))
     val tot = wc.groupBy($"source").agg(sum($"c").cast("bigint").as("n"))
@@ -1459,8 +1393,7 @@ object TextAnalysis {
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
     val d = docs.agg(count(lit(1)).cast("bigint").as("n"))
-    val df = docs
-      .select($"doc_id", explode(split($"text", " ")).as("w"))
+    val df = Tokens.docWords(docs, "w")
       .distinct()
       .groupBy($"w")
       .agg(count(lit(1)).cast("bigint").as("df"))
@@ -1545,7 +1478,7 @@ object TextAnalysis {
       val d = dir
       import spark.implicits._
       var words = Tables.documentsDist(spark, d)
-        .select(explode(split($"text", " ")).as("word"))
+        .select(explode(Tokens.words($"text")).as("word"))
         .where(length($"word") >= 1)
         .groupBy($"word").agg(count(lit(1)).as("wn"))
         .select($"word", expr(
@@ -1677,8 +1610,7 @@ object TextAnalysis {
     import spark.implicits._
     val (vocab, _) = bpeTrain(spark, dir)
     val tok = vocab.select($"word", explode($"toks").as("token"))
-    val freq = Tables.documentsDist(spark, dir)
-      .select($"doc_id", explode(split($"text", " ")).as("word"))
+    val freq = Tokens.docWords(Tables.documentsDist(spark, dir))
       .where(length($"word") >= 1)
       .join(broadcast(tok), Seq("word"))
       .groupBy($"token")
@@ -1717,8 +1649,7 @@ object TextAnalysis {
       val (vocab, _) = bpeTrain(spark, dir)
       val enc = vocab.select($"word",
         size($"toks").cast("bigint").as("n_toks"))
-      Tables.documentsDist(spark, dir)
-        .select($"doc_id", explode(split($"text", " ")).as("word"))
+      Tokens.docWords(Tables.documentsDist(spark, dir))
         .where(length($"word") >= 1)
         .join(broadcast(enc), Seq("word"))
         .groupBy($"doc_id")
@@ -1836,8 +1767,7 @@ object TextAnalysis {
     val (vocab, _) = bpeTrain(spark, dir)
     val tok = vocab.select($"word",
       posexplode($"toks").as(Seq("tp", "token")))
-    val freq = Tables.documentsDist(spark, dir)
-      .select(explode(split($"text", " ")).as("word"))
+    val freq = Tokens.docWords(Tables.documentsDist(spark, dir), keys = Nil)
       .where(length($"word") >= 1)
       .join(broadcast(tok.select($"word", $"token")), Seq("word"))
       .groupBy($"token").agg(count(lit(1)).as("n"))
@@ -1849,7 +1779,7 @@ object TextAnalysis {
           x => x.getField("token_id")).as("ids"),
         count(lit(1)).cast("bigint").as("n_toks"))
     Tables.documentsDist(spark, dir)
-      .select($"doc_id", posexplode(split($"text", " ")).as(Seq("wp", "word")))
+      .select($"doc_id", posexplode(Tokens.words($"text")).as(Seq("wp", "word")))
       .where(length($"word") >= 1)
       .join(broadcast(wid), Seq("word"))
       .groupBy($"doc_id")

@@ -4,7 +4,9 @@ package graft
   * checked-in manifest (row count + ordered-row hash) pinned when the
   * key last passed oracle parity. Catches coupled Spark+oracle drift the
   * parity gate cannot see. On an INTENTIONAL semantic change, regenerate
-  * with `tools/run.sh graft.GoldenWrite` in the same commit.
+  * with `tools/run.sh graft.GoldenWrite` in the same commit. The outputs
+  * come from [[GradedRuns]], the one execution per key that
+  * [[GradedQuerySpec]] also reads.
   */
 class GoldenSpec extends SparkSpec {
 
@@ -25,11 +27,11 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("sf0.001 outputs match the golden manifest") {
-    val bad = SparkEntry.all.sortBy(_.key).flatMap { d =>
-      manifest.get(d.key).flatMap { case (rows, hash) =>
-        val (n, h) = GoldenWrite.rowsHash(d.fn(spark, sfDir))
+    val bad = GradedRuns.all.flatMap { r =>
+      manifest.get(r.d.key).flatMap { case (rows, hash) =>
+        val (n, h) = r.rowsHash.get
         if (n != rows || h != hash)
-          Some(s"${d.key}: rows $rows->$n hash ${hash.take(8)}->${h.take(8)}")
+          Some(s"${r.d.key}: rows $rows->$n hash ${hash.take(8)}->${h.take(8)}")
         else None
       }
     }

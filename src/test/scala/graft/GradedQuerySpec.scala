@@ -8,12 +8,11 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   */
 class GradedQuerySpec extends SparkSpec {
 
-  // Per-key Try: one broken loader/analysis must fail only its own key's
-  // assertions (the r5 events-ts regen broke ONE loader and cascaded into
-  // 33 suite failures because construction was all-or-nothing).
-  private lazy val attempts = SparkEntry.all.map { d =>
-    d -> scala.util.Try(d.fn(spark, sfDir))
-  }
+  // Per-key Try (inside GradedRuns): one broken loader/analysis must fail
+  // only its own key's assertions (the r5 events-ts regen broke ONE loader
+  // and cascaded into 33 suite failures because construction was
+  // all-or-nothing). Each key ran once there; GoldenSpec reads the same run.
+  private lazy val attempts = GradedRuns.all.map(r => r.d -> r.df)
   private lazy val results = attempts.collect {
     case (d, scala.util.Success(df)) => d -> df
   }
@@ -30,8 +29,8 @@ class GradedQuerySpec extends SparkSpec {
     // c6: the 10-supplier sf0.001 corpus has no acctbal pair within the
     // theta band — legitimately empty at this sf, non-empty from sf0.01 up
     val emptyOk = Set("c6_join_theta")
-    for ((d, df) <- results if !emptyOk(d.key))
-      assert(df.count() > 0, s"${d.key} returned 0 rows")
+    for ((d, _) <- results if !emptyOk(d.key))
+      assert(GradedRuns.rows(d.key) > 0, s"${d.key} returned 0 rows")
   }
 
   test("no graded query emits array/map/struct-typed output columns") {
@@ -62,7 +61,7 @@ class GradedQuerySpec extends SparkSpec {
         s"${d.key} has no top-level global Sort/Limit:\n$plan")
     }
     for (key <- singleRowOk)
-      assert(SparkEntry.queries(key)(spark, sfDir).count() === 1,
+      assert(GradedRuns.rows(key) === 1,
         s"$key claims single-row output but is not")
   }
 

@@ -29,6 +29,32 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("Tokens: ngrams equal a sliding(n) reference, short docs give no grams; " +
+      "words keeps empty tokens between repeated spaces") {
+    import spark.implicits._
+    val tok = Gen.oneOf("a", "b", "c", "")
+    for (n <- Seq(2, 3, 13)) {
+      // two generated token arrays per length 0 … n+2: below n the guard
+      // must yield an empty array (without it sequence() counts down)
+      val docs = for (len <- 0 to n + 2; _ <- 1 to 2)
+        yield Gen.listOfN(len, tok).sample.get
+      val got = docs.toDF("w")
+        .select($"w", pipeline.Tokens.ngrams("w", n).as("g"))
+        .collect().map(r => r.getSeq[String](0) -> r.getSeq[String](1))
+      assert(got.length === docs.length)
+      for ((w, g) <- got) {
+        val expected =
+          if (w.length < n) Seq.empty else w.sliding(n).map(_.mkString(" ")).toSeq
+        assert(g === expected, s"n=$n words=$w")
+      }
+    }
+    // DuckDB's string_split(text, ' ') gives the same three tokens; a
+    // switch to a \s+ regex would drop the empty one and break parity
+    val split = Seq("a  b").toDF("text")
+      .select(pipeline.Tokens.words($"text")).head().getSeq[String](0)
+    assert(split === Seq("a", "", "b"))
+  }
+
   test("width_bucket equals d17's oracle floor arithmetic, boundaries included") {
     import spark.implicits._
     // exact bucket-edge values (multiples of the 25000.0 width) are the
