@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Every session is `local[cores]` with one shuffle partition per core,
   * UTC, the UI off, WARN logging and a per-process warehouse under
-  * `/tmp/graft_wh/<pid>` (so two JVMs never share `spark-warehouse/`).
+  * the `graft_wh` per-pid root (so two JVMs never share `spark-warehouse/`).
   * The width is the only thing a caller chooses: the golden manifest and
   * the test suites pin 4, Verify defaults to 4 (the driver's contract),
   * and Bench, Probe and ScaleCheck default to the machine's cores.

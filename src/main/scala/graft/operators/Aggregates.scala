@@ -2181,10 +2181,7 @@ object Aggregates {
       |FROM orders""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_ndv")}/$sfTag/bitmaps"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = graft.sources.TmpDirs.fresh("graft_ndv", dir, "bitmaps")
     val split = "1998-01-01"
     def bitmaps(df: org.apache.spark.sql.DataFrame) = df
       .select(expr("bitmap_bucket_number(o_custkey)").as("bkt"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryDef.graded
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables, TmpDirs}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -150,11 +150,7 @@ object ScansFilters {
   // files via [[graft.sources.Formats.compact]], and emit the compacted
   // table's content. The oracle grades the invariant that matters —
   // compaction preserves content exactly — while CompactionSpec pins the
-  // file-count arithmetic. Temp dirs are keyed by sf AND by JVM (pid) so
-  // concurrent processes running the same scale (e.g. a bench and a test
-  // JVM) never race Overwrite writes against each other's reads; within
-  // one JVM every write is Overwrite-idempotent.
-  private lazy val jvmTag: String = java.lang.ProcessHandle.current().pid().toString
+  // file-count arithmetic.
 
   /** Shared scaffold for the A6/A7 maintenance jobs: fragment the orders
     * table into `nFrag` small files under a per-JVM, per-sf temp dir, run
@@ -175,9 +171,8 @@ object ScansFilters {
       : (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
     (spark, dir) => {
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val frag = s"/tmp/graft_$tag/$jvmTag/$sfTag/fragmented"
-      val out = s"/tmp/graft_$tag/$jvmTag/$sfTag/rewritten"
+      val frag = TmpDirs.fresh(s"graft_$tag", dir, "fragmented")
+      val out = TmpDirs.fresh(s"graft_$tag", dir, "rewritten")
       Tables.orders(spark, dir).repartition(nFrag)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(frag)
       rewrite(spark, frag, out)
@@ -218,9 +213,8 @@ object ScansFilters {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val oldDir = s"/tmp/graft_evolve/$jvmTag/$sfTag/v1"
-    val newDir = s"/tmp/graft_evolve/$jvmTag/$sfTag/v2"
+    val oldDir = TmpDirs.fresh("graft_evolve", dir, "v1")
+    val newDir = TmpDirs.fresh("graft_evolve", dir, "v2")
     val orders = Tables.orders(spark, dir)
     orders.where($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_totalprice")
@@ -242,8 +236,7 @@ object ScansFilters {
   private val a9 = QueryDef.graded("a9_orc_roundtrip", maintenanceOracle) {
     (spark, dir) =>
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"/tmp/graft_orc/$jvmTag/$sfTag/orders"
+      val out = TmpDirs.fresh("graft_orc", dir, "orders")
       Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
           $"o_orderdate", $"o_orderpriority")
@@ -261,8 +254,7 @@ object ScansFilters {
   private val a10 = QueryDef.graded("a10_csv_roundtrip", maintenanceOracle) {
     (spark, dir) =>
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"/tmp/graft_csvrt/$jvmTag/$sfTag/orders"
+      val out = TmpDirs.fresh("graft_csvrt", dir, "orders")
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val src = Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
@@ -289,8 +281,7 @@ object ScansFilters {
   private val a22 = QueryDef.graded("a22_jsonl_roundtrip", maintenanceOracle) {
     (spark, dir) =>
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"/tmp/graft_jsonrt/$jvmTag/$sfTag/orders"
+      val out = TmpDirs.fresh("graft_jsonrt", dir, "orders")
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val src = Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
@@ -317,8 +308,7 @@ object ScansFilters {
   private val a29 = QueryDef.graded("a29_xml_roundtrip", maintenanceOracle) {
     (spark, dir) =>
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"/tmp/graft_xmlrt/$jvmTag/$sfTag/orders"
+      val out = TmpDirs.fresh("graft_xmlrt", dir, "orders")
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val src = Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
@@ -353,8 +343,7 @@ object ScansFilters {
       |FROM documents GROUP BY fp ORDER BY fp""".stripMargin) {
     (spark, dir) =>
       import spark.implicits._
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = s"/tmp/graft_textrt/$jvmTag/$sfTag/documents"
+      val out = TmpDirs.fresh("graft_textrt", dir, "documents")
       Tables.documents(spark, dir).select($"text")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(out)
       spark.read.text(out)
@@ -393,10 +382,7 @@ object ScansFilters {
       |ORDER BY month""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/statsprune"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "statsprune")
     // date-range clustering gives each staged file a tight o_orderdate
     // extent — the layout that makes min/max stats selective (a7/a13's
     // lesson: stats are only as good as the clustering beneath them)
@@ -455,10 +441,7 @@ object ScansFilters {
       |GROUP BY 1
       |ORDER BY o_year""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/dpp"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "dpp")
     Tables.orders(spark, dir)
       .withColumn("o_year", year($"o_orderdate").cast("bigint"))
       .write.partitionBy("o_year").parquet(table)
@@ -508,10 +491,7 @@ object ScansFilters {
       |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/deltalog"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "deltalog")
     // localCheckpoint once: the 12 batch filters below re-read this
     // 3-column projection, and scanning it from block storage beats 12
     // repeated parquet scans (the fixture drives the PROTOCOL; the
@@ -597,14 +577,14 @@ object ScansFilters {
       |  WHERE st <> 'F'
       |ORDER BY version""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
+    import graft.sources.TxLog
     val o = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderdate", $"o_orderstatus",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
     // the 4-version lifecycle is read-only after its build, so the whole
-    // chain is a shared per-JVM fixture (TxFixtures — the r13 bench-wall
+    // chain is a shared per-JVM fixture (Fixtures — the r13 bench-wall
     // item); each graded read still plans from its own pinned manifest
-    val (table, head) = TxFixtures.table(spark, dir, "history") { t =>
+    val (table, head) = Fixtures.dir(spark, dir, "history") { t =>
       val v1 = TxLog.commit(t,
         TxLog.stage(o.where(year($"o_orderdate") < 1996), t), 0)
       val v2 = TxLog.commit(t,
@@ -681,19 +661,18 @@ object ScansFilters {
       |GROUP BY side, o_orderpriority
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/merge"
+    import graft.sources.TxLog
+    val table = TmpDirs.fresh("graft_txlog", dir, "merge")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
       .repartitionByRange(8, $"o_orderkey")
     // base-as-v1 is staged once per JVM and shallow-cloned here; the
     // merge cycle below still commits fresh on this invocation's own log
-    val v1 = TxFixtures.cloneV1(spark, dir, "orders_rbr8_keystats", table) {
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_keystats") {
       t => TxLog.commit(t, TxLog.stage(base, t), 0,
         statsCols = Seq("o_orderkey"))
     }
+    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
     // the change-batch split point: v1 is a full plain commit with
     // o_orderkey stats, so its manifest max IS max(o_orderkey) — a
     // driver-side stats fold instead of a scheduled orders scan (r16,
@@ -772,23 +751,20 @@ object ScansFilters {
       |FROM o GROUP BY o_orderpriority
       |ORDER BY version, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{CasLog, TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_caslog")}/$sfTag/orders"
+    import graft.sources.{CasLog, TxLog}
+    val table = TmpDirs.fresh("graft_caslog", dir, "orders")
     // the catalog is process-lifetime: each invocation grades a fresh
-    // commit cycle, so forget the table in BOTH the catalog and on disk
+    // commit cycle, so forget the table there too, not only on disk
     CasLog.reset(table)
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
     val o = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderpriority",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
     // the graded act here is the CAS protocol, not the staging: the
-    // immutable part files are staged once per JVM (TxFixtures.staged)
+    // immutable part files are staged once per JVM (Fixtures.dir)
     // and each invocation re-runs its own commit cycle over them
-    val stagedBase = TxFixtures.staged(spark, dir, "cas_base")(t =>
+    val (_, stagedBase) = Fixtures.dir(spark, dir, "cas_base")(t =>
       TxLog.stage(o.where($"o_orderkey" % 3 =!= 0), t))
-    val stagedDelta = TxFixtures.staged(spark, dir, "cas_delta")(t =>
+    val (_, stagedDelta) = Fixtures.dir(spark, dir, "cas_delta")(t =>
       TxLog.stage(o.where($"o_orderkey" % 3 === 0), t))
     val v1 = CasLog.commit(table, stagedBase, 0)
     // the reader pins the immutable catalog entry — version + manifest
@@ -839,7 +815,7 @@ object ScansFilters {
       |FROM cat c JOIN probes p ON c.fp = p.fp
       |ORDER BY c.fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
+    import graft.sources.TxLog
     val cat = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"))
       .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
@@ -850,7 +826,7 @@ object ScansFilters {
     // must NOT be what prunes here. |files| ≈ nCat/64 vs |probes| ≈
     // nCat/101 keeps the prune requirement satisfiable even if every
     // probe lands in its own file.
-    val (table, v1) = TxFixtures.table(spark, dir, "bloom_fp") { t =>
+    val (table, v1) = Fixtures.dir(spark, dir, "bloom_fp") { t =>
       val nCat = cat.count()
       val nFiles = math.max(4, math.ceil(nCat / 64.0).toInt)
       // Spark 4's planned write + AQE coalesces even a user-numbered
@@ -925,7 +901,7 @@ object ScansFilters {
       |GROUP BY c.c_mktsegment
       |ORDER BY c.c_mktsegment""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{Formats, TxFixtures, TxLog}
+    import graft.sources.{Formats, TxLog}
     val f0 = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_custkey",
         datediff($"o_orderdate", lit("1970-01-01")).cast("bigint").as("dy"),
@@ -934,7 +910,7 @@ object ScansFilters {
     // two-column min/max stats are tight enough to prune conjunctively.
     // Both tables are read-only after their commit — shared fixtures;
     // the pruned read, the CBO election and the join run per invocation.
-    val (factT, fv) = TxFixtures.table(spark, dir, "cbo_fact") { t =>
+    val (factT, fv) = Fixtures.dir(spark, dir, "cbo_fact") { t =>
       val bounds = f0.agg(
         min($"dy").as("alo"), max($"dy").as("ahi"),
         min($"o_orderkey").as("blo"), max($"o_orderkey").as("bhi"))
@@ -948,7 +924,7 @@ object ScansFilters {
       TxLog.commit(t, TxLog.stage(fact, t), 0,
         statsCols = Seq("dy", "o_orderkey"))
     }
-    val (dimT, dv) = TxFixtures.table(spark, dir, "cbo_dim") { t =>
+    val (dimT, dv) = Fixtures.dir(spark, dir, "cbo_dim") { t =>
       val dim = Tables.customer(spark, dir)
         .select($"c_custkey", $"c_mktsegment")
       TxLog.commit(t, TxLog.stage(dim, t), 0,
@@ -1038,10 +1014,8 @@ object ScansFilters {
       |FROM w GROUP BY month
       |ORDER BY month""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{Formats, TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/optimize"
+    import graft.sources.{Formats, TxLog}
+    val table = TmpDirs.fresh("graft_txlog", dir, "optimize")
     val f0 = Tables.orders(spark, dir)
       .select($"o_orderkey",
         datediff($"o_orderdate", lit("1970-01-01")).cast("bigint").as("dy"),
@@ -1050,11 +1024,12 @@ object ScansFilters {
     // the mess: hash-random layout — stats exist but skip nothing. The
     // messy base is a shared per-JVM fixture (shallow-cloned); the
     // OPTIMIZE rewrite below still commits fresh on this invocation's log
-    val v1 = TxFixtures.cloneV1(spark, dir, "orders_hash16_2colstats",
-        table) { t =>
-      TxLog.commit(t, TxLog.stage(f0.repartition(16, $"o_orderkey"), t), 0,
-        statsCols = Seq("dy", "o_orderkey"))
-    }
+    val (fixT, fixV) =
+      Fixtures.dir(spark, dir, "orders_hash16_2colstats") { t =>
+        TxLog.commit(t, TxLog.stage(f0.repartition(16, $"o_orderkey"), t),
+          0, statsCols = Seq("dy", "o_orderkey"))
+      }
+    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
     // ONE bounds pass serves BOTH the z-normalization and the pruning
     // predicate's mid key (r16, from the r15 verdict's #5 pass audit):
     // v1 is a lossless commit of f0, so max(o_orderkey) over v1 equals
@@ -1147,10 +1122,8 @@ object ScansFilters {
       |SELECT side, o_orderpriority, n, cents FROM r
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/dv"
+    import graft.sources.TxLog
+    val table = TmpDirs.fresh("graft_txlog", dir, "dv")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey".cast("string").as("k"), $"o_orderpriority",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"),
@@ -1158,13 +1131,14 @@ object ScansFilters {
       .repartitionByRange(8, $"o_orderkey")
     // base-as-v1 shared per JVM (shallow clone); the DV delete and the
     // compaction below still commit fresh on this invocation's own log
-    val v1 = TxFixtures.cloneV1(spark, dir, "orders_rbr8_dvbase", table)(
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_dvbase")(
       // o_orderkey stats on the base (r16): lets `mid` below fold the
       // manifest instead of scheduling an orders scan; the MERGE key is
       // the STRING k, so probe pruning stays deliberately off (the
       // statsKeep lexicographic rule) — only the driver-side max moves
       t => TxLog.commit(t, TxLog.stage(base, t), 0,
         statsCols = Seq("o_orderkey")))
+    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
     val mid = TxLog.statsMaxLong(table, v1, "o_orderkey").getOrElse(
       Tables.orders(spark, dir)
         .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
@@ -1227,7 +1201,7 @@ object ScansFilters {
       |FROM cut
       |ORDER BY cut.version""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
+    import graft.sources.TxLog
     val o = Tables.orders(spark, dir)
       .select(year($"o_orderdate").as("yr"),
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
@@ -1236,7 +1210,7 @@ object ScansFilters {
     // read-only after its build — a shared per-JVM fixture; the consumer
     // replay (and its plans-only-the-delta requirement) runs per
     // invocation against the pinned manifests.
-    val (table, base) = TxFixtures.table(spark, dir, "feed6") { t =>
+    val (table, base) = Fixtures.dir(spark, dir, "feed6") { t =>
       val y0 = o.agg(min($"yr")).head().getInt(0)
       var v = 0
       for (i <- 1 to 6) {
@@ -1330,23 +1304,22 @@ object ScansFilters {
       |FROM ch GROUP BY side, o_orderpriority
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/dvmerge"
+    import graft.sources.TxLog
+    val table = TmpDirs.fresh("graft_txlog", dir, "dvmerge")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey".cast("string").as("k"), $"o_orderpriority",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"),
         $"o_orderkey")
       .repartitionByRange(8, $"o_orderkey")
     // SAME fixture layout as a39 — one staged base serves both cycles
-    val v1 = TxFixtures.cloneV1(spark, dir, "orders_rbr8_dvbase", table)(
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_dvbase")(
       // o_orderkey stats on the base (r16): lets `mid` below fold the
       // manifest instead of scheduling an orders scan; the MERGE key is
       // the STRING k, so probe pruning stays deliberately off (the
       // statsKeep lexicographic rule) — only the driver-side max moves
       t => TxLog.commit(t, TxLog.stage(base, t), 0,
         statsCols = Seq("o_orderkey")))
+    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
     val mid = TxLog.statsMaxLong(table, v1, "o_orderkey").getOrElse(
       Tables.orders(spark, dir)
         .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
@@ -1436,18 +1409,17 @@ object ScansFilters {
       |SELECT version, o_orderpriority, n, cents FROM u
       |ORDER BY version, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.{TxFixtures, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/mergerace"
+    import graft.sources.TxLog
+    val table = TmpDirs.fresh("graft_txlog", dir, "mergerace")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
       .repartitionByRange(8, $"o_orderkey")
     // SAME fixture layout as a34 — one staged base serves both cycles
-    val v1 = TxFixtures.cloneV1(spark, dir, "orders_rbr8_keystats", table) {
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_keystats") {
       t => TxLog.commit(t, TxLog.stage(base, t), 0,
         statsCols = Seq("o_orderkey"))
     }
+    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
     // both writers compute their change batches from the SAME base v1 —
     // deterministic content, so the recompute re-reads identical changes
     val v1df = TxLog.read(spark, table, v1)
@@ -1523,13 +1495,10 @@ object ScansFilters {
       |ORDER BY version""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.{CasLog, TxLog}
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_caslog")}/$sfTag/lifecycle"
+    val table = TmpDirs.fresh("graft_caslog", dir, "lifecycle")
     // vacuum DESTROYS data files, so this cycle stages its own (never
     // the shared fixtures) — each invocation grades a fresh lifecycle
     CasLog.reset(table)
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
     val o = Tables.orders(spark, dir)
       .select($"o_orderkey",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
@@ -1636,11 +1605,8 @@ object ScansFilters {
       |ORDER BY version, fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/catalog"
+    val table = TmpDirs.fresh("graft_txlog", dir, "catalog")
     // each invocation grades a fresh commit cycle
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"))
     // one-row driver fetch driving the base/delta split — control flow,
@@ -1701,10 +1667,7 @@ object ScansFilters {
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/vacuum"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "vacuum")
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"))
     val k = Tables.documentsDist(spark, dir)
@@ -1766,10 +1729,7 @@ object ScansFilters {
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/cdc"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "cdc")
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"))
     val k = Tables.documentsDist(spark, dir)
@@ -1830,10 +1790,7 @@ object ScansFilters {
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/evolve"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "evolve")
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"),
         length($"text").cast("bigint").as("src_len"))
@@ -1887,10 +1844,7 @@ object ScansFilters {
       |ORDER BY change, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_txlog")}/$sfTag/delete"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_txlog", dir, "delete")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
@@ -1945,10 +1899,7 @@ object ScansFilters {
       |  FROM orders) t
       |ORDER BY revenue_cents""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_mview")}/$sfTag/cust_state"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = TmpDirs.fresh("graft_mview", dir, "cust_state")
     val split = "1998-01-01"
     def states(df: org.apache.spark.sql.DataFrame) = df
       .groupBy($"o_custkey")
@@ -1990,8 +1941,7 @@ object ScansFilters {
       |FROM documents
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = s"/tmp/graft_partrt/$jvmTag/$sfTag/documents"
+    val out = TmpDirs.fresh("graft_partrt", dir, "documents")
     graft.sources.Formats.writePartitioned(
       Tables.documents(spark, dir).select($"doc_id", $"text", $"lang"),
       out, "lang")
@@ -2075,8 +2025,7 @@ object ScansFilters {
       |WHERE f.family = 'romance'
       |ORDER BY d.doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = s"/tmp/graft_dpp/$jvmTag/$sfTag/documents"
+    val out = TmpDirs.fresh("graft_dpp", dir, "documents")
     graft.sources.Formats.writePartitioned(
       Tables.documents(spark, dir).select($"doc_id", $"text", $"lang"),
       out, "lang")
@@ -2084,7 +2033,7 @@ object ScansFilters {
     // the dim must be a real on-disk relation: an in-memory literal dim is
     // constant-folded (ConvertToLocalRelation swallows the family filter),
     // leaving the DPP rule no selective predicate to key on
-    val dimDir = s"/tmp/graft_dpp/$jvmTag/$sfTag/lang_dim"
+    val dimDir = TmpDirs.fresh("graft_dpp", dir, "lang_dim")
     Seq(("es", "romance"), ("fr", "romance"), ("en", "germanic"),
       ("de", "germanic"), ("zh", "cjk")).toDF("lang", "family")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dimDir)
@@ -2158,9 +2107,8 @@ object ScansFilters {
         |ORDER BY o_orderkey""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val frag = s"/tmp/graft_zorder/$jvmTag/$sfTag/fragmented"
-    val out = s"/tmp/graft_zorder/$jvmTag/$sfTag/rewritten"
+    val frag = TmpDirs.fresh("graft_zorder", dir, "fragmented")
+    val out = TmpDirs.fresh("graft_zorder", dir, "rewritten")
     Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_custkey",
         datediff($"o_orderdate", lit("1970-01-01")).cast("bigint").as("dy"))
@@ -2486,7 +2434,8 @@ object ScansFilters {
 
   /** Catalog names of the per-(JVM, sf) bucketed twin tables. */
   def bucketedNames(dir: String): (String, String) = {
-    val tag = (dir + "_" + jvmTag).replaceAll("[^A-Za-z0-9_]", "_")
+    val pid = java.lang.ProcessHandle.current().pid()
+    val tag = s"${TmpDirs.tag(dir)}_$pid".replace('.', '_')
     (s"graft_a18_orders_$tag", s"graft_a18_lineitem_$tag")
   }
 
@@ -2499,18 +2448,18 @@ object ScansFilters {
     import spark.implicits._
     val (ot, lt) = bucketedNames(dir)
     if (!spark.catalog.tableExists(ot)) {
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"/tmp/graft_bucketed/$jvmTag/$sfTag"
       Tables.orders(spark, dir).select($"o_orderkey", $"o_totalprice")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$base/orders").saveAsTable(ot)
+        .option("path", TmpDirs.fresh("graft_bucketed", dir, "orders"))
+        .saveAsTable(ot)
       Tables.lineitem(spark, dir)
         .select($"l_orderkey", $"l_extendedprice", $"l_discount",
           $"l_quantity")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$base/lineitem").saveAsTable(lt)
+        .option("path", TmpDirs.fresh("graft_bucketed", dir, "lineitem"))
+        .saveAsTable(lt)
     }
   }
 
@@ -2582,8 +2531,7 @@ object ScansFilters {
     val oldMode = spark.conf.getOption(confKey)
     spark.conf.set(confKey, "dynamic")
     try {
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = s"/tmp/graft_a20/$jvmTag/$sfTag/events_by_day"
+      val path = TmpDirs.fresh("graft_a20", dir, "events_by_day")
       val src = Tables.eventsUs(spark, dir)
         .withColumn("day", date_format($"ts_us", "yyyy-MM-dd"))
         .select($"event_id", $"value", $"day")

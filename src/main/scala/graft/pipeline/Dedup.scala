@@ -483,11 +483,10 @@ object Dedup {
 
   // First use in this JVM wipes OUR pid's snapshot root and GCs dead-pid
   // siblings — the shared TmpDirs contract (pid recycling + /tmp hygiene).
-  private lazy val snapRoot: String =
-    graft.sources.TmpDirs.perPidRoot("graft_snapshots")
+  private[graft] val snapshotRoot = "graft_snapshots"
 
   private def snapDir(dir: String): String =
-    s"$snapRoot/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    graft.sources.TmpDirs.under(snapshotRoot, dir)
 
   /** A parquet snapshot, only if its write COMPLETED (_SUCCESS marker —
     * a half-written dir from a crashed run must never serve reads). */
@@ -662,10 +661,7 @@ object Dedup {
       |ORDER BY lang""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val table =
-      s"${graft.sources.TmpDirs.perPidRoot("graft_release")}/$sfTag/corpus"
-    graft.sources.TmpDirs.rmTree(new java.io.File(table))
+    val table = graft.sources.TmpDirs.fresh("graft_release", dir, "corpus")
     // the raw corpus becomes release v1 (doc-grain metadata: the text
     // column stays in the source table — the release ships the verdict
     // applied to the catalog, and at 100 TB the same rewrite carries
@@ -1970,9 +1966,8 @@ object Dedup {
       |  SELECT fp, first_doc, 'delta' AS origin FROM delta) c
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val cat = s"${snapDir(dir)}/catalog"
     // each invocation grades a fresh cycle
-    graft.sources.TmpDirs.rmTree(new java.io.File(cat))
+    val cat = graft.sources.TmpDirs.fresh(snapshotRoot, dir, "catalog")
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", md5($"text").as("fp"))
     // one-row driver fetch to drive the split — control flow, not data

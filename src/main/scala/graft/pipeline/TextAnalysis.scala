@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.QueryDef
 import graft.QueryDef.graded
 import graft.pipeline.Tokens.{stopSqlIn, stopSqlList}
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1453,31 +1453,18 @@ object TextAnalysis {
     * encoder (g100) and their oracles/laws. */
   private[graft] val bpeRounds = 10
 
-  // One training run per (SparkContext, corpus dir): the trainer is
-  // deterministic and the corpora immutable (the trainedCodebook
-  // read-only-corpus contract), so g99/g100/g101 share one run — the
-  // vocab rides as a localCheckpointed frame, the merges as driver
-  // rows. The cache key INCLUDES the application id because a
-  // localCheckpointed frame holds RDD blocks of ITS SparkContext: a
-  // later session in the same JVM must retrain, not dereference a
-  // stopped context's blocks (unlike cbookCache, whose values are plain
-  // driver arrays and survive session turnover).
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, Seq[(Int, String, String, Long)])]()
-
   /** Word-histogram BPE trainer (Sennrich et al.): one shuffle builds
     * (word, count), then every round runs on |vocab| rows regardless of
     * corpus size. Returns the FINAL vocab tokenization (word, toks, wn)
     * — the encoder's lookup table — and the learned merge list
-    * (rank, l, r, n). */
+    * (rank, l, r, n). A fixture: g99/g100/g101 share one run, the vocab
+    * as a localCheckpointed frame, the merges as driver rows. */
   private[graft] def bpeTrain(spark: org.apache.spark.sql.SparkSession,
       dir: String)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, String, String, Long)]) =
-    bpeCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir", _ => {
-      val d = dir
+    Fixtures.once(spark, dir, "bpe_vocab") {
       import spark.implicits._
-      var words = Tables.documentsDist(spark, d)
+      var words = Tables.documentsDist(spark, dir)
         .select(explode(Tokens.words($"text")).as("word"))
         .where(length($"word") >= 1)
         .groupBy($"word").agg(count(lit(1)).as("wn"))
@@ -1510,7 +1497,7 @@ object TextAnalysis {
         }
       }
       (words, merges.result())
-    })
+    }
 
   private val g99 = QueryDef.benchOnly("g99_bpe_train") { (spark, dir) =>
     import spark.implicits._

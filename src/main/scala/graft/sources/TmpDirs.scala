@@ -1,9 +1,7 @@
 package graft.sources
 
-/** Per-process scratch roots under /tmp, shared by every module that
-  * stages on-disk state (Dedup snapshots, EventTime's streaming landing
-  * dirs, the spec-level sink laws). One implementation of the two pieces
-  * that used to be copy-pasted five times (r9 ADVICE):
+/** Per-process scratch dirs under /tmp: the one place that decides where
+  * an artifact of corpus `dir` lives on disk.
   *
   *   - [[rmTree]] — recursive delete that tolerates races (a file
   *     vanishing mid-walk is fine; deletion is best-effort hygiene).
@@ -12,6 +10,9 @@ package graft.sources
   *     the corpus at the same path could have been regenerated in
   *     between) and with dead-pid sibling dirs garbage-collected so
   *     roots don't accumulate forever, one per JVM that ever ran.
+  *   - [[under]] / [[fresh]] — `<perPidRoot(root)>/<corpus tag>[/<name>]`,
+  *     kept or emptied: keyed by pid AND corpus, so concurrent processes
+  *     running the same scale never race each other's writes.
   */
 object TmpDirs {
 
@@ -20,8 +21,7 @@ object TmpDirs {
     f.delete(); ()
   }
 
-  /** Wipe + GC exactly once per (JVM, name): perPidRoot is called from
-    * lazy vals today, but memoizing here keeps the contract local. */
+  /** Wipe + GC exactly once per (JVM, name). */
   private val initialized =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -38,5 +38,22 @@ object TmpDirs {
       }
     }
     s"/tmp/$name/$pid"
+  }
+
+  /** A corpus dir as one path segment. */
+  def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** `<perPidRoot(root)>/<corpus tag>`, left as it is — for state that
+    * must survive between keys (Dedup's a21 snapshots). */
+  def under(root: String, dir: String): String =
+    s"${perPidRoot(root)}/${tag(dir)}"
+
+  /** `<under(root, dir)>/<name>`, emptied: whatever a previous caller
+    * left there is removed, so the path does not exist on return and the
+    * caller's write starts from nothing. */
+  def fresh(root: String, dir: String, name: String): String = {
+    val path = s"${under(root, dir)}/$name"
+    rmTree(new java.io.File(path))
+    path
   }
 }

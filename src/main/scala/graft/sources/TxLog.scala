@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Mini transaction log: manifest-based ATOMIC multi-file commit +
@@ -85,19 +86,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TxLog {
 
-  // One Configuration per session, built lazily and reused: files/stage/
-  // commit/vacuum each resolve the filesystem several times, and
+  // One Configuration per SparkContext, built lazily and reused: files/
+  // stage/commit/vacuum each resolve the filesystem several times, and
   // newHadoopConf() copies the full conf map on every call (the r11
-  // advice item). Keyed by session so a session with different Hadoop
-  // settings never inherits another's; bounded by the handful of
-  // sessions a JVM ever holds.
-  private val confCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Configuration]()
+  // advice item). Keyed by context, not session: no session in this
+  // engine sets a Hadoop option of its own, and every streaming drain
+  // and scoped child session is a new SparkSession, so a session key
+  // would pin one session per run. One entry: a new context replaces it.
+  @volatile private var confCache: (SparkContext, Configuration) = (null, null)
 
   private[graft] def hadoopConf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) => confCache.computeIfAbsent(s, _.sessionState.newHadoopConf())
-      case None    => new Configuration()
+      case Some(s) =>
+        val cached = confCache
+        if (cached._1 eq s.sparkContext) cached._2
+        else {
+          val conf = s.sessionState.newHadoopConf()
+          confCache = (s.sparkContext, conf)
+          conf
+        }
+      case None => new Configuration()
     }
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(hadoopConf)
@@ -423,14 +431,15 @@ object TxLog {
     * table `dst` carrying EXACTLY version `srcV` of `src`'s resolved
     * data lines — stats, blooms and DV entries ride verbatim; no data
     * file moves or is re-read (one manifest write, O(files) lines). The
-    * fixture-cache primitive behind [[TxFixtures]]: bench keys that all
-    * open on the same "base committed as v1" table stage it ONCE per JVM
-    * and fork their cycle-specific commits (merge, DV delete, optimize)
-    * onto private clones, so every invocation still runs a full fresh
-    * commit cycle over its own log. Sharing is safe because staged files
-    * are immutable by protocol; the caveat is Delta's own — vacuuming
-    * the SOURCE strands clones (fixture sources are never vacuumed, and
-    * [[vacuum]] on a clone only sweeps the clone's own data/ dir). */
+    * sharing primitive behind [[Fixtures.dir]] tables: bench keys that
+    * all open on the same "base committed as v1" table stage it ONCE per
+    * JVM and fork their cycle-specific commits (merge, DV delete,
+    * optimize) onto private clones, so every invocation still runs a
+    * full fresh commit cycle over its own log. Sharing is safe because
+    * staged files are immutable by protocol; the caveat is Delta's own —
+    * vacuuming the SOURCE strands clones (fixture sources are never
+    * vacuumed, and [[vacuum]] on a clone only sweeps the clone's own
+    * data/ dir). */
   def cloneAsV1(src: String, srcV: Int, dst: String): Int =
     commitManifest(dst, dataLines(src, srcV),
       schemaOf(src, srcV).map(_.json), 0)

@@ -1,5 +1,8 @@
 package graft
 
+import graft.pipeline.Dedup
+import graft.sources.TmpDirs
+
 /** a21's snapshot contract: after the verdict snapshot is written, every
   * audit-family consumer (1) actually READS the parquet snapshot instead
   * of re-deriving the shared pipeline, and (2) produces byte-identical
@@ -18,13 +21,7 @@ class SnapshotSpec extends SparkSpec {
   test("audit keys: inline path == snapshot path, and the snapshot is read") {
     // this JVM may already have written snapshots (suite order is not
     // fixed) — clear them so the first pass is genuinely inline
-    val snapRoot = new java.io.File(
-      s"/tmp/graft_snapshots/${ProcessHandle.current().pid()}")
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(); ()
-    }
-    if (snapRoot.exists()) rmrf(snapRoot)
+    TmpDirs.rmTree(new java.io.File(TmpDirs.perPidRoot(Dedup.snapshotRoot)))
     val inline = auditKeys.map(k => k -> rows(k)).toMap
     inline.foreach { case (k, r) => assert(r.nonEmpty, s"$k empty inline") }
     // write the snapshots (the graded a21 round trip)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Formats, Tables}
+import graft.sources.{Fixtures, Formats, Tables, TmpDirs}
 import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
@@ -106,5 +106,39 @@ class SourcesSpec extends SparkSpec {
       assert(conf.get("spark.sql.session.timeZone") === "UTC")
       assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     } finally conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("Fixtures build once per (dir, name), nest, retry a throw; fresh empties") {
+    val tag = s"law${System.nanoTime()}" // names no other suite uses
+    var builds = 0
+    def built(dir: String, name: String): Int =
+      Fixtures.once(spark, dir, s"${tag}_$name") { builds += 1; builds }
+    assert(built("/d1", "a") === 1)
+    assert(built("/d1", "a") === 1 && builds === 1,
+      "same (dir, name) built twice")
+    assert(built("/d1", "b") === 2, "another name must build separately")
+    assert(built("/d2", "a") === 3, "another dir must build separately")
+    // a build may ask for another fixture
+    assert(Fixtures.once(spark, "/d1", s"${tag}_outer")(
+      built("/d3", "a") * 10) === 40)
+    assert(built("/d3", "a") === 4 && builds === 4)
+    // a build that throws is retried on the next call, then kept
+    var attempts = 0
+    def flaky(): Int = Fixtures.once(spark, "/d1", s"${tag}_flaky") {
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("first build fails")
+      attempts
+    }
+    intercept[IllegalStateException](flaky())
+    assert(flaky() === 2 && flaky() === 2 && attempts === 2)
+    // fresh: nothing at the path, even where the previous caller left files
+    val p = TmpDirs.fresh("graft_fixture_law", sfDir, "out")
+    val pid = ProcessHandle.current().pid()
+    assert(p.startsWith(s"/tmp/graft_fixture_law/$pid/"))
+    new java.io.File(p).mkdirs()
+    java.nio.file.Files.write(new java.io.File(p, "left").toPath,
+      Array[Byte](1))
+    assert(TmpDirs.fresh("graft_fixture_law", sfDir, "out") === p)
+    assert(!new java.io.File(p).exists())
   }
 }
