@@ -104,8 +104,9 @@ object Dedup {
   // links only to its predecessor in bucket doc_id order — a window lag,
   // O(n·bands) edges that preserve exactly the bucket connectivity an
   // all-pairs enumeration would give) → exact-Jaccard verification of
-  // each edge → connected components over verified edges via bounded
-  // pointer jumping → emit doc → component representative.
+  // each edge → connected components over verified edges (a driver-side
+  // union-find under the broadcast threshold, bounded pointer jumping
+  // above it) → emit doc → component representative.
   //
   // Never enumerate intra-bucket pairs: that is quadratic in bucket size
   // (this corpus has a 31-word vocabulary, so band signatures collide into
@@ -167,10 +168,10 @@ object Dedup {
       .select($"doc_id", array_distinct(Tokens.words($"text")).as("tk"))
     val verified = lshVerifiedEdges(toks)
     // exact connected components over the verified edges
-    // ([[graft.operators.Components]]: neighbor-min propagation + multi-
-    // step pointer jumping to fixpoint, localCheckpoint'd per round) —
-    // the surviving approximation in g3 is only the chain-edge candidate
-    // generation
+    // ([[graft.operators.Components]]: a driver-side union-find while the
+    // edge list is under the broadcast threshold — 1,303 edges at sf0.1 —
+    // and the distributed label loop above it) — the surviving
+    // approximation in g3 is only the chain-edge candidate generation
     val comp = graft.operators.Components.connectedComponents(
       toks.select($"doc_id"), verified)
     comp.where($"rep" < $"doc_id")
@@ -978,11 +979,14 @@ object Dedup {
   // this key grades that machinery end-to-end): nodes are order keys,
   // edges chain each customer's orders in (date, key) order, so a
   // component is exactly one customer's order set and the min-label
-  // representative is the customer's minimum order key. The union-find
-  // contraction, the alternating-key passes, and the pointer-jumping
-  // loop all run for real on ~chain-shaped components (the WORST case
-  // for label propagation — diameter = component size), and the output
-  // must match the window-derived truth exactly.
+  // representative is the customer's minimum order key, and the output
+  // must match the window-derived truth exactly. Up to sf0.1 the edge
+  // list (135,001 edges, 2.2 MB) is under the default broadcast
+  // threshold, so the graph is finished by the driver-side union-find;
+  // from sf1 (~1.4M edges, ~22 MB) the contraction, the alternating-key
+  // passes and the pointer-jumping loop run for real on ~chain-shaped
+  // components (the WORST case for label propagation — diameter =
+  // component size).
   private val g40 = graded(
     "g40_components_label",
     """SELECT o_orderkey,
@@ -997,13 +1001,15 @@ object Dedup {
       .withColumn("prev", lag($"o_orderkey", 1).over(w))
       .where($"prev".isNotNull)
       .select($"prev".as("s"), $"o_orderkey".as("d"))
-    // contractPasses = 7: this graph is the deliberate label-propagation
-    // worst case — each customer's chain scatters over the whole orderkey
+    // contractPasses = 7 (loop path only, i.e. above the broadcast
+    // threshold): this graph is the deliberate label-propagation worst
+    // case — each customer's chain scatters over the whole orderkey
     // range, so the default 3 passes leave straddles that cost a third
     // join round (~6 scheduled jobs); four more ~2-job contraction passes
-    // retire it (r15: 3 → 2 non-empty rounds, ~1.5 s at sf0.1). The LSH
-    // dedup callers keep the default — their banded edges are id-local
-    // and converge at 3.
+    // retire it (r15, measured at sf0.1 before its graph was finished on
+    // the driver: 3 → 2 non-empty rounds, ~1.5 s). The LSH dedup callers
+    // keep the default — their banded edges are id-local and converge
+    // at 3.
     graft.operators.Components.connectedComponents(
         orders.select($"o_orderkey"), edges, contractPasses = 7)
       .toDF("o_orderkey", "rep")

@@ -844,7 +844,7 @@ object Similarity {
   // OR-amplified random-hyperplane LSH with the bucket count scaling in
   // the corpus so candidate volume stays LINEAR), every candidate is
   // verified with the EXACT cosine at θ = 0.40, and the verified θ-graph
-  // goes through distributed connected components with the minimum-id
+  // goes through connected components with the minimum-id
   // vector kept per cluster — the embedding-space twin of g19's lexical
   // pipeline, with the same "bucket, then verify" scale contract as
   // g16's SimHash blocks. No id-band anywhere: candidate generation
@@ -859,7 +859,9 @@ object Similarity {
   // per vector), candidates are an equi-join on (band, bv) carrying IDS
   // ONLY — vectors join back by id for the verify step, so the wide
   // shuffle moves 16-byte pairs, never 64-float payloads (m4's
-  // digests-only rule); components is the O(log d) contraction loop.
+  // digests-only rule); components is a driver-side union-find while the
+  // verified graph is under the broadcast threshold, the O(log d)
+  // contraction loop above it.
   // The oracle computes the SAME pipeline with an independent fixpoint
   // algorithm — a recursive-CTE transitive closure over the identically
   // generated edge set (materialized once; the recursion would otherwise

@@ -12,11 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class ClusterSortSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.resolve("out").toString
-  }
+  private def tmp(name: String): String = freshDir(name).resolve("out").toString
 
   test("cluster-sorted files cover disjoint key intervals and preserve content") {
     val src = Tables.orders(spark, sfDir)

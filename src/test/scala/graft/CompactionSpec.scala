@@ -9,11 +9,7 @@ import graft.sources.{Formats, Tables}
   */
 class CompactionSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.resolve("out").toString
-  }
+  private def tmp(name: String): String = freshDir(name).resolve("out").toString
 
   private def asSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet

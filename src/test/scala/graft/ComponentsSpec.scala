@@ -4,11 +4,34 @@ import graft.operators.Components
 
 class ComponentsSpec extends SparkSpec {
 
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `body` at the session's default broadcast threshold (these graphs are
+    * small, so the driver finish) and under -1 (the label loop): both
+    * results must be equal.
+    */
+  private def bothPaths[T](body: => T): T = {
+    val atDefault = body
+    val underLoop = withConf(threshold, "-1")(body)
+    assert(atDefault == underLoop, "driver finish and label loop disagree")
+    atDefault
+  }
+
+  private def labelMap(labels: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    Components.connectedComponents(
-      nodes.toDF("id"), edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    bothPaths(labelMap(Components.connectedComponents(
+      nodes.toDF("id"), edges.toDF("src", "dst"))))
+  }
+
+  /** A path over ids 0 until n whose consecutive ids are scattered; n is
+    * a power of two, so the odd multiplier makes `perm` a bijection.
+    */
+  private def scatteredPath(n: Int): Seq[(Long, Long)] = {
+    val perm = (0 until n).map(i => (i * 1223) % n)
+    (0 until n - 1).map(i => (perm(i).toLong, perm(i + 1).toLong))
   }
 
   test("shared-hub graph: a node with no min-ward in-edge still merges") {
@@ -32,16 +55,31 @@ class ComponentsSpec extends SparkSpec {
     // chain above does not), so convergence rides entirely on the
     // in-loop quotient rewrite. A 2048-node scattered path converges in
     // 7 rounds with it (measured); without it the loop is diameter-bound
-    // and 10 rounds leave wrong labels — this pins the bound.
+    // and 10 rounds leave wrong labels — this pins the bound. The
+    // threshold is forced to -1: at the default this graph is finished
+    // on the driver and the bound would pin nothing.
     import spark.implicits._
     val n = 2048
-    val perm = (0 until n).map(i => (i * 1223) % n) // odd multiplier: bijection mod 2^11
-    val edges = (0 until n - 1).map(i => (perm(i).toLong, perm(i + 1).toLong))
-    val labels = Components.connectedComponents(
-      (0L until n.toLong).toDF("id"), edges.toDF("s", "d"), maxRounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = withConf(threshold, "-1")(labelMap(Components.connectedComponents(
+      (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d"), maxRounds = 10)))
     assert(labels.size === n)
     assert(labels.values.forall(_ == 0L)) // one component, min id 0
+  }
+
+  test("the broadcast threshold elects the driver finish or the label loop") {
+    // the same scattered path: at the default threshold its 2047 edges
+    // (32 KB) are finished on the driver with no loop round; under -1 the
+    // loop runs at least one round. The labels are equal either way.
+    import spark.implicits._
+    val n = 2048
+    def run(): Map[Long, Long] = labelMap(Components.connectedComponents(
+      (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d")))
+    val atDefault = run()
+    assert(Components.lastRunNonEmptyRounds === 0)
+    val underLoop = withConf(threshold, "-1")(run())
+    assert(Components.lastRunNonEmptyRounds >= 1)
+    assert(atDefault === underLoop)
+    assert(atDefault.size === n && atDefault.values.forall(_ == 0L))
   }
 
   test("disjoint cliques and singletons keep separate representatives") {
@@ -60,10 +98,13 @@ class ComponentsSpec extends SparkSpec {
     // assertions (above) cannot see that, so pin the raw row count
     import spark.implicits._
     val n = 200L
-    val labels = Components.connectedComponents(
-      (1L to n).toDF("id"), (1L until n).map(i => (i, i + 1)).toDF("src", "dst"))
-    assert(labels.count() === n)
-    assert(labels.select("id").distinct().count() === n)
+    bothPaths {
+      val labels = Components.connectedComponents(
+        (1L to n).toDF("id"), (1L until n).map(i => (i, i + 1)).toDF("src", "dst"))
+      assert(labels.count() === n)
+      assert(labels.select("id").distinct().count() === n)
+      labelMap(labels)
+    }
   }
 
   test("loop shuffle sizing: adaptive, never a constant-4 funnel at scale") {
@@ -98,10 +139,14 @@ class ComponentsSpec extends SparkSpec {
     // disabled for the call because its small-partition coalescing
     // rewrites the runtime partition count and would hide WHICH conf
     // ceiling the loop ran under — the exact thing this test observes.
+    // The broadcast threshold is forced to -1 so that the loop, not the
+    // driver finish, labels this 299,999-edge graph.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val broadcastBytes = spark.conf.get(threshold)
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set(threshold, "-1")
     try {
       val expected = Components.loopPartitionsFor(n.toLong, 32)
       assert(expected > 4, s"fixture too small to distinguish adaptive from floor ($expected)")
@@ -121,6 +166,7 @@ class ComponentsSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set(threshold, broadcastBytes)
     }
   }
 

@@ -14,7 +14,7 @@ class EventTimeFixtureSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_fix").toString
+    val d = freshDir("fix").toString
     // as-of users 1,2 (second-scale); sessionize users 11-13 (hour-scale)
     Seq(
       (1L, 5L * S, 1L, "x", 1.0, """{"k": 1}"""),
@@ -74,7 +74,7 @@ class EventTimeFixtureSpec extends SparkSpec {
   // be wrong without the day-spine/carry-in formulation.
   private lazy val carryDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_carry").toString
+    val d = freshDir("carry").toString
     val D = 24L * H
     val rows = Seq(
       // session A: user 21, day1 23:00 → day2 00:30 (45-min gaps)

@@ -15,7 +15,7 @@ class IntervalFixtureSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_iv").toString
+    val d = freshDir("iv").toString
     Seq(
       // h11 user 21: active days {0,1,2,4} with a duplicate event on day
       // 1 → streaks [3, 1]

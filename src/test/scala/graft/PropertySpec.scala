@@ -134,14 +134,19 @@ class PropertySpec extends SparkSpec {
       Gen.zip(Gen.choose(0L, 29L), Gen.choose(0L, 29L))).map(_.filter(e => e._1 != e._2))
     val edges = edgeGen.sample.get
     val nodes = (0L until 30L)
-    val labels = operators.Components.connectedComponents(
-      nodes.toDF("id"), edges.toDF("s", "d"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.keySet === nodes.toSet)            // exactly one row per node
-    assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
-    assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
-    assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
-    assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
+    // the session default finishes this graph on the driver, -1 forces
+    // the label loop: the law holds on both paths
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    for (t <- Seq(spark.conf.get(threshold), "-1")) withConf(threshold, t) {
+      val labels = operators.Components.connectedComponents(
+        nodes.toDF("id"), edges.toDF("s", "d"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels.keySet === nodes.toSet)            // exactly one row per node
+      assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
+      assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
+      assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
+      assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
+    }
   }
 
   test("h12 interval-union laws: merged covers inputs, busy bounded by span") {

@@ -5,11 +5,7 @@ import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.resolve("out").toString
-  }
+  private def tmp(name: String): String = freshDir(name).resolve("out").toString
 
   private def asSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
@@ -51,8 +47,7 @@ class SourcesSpec extends SparkSpec {
 
   test("malformed json: PERMISSIVE isolates bad records, FAILFAST raises") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson")
-    dir.toFile.deleteOnExit()
+    val dir = freshDir("badjson")
     java.nio.file.Files.write(dir.resolve("data.json"),
       java.util.Arrays.asList(
         """{"id": 1, "v": "ok"}""",

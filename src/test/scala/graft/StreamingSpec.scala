@@ -79,7 +79,7 @@ class StreamingSpec extends SparkSpec {
     // split events into 4 time-ordered chunk files so the stream arrives
     // over 4 micro-batches — exercising incremental state updates and
     // watermark advancement, which a single-file stream never does
-    val chunkDir = java.nio.file.Files.createTempDirectory("graft_chunks").toString
+    val chunkDir = freshDir("chunks").toString
     val ev = graft.sources.Tables.eventsUs(spark, sfDir)
     ev.withColumn("chunk", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("ts_us"))))
@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
   test("withWatermark drops provably-late rows; the same drain without " +
       "it retains them (h44's counter-law)") {
     val dir =
-      java.nio.file.Files.createTempDirectory("graft_wm").toString + "/in"
+      freshDir("wm").toString + "/in"
     import spark.implicits._
     def ts(day: Int, i: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:$i%02d")
@@ -291,7 +291,7 @@ class StreamingSpec extends SparkSpec {
       "an infinite delay finalizes nothing (h47's counter-law)") {
     import spark.implicits._
     val dir =
-      java.nio.file.Files.createTempDirectory("graft_wms").toString + "/in"
+      freshDir("wms").toString + "/in"
     def ts(day: Int, i: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:$i%02d")
     // arrival: user-1 session on day 10, then user-2 session on day 20
@@ -346,7 +346,7 @@ class StreamingSpec extends SparkSpec {
       "effectively-infinite delay retains the late pairs (h45's " +
       "counter-law)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_wmj").toString
+    val root = freshDir("wmj").toString
     val cDir = s"$root/clicks"; val pDir = s"$root/purch"
     def ts(day: Int, m: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:$m%02d:00")
@@ -407,7 +407,7 @@ class StreamingSpec extends SparkSpec {
       "precondition)") {
     import spark.implicits._
     val dir =
-      java.nio.file.Files.createTempDirectory("graft_oj").toString + "/in"
+      freshDir("oj").toString + "/in"
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("k", "ts").write.parquet(dir)
     def src = spark.readStream

@@ -16,11 +16,7 @@ import org.apache.spark.sql.functions._
   */
 class ZOrderSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    d.resolve("out").toString
-  }
+  private def tmp(name: String): String = freshDir(name).resolve("out").toString
 
   test("z-ordered files: disjoint z-intervals, bounded extent on both dims") {
     import spark.implicits._
