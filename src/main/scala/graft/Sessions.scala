@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory for every graft main and the test suites.
   *
   * Every session is `local[cores]` with one shuffle partition per core,
-  * UTC, the UI off, WARN logging and a per-process warehouse under
-  * the `graft_wh` per-pid root (so two JVMs never share `spark-warehouse/`).
+  * UTC, `nanosAsLong` (the ns-vintage events corpus reads without a conf
+  * write, [[sources.Tables.ensureEventsConf]]), the UI off, WARN logging
+  * and a per-process warehouse under the `graft_wh` per-pid root (so two
+  * JVMs never share `spark-warehouse/`).
   * The width is the only thing a caller chooses: the golden manifest and
   * the test suites pin 4, Verify defaults to 4 (the driver's contract),
   * and Bench, Probe and ScaleCheck default to the machine's cores.
@@ -25,10 +27,29 @@ object Sessions {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", sources.TmpDirs.perPidRoot("graft_wh"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** A child session sharing the SparkContext, catalog and cached data
+    * with `spark`, carrying all of spark's MODIFIABLE runtime confs
+    * (newSession() starts from builder/static confs, not the caller's
+    * runtime state — AQE toggles, broadcast thresholds, timezone must
+    * mean the same thing inside the scope), then `confs` on top. The one
+    * way a key changes a planner conf: DataFrames built against the
+    * child plan under `confs`, while the caller's session — and every
+    * later key on it — never sees them, even when the key throws.
+    */
+  def scoped(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val child = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (child.conf.isModifiable(k)) child.conf.set(k, v)
+    }
+    confs.foreach { case (k, v) => child.conf.set(k, v) }
+    child
   }
 }

@@ -128,27 +128,6 @@ object Components {
     math.max(4L, math.min(sessionParts.toLong, needed)).toInt
   }
 
-  /** A child session sharing the SparkContext, catalog and cached data
-    * with `spark`, carrying all of spark's MODIFIABLE runtime confs
-    * (newSession() starts from builder/static confs, not the caller's
-    * runtime state — AQE toggles, broadcast thresholds, timezone must
-    * mean the same thing inside the scope), with `shuffle.partitions`
-    * overridden to `shufflePartitions`. The conf-scoping device the
-    * label loop runs under, exposed for any operator that needs a
-    * narrowed (or widened) planning width without mutating the caller's
-    * session — queries planned concurrently on the caller never see the
-    * scoped width.
-    */
-  def scopedSession(spark: org.apache.spark.sql.SparkSession,
-      shufflePartitions: Int): org.apache.spark.sql.SparkSession = {
-    val child = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (child.conf.isModifiable(k)) child.conf.set(k, v)
-    }
-    child.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    child
-  }
-
   /** @param nodes single-column DataFrame of node ids (long)
     * @param edges  two-column DataFrame of undirected edges; column names
     *               are taken positionally. Both endpoints of every edge
@@ -391,32 +370,27 @@ object Components {
     val labelRows = labels.agg(count(lit(1))).head().getLong(0)
     // everything above (contraction, und, seed labels) ran at the SESSION
     // shuffle sizing; only the per-round loop joins below are re-sized.
-    // The narrowed width is scoped to a CHILD session (shared
-    // SparkContext, shared cache; own SQLConf) instead of mutating the
-    // caller's session-global shuffle.partitions: per-round
-    // joins/aggregates have no per-DataFrame width knob the planner
-    // honors without an extra exchange per round, but a whole-session
-    // conf IS per-DataFrame-scopeable by building the loop's DataFrames
-    // against the child session — its checkpointed-RDD inputs are
-    // session-independent, so re-homing them is the same cheap
-    // InternalRow↔Row layer freshStatsCheckpoint already pays. Queries
-    // planned concurrently on the caller's session never see the loop
-    // width; [[scopedSession]] carries the caller's runtime confs in.
+    // The loop plans on a CHILD session ([[graft.Sessions.scoped]]: shared
+    // SparkContext and cache, own SQLConf) instead of mutating the
+    // caller's: per-round joins/aggregates have no per-DataFrame width
+    // knob the planner honors without an extra exchange per round, but
+    // the loop's DataFrames can be built against the child — its
+    // checkpointed-RDD inputs are session-independent, so re-homing them
+    // is the same cheap InternalRow↔Row layer freshStatsCheckpoint
+    // already pays. Two confs differ inside the scope: the width is the
+    // row-count-adaptive loopParts, and planning is NON-ADAPTIVE (r16
+    // round fusion): with AQE, `localCheckpoint(eager = false)` is not
+    // lazy — AdaptiveSparkPlanExec materializes every intermediate stage
+    // at mark time, re-imposing the per-link job barriers the fusion
+    // exists to remove. AQE has nothing left to decide here: the width
+    // IS loopParts (AQE's coalescing lever), every table is (long,
+    // long), and the rounds are serial, so the job-barrier count is the
+    // scale-dominant term (one barrier per round vs three).
     val loopParts = loopShufflePartitions
       .getOrElse(loopPartitionsFor(labelRows, contractParts))
-    val loopSession = scopedSession(spark, loopParts)
-    // NON-ADAPTIVE planning inside the loop scope only (r16 round
-    // fusion): with AQE, `localCheckpoint(eager = false)` is not lazy —
-    // AdaptiveSparkPlanExec materializes every intermediate stage at
-    // mark time, re-imposing the per-link job barriers the fusion
-    // exists to remove. Inside this scope AQE has nothing left to
-    // decide that the operator does not already derive from observed
-    // data: the shuffle width IS the row-count-adaptive loopParts
-    // (AQE's coalescing lever), every table is (long, long), and the
-    // round sequence is inherently serial, so the job-barrier count is
-    // the scale-dominant term (one barrier per round vs three). The
-    // caller session's AQE setting is untouched.
-    loopSession.conf.set("spark.sql.adaptive.enabled", "false")
+    val loopSession = graft.Sessions.scoped(spark,
+      "spark.sql.shuffle.partitions" -> loopParts.toString,
+      "spark.sql.adaptive.enabled" -> "false")
     def rehome(df: DataFrame, s: org.apache.spark.sql.SparkSession) =
       s.createDataFrame(df.rdd, df.schema)
     und = rehome(und, loopSession)

@@ -1518,9 +1518,9 @@ object EventTime {
     * 2.8 s at 8, on 100k events) while a corpus-sized stream needs the
     * full width — exactly the Components label-loop sizing problem, so
     * the SAME rule applies (loopPartitionsFor: ~50k rows/task, floor 4,
-    * cap = the session setting = the user's cluster-wide knob), scoped
-    * the same way ([[graft.operators.Components.scopedSession]]: child
-    * session, the caller's conf is never touched). The row count is one
+    * cap = the session setting = the user's cluster-wide knob), on a
+    * [[graft.Sessions.scoped]] child session, so the caller's conf is
+    * never touched. The row count is one
     * metadata-cheap parquet count. A real deployment sizes this from
     * expected per-batch volume; the checkpoint pins it for the query's
     * life either way.
@@ -1532,8 +1532,8 @@ object EventTime {
     val rows = Fixtures.once(spark, dir, "events_rows")(
       Tables(spark, dir, "events").count())
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.operators.Components.scopedSession(spark,
-      graft.operators.Components.loopPartitionsFor(rows, sessionParts))
+    graft.Sessions.scoped(spark, "spark.sql.shuffle.partitions" ->
+      graft.operators.Components.loopPartitionsFor(rows, sessionParts).toString)
   }
 
   /** Drain a streaming job into a uniquely-named in-memory sink with

@@ -475,9 +475,11 @@ object Joins {
     import spark.implicits._
     // the walk emits one row per order across all iterations, so Spark's
     // recursion safety valve (cteRecursionRowLimit, default 1e6 rows)
-    // trips below the 8x audit scale — raise it per-query, idempotently
-    // (the nanosAsLong precedent); the DEPTH limit stays at its default
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "1000000000")
+    // trips below the 8x audit scale — raise it on a scoped session that
+    // the edge view and the recursive query run on, so the caller's
+    // session keeps its limit; the DEPTH limit stays at its default
+    val s = graft.Sessions.scoped(spark,
+      "spark.sql.cteRecursionRowLimit" -> "1000000000")
     // materialize the edge list ONCE: a plain CTE is inlined into every
     // recursive step, so the lead-window would be recomputed depth times
     // — persist + temp view makes each iteration a cache-read join.
@@ -487,13 +489,13 @@ object Joins {
     // costs more than the columnar cache scans save. Kept as persist.)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
-    Tables.orders(spark, dir)
+    Tables.orders(s, dir)
       .select($"o_custkey", $"o_orderkey".as("src"),
         lead($"o_orderkey", 1).over(w).as("dst"),
         row_number().over(w).as("rn"))
       .persist()
       .createOrReplaceTempView("graft_c16_edges")
-    spark.sql(
+    s.sql(
       """WITH RECURSIVE r AS (
         |  SELECT o_custkey, src AS o_orderkey, CAST(1 AS BIGINT) AS pos
         |  FROM graft_c16_edges WHERE rn = 1
@@ -862,9 +864,11 @@ object Joins {
   //
   // The fixture derives a genuinely hot key (60% of lineitem collapses
   // to key 0 — this corpus has no organic skew, r12's finding) and the
-  // session is SCOPED (Components.scopedSession): skew thresholds are
-  // lowered so the optimizer faces at test scale exactly what default
-  // thresholds face at 100 TB, broadcast is disabled so the join stays
+  // key plans on a conf-scoped session (graft.Sessions.scoped): skew
+  // thresholds are scaled to the test corpus so the optimizer faces at
+  // test scale exactly what default thresholds (256 MB partition, 64 MB
+  // advisory) face at 100 TB — the demonstrated mechanism is identical,
+  // not the numbers — broadcast is disabled so the join stays
   // sort-merge (the skewed regime — a broadcastable build side would
   // never skew in the first place), and none of it leaks to other keys.
   // The decision rule for operators: AQE handles skew that becomes
@@ -884,7 +888,16 @@ object Joins {
       |FROM l LEFT JOIN orders o ON l.k = o.o_orderkey
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val s = skewScopedSession(spark)
+    val s = graft.Sessions.scoped(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512b")
     // the single-file corpus scans as ONE map task, and AQE can only
     // split a skewed reduce partition at MAPPER-OUTPUT granularity — an
     // indivisible single-mapper partition can never split. The round-
@@ -908,30 +921,6 @@ object Joins {
           .as("sum_v"),
         count($"o_orderkey").cast("bigint").as("n_matched"))
       .orderBy($"is_hot")
-  }
-
-  /** A conf-scoped child session for c22 (the a20 contamination rule):
-    * skew thresholds scaled to the test corpus, broadcast disabled so
-    * the join plans as sort-merge — the regime OptimizeSkewedJoin
-    * exists for. At 100 TB the DEFAULT thresholds (256 MB partition,
-    * 64 MB advisory) play this exact role and none of this scoping is
-    * needed; the scaled values keep the demonstrated mechanism
-    * identical, not the numbers. */
-  private def skewScopedSession(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    val s = graft.operators.Components.scopedSession(spark,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    s.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2k")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "512b")
-    s
   }
 
   val defs: Seq[QueryDef] = Seq(c1, c2, c3, c4, c5, c6, c7, c8, c9, c10,

@@ -816,9 +816,6 @@ object ScansFilters {
       |ORDER BY c.fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.sources.TxLog
-    val cat = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"))
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
     // the bloom catalog is read-only after its commit, so it is a shared
     // per-JVM fixture; the point-lookup probe below runs per invocation.
     // ~64 keys/file (FP rate ≈ 6e-8 at the 16 Kibit sizing); HASH
@@ -827,8 +824,6 @@ object ScansFilters {
     // nCat/101 keeps the prune requirement satisfiable even if every
     // probe lands in its own file.
     val (table, v1) = Fixtures.dir(spark, dir, "bloom_fp") { t =>
-      val nCat = cat.count()
-      val nFiles = math.max(4, math.ceil(nCat / 64.0).toInt)
       // Spark 4's planned write + AQE coalesces even a user-numbered
       // HASH repartition in the write job when the batch is tiny (range
       // repartitions survive), which would fold the whole catalog into
@@ -836,14 +831,16 @@ object ScansFilters {
       // before r14 this key's multi-file layout survived only when an
       // earlier key happened to lower the session's advisory partition
       // size (order-dependent). The fixture IS its physical layout, so
-      // pin it: planned write off for exactly this staging write.
-      val saved = spark.conf.get("spark.sql.optimizer.plannedWrite.enabled")
-      spark.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
-      try TxLog.commit(t,
-        TxLog.stage(cat.repartition(nFiles, $"fp"), t), 0,
+      // pin it: the catalog is built and staged on a scoped session with
+      // planned write off.
+      val s = graft.Sessions.scoped(spark,
+        "spark.sql.optimizer.plannedWrite.enabled" -> "false")
+      val cat = Tables.documentsDist(s, dir)
+        .select($"doc_id", md5($"text").as("fp"))
+        .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+      val nFiles = math.max(4, math.ceil(cat.count() / 64.0).toInt)
+      TxLog.commit(t, TxLog.stage(cat.repartition(nFiles, $"fp"), t), 0,
         bloomCols = Seq("fp"))
-      finally
-        spark.conf.set("spark.sql.optimizer.plannedWrite.enabled", saved)
     }
     // the probe set: a driver-side key list by nature (the point-lookup
     // API contract) — ~n/101 fingerprints, restated in the oracle
@@ -938,7 +935,11 @@ object ScansFilters {
         .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
     val dLo = java.time.LocalDate.of(1995, 1, 1).toEpochDay
     val dHi = java.time.LocalDate.of(1995, 12, 31).toEpochDay
-    val pruned = TxLog.readWhere(spark, factT, fv, Seq(
+    // the read, the join and the require below plan on a session with
+    // size-based auto-broadcast OFF — the same plan Bench times
+    val s = graft.Sessions.scoped(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val pruned = TxLog.readWhere(s, factT, fv, Seq(
       ("dy", dLo.toString, dHi.toString),
       ("o_orderkey", "0", mid.toString)))
     require(pruned.inputFiles.length < TxLog.files(factT, fv).length,
@@ -947,31 +948,26 @@ object ScansFilters {
     // or footers — and the broadcast election taken from it
     val dimRows = TxLog.rowCountOf(dimT, dv)
       .getOrElse(sys.error("dim manifest must carry row counts"))
-    val dimDf = TxLog.readEvolved(spark, dimT, dv)
+    val dimDf = TxLog.readEvolved(s, dimT, dv)
     val wantBroadcast = dimRows <= 1000000L
     val dimSide = if (wantBroadcast) broadcast(dimDf) else dimDf
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val out = pruned.join(dimSide, $"o_custkey" === $"c_custkey")
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).cast("bigint").as("n_orders"),
-          sum($"cents").cast("bigint").as("rev_cents"))
-        .orderBy("c_mktsegment")
-      // with size-based auto-broadcast OFF, a BroadcastHashJoin in the
-      // plan can only have come from the manifest-driven hint above —
-      // asserted only when the stats actually elected one, so a scale
-      // factor whose dim exceeds the cutoff degrades to a shuffle join
-      // instead of failing the key (the election, not the broadcast, is
-      // what this key grades)
-      require(!wantBroadcast ||
-        out.queryExecution.sparkPlan.collectFirst {
-          case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-            ()
-        }.nonEmpty, "manifest row count did not elect a broadcast join")
-      out
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    val out = pruned.join(dimSide, $"o_custkey" === $"c_custkey")
+      .groupBy($"c_mktsegment")
+      .agg(count(lit(1)).cast("bigint").as("n_orders"),
+        sum($"cents").cast("bigint").as("rev_cents"))
+      .orderBy("c_mktsegment")
+    // with size-based auto-broadcast OFF, a BroadcastHashJoin in the
+    // plan can only have come from the manifest-driven hint above —
+    // asserted only when the stats actually elected one, so a scale
+    // factor whose dim exceeds the cutoff degrades to a shuffle join
+    // instead of failing the key (the election, not the broadcast, is
+    // what this key grades)
+    require(!wantBroadcast ||
+      out.queryExecution.sparkPlan.collectFirst {
+        case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+          ()
+      }.nonEmpty, "manifest row count did not elect a broadcast join")
+    out
   }
 
   // A38 — OPTIMIZE Z-ORDER THROUGH THE LOG (the maintenance job behind
@@ -2524,38 +2520,30 @@ object ScansFilters {
       |    ELSE value END) * 100, 0) AS BIGINT))::BIGINT AS sum_cents
       |FROM d GROUP BY day ORDER BY day""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    // dynamic overwrite mode is scoped to THIS query: save/restore the
-    // session conf in `finally` (Components' pattern) so a later key on
-    // the same session never silently inherits dynamic-mode semantics
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val oldMode = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try {
-      val path = TmpDirs.fresh("graft_a20", dir, "events_by_day")
-      val src = Tables.eventsUs(spark, dir)
-        .withColumn("day", date_format($"ts_us", "yyyy-MM-dd"))
-        .select($"event_id", $"value", $"day")
-      // full build, then the repair: overwrite ONLY the earliest day's
-      // partition with corrected values (dynamic mode keeps the rest)
-      src.write.mode("overwrite").partitionBy("day").parquet(path)
-      val d0 = src.agg(min($"day")).head.getString(0)
-      src.where($"day" === d0)
-        .withColumn("value", $"value" * 2)
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-      // read-back partition-column inference types `day` as DATE; the
-      // report is keyed on the formatted string (h8's convention)
-      spark.read.parquet(path)
-        .groupBy(date_format($"day", "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).cast("bigint").as("n_events"),
-          sum(round($"value" * 100, 0).cast("bigint")).cast("bigint")
-            .as("sum_cents"))
-        .orderBy($"day")
-    } finally {
-      oldMode match {
-        case Some(m) => spark.conf.set(confKey, m)
-        case None => spark.conf.unset(confKey)
-      }
-    }
+    // dynamic overwrite mode is scoped to THIS query: the writes and the
+    // read-back run on a scoped session, so a later key on the caller's
+    // session never silently inherits dynamic-mode semantics
+    val s = graft.Sessions.scoped(spark,
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+    val path = TmpDirs.fresh("graft_a20", dir, "events_by_day")
+    val src = Tables.eventsUs(s, dir)
+      .withColumn("day", date_format($"ts_us", "yyyy-MM-dd"))
+      .select($"event_id", $"value", $"day")
+    // full build, then the repair: overwrite ONLY the earliest day's
+    // partition with corrected values (dynamic mode keeps the rest)
+    src.write.mode("overwrite").partitionBy("day").parquet(path)
+    val d0 = src.agg(min($"day")).head.getString(0)
+    src.where($"day" === d0)
+      .withColumn("value", $"value" * 2)
+      .write.mode("overwrite").partitionBy("day").parquet(path)
+    // read-back partition-column inference types `day` as DATE; the
+    // report is keyed on the formatted string (h8's convention)
+    s.read.parquet(path)
+      .groupBy(date_format($"day", "yyyy-MM-dd").as("day"))
+      .agg(count(lit(1)).cast("bigint").as("n_events"),
+        sum(round($"value" * 100, 0).cast("bigint")).cast("bigint")
+          .as("sum_cents"))
+      .orderBy($"day")
   }
 
   val defs: Seq[QueryDef] = Seq(a1, a2, b1, b2, b3, b4, b5, b6, b7, b8, b9,

@@ -32,8 +32,10 @@ object Tables {
     * read checks the VALUES (two cheap SQLConf map lookups, no planner
     * effect) and writes only on drift — steady state performs zero conf
     * writes, and a mutated session self-heals on its next events read.
-    * Callers that build their own sessions (Bench, Verify, tests,
-    * streaming jobs) all funnel through here.
+    * [[graft.Sessions.local]] sets both confs at build time, so on its
+    * sessions (every graft main, the test suites) and their
+    * [[graft.Sessions.scoped]] children this never writes; it writes only
+    * for a session a caller builds itself (the perfbench harness's).
     */
   private[graft] def ensureEventsConf(spark: SparkSession): Unit = {
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")

@@ -23,9 +23,7 @@ class BucketingSpec extends SparkSpec {
     // disable auto-broadcast: at this tiny sf the planner would broadcast
     // (and skip bucketed reading); the 100 TB case this test models is the
     // fact⋈fact join where broadcasting is impossible
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("orders_bkt")
         .join(spark.table("lineitem_bkt"), "o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
@@ -35,7 +33,7 @@ class BucketingSpec extends SparkSpec {
       val expect = Tables.orders(spark, sfDir).join(
         Tables.lineitem(spark, sfDir), col("o_orderkey") === col("l_orderkey")).count()
       assert(joined.count() === expect)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   test("groupBy on the bucket key also avoids the exchange") {

@@ -12,7 +12,7 @@ class ComponentsSpec extends SparkSpec {
     */
   private def bothPaths[T](body: => T): T = {
     val atDefault = body
-    val underLoop = withConf(threshold, "-1")(body)
+    val underLoop = withConf(threshold -> "-1")(body)
     assert(atDefault == underLoop, "driver finish and label loop disagree")
     atDefault
   }
@@ -60,7 +60,7 @@ class ComponentsSpec extends SparkSpec {
     // on the driver and the bound would pin nothing.
     import spark.implicits._
     val n = 2048
-    val labels = withConf(threshold, "-1")(labelMap(Components.connectedComponents(
+    val labels = withConf(threshold -> "-1")(labelMap(Components.connectedComponents(
       (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d"), maxRounds = 10)))
     assert(labels.size === n)
     assert(labels.values.forall(_ == 0L)) // one component, min id 0
@@ -76,7 +76,7 @@ class ComponentsSpec extends SparkSpec {
       (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d")))
     val atDefault = run()
     assert(Components.lastRunNonEmptyRounds === 0)
-    val underLoop = withConf(threshold, "-1")(run())
+    val underLoop = withConf(threshold -> "-1")(run())
     assert(Components.lastRunNonEmptyRounds >= 1)
     assert(atDefault === underLoop)
     assert(atDefault.size === n && atDefault.values.forall(_ == 0L))
@@ -141,13 +141,8 @@ class ComponentsSpec extends SparkSpec {
     // ceiling the loop ran under — the exact thing this test observes.
     // The broadcast threshold is forced to -1 so that the loop, not the
     // driver finish, labels this 299,999-edge graph.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val broadcastBytes = spark.conf.get(threshold)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(threshold, "-1")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.adaptive.enabled" -> "false", threshold -> "-1") {
       val expected = Components.loopPartitionsFor(n.toLong, 32)
       assert(expected > 4, s"fixture too small to distinguish adaptive from floor ($expected)")
       val labels = Components.connectedComponents(
@@ -163,10 +158,6 @@ class ComponentsSpec extends SparkSpec {
       assert(labels.rdd.getNumPartitions === expected,
         s"label loop not adaptively sized: got ${labels.rdd.getNumPartitions}, want $expected")
       assert(labels.select("rep").distinct().count() === 1L) // still one component
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set(threshold, broadcastBytes)
     }
   }
 

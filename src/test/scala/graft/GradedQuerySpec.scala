@@ -65,6 +65,14 @@ class GradedQuerySpec extends SparkSpec {
         s"$key claims single-row output but is not")
   }
 
+  test("no key leaks a conf into the session it ran on") {
+    val leaks = GradedRuns.all.filter(_.confDiff.nonEmpty).map(r =>
+      s"${r.d.key}: ${r.confDiff.mkString("; ")}")
+    assert(leaks.isEmpty, s"${leaks.size} keys changed the session's " +
+      "confs (a key that needs a conf runs on Sessions.scoped):\n" +
+      leaks.mkString("\n"))
+  }
+
   test("dedup family output is idempotent-stable (two runs, same result)") {
     for (key <- Seq("g1_dedup_exact", "g3_minhash_lsh", "g16_simhash_dedup",
         "g2_neardup_jaccard")) {

@@ -11,16 +11,27 @@ import org.apache.spark.sql.DataFrame
   * this order) on the manifest's corpus, `GoldenWrite.sfDir`; each key is
   * constructed and immediately hashed with [[GoldenWrite.rowsHash]]. Both
   * steps are wrapped in a per-key Try, so one broken loader or analysis
-  * fails only its own key's assertions.
+  * fails only its own key's assertions. The session's confs are
+  * snapshotted before construction and after hashing; `confDiff` holds
+  * every conf whose value the graded key changed, as
+  * `conf: before -> after` (`<unset>` where the conf had no value).
   */
 object GradedRuns {
 
   final case class Run(d: QueryDef, df: Try[DataFrame],
-      rowsHash: Try[(Long, String)])
+      rowsHash: Try[(Long, String)], confDiff: Seq[String])
 
   lazy val all: Seq[Run] = SparkEntry.all.sortBy(_.key).map { d =>
-    val df = Try(d.fn(SparkSpec.session, GoldenWrite.sfDir))
-    Run(d, df, df.flatMap(f => Try(GoldenWrite.rowsHash(f))))
+    val spark = SparkSpec.session
+    val before = spark.conf.getAll
+    val df = Try(d.fn(spark, GoldenWrite.sfDir))
+    val rowsHash = df.flatMap(f => Try(GoldenWrite.rowsHash(f)))
+    val after = spark.conf.getAll
+    val diff = (before.keySet ++ after.keySet).toSeq.sorted
+      .filter(k => before.get(k) != after.get(k))
+      .map(k => s"$k: ${before.getOrElse(k, "<unset>")} -> " +
+        after.getOrElse(k, "<unset>"))
+    Run(d, df, rowsHash, diff)
   }
 
   /** Output row count of `key`; rethrows the key's construction or

@@ -239,8 +239,7 @@ class PlanQualitySpec extends SparkSpec {
     // overwrite never stages into them)
     import spark.implicits._
     import graft.operators.Mview
-    val t = s"${graft.sources.TmpDirs.perPidRoot("graft_mview")}/spec/prune"
-    graft.sources.TmpDirs.rmTree(new java.io.File(t))
+    val t = freshDir("prune").resolve("t").toString
     def st(rows: (Long, Long, Long)*) =
       rows.toDF("o_custkey", "n_orders", "rev_cents")
     // base: one customer per bucket (pmod(custkey, 8) = 0..7)
@@ -401,18 +400,11 @@ class PlanQualitySpec extends SparkSpec {
     // by lowering them — the assertion is that the engine's join shapes KEEP
     // qualifying for the rewrite (equi-join, selective creation side), not a
     // config default.
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0")
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+        -> "0") {
       import org.apache.spark.sql.functions._
       val o = sources.Tables.orders(spark, sfDir)
         .where(col("o_orderpriority") === "1-URGENT")
@@ -426,17 +418,11 @@ class PlanQualitySpec extends SparkSpec {
       // over a bloom_filter_agg build — assert both halves of the rewrite
       assert(plan.contains("might_contain") && plan.contains("bloom_filter_agg"),
         s"runtime bloom filter not injected:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 
   test("a18: bucketed join and aggregate run with zero join/agg shuffles") {
-    val conf = spark.conf
-    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       import org.apache.spark.sql.functions._
       operators.ScansFilters.bucketedTables(spark, sfDir)
       val (ot, lt) = operators.ScansFilters.bucketedNames(sfDir)
@@ -451,9 +437,6 @@ class PlanQualitySpec extends SparkSpec {
         s"bucketed join still shuffles:\n$plan")
       assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
         s"scan not bucket-aware:\n$plan")
-    } finally saved match {
-      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None    => conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -137,7 +137,7 @@ class PropertySpec extends SparkSpec {
     // the session default finishes this graph on the driver, -1 forces
     // the label loop: the law holds on both paths
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    for (t <- Seq(spark.conf.get(threshold), "-1")) withConf(threshold, t) {
+    for (t <- Seq(spark.conf.get(threshold), "-1")) withConf(threshold -> t) {
       val labels = operators.Components.connectedComponents(
         nodes.toDF("id"), edges.toDF("s", "d"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -27,19 +27,11 @@ class SkewJoinSpec extends SparkSpec {
     // skew=true marker on the executed join — i.e. the engine's join
     // shapes stay eligible for the runtime rewrite.
     import spark.implicits._
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB") {
       val hot = spark.range(50000).select(lit(42L).as("k"), $"id".as("payload"))
         .union(spark.range(2000).select(($"id" + 100L).as("k"), $"id"))
       val dim = spark.range(3000).select(($"id" % 2200).as("k"),
@@ -52,9 +44,6 @@ class SkewJoinSpec extends SparkSpec {
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not split the skewed partition:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 

@@ -43,19 +43,10 @@ class SortedIntersectSizeSpec extends SparkSpec {
     SortedIntersectSize.register(spark)
     val df = Seq((Seq(1L, 5L, 9L), Seq(1L, 9L, 11L))).toDF("a", "b")
     // force interpreted evaluation
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       assert(df.select(expr("sorted_intersect_size(a, b)")).head().getInt(0) === 2)
     }
     assert(df.select(expr("sorted_intersect_size(a, b)")).head().getInt(0) === 2)
-  }
-
-  private def withSQLConf(kvs: (String, String)*)(f: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

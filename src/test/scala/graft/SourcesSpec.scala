@@ -95,12 +95,11 @@ class SourcesSpec extends SparkSpec {
     // fixed for) must be healed by the NEXT events read, or every
     // µs-vintage NTZ→epoch cast silently shifts by the zone offset
     val conf = spark.conf
-    conf.set("spark.sql.session.timeZone", "America/New_York")
-    try {
+    withConf("spark.sql.session.timeZone" -> "America/New_York") {
       Tables.ensureEventsConf(spark)
       assert(conf.get("spark.sql.session.timeZone") === "UTC")
       assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
-    } finally conf.set("spark.sql.session.timeZone", "UTC")
+    }
   }
 
   test("Fixtures build once per (dir, name), nest, retry a throw; fresh empties") {

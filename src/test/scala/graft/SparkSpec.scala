@@ -20,13 +20,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createTempDirectory(root, name)
   }
 
-  /** Runs `body` with the shared session's `key` set to `value`, restoring
-    * the previous value afterwards.
+  /** Runs `body` with the shared session's confs set to `kvs`, then puts
+    * each key back as it was: its previous value, or unset when it had
+    * none.
     */
-  def withConf[T](key: String, value: String)(body: => T): T = {
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, saved)
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
 

@@ -431,8 +431,7 @@ class StreamingSpec extends SparkSpec {
     // StreamingJobs.idempotentAppend: replaying a batch leaves the table
     // byte-identical; a NEW batchId appends.
     import spark.implicits._
-    val out = s"${graft.sources.TmpDirs.perPidRoot("graft_stream_stage")}/law"
-    graft.sources.TmpDirs.rmTree(new java.io.File(out))
+    val out = freshDir("law").resolve("out").toString
     val b0 = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
     val b1 = Seq((3L, 30.0)).toDF("id", "v")
     StreamingJobs.idempotentAppend(b0, 0L, out)
@@ -460,7 +459,6 @@ class StreamingSpec extends SparkSpec {
     // no-op, and (2) the final state independent of batch arrival order —
     // the two properties a replayed/reordered micro-batch sequence needs.
     import spark.implicits._
-    val root = graft.sources.TmpDirs.perPidRoot("graft_stream_stage")
     def mk(rows: Seq[(Long, Long, Long, Long)]) = rows
       .toDF("event_id", "user_id", "us", "cents")
       .select($"event_id", $"user_id",
@@ -474,8 +472,7 @@ class StreamingSpec extends SparkSpec {
       (300L, 9L, 1000L, 90L)))
     def runOrder(name: String, batches: Seq[org.apache.spark.sql.DataFrame],
         replay: Option[org.apache.spark.sql.DataFrame]) = {
-      val out = s"$root/upsert-law-$name"
-      graft.sources.TmpDirs.rmTree(new java.io.File(out))
+      val out = freshDir(s"upsert-law-$name").resolve("out").toString
       batches.foreach(StreamingJobs.upsertLatest(_, out))
       replay.foreach(StreamingJobs.upsertLatest(_, out))
       spark.read.parquet(out)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{TmpDirs, TxLog}
+import graft.sources.TxLog
 
 /** Adversarial laws of the manifest commit protocol (a23): atomicity,
   * optimistic-concurrency conflict, snapshot isolation, invisibility of
@@ -8,11 +8,8 @@ import graft.sources.{TmpDirs, TxLog}
   */
 class TxLogSpec extends SparkSpec {
 
-  private def freshTable(name: String): String = {
-    val t = s"${TmpDirs.perPidRoot("graft_txlog")}/spec/$name"
-    TmpDirs.rmTree(new java.io.File(t))
-    t
-  }
+  private def freshTable(name: String): String =
+    freshDir(name).resolve("t").toString
 
   import spark.implicits._
   private def df(rows: (Long, String)*) = rows.toDF("id", "v")
