@@ -160,17 +160,20 @@ object Udfs {
       |         ':', o_orderpriority) AS seg
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
-    spark.sql(
+    // the functions, the view and the query live on the key's own
+    // session, not the caller's
+    val s = graft.Sessions.scoped(spark)
+    s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION graft_band(p DOUBLE)
         |RETURNS STRING
         |RETURN CASE WHEN p < 50000 THEN 'low'
         |            WHEN p < 150000 THEN 'mid' ELSE 'high' END""".stripMargin)
-    spark.sql(
+    s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION graft_seg(p DOUBLE, pri STRING)
         |RETURNS STRING
         |RETURN concat(graft_band(p), ':', pri)""".stripMargin)
-    Tables.orders(spark, dir).createOrReplaceTempView("orders_i5")
-    spark.sql(
+    Tables.orders(s, dir).createOrReplaceTempView("orders_i5")
+    s.sql(
       """SELECT o_orderkey, graft_band(o_totalprice) AS band,
         |  round(ln(o_totalprice), 6) AS log_price,
         |  graft_seg(o_totalprice, o_orderpriority) AS seg

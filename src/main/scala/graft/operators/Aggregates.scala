@@ -322,8 +322,10 @@ object Aggregates {
       |FROM lineitem
       |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
       |ORDER BY rf, ls""".stripMargin) { (spark, dir) =>
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
+    // the view lives on the key's own session, not the caller's
+    val s = graft.Sessions.scoped(spark)
+    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
+    s.sql(
       """SELECT coalesce(l_returnflag, '(all)') AS rf,
         |  coalesce(l_linestatus, '(all)') AS ls,
         |  round(sum(l_quantity), 2) AS sum_qty,

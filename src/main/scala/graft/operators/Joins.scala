@@ -257,9 +257,12 @@ object Joins {
       |                  WHERE o.o_custkey = c.c_custkey), 0), 2) AS max_spend
       |FROM customer c
       |ORDER BY c_custkey""".stripMargin) { (spark, dir) =>
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
+    // the views and the query live on the key's own session: a later
+    // key's bare `FROM orders` on the caller's must not resolve to them
+    val s = graft.Sessions.scoped(spark)
+    Tables.customer(s, dir).createOrReplaceTempView("customer")
+    Tables.orders(s, dir).createOrReplaceTempView("orders")
+    s.sql(
       """SELECT c_custkey, c_name,
         |  (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
         |  round(coalesce((SELECT max(o_totalprice) FROM orders o
@@ -280,9 +283,10 @@ object Joins {
       |           WHERE o.o_custkey = c.c_custkey
       |           ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
       |ORDER BY c_custkey""".stripMargin) { (spark, dir) =>
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
+    val s = graft.Sessions.scoped(spark) // c10's view rule
+    Tables.customer(s, dir).createOrReplaceTempView("customer")
+    Tables.orders(s, dir).createOrReplaceTempView("orders")
+    s.sql(
       """SELECT c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS top_price
         |FROM customer c,
         |  LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
@@ -405,9 +409,10 @@ object Joins {
         |      AS n_null_stripped) t
         |ORDER BY n_null_bearing""".stripMargin
     graded("c14_join_null_anti", sql) { (spark, dir) =>
-      Tables.part(spark, dir).createOrReplaceTempView("part")
-      Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-      spark.sql(sql)
+      val s = graft.Sessions.scoped(spark) // c10's view rule
+      Tables.part(s, dir).createOrReplaceTempView("part")
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
+      s.sql(sql)
     }
   }
 
@@ -762,14 +767,16 @@ object Joins {
       |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
+    // c10's view rule; the functions go where the query runs
+    val s = graft.Sessions.scoped(spark)
     for (f <- Seq(graft.GraftExtensions.bloomAgg,
         graft.GraftExtensions.bloomMightContain)) {
       val (name, info, builder) = f
-      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+      s.sessionState.functionRegistry.registerFunction(name, info, builder)
     }
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_c20_orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("graft_c20_lineitem")
-    spark.sql(
+    Tables.orders(s, dir).createOrReplaceTempView("graft_c20_orders")
+    Tables.lineitem(s, dir).createOrReplaceTempView("graft_c20_lineitem")
+    s.sql(
       """WITH dim AS (
         |  SELECT o_orderkey FROM graft_c20_orders
         |  WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000),

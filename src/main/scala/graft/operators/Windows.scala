@@ -368,8 +368,10 @@ object Windows {
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
       |  RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT ROW)
       |ORDER BY o_custkey, o_orderkey""".stripMargin) { (spark, dir) =>
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_e14_orders")
-    spark.sql(
+    // the view lives on the key's own session, not the caller's
+    val s = graft.Sessions.scoped(spark)
+    Tables.orders(s, dir).createOrReplaceTempView("graft_e14_orders")
+    s.sql(
       """SELECT o_custkey, o_orderkey, o_orderdate,
         |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,10))) OVER w, 2)
         |    AS DOUBLE) AS rev_7d,

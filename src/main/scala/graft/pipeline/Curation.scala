@@ -476,18 +476,21 @@ object Curation {
   // the false-positive-rate bound are pinned in PropertySpec; bench-only
   // because the filter's bit layout has no DuckDB twin (d9/d20's rule).
   private val g50 = benchOnly("g50_bloom_membership") { (spark, dir) =>
+    // the view, the functions and the query live on the key's own
+    // session, not the caller's
+    val s = graft.Sessions.scoped(spark)
     for (f <- Seq(graft.GraftExtensions.bloomAgg,
         graft.GraftExtensions.bloomMightContain)) {
       val (name, info, builder) = f
-      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+      s.sessionState.functionRegistry.registerFunction(name, info, builder)
     }
-    Tables.documents(spark, dir).createOrReplaceTempView("graft_g50_docs")
+    Tables.documents(s, dir).createOrReplaceTempView("graft_g50_docs")
     // 1M-item / 8M-bit sizing: ~1 MB filter, FPR ≈ 2% at capacity and
     // far below it under capacity — generous headroom for the sf sweep
     // while staying broadcast-sized; at 100 TB the same two literals are
     // the only thing that changes (nItems = corpus cardinality estimate,
     // bits ≈ 8–10 per item for ~2% FPR).
-    spark.sql(
+    s.sql(
       """WITH corpus AS (
         |  SELECT DISTINCT xxhash64(md5(text)) AS h
         |  FROM graft_g50_docs WHERE doc_id % 5 <> 4),

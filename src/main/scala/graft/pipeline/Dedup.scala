@@ -767,8 +767,8 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$base/verdicts")
       chainFailed = false
     } finally {
-      // bounded like every other drain in the suite (drainToMemorySink's
-      // 300 s rule): an infinite await on a hung background write would
+      // bounded like every other drain in the suite (the 300 s rule of
+      // StreamingJobs.drain): an infinite await on a hung background write would
       // wedge the whole Bench/Verify run with no named culprit
       try scala.concurrent.Await.result(jaccF,
         scala.concurrent.duration.Duration(300, "s"))

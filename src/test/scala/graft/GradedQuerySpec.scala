@@ -73,11 +73,23 @@ class GradedQuerySpec extends SparkSpec {
       leaks.mkString("\n"))
   }
 
+  test("no key leaves a temp view or a running stream behind") {
+    val leaks = GradedRuns.all.filter(_.leftBehind.nonEmpty).map(r =>
+      s"${r.d.key}: ${r.leftBehind.mkString("; ")}")
+    assert(leaks.isEmpty, s"${leaks.size} keys left state on the session " +
+      "(a key registers its views on Sessions.scoped and drains through " +
+      "StreamingJobs.drain):\n" + leaks.mkString("\n"))
+  }
+
   test("dedup family output is idempotent-stable (two runs, same result)") {
     for (key <- Seq("g1_dedup_exact", "g3_minhash_lsh", "g16_simhash_dedup",
         "g2_neardup_jaccard")) {
-      val r1 = SparkEntry.queries(key)(spark, sfDir).collect().toSeq
-      val r2 = SparkEntry.queries(key)(spark, sfDir).collect().toSeq
+      // cache cleared after each run (Bench's rule): the second run must
+      // recompute, not read the first run's persisted frames
+      def run() = try SparkEntry.queries(key)(spark, sfDir).collect().toSeq
+        finally spark.catalog.clearCache()
+      val r1 = run()
+      val r2 = run()
       assert(r1 === r2, s"$key is nondeterministic across runs")
     }
   }

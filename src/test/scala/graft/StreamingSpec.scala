@@ -8,22 +8,11 @@ import org.apache.spark.sql.functions._
   */
 class StreamingSpec extends SparkSpec {
 
-  private def runToMemory(df: org.apache.spark.sql.DataFrame,
-      name: String, mode: String): Unit = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-  }
-
   test("streaming tumbling window equals batch h1 on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
     assert(stream.isStreaming)
-    runToMemory(StreamingJobs.tumblingCounts(stream), "h4_tumble", "complete")
-    val streamed = spark.table("h4_tumble")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.tumblingCounts(stream), "h4_tumble", "complete")
       .select(col("win_start").cast("long"), col("n_events"), col("sum_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val batch = SparkEntry.queries("h1_win_tumbling")(spark, sfDir)
@@ -34,12 +23,12 @@ class StreamingSpec extends SparkSpec {
 
   test("session_window: streaming output equals batch, except the watermark tail") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.sessionCounts(stream), "h4_sessions", "append")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("user_id"), col("session_start").cast("long"),
         col("session_end").cast("long"), col("n_events"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val streamed = key(spark.table("h4_sessions"))
+    val streamed = key(StreamingJobs.drainToMemory(
+      StreamingJobs.sessionCounts(stream), "h4_sessions", "append"))
     val batchEvents = graft.sources.Tables.eventsUs(spark, sfDir)
     val batch = key(StreamingJobs.sessionCounts(batchEvents, streaming = false))
     assert(streamed.nonEmpty)
@@ -56,9 +45,9 @@ class StreamingSpec extends SparkSpec {
 
   test("flatMapGroupsWithState totals equal batch groupBy on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.statefulUserTotals(stream).toDF(), "h4_state", "update")
     // finite stream → one update emission per user; compare against batch
-    val streamed = spark.table("h4_state")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.statefulUserTotals(stream).toDF(), "h4_state", "update")
       .groupBy("user_id")
       .agg(max("n_events").as("n_events"), max("total_value").as("tv"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
@@ -84,20 +73,20 @@ class StreamingSpec extends SparkSpec {
     ev.withColumn("chunk", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("ts_us"))))
       .write.mode("overwrite").partitionBy("chunk").parquet(chunkDir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(chunkDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(chunkDir)
+    val stream = StreamingJobs.fileStream(spark, chunkDir)
       .withColumn("ts_us", expr("timestamp_micros(ts div 1000)"))
-    val q = StreamingJobs.tumblingCounts(stream).writeStream
-      .format("memory").queryName("h4_chunks").outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    assert(q.recentProgress.length > 1, "expected multiple micro-batches")
-    val streamed = spark.table("h4_chunks")
-      .select(col("win_start").cast("long"), col("n_events"), col("sum_cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // complete mode: every batch carries the whole table, the last the
+    // final one
+    var batches = 0
+    var streamed = Set.empty[(Long, Long, Long)]
+    StreamingJobs.drain(StreamingJobs.tumblingCounts(stream), "h4_chunks",
+        "complete") { (b, _) =>
+      batches += 1
+      streamed = b
+        .select(col("win_start").cast("long"), col("n_events"), col("sum_cents"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    assert(batches > 1, "expected multiple micro-batches")
     val batch = SparkEntry.queries("h1_win_tumbling")(spark, sfDir)
       .select(col("day_start").cast("long"), col("n_events"), col("sum_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -106,11 +95,11 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join equals the batch join on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.attributionJoin(stream), "h4_attr", "append")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("view_id"), col("purchase_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val streamed = key(spark.table("h4_attr"))
+    val streamed = key(StreamingJobs.drainToMemory(
+      StreamingJobs.attributionJoin(stream), "h4_attr", "append"))
     val batch = key(StreamingJobs.attributionJoin(
       graft.sources.Tables.eventsUs(spark, sfDir), streaming = false))
     assert(batch.nonEmpty)
@@ -121,9 +110,9 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful rolling z-score equals batch h14 on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.rollingZscore(stream).toDF(), "h4_zscore", "update")
     // finite stream → take each user's final state emission
-    val streamed = spark.table("h4_zscore")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.rollingZscore(stream).toDF(), "h4_zscore", "update")
       .groupBy("user_id")
       .agg(max("n_scored").as("s"), max("n_anomalies").as("a"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -135,8 +124,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful max-gap monitor equals the batch lag window on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.maxGapMonitor(stream).toDF(), "h4_gaps", "update")
-    val streamed = spark.table("h4_gaps")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.maxGapMonitor(stream).toDF(), "h4_gaps", "update")
       .groupBy("user_id")
       .agg(max("n_gaps").as("n"), max("max_gap_us").as("m"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -154,9 +143,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful debounce verdicts equal batch h30 on the full stream") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.debounceMonitor(stream).toDF(), "h4_debounce",
-      "append")
-    val streamed = spark.table("h4_debounce")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.debounceMonitor(stream).toDF(), "h4_debounce", "append")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     val batch = SparkEntry.queries("h30_debounce")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap
@@ -166,8 +154,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming seasonal-profile cells equal batch h24 counts") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.seasonalProfile(stream), "h24_stream", "complete")
-    val streamed = spark.table("h24_stream")
+    val streamed = StreamingJobs.drainToMemory(
+        StreamingJobs.seasonalProfile(stream), "h24_stream", "complete")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getLong(3))).toSet
     val batch = SparkEntry.queries("h24_seasonal_profile")(spark, sfDir)
@@ -179,8 +167,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup emits each event_id once") {
     val stream = StreamingJobs.readEvents(spark, sfDir)
-    runToMemory(StreamingJobs.dedupEvents(stream), "h4_dedup", "append")
-    val out = spark.table("h4_dedup")
+    val out = StreamingJobs.drainToMemory(
+      StreamingJobs.dedupEvents(stream), "h4_dedup", "append")
     val batchDistinct = graft.sources.Tables
       .eventsUs(spark, sfDir).select("event_id").distinct().count()
     assert(out.select("event_id").distinct().count() === batchDistinct)
@@ -194,9 +182,9 @@ class StreamingSpec extends SparkSpec {
     // no-op dedup and this test names the failure)
     val redelivered = StreamingJobs.readEvents(spark, sfDir)
       .unionAll(StreamingJobs.readEvents(spark, sfDir))
-    runToMemory(redelivered, "h38_raw", "append")
+    val raw = StreamingJobs.drainToMemory(redelivered, "h38_raw", "append")
     val n = graft.sources.Tables.eventsUs(spark, sfDir).count()
-    assert(spark.table("h38_raw").count() === 2 * n,
+    assert(raw.count() === 2 * n,
       "the union of two independent file streams must deliver every event twice")
     val deduped = SparkEntry.queries("h38_stream_dedup_parity")(spark, sfDir)
     assert(deduped.count() === n)
@@ -233,7 +221,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def ts(day: Int, i: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:$i%02d")
-    // arrival order (mtime-pinned): day-10 rows, then day-11 rows, then
+    // arrival order (landInOrder): day-10 rows, then day-11 rows, then
     // the LATE day-1 rows. The late file must be the SECOND batch after
     // the watermark-advancing data: Spark executes batch N with the
     // watermark committed from batch N−1's stats (measured: a late file
@@ -246,30 +234,18 @@ class StreamingSpec extends SparkSpec {
       .toDF("event_id", "ts_us", "value")
     val late = (0 until 5).map(i => (100L + i, ts(1, i), 1.0))
       .toDF("event_id", "ts_us", "value")
-    onTime.repartition(1).write.parquet(dir)
-    def parquets = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    val first = parquets
-    val base = System.currentTimeMillis()
-    first.foreach(_.setLastModified(base))
-    onTime2.repartition(1).write.mode("append").parquet(dir)
-    val firstNames = first.map(_.getName).toSet
-    val second = parquets.filterNot(f => firstNames(f.getName))
-    second.foreach(_.setLastModified(base + 300000L))
-    late.repartition(1).write.mode("append").parquet(dir)
-    val secondNames = firstNames ++ second.map(_.getName)
-    parquets.filterNot(f => secondNames(f.getName))
-      .foreach(_.setLastModified(base + 600000L))
+    StreamingJobs.landInOrder(dir,
+      Seq(onTime, onTime2, late).map(_.repartition(1)))
     def drain(withWm: Boolean, name: String): Map[Long, Long] = {
-      val src = spark.readStream.schema(spark.read.parquet(dir).schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
+      val src = StreamingJobs.fileStream(spark, dir)
       val in = if (withWm) src.withWatermark("ts_us", "1 day") else src
       val agg = in.groupBy(window(col("ts_us"), "1 day"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").cast("long").as("day"), col("n"))
-      runToMemory(agg, name, if (withWm) "update" else "complete")
       // update-mode memory sink appends each update; latest = max n
-      spark.table(name).groupBy("day").agg(max("n").as("n"))
+      StreamingJobs.drainToMemory(agg, name,
+          if (withWm) "update" else "complete")
+        .groupBy("day").agg(max("n").as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     val raw = drain(withWm = false, "h44law_raw")
@@ -283,7 +259,6 @@ class StreamingSpec extends SparkSpec {
       s"watermarked drain must retain exactly the on-time days: $wm")
     val lateDay = raw.keySet.min // day 1 has the smallest window start
     assert(!wm.contains(lateDay), s"late day survived the watermark: $wm")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
 
   test("session windows under a watermark: exactly the sessions the " +
@@ -296,36 +271,22 @@ class StreamingSpec extends SparkSpec {
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:$i%02d")
     // arrival: user-1 session on day 10, then user-2 session on day 20
     // (advances the watermark PAST day 10's close), then LATE day-1
-    // rows for user 1. Same mtime pinning as h44's law above.
+    // rows for user 1, landed in that order as in h44's law above.
     val f1 = (0 until 10).map(i => (1L, ts(10, i), 1.0))
       .toDF("user_id", "ts_us", "value")
     val f2 = (0 until 5).map(i => (2L, ts(20, i), 1.0))
       .toDF("user_id", "ts_us", "value")
     val f3 = (0 until 5).map(i => (1L, ts(1, i), 1.0))
       .toDF("user_id", "ts_us", "value")
-    f1.repartition(1).write.parquet(dir)
-    def parquets = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    val base = System.currentTimeMillis()
-    val first = parquets; first.foreach(_.setLastModified(base))
-    f2.repartition(1).write.mode("append").parquet(dir)
-    val firstNames = first.map(_.getName).toSet
-    val second = parquets.filterNot(f => firstNames(f.getName))
-    second.foreach(_.setLastModified(base + 300000L))
-    f3.repartition(1).write.mode("append").parquet(dir)
-    val secondNames = firstNames ++ second.map(_.getName)
-    parquets.filterNot(f => secondNames(f.getName))
-      .foreach(_.setLastModified(base + 600000L))
+    StreamingJobs.landInOrder(dir, Seq(f1, f2, f3).map(_.repartition(1)))
     def drain(delay: String, name: String) = {
-      val sessions = spark.readStream
-        .schema(spark.read.parquet(dir).schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
+      val sessions = StreamingJobs.fileStream(spark, dir)
         .withWatermark("ts_us", delay)
         .groupBy(session_window(col("ts_us"), "1 hour"), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"), col("n"))
-      runToMemory(sessions, name, "append")
-      spark.table(name).collect().map(r => r.getLong(0) -> r.getLong(1))
+      StreamingJobs.drainToMemory(sessions, name, "append")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
     }
     val strict = drain("1 day", "h47law_strict")
     // user 1's day-10 session finalized once day 20 pushed the watermark
@@ -338,7 +299,6 @@ class StreamingSpec extends SparkSpec {
     val loose = drain("100000 days", "h47law_loose")
     assert(loose.isEmpty,
       s"an unbounded watermark must finalize nothing: ${loose.toSeq}")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
 
   test("stream-stream join under watermarks: a 1-day delay drops the " +
@@ -350,46 +310,29 @@ class StreamingSpec extends SparkSpec {
     val cDir = s"$root/clicks"; val pDir = s"$root/purch"
     def ts(day: Int, m: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:$m%02d:00")
-    def writeBatch(dir: String, df: org.apache.spark.sql.DataFrame,
-        mt: Long): Unit = {
-      val d = new java.io.File(dir)
-      val before = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-      df.repartition(1).write.mode("append").parquet(dir)
-      d.listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(_.setLastModified(mt))
-    }
-    val base = System.currentTimeMillis()
     val users = (1L to 5L).toSeq
     // clicks: day-10 file, day-11 file, then the LATE day-1 file
-    writeBatch(cDir, users.map(u => (u, ts(10, 0))).toDF("user_id", "c_ts"),
-      base)
-    writeBatch(cDir, users.map(u => (u, ts(11, 0))).toDF("user_id", "c_ts"),
-      base + 60000L)
-    writeBatch(cDir,
-      (1L to 3L).map(u => (u, ts(1, 0))).toDF("user_id", "c_ts"),
-      base + 120000L)
+    StreamingJobs.landInOrder(cDir, Seq(
+      users.map(u => (u, ts(10, 0))).toDF("user_id", "c_ts"),
+      users.map(u => (u, ts(11, 0))).toDF("user_id", "c_ts"),
+      (1L to 3L).map(u => (u, ts(1, 0))).toDF("user_id", "c_ts"))
+      .map(_.repartition(1)))
     // purchases (all on time): day-10 + day-1 purchases arrive first —
     // the day-1 purchase can only pair with the LATE clicks, so its
     // pair's existence is exactly the watermark question
-    writeBatch(pDir,
+    StreamingJobs.landInOrder(pDir, Seq(
       (users.map(u => (u, ts(10, 30))) ++
         (1L to 3L).map(u => (u, ts(1, 30)))).toDF("p_user", "p_ts"),
-      base)
-    writeBatch(pDir, users.map(u => (u, ts(11, 30))).toDF("p_user", "p_ts"),
-      base + 60000L)
+      users.map(u => (u, ts(11, 30))).toDF("p_user", "p_ts"))
+      .map(_.repartition(1)))
     def drain(delay: String, name: String): Long = {
-      def side(dir: String, tsCol: String) = spark.readStream
-        .schema(spark.read.parquet(dir).schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark(tsCol, delay)
+      def side(dir: String, tsCol: String) =
+        StreamingJobs.fileStream(spark, dir).withWatermark(tsCol, delay)
       val pairs = side(pDir, "p_ts").join(side(cDir, "c_ts"),
         col("p_user") === col("user_id") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-      runToMemory(pairs, name, "append")
-      spark.table(name).count()
+      StreamingJobs.drainToMemory(pairs, name, "append").count()
     }
     val strict = drain("1 day", "h45law_strict")
     val loose = drain("100 days", "h45law_loose")
@@ -399,7 +342,6 @@ class StreamingSpec extends SparkSpec {
       s"1-day watermark must emit exactly the on-time pairs, got $strict")
     assert(loose === 13L,
       s"infinite-ish watermark must retain the late pairs, got $loose")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
 
   test("an outer stream-stream join without watermarks is rejected — " +
@@ -410,18 +352,31 @@ class StreamingSpec extends SparkSpec {
       freshDir("oj").toString + "/in"
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("k", "ts").write.parquet(dir)
-    def src = spark.readStream
-      .schema(spark.read.parquet(dir).schema).parquet(dir)
+    def src = StreamingJobs.fileStream(spark, dir)
     val j = src.join(
       src.withColumnRenamed("k", "k2").withColumnRenamed("ts", "ts2"),
       col("k") === col("k2"), "leftOuter")
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
-      val q = j.writeStream.format("memory").queryName("oj_bad")
-        .outputMode("append").start()
-      try q.awaitTermination(60000) finally q.stop()
+      StreamingJobs.drainToMemory(j, "oj_bad", "append")
     }
     assert(ex.getMessage.toLowerCase.contains("watermark"),
       s"rejection must name the missing watermark: ${ex.getMessage}")
+  }
+
+  test("a drain whose sink throws fails by the drain's name and leaves " +
+      "no stream running") {
+    val ex = intercept[IllegalStateException] {
+      StreamingJobs.drain(StreamingJobs.readEvents(spark, sfDir),
+          "h4_refused", "append") { (_, id) =>
+        throw new RuntimeException(s"sink refused batch $id")
+      }
+    }
+    assert(ex.getMessage.startsWith("h4_refused "), ex.getMessage)
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("sink refused")),
+      s"the sink's own error must stay in the cause chain: $ex")
+    assert(spark.streams.active.isEmpty,
+      s"a failed drain left ${spark.streams.active.map(_.name).toSeq}")
   }
 
   test("idempotentAppend exactly-once law: a replayed batch does not duplicate") {
