@@ -19,8 +19,11 @@ object GoldenWrite {
   val defaultPath = "src/test/resources/golden_sf0001.json"
   val sfDir = "/root/testdata/sf0.001"
 
-  def rowsHash(df: org.apache.spark.sql.DataFrame): (Long, String) = {
-    val rows = df.collect()
+  def rowsHash(df: org.apache.spark.sql.DataFrame): (Long, String) =
+    rowsHash(df.collect())
+
+  /** [[rowsHash]] of rows already collected, in their collected order. */
+  def rowsHash(rows: Array[org.apache.spark.sql.Row]): (Long, String) = {
     val md = MessageDigest.getInstance("MD5")
     // field (\u0001 — written as an ESCAPE, a raw control byte here reads
     // as mkString("") and looks like a missing delimiter) AND row (\n)

@@ -32,18 +32,20 @@ import org.apache.spark.sql.functions._
   *  2. **pointer jump** — `rep(v) ← min(rep(v), rep(rep(v)))`: halves
   *     remaining chain depth, purely an accelerator (without it the
   *     neighbor-min fixpoint needs O(diameter) rounds; with it,
-  *     O(log diameter)). Applied `jumpsPerRound` times per round: each
-  *     application is one more tiny label-table self-join INSIDE the same
-  *     checkpointed round, while each saved ROUND costs two scheduled
-  *     jobs — at 3 jumps the per-round depth reduction is ~8× (measured:
-  *     a 2000-node path converges in 5 rounds vs 11 with one jump).
+  *     O(log diameter)). Applied [[JumpsPerRound]] = 2 times per round:
+  *     each application is one more tiny label-table self-join INSIDE the
+  *     same checkpointed round, while each saved ROUND costs two
+  *     scheduled jobs — at 2 jumps the per-round depth reduction is ~4×
+  *     (2^jumps).
   *  3. rounds stop when the label-contracted QUOTIENT graph has no edge
   *     left (lv ≠ lu) — that emptiness ⟺ labels constant across every
   *     edge ⟺ the neighbor-min fixpoint. A non-empty quotient strictly
   *     decreases Σrep within its round (min-monotone updates), so
   *     progress per round is guaranteed and no separate convergence
   *     aggregate is needed (r15: the old per-round Σrep job never fired
-  *     before the quotient check and was removed).
+  *     before the quotient check and was removed). A quotient still
+  *     non-empty after [[MaxRounds]] rounds throws instead of returning
+  *     labels that never converged.
   *
   * Each round's label table is `localCheckpoint`'d: self-referencing
   * joins otherwise grow the logical plan exponentially and the
@@ -54,7 +56,7 @@ import org.apache.spark.sql.functions._
   * LINEAGE but carries the origin plan's STATISTICS onto the resulting
   * `LogicalRDD` — so a loop that feeds checkpoint(joins(checkpoint(...)))
   * back into itself compounds the size estimate every round
-  * (estimate^2 per self-join — ^8 with 3 jumps). By round ~4 the
+  * (estimate^2 per self-join — ^4 with 2 jumps). By round ~4 the
   * sizeInBytes BigInt has millions of digits and the optimizer's stats
   * visitor (`SizeInBytesOnlyStatsPlanVisitor`, via InjectRuntimeFilter /
   * join selection) burns minutes in BigInteger multiplication — observed
@@ -64,6 +66,9 @@ import org.apache.spark.sql.functions._
   * label table, and bounded at any scale because it never compounds.
   */
 object Components {
+
+  private val JumpsPerRound = 2 // class doc, step 2
+  private val MaxRounds = 30 // class doc, step 3: O(log diameter) rounds suffice
 
   /** localCheckpoint + detach the origin-plan statistics (see class doc). */
   private def freshStatsCheckpoint(df: DataFrame): DataFrame = {
@@ -133,21 +138,12 @@ object Components {
     *               are taken positionally. Both endpoints of every edge
     *               must be ids in `nodes`: the two paths (class doc) only
     *               agree on graphs that keep this contract.
-    * @param loopShufflePartitions shuffle partitions for the per-round
-    *        joins. Default None = ADAPTIVE: sized from the counted label
-    *        table via [[loopPartitionsFor]] (one count piggybacked on the
-    *        seed-sum job, zero extra actions) — small dedup graphs keep
-    *        the measured 4-partition fast path, corpus-sized node tables
-    *        get the full session parallelism instead of a constant-4
-    *        funnel. Pass Some(n) only to pin a count in tests.
+    * @param contractPasses local-contraction passes (loop path only)
     * @return (id, rep) — rep is the minimum node id in the component
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int = 30,
-      loopShufflePartitions: Option[Int] = None,
-      jumpsPerRound: Int = 2,
       contractPasses: Int = 3): DataFrame = {
-    require(jumpsPerRound >= 1 && contractPasses >= 1)
+    require(contractPasses >= 1)
     val spark = nodes.sparkSession
     // materialize the edge list ONCE: the election below counts it, and
     // on the loop path contraction pass 1's repartitionByRange runs a
@@ -172,8 +168,7 @@ object Components {
       // narrowed count would concentrate the edges' nodes into a handful
       // of in-memory maps.
       val contractParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      labelLoop(nodes, edgesMat, edgeRows, maxRounds, jumpsPerRound,
-        contractParts, loopShufflePartitions, contractPasses)
+      labelLoop(nodes, edgesMat, edgeRows, contractParts, contractPasses)
     }
   }
 
@@ -259,8 +254,7 @@ object Components {
 
   /** The above-threshold path: contraction passes, then the label loop. */
   private def labelLoop(nodes: DataFrame, edgesMat: DataFrame,
-      edgeRows: Long, maxRounds: Int, jumpsPerRound: Int, contractParts: Int,
-      loopShufflePartitions: Option[Int], contractPasses: Int): DataFrame = {
+      edgeRows: Long, contractParts: Int, contractPasses: Int): DataFrame = {
     val spark = nodes.sparkSession
     val idCol = nodes.columns.head
     // components over (node, local-rep) pairs ≡ components over the raw
@@ -386,8 +380,7 @@ object Components {
     // IS loopParts (AQE's coalescing lever), every table is (long,
     // long), and the rounds are serial, so the job-barrier count is the
     // scale-dominant term (one barrier per round vs three).
-    val loopParts = loopShufflePartitions
-      .getOrElse(loopPartitionsFor(labelRows, contractParts))
+    val loopParts = loopPartitionsFor(labelRows, contractParts)
     val loopSession = graft.Sessions.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
       "spark.sql.adaptive.enabled" -> "false")
@@ -425,11 +418,11 @@ object Components {
     // (lv ≠ lu) edge hands min(lv, lu) to the larger side through
     // neighbor-min, every update is min-monotone), so progress per
     // round is guaranteed and the loop terminates via the quotient
-    // check (maxRounds backstops). No work is wasted in any round: the
-    // final quotient — the one that comes up empty — is exactly the
-    // convergence proof the old verify round computed, and every
-    // propagation ran over a non-empty quotient.
-    while (!converged && rounds < maxRounds) {
+    // check (MaxRounds backstops, and throws). No work is wasted in any
+    // round: the final quotient — the one that comes up empty — is
+    // exactly the convergence proof the old verify round computed, and
+    // every propagation ran over a non-empty quotient.
+    while (!converged && rounds < MaxRounds) {
       // ≤ ~8 MB of (long, long) quotient rows → broadcast it into every
       // join that consumes it (see `quotient`'s election note)
       val small = undRows <= 500000L
@@ -446,7 +439,7 @@ object Components {
         .join(if (small) broadcast(nbrMin) else nbrMin, Seq("doc"), "left")
         .select(col("doc"),
           least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep")))
-      val jumped = (1 to jumpsPerRound).foldLeft(l1) { (cur, _) =>
+      val jumped = (1 to JumpsPerRound).foldLeft(l1) { (cur, _) =>
         cur.as("a")
           .join(cur.select(col("doc").as("rdoc"), col("rep").as("rrep")),
             col("a.rep") === col("rdoc"))
@@ -464,6 +457,9 @@ object Components {
       if (undRows == 0L) converged = true
     }
     lastRunNonEmptyRounds = nonEmptyRounds
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge: $edgeRows edges, " +
+        s"$undRows quotient edges left after $rounds rounds")
     // re-home the result to the CALLER's session: downstream operators
     // compose it with caller-session DataFrames and must plan at the
     // caller's sizing, not the loop's. The underlying checkpointed RDD

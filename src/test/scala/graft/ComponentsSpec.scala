@@ -55,13 +55,14 @@ class ComponentsSpec extends SparkSpec {
     // chain above does not), so convergence rides entirely on the
     // in-loop quotient rewrite. A 2048-node scattered path converges in
     // 7 rounds with it (measured); without it the loop is diameter-bound
-    // and 10 rounds leave wrong labels — this pins the bound. The
+    // and needs more than 10 rounds — this pins the bound. The
     // threshold is forced to -1: at the default this graph is finished
     // on the driver and the bound would pin nothing.
     import spark.implicits._
     val n = 2048
     val labels = withConf(threshold -> "-1")(labelMap(Components.connectedComponents(
-      (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d"), maxRounds = 10)))
+      (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d"))))
+    assert(Components.lastRunNonEmptyRounds <= 10)
     assert(labels.size === n)
     assert(labels.values.forall(_ == 0L)) // one component, min id 0
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 class DedupPipelineSpec extends SparkSpec {
 
-  private lazy val verdicts = SparkEntry.queries("g19_dedup_pipeline")(spark, sfDir)
+  private lazy val verdicts = GradedRuns.frame("g19_dedup_pipeline")
 
   test("every document receives exactly one verdict") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
@@ -28,9 +28,10 @@ class DedupPipelineSpec extends SparkSpec {
   }
 
   test("verdicts are deterministic across runs") {
-    val r1 = verdicts.collect().toSeq
-    val r2 = SparkEntry.queries("g19_dedup_pipeline")(spark, sfDir).collect().toSeq
-    assert(r1 === r2)
+    // a rerun against GradedRuns' run; both clear the cache after them
+    val rerun = try SparkEntry.queries("g19_dedup_pipeline")(spark, sfDir)
+      .collect().toSeq finally spark.catalog.clearCache()
+    assert(rerun === GradedRuns.rows("g19_dedup_pipeline").toSeq)
   }
 
   test("g85 triangle census matches a hand-computed toy graph") {

@@ -5,8 +5,8 @@ package graft
   * key last passed oracle parity. Catches coupled Spark+oracle drift the
   * parity gate cannot see. On an INTENTIONAL semantic change, regenerate
   * with `tools/run.sh graft.GoldenWrite` in the same commit. The outputs
-  * come from [[GradedRuns]], the one execution per key that
-  * [[GradedQuerySpec]] also reads.
+  * come from [[GradedRuns]], the one execution per key that every suite
+  * reads.
   */
 class GoldenSpec extends SparkSpec {
 

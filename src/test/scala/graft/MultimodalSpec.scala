@@ -21,7 +21,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("m2 pipeline: binary column survives distributed decode, one row per doc") {
-    val df = SparkEntry.queries("m2_media_decode")(spark, sfDir)
+    val df = GradedRuns.frame("m2_media_decode")
     val docs = graft.sources.Tables.documents(spark, sfDir).count()
     assert(df.count() === docs)
     assert(df.schema.fieldNames.toSeq ===
@@ -35,7 +35,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("m3 frame sampling yields exactly k rows per document") {
-    val df = SparkEntry.queries("m3_frame_sample")(spark, sfDir)
+    val df = GradedRuns.frame("m3_frame_sample")
     val docs = graft.sources.Tables.documents(spark, sfDir).count()
     assert(df.count() === docs * 4)
     assert(df.groupBy("doc_id").count()
@@ -122,7 +122,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("m5 decoded dimensions follow the synthesis rule for every doc") {
-    val df = SparkEntry.queries("m5_image_decode")(spark, sfDir)
+    val df = GradedRuns.frame("m5_image_decode")
     assert(df.where(col("width") =!= lit(8) + col("doc_id") % 8
       || col("height") =!= lit(8) + col("doc_id") % 5).count() === 0)
     assert(df.where(col("brightness") < 0 || col("brightness") > 1).count() === 0)
@@ -153,9 +153,9 @@ class MultimodalSpec extends SparkSpec {
     // m2 (bench-only typed-Dataset path) and m5 (graded path) run the
     // SAME codec over the same synthesized payloads — their outputs must
     // be identical row-for-row
-    val dec = SparkEntry.queries("m2_media_decode")(spark, sfDir)
+    val dec = GradedRuns.frame("m2_media_decode")
       .select(col("doc_id"), col("width"), col("height"), col("brightness"))
-    val graded = SparkEntry.queries("m5_image_decode")(spark, sfDir)
+    val graded = GradedRuns.frame("m5_image_decode")
       .select(col("doc_id"), col("width").as("w5"), col("height").as("h5"),
         col("brightness").as("b5"))
     assert(dec.join(graded, "doc_id")

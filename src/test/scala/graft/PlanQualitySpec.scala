@@ -64,34 +64,18 @@ class PlanQualitySpec extends SparkSpec {
     "g97_pq_adc_topk", // 1-row PQ codebook/LUT + ≤50-row candidate list crossed
     "g98_ivfadc_topk") // same constant-size crosses as g97, over pruned lists
 
-  // Keys whose fn EXECUTES side effects before returning (h34–h38 drain a
-  // full streaming query; a21 writes three parquet snapshots) and whose
-  // returned frame is just a scan of the result (memory-sink table /
-  // snapshot read-back) — capturing their "plan" costs a full run and
-  // asserts nothing about the real pipeline. Their internal plan shapes
-  // are covered where they are visible: the streaming transforms are the
-  // SAME expressions as their batch twins (h1/h3/c19/h28/g1 — all netted
-  // here), and a21's builders are g16/g2/g46's plans (also netted here).
-  private val executesOnConstruct: Set[String] = Set(
-    "h34_stream_tumbling_parity", "h35_stream_session_parity",
-    "h36_stream_join_parity", "h37_stream_state_parity",
-    "h38_stream_dedup_parity", "a21_verdict_snapshot")
-
-  // Per-key Try: a single broken loader must not cascade into every plan
-  // assertion (see GradedQuerySpec's construction gate, which reports the
-  // per-key failures; here broken keys are simply absent from `plans`).
-  private lazy val plans: Seq[(String, String)] = SparkEntry.all
-    .filterNot(d => executesOnConstruct(d.key)).flatMap { d =>
-      scala.util.Try(
-        d.key -> d.fn(spark, sfDir).queryExecution.executedPlan.toString
-      ).toOption
-    }
+  // Every key's plan as GradedRuns rendered it before execution, with a
+  // per-key Try there: a single broken loader must not cascade into
+  // every plan assertion. "all plans construct" fails on any key absent
+  // here; GradedQuerySpec's construction gate names each one's error.
+  private lazy val plans: Seq[(String, String)] =
+    GradedRuns.all.flatMap(r => r.plan.toOption.map(r.d.key -> _))
 
   test("all plans construct") {
-    val expected = SparkEntry.all.size - executesOnConstruct.size
-    assert(plans.size === expected,
-      s"${expected - plans.size} keys failed to construct — " +
-        "see GradedQuerySpec's construction gate for per-key errors")
+    val missing = GradedRuns.all.filter(_.plan.isFailure).map(_.d.key)
+    assert(missing.isEmpty, s"${missing.size} keys have no plan, so no plan " +
+      "assertion covers them (see GradedQuerySpec's construction gate): " +
+      missing.mkString(", "))
   }
 
   test("no query plans a CartesianProduct") {
@@ -101,17 +85,15 @@ class PlanQualitySpec extends SparkSpec {
 
   // `*(n)` prefixes in the EXECUTED plan string mark WholeStageCodegen
   // spans (AQE materializes them only after execution, so each hot key
-  // is run first). A hot path that falls out of codegen — e.g. a
-  // non-codegen Expression slipping into a projection — is a multi-x
+  // is read from its final plan). A hot path that falls out of codegen —
+  // e.g. a non-codegen Expression slipping into a projection — is a multi-x
   // interpreter slowdown at 100 TB that no unit test would otherwise
   // catch; this pins the brief's "widen the codegen spans" requirement.
   test("hot paths run inside WholeStageCodegen spans") {
     val hot = Seq("d1_agg_group", "b1_filter_pred", "e4_win_running",
       "f3_str_funcs", "g4_cosine_topk", "g7_text_stats", "c2_join_sortmerge")
     for (key <- hot) {
-      val df = SparkEntry.queries(key)(spark, sfDir)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = GradedRuns.finalPlan(key)
       assert(plan.contains("*("), s"$key has no codegen span:\n$plan")
       // the custom codegen kernel must live INSIDE a starred span —
       // VecCosine implements doGenCode precisely so scoring stays fused
@@ -128,8 +110,7 @@ class PlanQualitySpec extends SparkSpec {
     // the UNIQUE vec_id — a full corpus shuffle+sort to compute a per-row
     // maximum. The rewritten build scores the one-row broadcast codebook
     // inside the scan projection; no Window may appear anywhere in g17.
-    val plan = SparkEntry.queries("g17_ann_ivf")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val plan = GradedRuns.plan("g17_ann_ivf")
     assert(!plan.contains("Window"),
       s"g17 build regressed to a Window-shuffle argmax:\n$plan")
   }
@@ -144,7 +125,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("report queries broadcast every dim and push the date filters (r2)") {
-    val p = plans.toMap.apply("r2_report_region_volume")
+    val p = GradedRuns.plan("r2_report_region_volume")
     // customer/supplier/nation/region all broadcast; only orders⋈lineitem
     // may shuffle
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 4, p)
@@ -153,13 +134,13 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("filter pushdown reaches the parquet scan (b1)") {
-    val plan = plans.toMap.apply("b1_filter_pred")
+    val plan = GradedRuns.plan("b1_filter_pred")
     assert(plan.contains("PushedFilters: ["), plan)
     assert(plan.contains("IsNotNull"), plan)
   }
 
   test("column pruning reaches the parquet scan (a1 reads only selected columns)") {
-    val plan = plans.toMap.apply("a1_scan_project")
+    val plan = GradedRuns.plan("a1_scan_project")
     val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     // a1 projects a subset of lineitem; the scan must not read all 11 columns
     assert(!readSchema.contains("l_comment") && !readSchema.contains("l_tax"),
@@ -170,12 +151,12 @@ class PlanQualitySpec extends SparkSpec {
     // the eval-set side must broadcast so the candidate side never
     // shuffles on the gram key — the property that makes g26 viable at
     // 100 TB
-    val p = plans.toMap.apply("g26_decontaminate")
+    val p = GradedRuns.plan("g26_decontaminate")
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
   test("h7 funnel pushes each step's event_type filter into the scan") {
-    val p = plans.toMap.apply("h7_funnel")
+    val p = GradedRuns.plan("h7_funnel")
     for (step <- Seq("view", "click", "purchase"))
       assert(p.contains(s"EqualTo(event_type,$step)"),
         s"missing pushed filter for $step:\n$p")
@@ -185,7 +166,7 @@ class PlanQualitySpec extends SparkSpec {
     // the two-pass prefix sum exists precisely to avoid a single-partition
     // global-order window over the full table — the per-document window
     // must partition on the range key
-    val p = plans.toMap.apply("g28_pack_chunks")
+    val p = GradedRuns.plan("g28_pack_chunks")
     assert(p.contains("hashpartitioning(rng"), p)
   }
 
@@ -193,7 +174,7 @@ class PlanQualitySpec extends SparkSpec {
     // same invariant as g28: the per-delta running sum must partition on
     // the day key; only the tiny per-day totals table may use a global
     // window
-    val p = plans.toMap.apply("h10_max_concurrency")
+    val p = GradedRuns.plan("h10_max_concurrency")
     assert(p.contains("hashpartitioning(day_k"), p)
   }
 
@@ -201,19 +182,17 @@ class PlanQualitySpec extends SparkSpec {
     // the point of the rewrite — hot keys spread over (key, salt); if the
     // salt fell out of the join condition the plan degraded back to the
     // skew-prone single-key shuffle
-    val p = plans.toMap.apply("c13_join_salted")
+    val p = GradedRuns.plan("c13_join_salted")
     assert(p.contains("salt"), p)
   }
 
   test("c22: AQE OptimizeSkewedJoin fires — executed plan carries a skew SMJ") {
     // the row's whole claim is that AQE did the mitigation c13 does by
     // hand; that is only observable in the POST-EXECUTION adaptive plan
-    // (skew split is decided from runtime partition sizes), so run the
-    // query and then inspect the final plan for the skew-flagged
+    // (skew split is decided from runtime partition sizes), so inspect
+    // the final plan of the executed query for the skew-flagged
     // sort-merge join
-    val df = SparkEntry.queries("c22_join_skew_aqe")(spark, sfDir)
-    df.collect()
-    val executed = df.queryExecution.executedPlan.toString
+    val executed = GradedRuns.finalPlan("c22_join_skew_aqe")
     assert(executed.contains("SortMergeJoin"), executed)
     assert(executed.contains("skew=true"),
       s"AQE skew split did not fire at $sfDir:\n$executed")
@@ -223,7 +202,7 @@ class PlanQualitySpec extends SparkSpec {
     // the consumption half of IVM — if the answer's plan ever rejoins
     // the fact table, the key silently degrades into a full recompute
     // with extra steps
-    val p = plans.toMap.apply("a24_mview_rewrite")
+    val p = GradedRuns.plan("a24_mview_rewrite")
     assert(p.contains("graft_mview"), p)
     assert(!p.contains("orders.parquet"),
       s"a24's ANSWER must read maintained state, not the fact table:\n$p")
@@ -277,7 +256,7 @@ class PlanQualitySpec extends SparkSpec {
     // the a24 consumption contract applied to NDV: if the answer ever
     // rejoins orders, the key degrades into d2's full countDistinct
     // with extra steps
-    val p = plans.toMap.apply("d49_bitmap_ndv_maintain")
+    val p = GradedRuns.plan("d49_bitmap_ndv_maintain")
     assert(p.contains("graft_ndv"), p)
     assert(!p.contains("orders.parquet"),
       s"d49's ANSWER must read maintained bitmap state:\n$p")
@@ -286,7 +265,7 @@ class PlanQualitySpec extends SparkSpec {
   test("g37 keywords: per-doc top-3 is WindowGroupLimit-pruned, not a full rank") {
     // the e5 shape: row_number ≤ k must plan the group-limit pushdown so
     // each shuffle partition retains only k rows per doc before the sort
-    val p = plans.toMap.apply("g37_keywords")
+    val p = GradedRuns.plan("g37_keywords")
     assert(p.contains("WindowGroupLimit"), p)
   }
 
@@ -294,14 +273,14 @@ class PlanQualitySpec extends SparkSpec {
     // same rank-limit pushdown contract as g37: each shuffle partition
     // keeps only its per-source top-k before the sort — at 100 TB the
     // shuffle carries candidates, not the corpus
-    val p = plans.toMap.apply("g61_domain_cap")
+    val p = GradedRuns.plan("g61_domain_cap")
     assert(p.contains("WindowGroupLimit"), p)
   }
 
   test("g67 BM25: per-term top-20 is WindowGroupLimit-pruned") {
     // the retrieval shape: each shuffle partition keeps only its per-term
     // top-k candidates before the sort — g37's rank-limit contract
-    val p = plans.toMap.apply("g67_bm25")
+    val p = GradedRuns.plan("g67_bm25")
     assert(p.contains("WindowGroupLimit"), p)
   }
 
@@ -310,7 +289,7 @@ class PlanQualitySpec extends SparkSpec {
     // hybrid retrieval at scale = two posting equi-joins + rank-limit
     // pushdown; a missing group limit would sort every candidate list
     // in full before cutting to 20
-    val p = plans.toMap.apply("g94_rrf_fusion")
+    val p = GradedRuns.plan("g94_rrf_fusion")
     assert("WindowGroupLimit".r.findAllIn(p).size >= 2, p)
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -319,7 +298,7 @@ class PlanQualitySpec extends SparkSpec {
     // g17's "list id is a partition key" claim, asserted: the search
     // scan must carry the probe ids as PartitionFilters — at 100 TB
     // this is nprobe/C of the corpus vs a full scan
-    val p = plans.toMap.apply("g93_ann_ivf_pruned")
+    val p = GradedRuns.plan("g93_ann_ivf_pruned")
     assert(p.contains("PartitionFilters") &&
       "PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).nonEmpty,
       s"probe read must prune on the cid partition column:\n$p")
@@ -331,7 +310,7 @@ class PlanQualitySpec extends SparkSpec {
     // IVF prunes WHICH lists are read (cid PartitionFilters), PQ
     // compresses WHAT the scan reads (the index scan's ReadSchema
     // carries codes, not embedding)
-    val p = plans.toMap.apply("g98_ivfadc_topk")
+    val p = GradedRuns.plan("g98_ivfadc_topk")
     assert(p.contains("PartitionFilters") &&
       "PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).nonEmpty,
       s"probe read must prune on the cid partition column:\n$p")
@@ -347,7 +326,7 @@ class PlanQualitySpec extends SparkSpec {
     // the only nested-loop join is the 1-row codebook broadcast — a
     // brute-force all-pairs stage would plan a second BNLJ over the
     // corpus-sized query set
-    val p = plans.toMap.apply("g92_ann_ivf_batch")
+    val p = GradedRuns.plan("g92_ann_ivf_batch")
     assert(p.contains("WindowGroupLimit"), p)
     assert("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin".r
       .findFirstIn(p).nonEmpty, s"list probe must be an equi-join:\n$p")
@@ -357,14 +336,14 @@ class PlanQualitySpec extends SparkSpec {
   test("i5 SQL UDF inlines into the plan — no black-box ScalaUDF node") {
     // the point of the SQL-function surface: the body participates in
     // Catalyst (codegen/folding/pushdown) instead of opaquing the plan
-    val p = plans.toMap.apply("i5_sql_udf")
+    val p = GradedRuns.plan("i5_sql_udf")
     assert(!p.contains("ScalaUDF"), p)
   }
 
   test("d18 MAD: both percentile lookups join back as broadcasts") {
     // med and mad are 3-row tables; shuffling lineitem twice to join them
     // would double the query's cost at any scale
-    val p = plans.toMap.apply("d18_mad_outliers")
+    val p = GradedRuns.plan("d18_mad_outliers")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)
   }
 
@@ -373,7 +352,7 @@ class PlanQualitySpec extends SparkSpec {
     // shuffle — partial aggregation reduces it to 200 rows per partition
     // BEFORE the b-keyed exchange. If the partial agg disappeared, the
     // shuffle would carry 200x the corpus.
-    val p = plans.toMap.apply("d45_bootstrap_ci")
+    val p = GradedRuns.plan("d45_bootstrap_ci")
     val gen = p.indexOf("Generate explode")
     val ex = p.indexOf("Exchange hashpartitioning(b#")
     assert(gen >= 0, "no explode in the d45 plan:\n" + p)
@@ -387,7 +366,7 @@ class PlanQualitySpec extends SparkSpec {
     // the dim-side family filter must reach the partitioned fact scan as a
     // runtime DPP expression (lang IN dynamicpruning#N) — a static filter
     // can't exist here because the family lives in dim relation data
-    val p = plans.toMap.apply("b6_partition_prune")
+    val p = GradedRuns.plan("b6_partition_prune")
     assert(p.contains("dynamicpruning"), p)
   }
 
@@ -441,8 +420,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("c20: the explicit bloom probe pre-filters the fact side before the join") {
-    val df = SparkEntry.queries("c20_join_bloom")(spark, sfDir)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = GradedRuns.plan("c20_join_bloom")
     // the might_contain probe must appear as a Filter condition (fact-scan
     // side), not only inside the bloom build's aggregate
     val probeOnFact = plan.linesIterator.exists(l =>
@@ -452,12 +430,9 @@ class PlanQualitySpec extends SparkSpec {
 
   test("whole-stage codegen covers the scan→filter→project pipelines") {
     // AQE materializes the final plan (with codegen stages) only after
-    // execution — run the query, then inspect
-    val df = SparkEntry.queries("b1_filter_pred")(spark, sfDir)
-    df.collect() // count() would spawn a separate QueryExecution
-    // after execution AQE renders the final plan; codegen stages appear as
-    // "*(n)" markers in compact form (or WholeStageCodegen in tree form)
-    val plan = df.queryExecution.executedPlan.toString
+    // execution; codegen stages appear as "*(n)" markers in compact form
+    // (or WholeStageCodegen in tree form)
+    val plan = GradedRuns.finalPlan("b1_filter_pred")
     assert(plan.contains("WholeStageCodegen") ||
       """\*\(\d+\)""".r.findFirstIn(plan).nonEmpty, plan)
   }

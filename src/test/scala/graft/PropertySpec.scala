@@ -155,7 +155,7 @@ class PropertySpec extends SparkSpec {
     // exceeds interval count, busy time is positive and bounded by the
     // longest block times the block count, and the longest block is at
     // least as long as the longest single interval's floor duration
-    val rows = SparkEntry.queries("h12_interval_union")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h12_interval_union")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nMerged, nIv, busy, longest) =
@@ -167,7 +167,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h11 streak laws: longest <= active days, streaks partition the days") {
-    val rows = SparkEntry.queries("h11_streaks")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h11_streaks")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nStreaks, longest, nDays) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -181,7 +181,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h14 z-score laws: anomalies <= scored, max |z| >= 2 iff any anomaly") {
-    val rows = SparkEntry.queries("h14_rolling_zscore")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h14_rolling_zscore")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (scored, anom, maxZ) = (r.getLong(1), r.getLong(2), r.getDouble(3))
@@ -195,7 +195,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h15 attribution laws: touch precedes purchase, ids distinct") {
-    val rows = SparkEntry.queries("h15_attribution")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h15_attribution")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (purchase, touch, touchType, gap) =
@@ -220,7 +220,7 @@ class PropertySpec extends SparkSpec {
     val us = graft.sources.Tables(spark, sfDir, "events")
       .selectExpr("event_id", "ts div 1000 as us").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = SparkEntry.queries("h16_ewma")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h16_ewma")
     assert(rows.nonEmpty)
     val byUser = rows.groupBy(_.getLong(0))
     for ((_, rs) <- byUser) {
@@ -259,8 +259,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g48 chunk laws: stride spine, bounded sizes, exact tail coverage") {
-    val rows = SparkEntry.queries("g48_chunk_overlap")(spark, sfDir)
-      .orderBy("doc_id", "chunk_i").collect()
+    val rows = GradedRuns.rows("g48_chunk_overlap")
     assert(rows.nonEmpty)
     for ((_, rs) <- rows.groupBy(_.getLong(0))) {
       val cs = rs.sortBy(_.getLong(1))
@@ -279,7 +278,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g47 estimator laws: est is m/8, jac and err in [0,1], err consistent") {
-    val rows = SparkEntry.queries("g47_minhash_est")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g47_minhash_est")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (est, jac, err) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
@@ -290,7 +289,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g49 eval laws: counts consistent with precision/recall quotients") {
-    val r = SparkEntry.queries("g49_dedup_eval")(spark, sfDir).head()
+    val r = GradedRuns.rows("g49_dedup_eval").head
     val (tp, fp, fn) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(tp >= 0 && fp >= 0 && fn >= 0 && tp + fn > 0)
     assert(math.abs(r.getDouble(3) - tp.toDouble / (tp + fp)) < 1e-6)
@@ -341,7 +340,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("e10 discovery-curve laws: nondecreasing per user, bounded by 5 types") {
-    val rows = SparkEntry.queries("e10_win_distinct")(spark, sfDir)
+    val rows = GradedRuns.frame("e10_win_distinct")
       .orderBy("user_id", "event_id").collect()
     assert(rows.nonEmpty)
     val byUser = rows.groupBy(_.getLong(0))
@@ -358,7 +357,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("a15 SCD2 laws: one current row per key, contiguous change-only intervals") {
-    val rows = SparkEntry.queries("a15_scd2")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("a15_scd2")
     assert(rows.nonEmpty)
     for ((_, rs0) <- rows.groupBy(_.getLong(0))) {
       // timestamps are NTZ → LocalDateTime rows
@@ -380,8 +379,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r8 funnel law: gate survivors are monotone non-increasing") {
-    val rows =
-      SparkEntry.queries("r8_report_curation_funnel")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("r8_report_curation_funnel")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val counts = (1 to 5).map(r.getLong)
@@ -392,7 +390,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d22 equi-depth laws: 8 buckets per flag, sizes within 1, disjoint ranges") {
-    val rows = SparkEntry.queries("d22_equidepth_hist")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d22_equidepth_hist")
     assert(rows.nonEmpty)
     for ((_, rs0) <- rows.groupBy(_.getString(0))) {
       val rs = rs0.sortBy(_.getInt(1))
@@ -409,7 +407,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g51 pagerank laws: rank bounded by damping floor and total mass") {
-    val rows = SparkEntry.queries("g51_pagerank")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g51_pagerank")
     assert(rows.length == 25)
     val ranks = rows.map(_.getLong(2))
     // floor: an inbound-free node keeps exactly the 0.15 base; ceiling:
@@ -420,7 +418,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g52 oov laws: counts nested, basis points are the floor quotient") {
-    val rows = SparkEntry.queries("g52_oov_rate")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g52_oov_rate")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nTok, nOov, bp) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -430,8 +428,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g53 bucket laws: per-lang tertiles within 1, head scores >= tail scores") {
-    val rows =
-      SparkEntry.queries("g53_perplexity_bucket")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g53_perplexity_bucket")
     assert(rows.nonEmpty)
     for ((_, rs) <- rows.groupBy(_.getString(1))) {
       val by = rs.groupBy(_.getString(3)).view.mapValues(_.length).toMap
@@ -446,7 +443,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g54 canonicalization laws: every 3-variant group collapses, output clean") {
-    val rows = SparkEntry.queries("g54_url_dedup")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g54_url_dedup")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val canonical = r.getString(0)
@@ -458,23 +455,21 @@ class PropertySpec extends SparkSpec {
   }
 
   test("a16 PIT law: every fact matches exactly one dimension version") {
-    val facts = SparkEntry.queries("a1_scan_project")(spark, sfDir)
-    val n = SparkEntry.queries("a16_pit_lookup")(spark, sfDir).count()
+    val n = GradedRuns.rows("a16_pit_lookup").length.toLong
     val nOrders = graft.sources.Tables.orders(spark, sfDir).count()
     assert(n == nOrders, s"PIT join emitted $n rows for $nOrders facts")
-    assert(facts.count() > 0) // guard: corpus loaded
+    assert(GradedRuns.rows("a1_scan_project").nonEmpty) // guard: corpus loaded
   }
 
   test("c17 tolerance laws: match precedes click and is within 3 days or NULL") {
-    val rows =
-      SparkEntry.queries("c17_join_asof_tolerance")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("c17_join_asof_tolerance")
     assert(rows.nonEmpty && rows.exists(!_.isNullAt(2))
       && rows.exists(_.isNullAt(2))) // both arms exercised
     for (r <- rows if !r.isNullAt(2)) assert(!r.isNullAt(3))
   }
 
   test("g56 hard-negative law: every mined negative has a different label") {
-    val rows = SparkEntry.queries("g56_hard_negatives")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g56_hard_negatives")
     assert(rows.nonEmpty)
     for (r <- rows) {
       assert(r.getInt(1) != r.getInt(4)) // qlabel != neg_label
@@ -483,7 +478,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g57 eval law: accuracy is the floor quotient, correct nested in eval") {
-    val rows = SparkEntry.queries("g57_knn_eval")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g57_knn_eval")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, c, bp) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -493,7 +488,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h18 rolling-active laws: wau bounds dau, both positive") {
-    val rows = SparkEntry.queries("h18_rolling_dau")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h18_rolling_dau")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (dau, wau) = (r.getLong(1), r.getLong(2))
@@ -502,7 +497,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r9 rulebook laws: real violations zero, every banded detector fires") {
-    val rows = SparkEntry.queries("r9_check_constraints")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("r9_check_constraints")
     assert(rows.length == 3)
     for (r <- rows) {
       assert(r.getLong(2) == 0, s"real violations in ${r.getString(0)}")
@@ -512,8 +507,8 @@ class PropertySpec extends SparkSpec {
 
   test("d25 weighted-median law: at least half the weight sits at or below it") {
     import spark.implicits._
-    val med = SparkEntry.queries("d25_weighted_median")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val med = GradedRuns.rows("d25_weighted_median")
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val li = graft.sources.Tables.lineitem(spark, sfDir)
       .groupBy($"l_returnflag")
       .agg(sum($"l_quantity").as("tw"),
@@ -529,7 +524,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g58 corruption laws: span count is the stride ceiling, output shrinks") {
-    val rows = SparkEntry.queries("g58_span_corruption")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g58_span_corruption")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nTok, nSpans, nOut) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -542,7 +537,7 @@ class PropertySpec extends SparkSpec {
 
   test("g66 kmeans-step laws: partition of the corpus, 64 dims per cluster") {
     import spark.implicits._
-    val rows = SparkEntry.queries("g66_kmeans_step")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g66_kmeans_step")
     assert(rows.nonEmpty)
     val n = graft.sources.Tables.embeddings(spark, sfDir).count()
     // within a cluster every dim row carries the same member count; the
@@ -560,7 +555,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g67 BM25 laws: ranks are 1..k with scores non-increasing per term") {
-    val rows = SparkEntry.queries("g67_bm25")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g67_bm25")
     assert(rows.nonEmpty)
     for ((_, rs) <- rows.groupBy(_.getString(0))) {
       val byRank = rs.sortBy(_.getInt(4))
@@ -574,7 +569,7 @@ class PropertySpec extends SparkSpec {
 
   test("g68 DSIR law: target-language docs score above the rest on average") {
     import spark.implicits._
-    val w = SparkEntry.queries("g68_dsir_weights")(spark, sfDir)
+    val w = GradedRuns.frame("g68_dsir_weights")
       .join(graft.sources.Tables.documents(spark, sfDir), "doc_id")
       .groupBy($"lang" === "en")
       .agg(avg($"dsir_logratio")).collect()
@@ -586,8 +581,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g70 coverage laws: curve monotone in cutoff, ppm bounded") {
-    val rows = SparkEntry.queries("g70_vocab_coverage")(spark, sfDir)
-      .collect().sortBy(_.getInt(0))
+    val rows = GradedRuns.rows("g70_vocab_coverage")
+      .sortBy(_.getInt(0))
     assert(rows.length == 3)
     val (vu, cov, ppm) = (rows.map(_.getLong(1)), rows.map(_.getLong(2)),
       rows.map(_.getLong(3)))
@@ -598,7 +593,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g71 novelty laws: bounded counts, the earliest doc is fully novel") {
-    val rows = SparkEntry.queries("g71_ngram_novelty")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g71_ngram_novelty")
     assert(rows.nonEmpty)
     for (r <- rows)
       assert(r.getLong(2) <= r.getLong(1) &&
@@ -609,12 +604,12 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h23/h24/h25 integer-law consistency: quotients, grids, burst bar") {
-    val churn = SparkEntry.queries("h23_inactivity_churn")(spark, sfDir).collect()
+    val churn = GradedRuns.rows("h23_inactivity_churn")
     assert(churn.nonEmpty)
     for (r <- churn)
       assert(r.getLong(2) <= r.getLong(1) &&
         r.getLong(3) == r.getLong(2) * 1000000L / r.getLong(1))
-    val cells = SparkEntry.queries("h24_seasonal_profile")(spark, sfDir).collect()
+    val cells = GradedRuns.rows("h24_seasonal_profile")
     assert(cells.nonEmpty)
     for (r <- cells) {
       assert(r.getInt(1) >= 0 && r.getInt(1) <= 6)
@@ -622,12 +617,12 @@ class PropertySpec extends SparkSpec {
       assert(r.getBoolean(5) == (r.getLong(4) > 2000000L))
     }
     // every emitted burst minute satisfies the exact integer bar
-    for (r <- SparkEntry.queries("h25_burst_flags")(spark, sfDir).collect())
+    for (r <- GradedRuns.rows("h25_burst_flags"))
       assert(2 * r.getLong(2) * r.getLong(3) > 3 * r.getLong(4))
   }
 
   test("d31 Mann–Whitney laws: U bounds, rank-sum floor, verdict consistency") {
-    val r = SparkEntry.queries("d31_mann_whitney")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d31_mann_whitney")
     assert(r.length == 1)
     val (n0, n1, r1x2, u1x2, z, reject) = (r(0).getLong(0), r(0).getLong(1),
       r(0).getLong(2), r(0).getLong(3), r(0).getDouble(4), r(0).getBoolean(5))
@@ -640,7 +635,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d32 Cramér's V laws: bounded in [0,1], strength matches thresholds") {
-    val r = SparkEntry.queries("d32_cramers_v")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d32_cramers_v")
     assert(r.length == 1)
     val (rdim, cdim, v, s) =
       (r(0).getLong(1), r(0).getLong(2), r(0).getDouble(4), r(0).getString(5))
@@ -652,7 +647,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r12 skew laws: max>=mean, ppm bounded, verdict derived from ratio") {
-    val rows = SparkEntry.queries("r12_skew_report")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("r12_skew_report")
     assert(rows.length == 5)
     for (r <- rows) {
       val (nRows, nKeys, maxN, top1, skew, flag) = (r.getLong(1), r.getLong(2),
@@ -666,7 +661,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h26 gap laws: quantiles ordered, positive, gap count bounds") {
-    val rows = SparkEntry.queries("h26_gap_quantiles")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h26_gap_quantiles")
     assert(rows.nonEmpty)
     val totalGaps = rows.map(_.getLong(1)).sum
     val nEvents = sources.Tables(spark, sfDir, "events").count()
@@ -681,14 +676,14 @@ class PropertySpec extends SparkSpec {
 
   test("m10 phash near-dup laws: symmetric-free pairs, bounded hamming, " +
       "contains every identical-signature pair") {
-    val pairs = SparkEntry.queries("m10_phash_neardup")(spark, sfDir).collect()
+    val pairs = GradedRuns.rows("m10_phash_neardup")
     for (r <- pairs) {
       assert(r.getLong(0) < r.getLong(1), "pair not canonically ordered")
       assert(r.getLong(2) >= 0 && r.getLong(2) <= 6, "hamming out of band")
     }
     // zero-distance completeness: identical signatures MUST be found
     // (the pigeonhole guarantee at its strongest point)
-    val sigs = SparkEntry.queries("m9_media_phash")(spark, sfDir).collect()
+    val sigs = GradedRuns.rows("m9_media_phash")
       .groupBy(r => (r.getLong(1), r.getLong(2)))
     val expectedZero = sigs.values.map(g => g.length.toLong * (g.length - 1) / 2).sum
     val foundZero = pairs.count(_.getLong(2) == 0L)
@@ -697,7 +692,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g73 coverage laws: n_docs<=n_occ, ppm bounded, counts descending") {
-    val rows = SparkEntry.queries("g73_dup_ngram_coverage")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g73_dup_ngram_coverage")
     assert(rows.nonEmpty && rows.length <= 20)
     val occs = rows.map(_.getLong(1))
     assert(occs.zip(occs.tail).forall { case (a, b) => a >= b },
@@ -711,7 +706,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("e13 ignore-nulls laws: locf is null only before the first observation") {
-    val rows = SparkEntry.queries("e13_win_ignore_nulls")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("e13_win_ignore_nulls")
     assert(rows.nonEmpty)
     val byCust = rows.groupBy(_.getLong(0))
     for ((_, rs) <- byCust) {
@@ -727,7 +722,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d33 info-gain laws: 0 <= IG <= min(H), gain ratio in [0,1]") {
-    val r = SparkEntry.queries("d33_infogain")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d33_infogain")
     assert(r.length == 1)
     val (hrf, hls, hcond, ig, gr) = (r(0).getDouble(0), r(0).getDouble(1),
       r(0).getDouble(2), r(0).getDouble(3), r(0).getDouble(4))
@@ -739,7 +734,7 @@ class PropertySpec extends SparkSpec {
 
   test("h27 path laws: shares bounded, paths are <=3 known event types") {
     val types = Set("click", "purchase", "error", "signup", "view")
-    val rows = SparkEntry.queries("h27_top_paths")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h27_top_paths")
     assert(rows.nonEmpty && rows.length <= 10)
     for (r <- rows) {
       val steps = r.getString(0).split(">")
@@ -750,7 +745,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g74 KN laws: probs in (0,1], per-context mass sums below 1") {
-    val rows = SparkEntry.queries("g74_kn_smoothing")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g74_kn_smoothing")
     assert(rows.nonEmpty)
     for (r <- rows) {
       assert(r.getLong(2) >= 1 && r.getLong(3) >= r.getLong(2),
@@ -762,7 +757,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r11 mix-report laws: ppm quotients exact, shares sum to ~1e6") {
-    val rows = SparkEntry.queries("r11_mix_report")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("r11_mix_report")
     assert(rows.nonEmpty)
     val shareSum = rows.map(_.getLong(3)).sum
     // floor quotients: the sum can undershoot 1e6 by at most n_langs
@@ -773,21 +768,20 @@ class PropertySpec extends SparkSpec {
   }
 
   test("a19 IVM law: state merge equals full recompute, key-complete") {
-    val merged = SparkEntry.queries("a19_incremental_agg")(spark, sfDir)
+    val merged = GradedRuns.rows("a19_incremental_agg")
     val full = sources.Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         sum(round(col("o_totalprice") * 100, 0).cast("bigint"))
           .cast("bigint").as("rev_cents"))
       .orderBy(col("o_custkey"))
-    assert(merged.collect().toSeq === full.collect().toSeq,
+    assert(merged.toSeq === full.collect().toSeq,
       "incremental merge diverged from the full recompute")
   }
 
   test("g77 stopword laws: df bounded by corpus size, flag consistent") {
     val n = sources.Tables.documents(spark, sfDir).count()
-    val rows = SparkEntry.queries("g77_stopword_discovery")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("g77_stopword_discovery")
     assert(rows.nonEmpty && rows.length <= 50)
     for (r <- rows) {
       val (df, ppm) = (r.getLong(1), r.getLong(2))
@@ -800,8 +794,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("m11 hamming-hist laws: bounded support, m10 cut consistent") {
-    val rows = SparkEntry.queries("m11_phash_hamming_hist")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("m11_phash_hamming_hist")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val h = r.getLong(0)
@@ -811,13 +804,13 @@ class PropertySpec extends SparkSpec {
     }
     // the histogram's admitted mass must equal m10's pair count
     val admitted = rows.filter(_.getBoolean(2)).map(_.getLong(1)).sum
-    val m10 = SparkEntry.queries("m10_phash_neardup")(spark, sfDir).count()
+    val m10 = GradedRuns.rows("m10_phash_neardup").length.toLong
     assert(admitted === m10, "hist mass under the cut != m10 output")
   }
 
   test("g84 bias laws: groups partition the corpus, survivors not shorter") {
-    val rows = SparkEntry.queries("g84_dedup_length_bias")(spark, sfDir)
-      .collect().map(r =>
+    val rows = GradedRuns.rows("g84_dedup_length_bias")
+      .map(r =>
         r.getBoolean(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val total = sources.Tables.documents(spark, sfDir).count()
     assert(rows.values.map(_._1).sum === total)
@@ -830,7 +823,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h33 burstiness laws: B in [-1, 1), degenerate single gap at -1") {
-    val rows = SparkEntry.queries("h33_burstiness")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h33_burstiness")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, b) = (r.getLong(1), r.getDouble(3))
@@ -841,7 +834,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d42 weighted-corr laws: |r| <= 1, weights positive") {
-    val rows = SparkEntry.queries("d42_weighted_corr")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d42_weighted_corr")
     assert(rows.nonEmpty)
     for (r <- rows) {
       assert(r.getDouble(1) > 0, "total weight positive")
@@ -850,8 +843,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h32 entropy laws: bounded by log2(successors), modal consistency") {
-    val rows = SparkEntry.queries("h32_markov_entropy")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("h32_markov_entropy")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nFrom, nSucc) = (r.getLong(1), r.getLong(2))
@@ -866,8 +858,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g83 flow laws: canonical pairs, total pair mass matches g2") {
-    val rows = SparkEntry.queries("g83_source_pair_flow")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("g83_source_pair_flow")
     assert(rows.nonEmpty)
     for (r <- rows) {
       assert(r.getString(0) <= r.getString(1), "canonical source order")
@@ -875,13 +866,12 @@ class PropertySpec extends SparkSpec {
       assert(r.getLong(2) >= 1)
     }
     val mass = rows.map(_.getLong(2)).sum
-    val edges = SparkEntry.queries("g2_neardup_jaccard")(spark, sfDir).count()
+    val edges = GradedRuns.rows("g2_neardup_jaccard").length.toLong
     assert(mass === edges, "every near-dup pair lands in exactly one cell")
   }
 
   test("d41 HHI laws: bounded in [1/n, 1], effective n within [1, n]") {
-    val rows = SparkEntry.queries("d41_hhi_concentration")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("d41_hhi_concentration")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, hhi, eff) = (r.getLong(1), r.getDouble(2), r.getDouble(3))
@@ -894,7 +884,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h31 TWAP laws: value-range bounded, held time positive") {
-    val rows = SparkEntry.queries("h31_twap")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h31_twap")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, held) = (r.getLong(1), r.getLong(2))
@@ -907,13 +897,12 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g82 crosstab laws: cells partition the corpus, dup mass matches g81") {
-    val rows = SparkEntry.queries("g82_quality_dup_matrix")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("g82_quality_dup_matrix")
     val total = sources.Tables.documents(spark, sfDir).count()
     assert(rows.map(_.getLong(2)).sum === total, "cells partition the corpus")
     val dupMass = rows.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-    val g81NonZero = SparkEntry.queries("g81_dup_degree_dist")(spark, sfDir)
-      .collect().filter(_.getLong(0) > 0).map(_.getLong(1)).sum
+    val g81NonZero = GradedRuns.rows("g81_dup_degree_dist")
+      .filter(_.getLong(0) > 0).map(_.getLong(1)).sum
     assert(dupMass === g81NonZero,
       "near-dup mass agrees with the degree distribution")
     assert(rows.map(r => (r.getString(0), r.getBoolean(1))).distinct.length
@@ -921,8 +910,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("f22 skyline laws: mutual non-dominance, nothing outside dominates") {
-    val sky = SparkEntry.queries("f22_skyline_pareto")(spark, sfDir)
-      .collect().map(r => (r.getLong(1), r.getInt(2)))
+    val sky = GradedRuns.rows("f22_skyline_pareto")
+      .map(r => (r.getLong(1), r.getInt(2)))
     assert(sky.nonEmpty)
     def dominates(a: (Long, Int), b: (Long, Int)) =
       a._1 <= b._1 && a._2 >= b._2 && (a._1 < b._1 || a._2 > b._2)
@@ -938,8 +927,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("c21 spatial-grid law: equals the brute-force radius join exactly") {
-    val grid = SparkEntry.queries("c21_join_spatial_grid")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val grid = GradedRuns.rows("c21_join_spatial_grid")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // brute force over the same deterministic points (n is tiny at the
     // spec sf, so the cross join is a test-only oracle, never a plan)
     val pts = sources.Tables.supplier(spark, sfDir)
@@ -958,22 +947,21 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g81 degree laws: histogram mass equals corpus, handshake identity") {
-    val rows = SparkEntry.queries("g81_dup_degree_dist")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("g81_dup_degree_dist")
     val total = sources.Tables.documents(spark, sfDir).count()
     assert(rows.map(_.getLong(1)).sum === total,
       "degree histogram partitions the corpus")
     // handshake lemma: sum of degrees = 2 × edge count (g2's pairs)
     val degreeMass = rows.map(r => r.getLong(0) * r.getLong(1)).sum
-    val edges = SparkEntry.queries("g2_neardup_jaccard")(spark, sfDir).count()
+    val edges = GradedRuns.rows("g2_neardup_jaccard").length.toLong
     assert(degreeMass === 2 * edges, "sum(degree) = 2·|E|")
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
   }
 
   test("f21 variant laws: typed extraction agrees with the string path") {
-    val v = SparkEntry.queries("f21_variant_funcs")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r.getLong(4)).toMap
-    val s = SparkEntry.queries("b3_json_extract")(spark, sfDir)
+    val v = GradedRuns.rows("f21_variant_funcs")
+      .map(r => r.getString(0) -> r.getLong(4)).toMap
+    val s = GradedRuns.frame("b3_json_extract")
       .join(sources.Tables(spark, sfDir, "events").select("event_id",
         "event_type"), "event_id")
       .groupBy("event_type").agg(sum("k").as("sk"))
@@ -982,8 +970,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("a20 overwrite laws: repaired day doubled, all other days intact") {
-    val rows = SparkEntry.queries("a20_dynamic_overwrite")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
+    val rows = GradedRuns.rows("a20_dynamic_overwrite")
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     // raw twin in exact cents: the unrepaired days must match EXACTLY
     // (integer sums have no fold-order tolerance to hide behind); the
@@ -1010,8 +998,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d40 inequality laws: Theil and MLD non-negative, MLD >= 0 <= T bound") {
-    val rows = SparkEntry.queries("d40_theil_inequality")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("d40_theil_inequality")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, t, mld) = (r.getLong(1), r.getDouble(2), r.getDouble(3))
@@ -1024,8 +1011,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r16 cardinality laws: q-error >= 1, FK estimate exact for orders") {
-    val rows = SparkEntry.queries("r16_join_cardinality")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("r16_join_cardinality")
     assert(rows.length == 3)
     for (r <- rows) {
       assert(r.getLong(5) >= 1 && r.getLong(6) >= 1)
@@ -1040,7 +1026,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d39 runs laws: run count within [1, n], expectation formula") {
-    val r = SparkEntry.queries("d39_runs_test")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d39_runs_test")
     assert(r.length == 1)
     val (np, nm, runs) = (r(0).getLong(0), r(0).getLong(1), r(0).getLong(2))
     assert(np > 0 && nm > 0)
@@ -1050,8 +1036,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("e15 ratio-to-report laws: segment shares sum to ~1e6") {
-    val rows = SparkEntry.queries("e15_win_ratio_report")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("e15_win_ratio_report")
     assert(rows.nonEmpty)
     val bySeg = rows.groupBy(_.getString(1))
     for ((seg, rs) <- bySeg) {
@@ -1064,7 +1049,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h30 debounce laws: firsts kept, gap/verdict consistent") {
-    val rows = SparkEntry.queries("h30_debounce")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h30_debounce")
     assert(rows.length == sources.Tables.eventsUs(spark, sfDir).count(),
       "every event is emitted with a verdict")
     var kept = 0
@@ -1077,7 +1062,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("r15 KPI laws: counts positive, dup ppm quotient exact") {
-    val r = SparkEntry.queries("r15_kpi_snapshot")(spark, sfDir).collect()
+    val r = GradedRuns.rows("r15_kpi_snapshot")
     assert(r.length == 1)
     val row = r(0)
     assert(row.getLong(0) > 0 && row.getLong(1) > 0 && row.getLong(6) > 0)
@@ -1087,7 +1072,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d38 QQ laws: deciles 10..90, each side monotone non-decreasing") {
-    val rows = SparkEntry.queries("d38_qq_deciles")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d38_qq_deciles")
     assert(rows.map(_.getInt(0)).toSeq == (1 to 9).map(_ * 10))
     val even = rows.map(_.getDouble(1))
     val odd = rows.map(_.getDouble(2))
@@ -1099,7 +1084,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g80 balance laws: shares partition the corpus, imbalance >= 1") {
-    val rows = SparkEntry.queries("g80_cluster_balance")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g80_cluster_balance")
     assert(rows.nonEmpty && rows.length <= 8)
     val total = rows.map(_.getLong(1)).sum
     assert(total === sources.Tables.embeddings(spark, sfDir).count(),
@@ -1112,8 +1097,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g79 incremental-minhash laws: split respected, agreement bounded") {
-    val rows = SparkEntry.queries("g79_incremental_minhash")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("g79_incremental_minhash")
     assert(rows.nonEmpty)
     val ids = rows.map(_.getLong(0))
     assert(ids.distinct.length == ids.length, "top-1 per new doc")
@@ -1127,7 +1111,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("f20 lambda laws: counts bounded by dims, pal_dot symmetric-sane") {
-    val rows = SparkEntry.queries("f20_lambda_funcs")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("f20_lambda_funcs")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val nPos = r.getInt(1)
@@ -1142,8 +1126,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h29 decompose laws: n = trend+seasonal+residual, full-week trend") {
-    val rows = SparkEntry.queries("h29_seasonal_decompose")(spark, sfDir)
-      .collect()
+    val rows = GradedRuns.rows("h29_seasonal_decompose")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, trend, seas, resid) =
@@ -1158,7 +1141,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("m12 trim laws: lead+trail+kept = n, all-silent edge consistent") {
-    val rows = SparkEntry.queries("m12_audio_silence")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("m12_audio_silence")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, lead, trail, kept) =
@@ -1172,7 +1155,7 @@ class PropertySpec extends SparkSpec {
 
   test("r14 profile laws: one row per column, nulls+distinct bounded") {
     val n = sources.Tables.orders(spark, sfDir).count()
-    val rows = SparkEntry.queries("r14_column_profile")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("r14_column_profile")
     assert(rows.map(_.getString(0)).toSeq ==
       Seq("o_custkey", "o_orderdate", "o_orderkey", "o_orderpriority",
         "o_orderstatus"))
@@ -1188,17 +1171,19 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g78 A-ES laws: keys negative+descending, deterministic rerun") {
-    val rows = SparkEntry.queries("g78_weighted_sample")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g78_weighted_sample")
     assert(rows.length == 20)
     val keys = rows.map(_.getDouble(3))
     assert(keys.forall(_ <= 0.0), "ln(u)/w is non-positive")
     assert(keys.zip(keys.tail).forall { case (a, b) => a >= b }, "descending")
-    val rerun = SparkEntry.queries("g78_weighted_sample")(spark, sfDir).collect()
+    // a rerun against GradedRuns' run; both clear the cache after them
+    val rerun = try SparkEntry.queries("g78_weighted_sample")(spark, sfDir)
+      .collect() finally spark.catalog.clearCache()
     assert(rows.toSeq === rerun.toSeq, "hash-RNG sample must be rerunnable")
   }
 
   test("d37 MoM laws: 32 shards, both means inside the data range") {
-    val r = SparkEntry.queries("d37_median_of_means")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d37_median_of_means")
     assert(r.length == 1)
     assert(r(0).getLong(0) === 32L)
     val (mom, plain, delta) =
@@ -1209,7 +1194,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d34 Levene laws: W non-negative and finite, totals consistent") {
-    val r = SparkEntry.queries("d34_levene")(spark, sfDir).collect()
+    val r = GradedRuns.rows("d34_levene")
     assert(r.length == 1)
     assert(r(0).getLong(0) >= 2, "needs at least two groups")
     assert(r(0).getLong(1) > r(0).getLong(0), "n must exceed k")
@@ -1219,7 +1204,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d35 autocorr laws: rho bounded, pair counts below series length") {
-    val rows = SparkEntry.queries("d35_autocorr")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d35_autocorr")
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
     for (r <- rows) {
       // Cauchy–Schwarz on the shared denominator keeps |rho| <= 1
@@ -1229,7 +1214,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d36 winsorize laws: bounds ordered, means inside them, trim<=n") {
-    val rows = SparkEntry.queries("d36_winsorized")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d36_winsorized")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, lo, hi) = (r.getLong(1), r.getDouble(2), r.getDouble(3))
@@ -1245,7 +1230,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("h28 lifetime laws: span/day arithmetic exact, activity bounded") {
-    val rows = SparkEntry.queries("h28_user_lifetime")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("h28_user_lifetime")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (n, days) = (r.getLong(1), r.getLong(2))
@@ -1261,7 +1246,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g75 template laws: clusters >1 doc, spreads bounded by size") {
-    val rows = SparkEntry.queries("g75_template_docs")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g75_template_docs")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nd, ns, nl) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -1292,8 +1277,8 @@ class PropertySpec extends SparkSpec {
     assert(survivors.contains("HH"),
       s"freq 500 > n/(k+1)=${n / (k + 1)} must survive Misra-Gries")
     // end-to-end: the graded d43 output IS the exact heavy-hitter set
-    val d43 = SparkEntry.queries("d43_heavy_hitters")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val d43 = GradedRuns.rows("d43_heavy_hitters")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     import org.apache.spark.sql.functions._
     val toks = graft.sources.Tables.documentsDist(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("t"))
@@ -1305,7 +1290,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d44 merged quantile sketch: rank error within the epsilon bound") {
-    val rows = SparkEntry.queries("d44_quantile_merge")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d44_quantile_merge")
     assert(rows.length === 33, "32 group rows + 1 MERGED row")
     val merged = rows.find(_.getString(0) == "MERGED").get
     val vals = graft.sources.Tables.lineitem(spark, sfDir)
@@ -1335,10 +1320,10 @@ class PropertySpec extends SparkSpec {
     // samples and identical quantile answers; equality here transfers
     // d44's ±ε·N rank-bound law to d47 verbatim. Any divergence means
     // the aggregate tree reordered updates or lost a buffer.
-    val d44 = SparkEntry.queries("d44_quantile_merge")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val d47 = SparkEntry.queries("d47_gk_sketch_agg")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
+    val d44 = GradedRuns.rows("d44_quantile_merge")
+      .map(_.toSeq).toSeq
+    val d47 = GradedRuns.rows("d47_gk_sketch_agg")
+      .map(_.toSeq).toSeq
     assert(d47 === d44)
   }
 
@@ -1394,7 +1379,7 @@ class PropertySpec extends SparkSpec {
     // central 95% interval of 200 Poisson resamples brackets the point
     // mean (a bootstrap whose CI misses its own point estimate is
     // implemented wrong, whatever it hashes to)
-    val r = SparkEntry.queries("d45_bootstrap_ci")(spark, sfDir).head()
+    val r = GradedRuns.rows("d45_bootstrap_ci").head
     val (n, mean, lo, hi) =
       (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
     assert(n === 200L)
@@ -1404,7 +1389,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g89 S-curve laws: counts consistent, rates bounded, curve anchored") {
-    val rows = SparkEntry.queries("g89_lsh_s_curve")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g89_lsh_s_curve")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (nPairs, nDet, rate, theo) =
@@ -1428,7 +1413,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("d46 sketch-intersection laws: union bounds, error within HLL budget") {
-    val rows = SparkEntry.queries("d46_hll_intersect")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("d46_hll_intersect")
     assert(rows.nonEmpty)
     for (r <- rows) {
       val (ea, eb, eu, ei, exact) = (r.getDouble(2), r.getDouble(3),
@@ -1446,7 +1431,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("g76 JS laws: symmetric-free pairs, bounded in [0,1] bits") {
-    val rows = SparkEntry.queries("g76_js_divergence")(spark, sfDir).collect()
+    val rows = GradedRuns.rows("g76_js_divergence")
     assert(rows.nonEmpty)
     val pairs = rows.map(r => (r.getString(0), r.getString(1)))
     assert(pairs.forall { case (a, b) => a < b }, "canonical a<b ordering")

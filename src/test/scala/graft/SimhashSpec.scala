@@ -23,7 +23,7 @@ class SimhashSpec extends SparkSpec {
   }
 
   test("g16 block join returns exactly the naive hamming-join pairs (sf0.001)") {
-    val sig = SparkEntry.queries("g15_simhash")(spark, sfDir)
+    val sig = GradedRuns.frame("g15_simhash")
       .select("doc_id", "sh_lo", "sh_hi")
     val a = sig.select(col("doc_id").as("doc_a"), col("sh_lo").as("lo_a"), col("sh_hi").as("hi_a"))
     val b = sig.select(col("doc_id").as("doc_b"), col("sh_lo").as("lo_b"), col("sh_hi").as("hi_b"))
@@ -32,13 +32,13 @@ class SimhashSpec extends SparkSpec {
       .where(col("hamming") <= 3)
       .select("doc_a", "doc_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
-    val blocked = SparkEntry.queries("g16_simhash_dedup")(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
+    val blocked = GradedRuns.rows("g16_simhash_dedup")
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
     assert(blocked === naive)
   }
 
   test("simhash of identical docs is identical, near-identical docs are close") {
-    val sig = SparkEntry.queries("g15_simhash")(spark, sfDir)
+    val sig = GradedRuns.frame("g15_simhash")
     // signatures are a pure function of text: join docs with equal text
     val docs = graft.sources.Tables.documents(spark, sfDir).select("doc_id", "text")
     val withSig = docs.join(sig, "doc_id")

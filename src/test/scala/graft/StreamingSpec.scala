@@ -15,7 +15,7 @@ class StreamingSpec extends SparkSpec {
         StreamingJobs.tumblingCounts(stream), "h4_tumble", "complete")
       .select(col("win_start").cast("long"), col("n_events"), col("sum_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = SparkEntry.queries("h1_win_tumbling")(spark, sfDir)
+    val batch = GradedRuns.frame("h1_win_tumbling")
       .select(col("day_start").cast("long"), col("n_events"), col("sum_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch)
@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     assert(batches > 1, "expected multiple micro-batches")
-    val batch = SparkEntry.queries("h1_win_tumbling")(spark, sfDir)
+    val batch = GradedRuns.frame("h1_win_tumbling")
       .select(col("day_start").cast("long"), col("n_events"), col("sum_cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch)
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
       .groupBy("user_id")
       .agg(max("n_scored").as("s"), max("n_anomalies").as("a"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val batch = SparkEntry.queries("h14_rolling_zscore")(spark, sfDir)
+    val batch = GradedRuns.frame("h14_rolling_zscore")
       .select(col("user_id"), col("n_scored"), col("n_anomalies"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(streamed === batch)
@@ -146,8 +146,8 @@ class StreamingSpec extends SparkSpec {
     val streamed = StreamingJobs.drainToMemory(
         StreamingJobs.debounceMonitor(stream).toDF(), "h4_debounce", "append")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val batch = SparkEntry.queries("h30_debounce")(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap
+    val batch = GradedRuns.rows("h30_debounce")
+      .map(r => r.getLong(0) -> r.getBoolean(4)).toMap
     assert(streamed.size === batch.size)
     assert(streamed === batch, "per-event verdicts must agree")
   }
@@ -158,7 +158,7 @@ class StreamingSpec extends SparkSpec {
         StreamingJobs.seasonalProfile(stream), "h24_stream", "complete")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getLong(3))).toSet
-    val batch = SparkEntry.queries("h24_seasonal_profile")(spark, sfDir)
+    val batch = GradedRuns.frame("h24_seasonal_profile")
       .select(col("event_type"), col("dow"), col("hour"), col("n"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getLong(3))).toSet
@@ -186,7 +186,7 @@ class StreamingSpec extends SparkSpec {
     val n = graft.sources.Tables.eventsUs(spark, sfDir).count()
     assert(raw.count() === 2 * n,
       "the union of two independent file streams must deliver every event twice")
-    val deduped = SparkEntry.queries("h38_stream_dedup_parity")(spark, sfDir)
+    val deduped = GradedRuns.frame("h38_stream_dedup_parity")
     assert(deduped.count() === n)
     assert(deduped.select("event_id").distinct().count() === n)
   }

@@ -102,7 +102,7 @@ class SuffixDupSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // windows recovered from the spans: each span [s, s+len) contains
     // exactly the duplicated windows at positions s .. s+len-L
-    val fromSpans = SparkEntry.queries("g91_maximal_dup_spans")(spark, sfDir)
+    val fromSpans = GradedRuns.frame("g91_maximal_dup_spans")
       .select($"doc_id",
         explode(sequence($"span_start",
           $"span_start" + $"span_len" - L)).as("pos"))
@@ -128,10 +128,8 @@ class SuffixDupSpec extends SparkSpec {
     // the round-10 contract: two independent detectors, one span oracle —
     // pinned engine-side so a drift in either implementation fails here
     // before the driver's gate sees it
-    val g87 = SparkEntry.queries("g87_substring_dup_spans")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val g90 = SparkEntry.queries("g90_suffix_dup_spans")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
+    val g87 = GradedRuns.rows("g87_substring_dup_spans").map(_.toSeq).toSeq
+    val g90 = GradedRuns.rows("g90_suffix_dup_spans").map(_.toSeq).toSeq
     assert(g90 === g87)
   }
 }
