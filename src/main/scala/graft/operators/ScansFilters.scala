@@ -391,8 +391,8 @@ object ScansFilters {
       .repartitionByRange(8, $"o_orderdate")
     val v1 = TxLog.commit(table, TxLog.stage(orders, table), 0,
       statsCols = Seq("o_orderdate"))
-    val pruned = TxLog.readWhere(spark, table, v1, "o_orderdate",
-      "1995-01-01", "1995-12-31")
+    val pruned = TxLog.readWhere(spark, table, v1,
+      Seq(("o_orderdate", "1995-01-01", "1995-12-31")))
     // the key's own claim, enforced in the key: the scan plans a strict
     // subset of the manifest (the corpus spans 1992–1998, so a one-year
     // predicate must skip files)
@@ -736,7 +736,9 @@ object ScansFilters {
   // (one leaked delta row into the pinned read hash-mismatches) and the
   // new head. Scale: the commit point is one catalog CAS regardless of
   // table size; manifest objects are never contended (uuid-keyed), so
-  // writer concurrency costs retries on the POINTER, not the data.
+  // writer concurrency costs retries on the POINTER, not the data. Only
+  // the commit point is CasLog's: the manifest bodies and their
+  // resolution are TxLog's, so the CAS reads the same log format.
   private val a35 = QueryDef.graded(
     "a35_cas_commit",
     """WITH o AS (
@@ -1458,9 +1460,9 @@ object ScansFilters {
   // only on the file://-protocol side; at 100 TB those are the same
   // jobs). One graded cycle runs them all through the CAS catalog:
   // v1 = key-clustered base with per-file stats IN the CAS manifest;
-  // `CasLog.readWhere` (TxLog.statsKeep — one skipping rule, two commit
-  // protocols) REQUIRED to plan strictly fewer files than the manifest
-  // lists; v2 = append REQUIRED to commit as a `#delta` manifest
+  // `CasLog.readWhere` (TxLog.readWhere over the catalog's history —
+  // one log, two commit points) REQUIRED to plan strictly fewer files
+  // than the manifest lists; v2 = append REQUIRED to commit as a `#delta` manifest
   // (O(batch) object, replayed through the Head's own history); v3 =
   // compaction rewrite; `CasLog.vacuum(keepLast=2)` — the retention cut
   // is itself a CAS — REQUIRED to fail v1 reads loudly while v2/v3 ride
@@ -1470,8 +1472,8 @@ object ScansFilters {
   // with the head still fully readable. Graded row = per-version
   // rollups captured at each stage, so a row lost to the GC, a stats
   // line dropped in the delta replay, or a leaked expired file all
-  // hash-mismatch. Scale: every piece is the TxLog discipline on the
-  // CAS primitive — O(batch) delta objects, O(files) sweeps, pruning
+  // hash-mismatch. Scale: every piece is TxLog's own code on the CAS
+  // primitive — O(batch) delta objects, O(files) sweeps, pruning
   // before planning; table size never enters the catalog.
   private val a43 = QueryDef.graded(
     "a43_cas_lifecycle",

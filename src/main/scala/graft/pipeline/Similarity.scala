@@ -354,7 +354,7 @@ object Similarity {
         .withColumn("cid", expr(
           "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
         .select($"vec_id", $"embedding", $"cid")
-      TxLog.commitRewrite(t, TxLog.stagePartitioned(assigned, t, Seq("cid")), 0)
+      TxLog.commitRewrite(t, TxLog.stage(assigned, t, Seq("cid")), 0)
     }
     // search: the query's nprobe probe ids — a tiny driver fetch steering
     // partition pruning, not data flow — against the PINNED version

@@ -1,15 +1,14 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** [[TxLog]]'s commit protocol with the commit point moved into a
-  * catalog COMPARE-AND-SWAP — the OBJECT-STORE form of the lakehouse
-  * commit. S3-class stores have no exclusive rename and no link(2), so
-  * the manifest body lands under a CONTENT-UNIQUE object name (never
+/** [[TxLog]]'s log with the commit point moved into a catalog
+  * COMPARE-AND-SWAP — the OBJECT-STORE form of the lakehouse commit.
+  * S3-class stores have no exclusive rename and no link(2), so the
+  * manifest body lands under a CONTENT-UNIQUE object name (never
   * contended — writes to distinct keys cannot race) and the only
   * mutable thing in the whole protocol is the catalog's head entry,
   * advanced by `compareAndSet(expectedHead, newHead)`. This is exactly
@@ -25,25 +24,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pinned-reader stability): the laws are properties of the CAS, not of
   * the store behind it.
   *
-  * LIFECYCLE PARITY with TxLog (the r13 verdict's #6 — before r14 the
-  * CAS side was bare path lists while the file:// side had metadata,
-  * deltas and GC; on the 100 TB object-store story those are the same
-  * jobs): manifests use TxLog's v3 LINE GRAMMAR (one grammar, two
-  * commit protocols — the renderers/parsers are shared, so the formats
-  * can never drift): `#ts`/`#schema` metadata lines, per-file stats for
-  * [[readWhere]]'s data skipping, `#delta` manifests on the same
-  * [[TxLog.checkpointInterval]] cadence (an append writes O(batch)
-  * lines, replayed through the Head's own history map), and a
-  * [[vacuum]] whose retention cut is itself a CAS (truncate the
-  * history, then sweep unreferenced `_cas` objects and dead data files
-  * — the GC its own doc used to call "garbage for a vacuum sweep" that
-  * didn't exist).
-  *
-  * Reuses [[TxLog.stage]]'s staging discipline (immutable part files,
-  * invisible until referenced). Readers PIN a [[CasLog.Head]] — an
-  * immutable (version, manifest-object, history) triple — so snapshot
-  * isolation is pointer-copy cheap and later commits can never mutate
-  * what a pinned reader resolves.
+  * Only the commit point and the catalog history live here. Manifest
+  * bodies, delta replay, stats, pruned reads, the checkpoint at a
+  * retention cut and the data sweep are TxLog's, read through a
+  * [[TxLog.Lookup]] that opens a version's history object — never
+  * `_manifests/`. Readers PIN a [[CasLog.Head]] — an immutable
+  * (version, manifest-object, history) triple — so snapshot isolation
+  * is pointer-copy cheap and later commits can never mutate what a
+  * pinned reader resolves.
   */
 object CasLog {
 
@@ -70,59 +58,39 @@ object CasLog {
 
   def head(table: String): Option[Head] = Option(catalog.get(table))
 
-  /** Publish version `base + 1` = files(base) ++ staged. The manifest
-    * body is written to a unique object FIRST (uncontended), then the
-    * commit point is ONE catalog CAS. A losing writer throws
-    * [[org.apache.hadoop.fs.FileAlreadyExistsException]] (TxLog's
-    * uniform conflict signal) and commits nothing — its manifest object
-    * is unreferenced garbage for [[vacuum]]'s sweep, exactly like
-    * TxLog's orphaned staging. Steady-state appends write a `#delta`
-    * manifest (O(batch) lines); creation and every
-    * [[TxLog.checkpointInterval]]-th version write full (TxLog's
-    * cadence, same replay bound). `statsCols` persists per-file
-    * [min,max] + `#rows#` exactly as TxLog commits do. */
+  /** Publish version `base + 1` = files(base) ++ staged, with
+    * [[TxLog.commit]]'s body: `#delta` on steady-state appends, full on
+    * creation and every [[TxLog.checkpointInterval]]-th version, and
+    * per-file [min,max] + `#rows#` for `statsCols`. A losing writer
+    * throws [[org.apache.hadoop.fs.FileAlreadyExistsException]]
+    * (TxLog's uniform conflict signal) and commits nothing — its
+    * manifest object is unreferenced garbage for [[vacuum]]'s sweep,
+    * exactly like TxLog's orphaned staging. */
   def commit(table: String, staged: Seq[String], base: Int,
-      statsCols: Seq[String] = Nil): Int = {
-    val next = base + 1
-    val newLines = TxLog.renderDataLines(staged, statsCols)
-    val baseSchema = if (base == 0) None else schemaOf(table, base)
-    val schema = TxLog.mergedSchemaJson(baseSchema, staged)
-    val body =
-      if (base == 0 || next % TxLog.checkpointInterval == 0)
-        (if (base == 0) Nil else resolvedLines(table, base)) ++ newLines
-      else "#delta" +: newLines.map("+" + _)
-    publish(table, base, metaLines(schema) ++ body)
-  }
+      statsCols: Seq[String] = Nil): Int =
+    publish(table, base,
+      TxLog.appendBody(catalogLog(table), base, staged, statsCols))
 
   /** Publish version `base + 1` whose data lines are EXACTLY `staged` —
     * the rewrite commit (compaction, clustering, snapshot replace);
     * full manifest by nature, like [[TxLog.commitRewrite]]. */
   def commitRewrite(table: String, staged: Seq[String], base: Int,
-      statsCols: Seq[String] = Nil): Int = {
-    val schema = TxLog.mergedSchemaJson(None, staged)
-      .orElse(if (base == 0) None
-              else schemaOf(table, base).map(_.json))
+      statsCols: Seq[String] = Nil): Int =
     publish(table, base,
-      metaLines(schema) ++ TxLog.renderDataLines(staged, statsCols))
-  }
+      TxLog.rewriteBody(catalogLog(table), base, staged, statsCols))
 
-  private def metaLines(schemaJson: Option[String]): Seq[String] =
-    s"#ts\t${System.currentTimeMillis()}" +: schemaJson.toSeq.map(j =>
-      s"#schema\t$j")
+  /** A fresh, content-unique object under `<table>/_cas`. */
+  private def casObject(table: String, prefix: String): Path =
+    new Path(new Path(table, "_cas"),
+      s"$prefix-${java.util.UUID.randomUUID()}.manifest")
 
-  /** Write the body to a content-unique object, then CAS the catalog. */
+  /** Write the body to a content-unique object (uncontended), then the
+    * commit point is ONE catalog CAS. */
   private def publish(table: String, base: Int,
       body: Seq[String]): Int = {
     val next = base + 1
-    val obj = new Path(new Path(table, "_cas"),
-      s"m-${java.util.UUID.randomUUID()}.manifest")
-    // TxLog's per-session conf cache: newHadoopConf() copies the full
-    // conf map per call — the exact inefficiency the r11 advice retired
-    // on the TxLog side (r13 what's-wrong #4)
-    val fs = obj.getFileSystem(TxLog.hadoopConf)
-    val out = fs.create(obj, false)
-    try body.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
-    finally out.close()
+    val obj = casObject(table, "m")
+    TxLog.writeLines(obj, body)
     val won =
       if (base == 0)
         catalog.putIfAbsent(table,
@@ -140,38 +108,16 @@ object CasLog {
     next
   }
 
-  // ------------------------------------------------------------------
-  // Resolution: TxLog's line grammar read through the Head's history
-  // ------------------------------------------------------------------
+  /** The CAS lookup: version v's manifest lines are its object in
+    * `history`; a version the history lacks (never committed, or
+    * expired by [[vacuum]]) throws IllegalArgumentException. */
+  private def logOf(history: Map[Int, String]): TxLog.Lookup = v =>
+    TxLog.readLines(new Path(history.getOrElse(v,
+      throw new IllegalArgumentException(s"no CAS manifest v$v"))))
 
-  private def linesOf(manifest: String): Seq[String] = {
-    require(manifest != null, "no CAS manifest")
-    val p = new Path(manifest)
-    val fs = p.getFileSystem(TxLog.hadoopConf)
-    val in = fs.open(p)
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).toList finally src.close()
-  }
-
-  /** Resolved data lines of version v within a history: a full manifest
-    * answers directly; a `#delta` manifest replays over v-1. Bounded by
-    * the checkpoint cadence, exactly like [[TxLog.dataLines]]. */
-  private def dataLinesIn(history: Map[Int, String], v: Int)
-      : Seq[String] = {
-    val m = history.get(v)
-    require(m.nonEmpty, s"no CAS manifest v$v in this history")
-    val ls = linesOf(m.get)
-    val body = ls.filterNot(_.startsWith("#"))
-    if (ls.exists(_.startsWith("#delta")))
-      dataLinesIn(history, v - 1) ++ body.map(_.stripPrefix("+"))
-    else body
-  }
-
-  private def historyOf(table: String): Map[Int, String] =
-    Option(catalog.get(table)).map(_.history).getOrElse(Map.empty)
-
-  private def resolvedLines(table: String, v: Int): Seq[String] =
-    dataLinesIn(historyOf(table), v)
+  /** The lookup through the CURRENT catalog entry's history. */
+  private def catalogLog(table: String): TxLog.Lookup =
+    logOf(Option(catalog.get(table)).map(_.history).getOrElse(Map.empty))
 
   /** The pinned file list of a catalog entry — resolving through the
     * immutable Head (its own history carries any delta replay chain),
@@ -187,81 +133,36 @@ object CasLog {
     * advice — the scaladoc used to promise in-window stability the
     * delta-cut path did not deliver). */
   def files(h: Head): Seq[String] =
-    (try dataLinesIn(h.history, h.version)
-     catch {
-       case _: java.io.FileNotFoundException =>
-         dataLinesIn(historyOf(h.table), h.version)
-     }).map(_.split('\t')(0))
+    try TxLog.files(logOf(h.history), h.version)
+    catch {
+      case _: java.io.FileNotFoundException => files(h.table, h.version)
+    }
 
-  /** Version-pinned file list (the TxLog.files twin), resolved through
-    * the current catalog entry's atomically-published history. Fails
-    * loudly for a vacuum-expired version — never partial data. */
+  /** Version-pinned file list, resolved through the current catalog
+    * entry's atomically-published history. Fails loudly for a
+    * vacuum-expired version — never partial data. */
   def files(table: String, v: Int): Seq[String] =
-    dataLinesIn(historyOf(table), v).map(_.split('\t')(0))
+    TxLog.files(catalogLog(table), v)
 
-  /** True when version v committed as a `#delta` manifest — the
-    * write-cost audit hook (TxLog.isDeltaManifest's twin). */
-  def isDeltaManifest(table: String, v: Int): Boolean = {
-    val m = historyOf(table).get(v)
-    require(m.nonEmpty, s"no CAS manifest v$v under $table")
-    linesOf(m.get).exists(_.startsWith("#delta"))
-  }
+  /** True when version v's manifest object is a `#delta` manifest — the
+    * write-cost audit hook. */
+  def isDeltaManifest(table: String, v: Int): Boolean =
+    TxLog.isDelta(catalogLog(table)(v))
 
   /** Raw line count of version v's manifest OBJECT — what the commit
     * actually wrote (the O(batch) vs O(table-files) distinction). */
-  def manifestLineCount(table: String, v: Int): Int = {
-    val m = historyOf(table).get(v)
-    require(m.nonEmpty, s"no CAS manifest v$v under $table")
-    linesOf(m.get).size
-  }
-
-  /** The schema version v persisted in its manifest (TxLog.schemaOf's
-    * twin). */
-  def schemaOf(table: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val m = historyOf(table).get(v)
-    require(m.nonEmpty, s"no CAS manifest v$v under $table")
-    linesOf(m.get).collectFirst {
-      case l if l.startsWith("#schema\t") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.substring("#schema\t".length))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-  }
-
-  /** Per-file column stats of version v (TxLog.statsOf's twin). */
-  def statsOf(table: String, v: Int)
-      : Map[String, Map[String, (String, String)]] =
-    resolvedLines(table, v).flatMap { l =>
-      val cut = l.indexOf('\t')
-      if (cut < 0) None
-      else Some(TxLog.normPath(l.substring(0, cut)) ->
-        TxLog.parseStats(l.substring(cut + 1)))
-    }.toMap
+  def manifestLineCount(table: String, v: Int): Int =
+    catalogLog(table)(v).size
 
   def read(spark: SparkSession, h: Head): DataFrame =
     spark.read.parquet(files(h): _*)
 
-  /** STATS-PRUNED read through the CAS catalog — the same conjunctive
-    * skipping rule as [[TxLog.readWhere]] ([[TxLog.statsKeep]] is
-    * shared), applied to a CAS-committed version: the file list prunes
-    * BEFORE Spark plans, missing stats keep the file. */
+  /** [[TxLog.readWhere]] on a CAS-committed version: the file list
+    * prunes BEFORE Spark plans, missing stats keep the file, and kept
+    * dv-carrying files read minus their sidecar's keys. */
   def readWhere(spark: SparkSession, table: String, v: Int,
-      preds: Seq[(String, String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(preds.nonEmpty, "readWhere needs at least one predicate")
-    val keep = TxLog.statsKeep(files(table, v), statsOf(table, v), preds)
-    val base =
-      if (keep.nonEmpty) spark.read.parquet(keep: _*)
-      else schemaOf(table, v) match {
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None => spark.read.parquet(files(table, v): _*).limit(0)
-      }
-    preds.foldLeft(base) { case (df, (column, lo, hi)) =>
-      df.where(col(column) >= lit(lo) && col(column) <= lit(hi))
-    }
-  }
+      preds: Seq[(String, String, String)]): DataFrame =
+    TxLog.readWhere(spark, catalogLog(table), v, preds)
 
   /** Garbage-collect: CAS-truncate the history to the `keepLast` most
     * recent versions, then sweep (a) `_cas` manifest objects this
@@ -269,7 +170,7 @@ object CasLog {
     * checkpoint objects) plus unreferenced orphans — losers' objects,
     * abandoned checkpoint attempts — that are OLDER than `graceMs`, and
     * (b) data files no retained manifest resolves to, under the same
-    * age guard. Returns deleted paths.
+    * age guard ([[TxLog.sweepData]]). Returns deleted paths.
     *
     * WHY the age guard and the explicit dropped list (r14 advice): a
     * concurrent committer writes its manifest object BEFORE its CAS,
@@ -286,13 +187,13 @@ object CasLog {
     * The retention cut is ITSELF a catalog update, retried on
     * contention like any commit. If the oldest retained version is a
     * `#delta` manifest, its replay chain passes through versions about
-    * to expire — so its FULL resolution is materialized as a new object
-    * first and the truncated history maps the cut version to that
-    * (TxLog's checkpoint-at-the-cut move, CAS-flavored). Pinned readers
-    * inside the window stay readable: their own chain objects may drop,
-    * but [[files(h*]] falls back to the catalog's content-identical
-    * post-cut resolution. Readers beyond the window fail loudly on the
-    * catalog, never partially on disk. */
+    * to expire — so its FULL resolution ([[TxLog.checkpointBody]]) is
+    * materialized as a new object first and the truncated history maps
+    * the cut version to that. Pinned readers inside the window stay
+    * readable: their own chain objects may drop, but [[files(h*]] falls
+    * back to the catalog's content-identical post-cut resolution.
+    * Readers beyond the window fail loudly on the catalog, never
+    * partially on disk. */
   def vacuum(table: String, keepLast: Int,
       graceMs: Long = TxLog.vacuumGraceMs): Seq[String] = {
     require(keepLast >= 1, "must retain at least the current version")
@@ -305,21 +206,14 @@ object CasLog {
       require(cur != null, s"no CAS table $table")
       val keepV = (cur.version - keepLast + 1).max(1) to cur.version
       val cut = keepV.head
+      val log = logOf(cur.history)
       val cutObj =
         if (cur.history.contains(cut) &&
-            cur.history.keySet.exists(_ < cut) &&
-            linesOf(cur.history(cut)).exists(_.startsWith("#delta"))) {
-          // materialize the cut's full resolution (deterministic content
-          // — a raced duplicate object is garbage, never corruption)
-          val full = new Path(new Path(table, "_cas"),
-            s"cp-${java.util.UUID.randomUUID()}.manifest")
-          val fs = full.getFileSystem(TxLog.hadoopConf)
-          val meta = linesOf(cur.history(cut))
-            .filter(l => l.startsWith("#ts\t") || l.startsWith("#schema\t"))
-          val out = fs.create(full, false)
-          try (meta ++ dataLinesIn(cur.history, cut))
-            .foreach(l => out.write((l + "\n").getBytes(UTF_8)))
-          finally out.close()
+            cur.history.keySet.exists(_ < cut) && TxLog.isDelta(log(cut))) {
+          // deterministic content — a raced duplicate object is
+          // garbage, never corruption
+          val full = casObject(table, "cp")
+          TxLog.writeLines(full, TxLog.checkpointBody(log, cut))
           Some(full.toString)
         } else None
       retained = cur.history.view.filterKeys(keepV.contains).toMap ++
@@ -347,31 +241,9 @@ object CasLog {
           fs.delete(s.getPath, false)
         }
       }
-    // sweep 2: data files no retained manifest resolves to (the TxLog
-    // vacuum liveness rule — staging-dir granularity, markers included,
-    // and the same age guard protecting an in-flight writer's staging)
-    val live = retained.keys.toSeq.sorted
-      .flatMap(v => dataLinesIn(retained, v).map(_.split('\t')(0)))
-      .toSet.map(TxLog.normPath)
-    val dataRoot = new Path(table, "data")
-    if (fs.exists(dataRoot)) {
-      fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).foreach { d =>
-        val parts = fs.listStatus(d.getPath).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        val (liveParts, deadParts) = parts.partition(s =>
-          live.contains(TxLog.normPath(s.getPath.toString)))
-        val (deadOld, deadFresh) =
-          deadParts.partition(_.getModificationTime <= cutoff)
-        if (liveParts.isEmpty && deadFresh.isEmpty &&
-            d.getModificationTime <= cutoff) {
-          deadOld.foreach(s => deleted += s.getPath.toString)
-          fs.delete(d.getPath, true)
-        } else deadOld.foreach { s =>
-          deleted += s.getPath.toString
-          fs.delete(s.getPath, false)
-        }
-      }
-    }
+    // sweep 2: data files no retained version references
+    deleted ++= TxLog.sweepData(table, logOf(retained),
+      retained.keys.toSeq.sorted, cutoff)
     deleted.result().sorted
   }
 

@@ -54,12 +54,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * creation is atomic AND exclusive at the kernel level — the loser
   * gets EEXIST no matter how the two syscalls interleave (the r11
   * advice item; TxLogSpec's race test runs the two commits on a
-  * barrier to prove it). On object stores with no exclusive rename
-  * at all (S3), the commit point moves into a CAS on a catalog entry —
-  * same invariant, different primitive: built as [[CasLog]] (manifest
-  * bodies under content-unique uncontended names, one catalog
-  * compareAndSet as the commit point — Delta's S3 commit coordinator /
-  * Iceberg's catalog-pointer shape) and law-tested in TxLogSpec.
+  * barrier to prove it).
+  *
+  * One log, two commit points: [[CasLog]] publishes the same manifest
+  * bodies through a catalog compare-and-swap, and resolves, prunes,
+  * checkpoints and sweeps them through this object over its own
+  * version → manifest-lines [[Lookup]].
   *
   * Scale notes: the manifest carries file PATHS plus METADATA — the
   * commit's union SCHEMA (`#schema` line: evolved reads plan from one
@@ -154,39 +154,53 @@ object TxLog {
     */
   private def manifestLines(table: String, v: Int): Seq[String] = {
     val mf = manifestPath(table, v)
-    val fs = fsOf(mf)
-    require(fs.exists(mf), s"no manifest v$v under $table")
-    linesOf(fs, mf)
+    require(fsOf(mf).exists(mf), s"no manifest v$v under $table")
+    readLines(mf)
   }
 
-  private def linesOf(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+  /** The one manifest line reader (both commit protocols). */
+  private[sources] def readLines(p: Path): Seq[String] = {
+    val src = scala.io.Source.fromInputStream(fsOf(p).open(p), "UTF-8")
     try src.getLines().filter(_.nonEmpty).toList finally src.close()
+  }
+
+  /** The one manifest line writer: a new file (never an overwrite)
+    * holding `lines`, one a line. */
+  private[sources] def writeLines(p: Path, lines: Seq[String]): Unit = {
+    val out = fsOf(p).create(p, false)
+    try lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
+    finally out.close()
   }
 
   /** The full-format lines of version v's checkpoint sidecar, if vacuum
     * (or a future compactor) has written one. */
   private def checkpointLines(table: String, v: Int): Option[Seq[String]] = {
     val cp = checkpointPath(table, v)
-    val fs = fsOf(cp)
-    if (fs.exists(cp)) Some(linesOf(fs, cp)) else None
+    if (fsOf(cp).exists(cp)) Some(readLines(cp)) else None
   }
 
-  /** Metadata source for version v: its own manifest when present, else
-    * its checkpoint (the manifest may be gone when v sits at a vacuum
-    * retention cut — the checkpoint carries the same `#schema`). */
-  private def metaLines(table: String, v: Int): Seq[String] = {
-    val mf = manifestPath(table, v)
-    if (fsOf(mf).exists(mf)) manifestLines(table, v)
-    else checkpointLines(table, v).getOrElse(
-      throw new IllegalArgumentException(s"no manifest v$v under $table"))
-  }
+  /** Version → that version's raw manifest lines: the seam between the
+    * log and its commit point. Resolution, stats, schema, pruned reads,
+    * manifest bodies, the cut checkpoint and the data sweep all read
+    * through one, so [[CasLog]] shares them by passing its catalog
+    * history's lookup. A missing version throws
+    * IllegalArgumentException. */
+  private[sources] type Lookup = Int => Seq[String]
+
+  /** This protocol's lookup: the version's checkpoint sidecar when
+    * vacuum wrote one (its manifest may be gone at a retention cut; the
+    * checkpoint carries the same `#ts`/`#schema`), else its manifest. */
+  private def onDisk(table: String): Lookup = v =>
+    checkpointLines(table, v).getOrElse(manifestLines(table, v))
+
+  /** True when these manifest lines are a DELTA manifest. */
+  private[sources] def isDelta(lines: Seq[String]): Boolean =
+    lines.exists(_.startsWith("#delta"))
 
   /** True when version v committed as a DELTA manifest (append-only
     * lines replayed over v-1) — the write-cost audit hook. */
   def isDeltaManifest(table: String, v: Int): Boolean =
-    manifestLines(table, v).exists(_.startsWith("#delta"))
+    isDelta(manifestLines(table, v))
 
   /** Raw line count of version v's manifest file — what the commit
     * actually WROTE (the O(|delta|) vs O(table-files) distinction). */
@@ -200,7 +214,7 @@ object TxLog {
   /** Commit wall-clock of version v (the `#ts` manifest line). None for
     * pre-timestamp manifests. */
   def timestampOf(table: String, v: Int): Option[Long] =
-    metaLines(table, v).collectFirst {
+    onDisk(table)(v).collectFirst {
       case l if l.startsWith("#ts\t") => l.substring("#ts\t".length).toLong
     }
 
@@ -218,24 +232,34 @@ object TxLog {
       .find(v => timestampOf(table, v).exists(_ <= tsMillis))
 
   /** Resolved data lines of a committed version (path + optional stats):
-    * a checkpoint short-circuits; a full manifest answers directly; a
-    * delta manifest replays over v-1. The replay chain is bounded by
+    * a full manifest (or checkpoint) answers directly; a delta manifest
+    * replays over v-1. The replay chain is bounded by
     * [[checkpointInterval]] (every Nth version commits full) and by
     * rewrite commits, which are full by nature. */
+  private[sources] def dataLines(log: Lookup, v: Int): Seq[String] = {
+    val ls = log(v)
+    val body = ls.filterNot(_.startsWith("#"))
+    if (isDelta(ls)) dataLines(log, v - 1) ++ body.map(_.stripPrefix("+"))
+    else body
+  }
+
   private def dataLines(table: String, v: Int): Seq[String] =
-    checkpointLines(table, v) match {
-      case Some(ls) => ls.filterNot(_.startsWith("#"))
-      case None =>
-        val ls = manifestLines(table, v)
-        val body = ls.filterNot(_.startsWith("#"))
-        if (ls.exists(_.startsWith("#delta")))
-          dataLines(table, v - 1) ++ body.map(_.stripPrefix("+"))
-        else body
-    }
+    dataLines(onDisk(table), v)
+
+  private[sources] def files(log: Lookup, v: Int): Seq[String] =
+    dataLines(log, v).map(_.split('\t')(0))
 
   /** The exact file list of a committed version. */
-  def files(table: String, v: Int): Seq[String] =
-    dataLines(table, v).map(_.split('\t')(0))
+  def files(table: String, v: Int): Seq[String] = files(onDisk(table), v)
+
+  private[sources] def schemaOf(log: Lookup, v: Int)
+      : Option[org.apache.spark.sql.types.StructType] =
+    log(v).collectFirst {
+      case l if l.startsWith("#schema\t") =>
+        org.apache.spark.sql.types.DataType
+          .fromJson(l.substring("#schema\t".length))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+    }
 
   /** The schema a committed version persisted IN its manifest (Delta/
     * Iceberg discipline: readers must never need an O(files) footer pass
@@ -243,24 +267,23 @@ object TxLog {
     * manifests. */
   def schemaOf(table: String, v: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    metaLines(table, v).collectFirst {
-      case l if l.startsWith("#schema\t") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.substring("#schema\t".length))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
+    schemaOf(onDisk(table), v)
+
+  private[sources] def statsOf(log: Lookup, v: Int)
+      : Map[String, Map[String, (String, String)]] =
+    dataLines(log, v).flatMap { l =>
+      val cut = l.indexOf('\t')
+      if (cut < 0) None
+      else Some(normPath(l.substring(0, cut)) ->
+        parseStats(l.substring(cut + 1)))
+    }.toMap
 
   /** Per-file column stats of a committed version: normalized path →
     * (column → (min, max) as strings). Files committed without stats are
     * absent. */
   def statsOf(table: String, v: Int)
       : Map[String, Map[String, (String, String)]] =
-    dataLines(table, v).flatMap { l =>
-      val cut = l.indexOf('\t')
-      if (cut < 0) None
-      else Some(normPath(l.substring(0, cut)) ->
-        parseStats(l.substring(cut + 1)))
-    }.toMap
+    statsOf(onDisk(table), v)
 
   /** Driver-side MAX over the manifest's per-file [min, max] stats for
     * numeric column `c` at version `v` — the number callers otherwise
@@ -295,35 +318,21 @@ object TxLog {
   private[sources] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
-  /** Stage a DataFrame as new immutable part files; returns their paths.
-    * Staged files are invisible until a commit references them. */
-  def stage(df: DataFrame, table: String): Seq[String] = {
-    val dir = new Path(new Path(table, "data"),
-      java.util.UUID.randomUUID().toString)
-    df.write.parquet(dir.toString)
-    fsOf(dir).listStatus(dir).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }
-      .map(_.getPath.toString).sorted
-  }
-
-  /** Stage a DataFrame HIVE-PARTITIONED on `partCols` (one staging dir,
-    * `col=value/` subdirs) — the layout an index artifact needs so a
-    * pinned read can partition-prune (g93's cid-partitioned ANN index
-    * committed as a log version instead of a bare directory). Returns
-    * the leaf part-file paths; [[readPartitioned]] reads them back with
-    * the staging dir as `basePath` so the partition columns (and their
-    * pruning) survive the manifest round trip. */
-  def stagePartitioned(df: DataFrame, table: String,
-      partCols: Seq[String]): Seq[String] = {
-    require(partCols.nonEmpty, "stagePartitioned needs partition columns")
+  /** Stage a DataFrame as new immutable part files under one fresh
+    * staging dir; returns the sorted leaf part-file paths. Staged files
+    * are invisible until a commit references them. Non-empty `partCols`
+    * stage HIVE-PARTITIONED (`col=value/` subdirs) — the layout an
+    * index artifact needs so a pinned read can partition-prune (g93's
+    * cid-partitioned ANN index committed as a log version instead of a
+    * bare directory); [[readPartitioned]] reads it back with the staging
+    * dir as `basePath` so the partition columns (and their pruning)
+    * survive the manifest round trip. */
+  def stage(df: DataFrame, table: String,
+      partCols: Seq[String] = Nil): Seq[String] = {
     val dir = new Path(new Path(table, "data"),
       java.util.UUID.randomUUID().toString)
     df.write.partitionBy(partCols: _*).parquet(dir.toString)
-    val fs = fsOf(dir)
-    val it = fs.listFiles(dir, true)
+    val it = fsOf(dir).listFiles(dir, true)
     val out = Seq.newBuilder[String]
     while (it.hasNext) {
       val s = it.next()
@@ -335,7 +344,7 @@ object TxLog {
   }
 
   /** Snapshot-isolated read of a version whose files were staged by ONE
-    * [[stagePartitioned]] commit: the shared staging dir becomes
+    * partitioned [[stage]] commit: the shared staging dir becomes
     * `basePath`, so Spark re-derives the partition columns from the
     * directory names and a partition-key filter prunes at FILE level
     * inside the pinned list (TxLogSpec law: a pinned index search plans
@@ -370,22 +379,32 @@ object TxLog {
     * and commits NOTHING. Returns the new version; `base = 0` creates
     * the table. */
   def commit(table: String, staged: Seq[String], base: Int,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Int = {
-    val baseSchema = if (base == 0) None else schemaOf(table, base)
-    val schema = mergedSchemaJson(baseSchema, staged)
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Int =
+    commitManifest(table,
+      appendBody(onDisk(table), base, staged, statsCols, bloomCols), base)
+
+  /** The manifest body of an append of `staged` over `base`: the base
+    * schema widened by the staged files, then the FULL resolution on
+    * creation and on the checkpoint cadence (so no replay chain ever
+    * exceeds [[checkpointInterval]] manifests), else a `#delta` of the
+    * staged lines only — O(|staged|), never O(table-files). */
+  private[sources] def appendBody(log: Lookup, base: Int,
+      staged: Seq[String], statsCols: Seq[String],
+      bloomCols: Seq[String] = Nil): Seq[String] = {
+    val schema = mergedSchemaJson(
+      if (base == 0) None else schemaOf(log, base), staged)
     val newLines = renderDataLines(staged, statsCols, bloomCols)
-    val next = base + 1
-    if (base == 0 || next % checkpointInterval == 0)
-      // creation, or the checkpoint cadence: write the FULL resolution
-      // so no replay chain ever exceeds checkpointInterval manifests
-      commitManifest(table,
-        (if (base == 0) Nil else dataLines(table, base)) ++ newLines,
-        schema, base)
-    else
-      // steady-state append: O(|staged|) lines, never O(table-files)
-      commitManifest(table, "#delta" +: newLines.map("+" + _),
-        schema, base)
+    manifestBody(schema,
+      if (base == 0 || (base + 1) % checkpointInterval == 0)
+        (if (base == 0) Nil else dataLines(log, base)) ++ newLines
+      else "#delta" +: newLines.map("+" + _))
   }
+
+  /** `#ts` (commit wall-clock), the optional `#schema`, then `lines`. */
+  private[sources] def manifestBody(schemaJson: Option[String],
+      lines: Seq[String]): Seq[String] =
+    s"#ts\t${System.currentTimeMillis()}" +:
+      (schemaJson.map("#schema\t" + _).toSeq ++ lines)
 
   /** Append with OPTIMISTIC-CONCURRENCY RETRY: on a commit conflict,
     * re-read the new head and REBASE the staged files onto it. Safe for
@@ -441,8 +460,8 @@ object TxLog {
     * vacuumed, and [[vacuum]] on a clone only sweeps the clone's own
     * data/ dir). */
   def cloneAsV1(src: String, srcV: Int, dst: String): Int =
-    commitManifest(dst, dataLines(src, srcV),
-      schemaOf(src, srcV).map(_.json), 0)
+    commitManifest(dst,
+      manifestBody(schemaOf(src, srcV).map(_.json), dataLines(src, srcV)), 0)
 
   /** Snapshot-isolated read of a pinned version: exactly that manifest's
     * files, whatever has committed since. RAW by contract — deletion
@@ -486,39 +505,36 @@ object TxLog {
   }
 
   /** STATS-PRUNED snapshot read (data skipping through the log): keep
-    * only the manifest files whose persisted [min, max] for `column`
-    * intersects [lo, hi], then apply the predicate to the survivors —
-    * the g93 partition-pruning discipline applied to the log's own
-    * metadata, and the single most-used lakehouse read optimization
-    * (Delta/Iceberg file skipping). Files committed WITHOUT stats for
-    * the column are kept (pruning must never be allowed to lose rows).
-    * Values compare numerically when both sides parse as numbers,
-    * lexicographically otherwise (ISO dates order correctly as
-    * strings). At 100 TB this is the difference between a predicate
-    * read costing O(matching files) and O(table) — the file list is
-    * pruned BEFORE Spark ever plans the scan, so `inputFiles` carries
-    * only survivors (TxLogSpec law). DV-AWARE (r14): kept dv-carrying
-    * files read minus their own sidecar's keys — stats may only ADMIT
-    * files, so pruning composes with the subtraction soundly (a stat
-    * computed pre-delete can keep a file whose matching rows are all
-    * deleted — extra read, never a resurrected row). */
+    * only the manifest files whose persisted [min, max] intersects EVERY
+    * (column, lo, hi) range — conjunctive skipping, so a two-column
+    * z-order layout (a13) prunes on both dimensions at once — then apply
+    * the predicates to the survivors: the g93 partition-pruning
+    * discipline applied to the log's own metadata, and the single
+    * most-used lakehouse read optimization (Delta/Iceberg file
+    * skipping). Files committed WITHOUT stats for a column are kept
+    * (pruning must never be allowed to lose rows). Values compare
+    * numerically when both sides parse as numbers, lexicographically
+    * otherwise (ISO dates order correctly as strings). At 100 TB this is
+    * the difference between a predicate read costing O(matching files)
+    * and O(table) — the file list is pruned BEFORE Spark ever plans the
+    * scan, so `inputFiles` carries only survivors (TxLogSpec law).
+    * DV-AWARE (r14): kept dv-carrying files read minus their own
+    * sidecar's keys — stats may only ADMIT files, so pruning composes
+    * with the subtraction soundly (a stat computed pre-delete can keep a
+    * file whose matching rows are all deleted — extra read, never a
+    * resurrected row). */
   def readWhere(spark: SparkSession, table: String, v: Int,
-      column: String, lo: String, hi: String): DataFrame =
-    readWhere(spark, table, v, Seq((column, lo, hi)))
+      preds: Seq[(String, String, String)]): DataFrame =
+    readWhere(spark, onDisk(table), v, preds)
 
-  /** Multi-predicate stats-pruned read: a file survives only if its
-    * persisted [min, max] intersects EVERY (column, lo, hi) range —
-    * conjunctive skipping, so a two-column z-order layout (a13) prunes
-    * on both dimensions at once. Per-column rule identical to the
-    * single-predicate form (missing stats keep the file). */
-  def readWhere(spark: SparkSession, table: String, v: Int,
+  private[sources] def readWhere(spark: SparkSession, log: Lookup, v: Int,
       preds: Seq[(String, String, String)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(preds.nonEmpty, "readWhere needs at least one predicate")
-    val stats = statsOf(table, v)
-    val keep = statsKeep(files(table, v), stats, preds)
+    val stats = statsOf(log, v)
+    val keep = statsKeep(files(log, v), stats, preds)
     val base =
-      if (keep.isEmpty) emptyOr(spark, table, v, keep)
+      if (keep.isEmpty) emptyAt(spark, log, v)
       else dvGroupedRead(spark, stats, keep, g => spark.read.parquet(g: _*))
     preds.foldLeft(base) {
       case (df, (column, lo, hi)) =>
@@ -571,7 +587,7 @@ object TxLog {
     // the sidecar subtraction removes them before the exact IN-list, so
     // a point lookup can never resurrect a deleted key
     val base =
-      if (keep.isEmpty) emptyOr(spark, table, v, keep)
+      if (keep.isEmpty) emptyAt(spark, onDisk(table), v)
       else dvGroupedRead(spark, stats, keep, g => spark.read.parquet(g: _*))
     base.where(col(column).isin(keys.map(lit): _*))
   }
@@ -588,24 +604,20 @@ object TxLog {
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
-  /** The pruned-read scaffold shared by readWhere/readKeys: the kept
-    * files, or a correctly-typed empty frame when pruning removed all. */
-  private def emptyOr(spark: SparkSession, table: String, v: Int,
-      keep: Seq[String]): DataFrame =
-    if (keep.nonEmpty) spark.read.parquet(keep: _*)
-    else schemaOf(table, v) match {
-      // nothing survives pruning: an empty frame in the table schema
+  /** What a pruned read (readWhere/readKeys) yields when pruning
+    * removed every file: an empty frame in the table schema. */
+  private def emptyAt(spark: SparkSession, log: Lookup, v: Int): DataFrame =
+    schemaOf(log, v) match {
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => read(spark, table, v).limit(0)
+      case None => spark.read.parquet(files(log, v): _*).limit(0)
     }
 
-  /** The conjunctive data-skipping KEEP rule, shared by [[readWhere]]
-    * and [[CasLog.readWhere]] (one skipping semantics, two commit
-    * protocols): a file survives only if its persisted [min, max]
-    * intersects every (column, lo, hi) range; missing stats keep the
-    * file — skipping must never lose rows. */
-  private[sources] def statsKeep(fs: Seq[String],
+  /** The conjunctive data-skipping KEEP rule of [[readWhere]] and
+    * [[mergeInto]]'s pre-prune: a file survives only if its persisted
+    * [min, max] intersects every (column, lo, hi) range; missing stats
+    * keep the file — skipping must never lose rows. */
+  private def statsKeep(fs: Seq[String],
       stats: Map[String, Map[String, (String, String)]],
       preds: Seq[(String, String, String)]): Seq[String] =
     fs.filter { p =>
@@ -633,14 +645,22 @@ object TxLog {
     * older manifests, until [[vacuum]] retires them. */
   def commitRewrite(table: String, staged: Seq[String], base: Int,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Int =
-    // a rewrite REPLACES content, so the manifest schema is the staged
-    // files' own (a rewrite may legitimately narrow); fall back to the
-    // base schema only for an empty rewrite
-    commitManifest(table, renderDataLines(staged, statsCols, bloomCols),
+    commitManifest(table,
+      rewriteBody(onDisk(table), base, staged, statsCols, bloomCols), base)
+
+  /** The manifest body of a rewrite to exactly `staged` over `base`. A
+    * rewrite REPLACES content, so the schema is the staged files' own (a
+    * rewrite may legitimately narrow); the base schema is the fallback
+    * only for an empty rewrite. */
+  private[sources] def rewriteBody(log: Lookup, base: Int,
+      staged: Seq[String], statsCols: Seq[String],
+      bloomCols: Seq[String] = Nil): Seq[String] = {
+    val lines = renderDataLines(staged, statsCols, bloomCols)
+    manifestBody(
       mergedSchemaJson(None, staged)
-        .orElse(if (base == 0) None
-                else schemaOf(table, base).map(_.json)),
-      base)
+        .orElse(if (base == 0) None else schemaOf(log, base).map(_.json)),
+      lines)
+  }
 
   /** MERGE INTO through the log — the composed lakehouse write primitive
     * (Delta/Iceberg `MERGE`): ONE commit applies a change batch holding
@@ -794,9 +814,10 @@ object TxLog {
       .unionByName(changes.where(checkedOp === lit("upsert"))
         .select(dataCols.map(col): _*))
     val staged = stage(merged, table)
+    val lines = keptLines ++ renderDataLines(staged, statsCols, bloomCols)
     commitManifest(table,
-      keptLines ++ renderDataLines(staged, statsCols, bloomCols),
-      mergedSchemaJson(schemaOf(table, base), staged), base)
+      manifestBody(mergedSchemaJson(schemaOf(table, base), staged), lines),
+      base)
   }
 
   /** MERGE with optimistic-concurrency RETRY — the recompute loop a
@@ -892,8 +913,8 @@ object TxLog {
         path + "\t" + renderStats(merged)
       }
     }
-    commitManifest(table, lines,
-      schemaOf(table, base).map(_.json), base)
+    commitManifest(table,
+      manifestBody(schemaOf(table, base).map(_.json), lines), base)
   }
 
   /** Merge-on-read snapshot: dv-carrying files read minus their sidecar
@@ -938,20 +959,17 @@ object TxLog {
       }.reduceLeft(_ unionByName _)
   }
 
-  private def commitManifest(table: String, all: Seq[String],
-      schemaJson: Option[String], base: Int): Int = {
+  /** Publish `body` as version `base + 1`: write it to a hidden temp
+    * name, then [[publishExclusive]] it under the versioned name. */
+  private def commitManifest(table: String, body: Seq[String],
+      base: Int): Int = {
     val next = base + 1
     val md = manifestDir(table)
     val fs = fsOf(md)
     fs.mkdirs(md)
     val tmp = new Path(md,
       s".v$next-${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try {
-      out.write(s"#ts\t${System.currentTimeMillis()}\n".getBytes(UTF_8))
-      schemaJson.foreach(j => out.write(s"#schema\t$j\n".getBytes(UTF_8)))
-      all.foreach(p => out.write((p + "\n").getBytes(UTF_8)))
-    } finally out.close()
+    writeLines(tmp, body)
     val target = manifestPath(table, next)
     try publishExclusive(fs, tmp, target)
     catch {
@@ -1008,7 +1026,7 @@ object TxLog {
     * computed at COMMIT time from one footer instead of at READ time
     * from all of them. A dataType conflict on a shared column is a
     * corrupt commit and fails loudly. */
-  private[sources] def mergedSchemaJson(
+  private def mergedSchemaJson(
       base: Option[org.apache.spark.sql.types.StructType],
       staged: Seq[String]): Option[String] =
     (base, stagedSchema(staged)) match {
@@ -1086,7 +1104,7 @@ object TxLog {
     * `bloomCols` column lands as `#bloom#<col>` → [base64 bits, "m,k"]
     * for [[readKeys]]' point-lookup skipping. Pseudo-entry keys start
     * with '#', which [[readWhere]]'s real-column lookups never match. */
-  private[sources] def renderDataLines(staged: Seq[String],
+  private def renderDataLines(staged: Seq[String],
       statsCols: Seq[String], bloomCols: Seq[String] = Nil): Seq[String] =
     if ((statsCols.isEmpty && bloomCols.isEmpty) || staged.isEmpty) staged
     else {
@@ -1180,7 +1198,7 @@ object TxLog {
     * string (escape-aware), then fold them in (key, min, max) triples —
     * the grammar renderStats emits has exactly three strings per entry
     * and no other quoted tokens, so position IS structure. */
-  private[sources] def parseStats(json: String): Map[String, (String, String)] = {
+  private def parseStats(json: String): Map[String, (String, String)] = {
     val strs = Seq.newBuilder[String]
     var i = 0
     while (i < json.length) {
@@ -1313,11 +1331,7 @@ object TxLog {
     * unreferenced file younger than the grace window may be a LIVE
     * writer's staged-but-uncommitted data, and reclaiming it would
     * corrupt that writer's commit the moment it wins the commit point.
-    * A staging directory whose parquet files are ALL dead (and itself
-    * beyond the grace window) is removed recursively (taking _SUCCESS
-    * and any other marker siblings with it — each staging dir is one
-    * commit attempt, so its files live and die together); the sweep
-    * lists O(files) names and never reads data. */
+    * The sweep itself is [[sweepData]]. */
   def vacuum(table: String, keepLast: Int,
       graceMs: Long = vacuumGraceMs): Seq[String] = {
     require(keepLast >= 1, "must retain at least the current version")
@@ -1325,19 +1339,42 @@ object TxLog {
     val versions = listVersions(table)
     val retained = versions.takeRight(keepLast)
     // Retention must not break reconstruction: if the oldest retained
-    // version is a DELTA manifest, its replay chain passes through the
-    // versions about to expire — materialize its full resolution as a
+    // version still resolves through a DELTA manifest (no checkpoint
+    // yet), its replay chain passes through the versions about to
+    // expire — materialize its full resolution as a
     // `v<N>.checkpoint` sidecar FIRST (same exclusive publish; content
     // is deterministic, so losing a checkpoint race is a no-op).
     for (cut <- retained.headOption
-         if versions.size > keepLast && isDeltaManifest(table, cut) &&
-           !hasCheckpoint(table, cut))
+         if versions.size > keepLast && isDelta(onDisk(table)(cut)))
       writeCheckpoint(table, cut)
-    // a retained version's liveness covers its DV sidecars too — a
-    // merge-on-read snapshot is unreadable without them
-    val live = retained.flatMap { v =>
-      files(table, v) ++
-        statsOf(table, v).values.flatMap(_.get("#dv#").map(_._1))
+    val deleted = sweepData(table, onDisk(table), retained, cutoff)
+    val fs = fsOf(manifestDir(table))
+    versions.dropRight(keepLast).foreach { v =>
+      fs.delete(manifestPath(table, v), false)
+      fs.delete(checkpointPath(table, v), false)
+    }
+    deleted
+  }
+
+  /** The data-file sweep of both vacuums ([[CasLog.vacuum]] too): delete
+    * every parquet file under `<table>/data` that no `retained` version
+    * of `log` references — neither as a data file nor as a `#dv#`
+    * sidecar (a merge-on-read snapshot is unreadable without it) — and
+    * that is older than `cutoff`. A dead-but-FRESH file may be an
+    * in-flight writer's staging, so only beyond-threshold garbage is
+    * reclaimed. A staging directory whose parquet files are ALL dead
+    * (and itself older than `cutoff`) is removed recursively, taking
+    * _SUCCESS and any other marker siblings with it — each staging dir
+    * is one commit attempt, so its files live and die together. Lists
+    * O(files) names and never reads data. Returns the deleted data-file
+    * paths, sorted. */
+  private[sources] def sweepData(table: String, log: Lookup,
+      retained: Seq[Int], cutoff: Long): Seq[String] = {
+    val live = retained.flatMap(v => dataLines(log, v)).flatMap { l =>
+      val cut = l.indexOf('\t')
+      if (cut < 0) Seq(l)
+      else l.substring(0, cut) +:
+        parseStats(l.substring(cut + 1)).get("#dv#").map(_._1).toSeq
     }.toSet.map(normPath)
     val dataRoot = new Path(table, "data")
     val fs = fsOf(dataRoot)
@@ -1348,8 +1385,6 @@ object TxLog {
           .filter(_.getPath.getName.endsWith(".parquet"))
         val (liveParts, deadParts) =
           parts.partition(s => live.contains(normPath(s.getPath.toString)))
-        // the grace window: a dead-but-FRESH file may be an in-flight
-        // writer's staging — only beyond-threshold garbage is reclaimed
         val (deadOld, deadFresh) =
           deadParts.partition(_.getModificationTime <= cutoff)
         if (liveParts.isEmpty && deadFresh.isEmpty &&
@@ -1362,10 +1397,6 @@ object TxLog {
         }
       }
     }
-    versions.dropRight(keepLast).foreach { v =>
-      fs.delete(manifestPath(table, v), false)
-      fs.delete(checkpointPath(table, v), false)
-    }
     deleted.result().sorted
   }
 
@@ -1374,20 +1405,10 @@ object TxLog {
     * pure function of v, so a concurrent writer landing first is
     * indistinguishable from us landing first. */
   private def writeCheckpoint(table: String, v: Int): Unit = {
-    val body = dataLines(table, v)
-    // carry the source manifest's metadata lines (#ts, #schema) so a
-    // checkpointed version answers timestampOf/schemaOf after its
-    // manifest expires
-    val meta = metaLines(table, v)
-      .filter(l => l.startsWith("#ts\t") || l.startsWith("#schema\t"))
     val md = manifestDir(table)
     val fs = fsOf(md)
     val tmp = new Path(md, s".v$v-cp-${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try {
-      meta.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
-      body.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
-    } finally out.close()
+    writeLines(tmp, checkpointBody(onDisk(table), v))
     try publishExclusive(fs, tmp, checkpointPath(table, v))
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
@@ -1395,4 +1416,12 @@ object TxLog {
       case e: Throwable => fs.delete(tmp, false); throw e
     }
   }
+
+  /** Version v's full resolution as one manifest body — the checkpoint a
+    * retention cut writes (both protocols). It carries the source
+    * manifest's metadata lines (#ts, #schema), so a checkpointed version
+    * answers timestampOf/schemaOf after its manifest expires. */
+  private[sources] def checkpointBody(log: Lookup, v: Int): Seq[String] =
+    log(v).filter(l => l.startsWith("#ts\t") || l.startsWith("#schema\t")) ++
+      dataLines(log, v)
 }

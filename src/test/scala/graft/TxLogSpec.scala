@@ -300,7 +300,7 @@ class TxLogSpec extends SparkSpec {
       "every staged file carries its stats")
     def norm(p: String) = p.replaceFirst("^file:/+", "/")
     // the pruned read: correct AND narrow
-    val pruned = TxLog.readWhere(spark, t, v1, "id", "5", "20")
+    val pruned = TxLog.readWhere(spark, t, v1, Seq(("id", "5", "20")))
     assert(pruned.select($"id").as[Long].collect().toSet ===
       (5L to 20L).toSet, "pruning must never change the answer")
     assert(pruned.inputFiles.map(norm).toSet.size < all.size,
@@ -310,12 +310,13 @@ class TxLogSpec extends SparkSpec {
     assert(pruned.count() === 16)
     // nothing survives: the empty-prune path yields an empty, correctly
     // typed frame
-    assert(TxLog.readWhere(spark, t, v1, "id", "9000", "9999").count() === 0)
+    assert(TxLog.readWhere(spark, t, v1, Seq(("id", "9000", "9999")))
+      .count() === 0)
     // a file committed WITHOUT stats joins every readWhere's file list
     // (pruning is only ever allowed to use stats that exist)
     val v2 = TxLog.commit(t,
       TxLog.stage(Seq((1000L, "x")).toDF("id", "v"), t), v1)
-    val p2 = TxLog.readWhere(spark, t, v2, "id", "5", "20")
+    val p2 = TxLog.readWhere(spark, t, v2, Seq(("id", "5", "20")))
     assert(p2.select($"id").as[Long].collect().toSet === (5L to 20L).toSet)
     val v2only = (TxLog.files(t, v2).toSet -- all.toSet).map(norm)
     assert(v2only.subsetOf(p2.inputFiles.map(norm).toSet),
@@ -410,6 +411,30 @@ class TxLogSpec extends SparkSpec {
       statsCols = Seq("id"))
     val v3 = CasLog.commit(t, TxLog.stage(df(4L -> "d"), t), v2,
       statsCols = Seq("id"))
+    // one log, two commit points: the same commit sequence through a
+    // TxLog table resolves alike at every version
+    val tx = freshTable("cas_life_tx")
+    val x1 = TxLog.commit(tx, TxLog.stage(
+      df(1L -> "a", 2L -> "b").repartitionByRange(2, $"id"), tx), 0,
+      statsCols = Seq("id"))
+    val x2 = TxLog.commit(tx, TxLog.stage(df(3L -> "c"), tx), x1,
+      statsCols = Seq("id"))
+    val x3 = TxLog.commit(tx, TxLog.stage(df(4L -> "d"), tx), x2,
+      statsCols = Seq("id"))
+    def alike(v: Int): Unit = {
+      assert(CasLog.files(t, v).size === TxLog.files(tx, v).size)
+      assert(CasLog.isDeltaManifest(t, v) === TxLog.isDeltaManifest(tx, v))
+      val h = CasLog.head(t).get
+      assert(CasLog.read(spark, h.copy(version = v, manifest = h.history(v)))
+        .schema === TxLog.read(spark, tx, v).schema)
+      val point = Seq(("id", "1", "1"))
+      val (c, x) = (CasLog.readWhere(spark, t, v, point),
+        TxLog.readWhere(spark, tx, v, point))
+      assert(c.collect().toSet === x.collect().toSet)
+      assert(c.inputFiles.length === x.inputFiles.length)
+    }
+    assert(Seq(x1, x2, x3) === Seq(v1, v2, v3))
+    Seq(v1, v2, v3).foreach(alike)
     // write-cost law: creation full, steady-state appends delta
     assert(!CasLog.isDeltaManifest(t, v1))
     assert(CasLog.isDeltaManifest(t, v2) && CasLog.isDeltaManifest(t, v3))
@@ -432,6 +457,9 @@ class TxLogSpec extends SparkSpec {
     // a compaction rewrite + cut-to-head reclaims the dead data files
     val v4 = CasLog.commitRewrite(t, TxLog.stage(
       CasLog.read(spark, CasLog.head(t).get).repartition(1), t), v3)
+    assert(TxLog.commitRewrite(tx, TxLog.stage(
+      TxLog.read(spark, tx, x3).repartition(1), tx), x3) === v4)
+    alike(v4)
     val s2 = CasLog.vacuum(t, keepLast = 1, graceMs = 0L)
     assert(s2.exists(_.endsWith(".parquet")),
       "pre-rewrite data files are dead once only the head is retained")
@@ -817,7 +845,7 @@ class TxLogSpec extends SparkSpec {
       Seq(Tuple1("k3")).toDF("k"))
     // range skipping: k3's row sits inside [1,10] and inside the kept
     // files' stats (computed pre-delete) — admitted file, subtracted row
-    val rw = TxLog.readWhere(spark, t, v2, "n", "1", "10")
+    val rw = TxLog.readWhere(spark, t, v2, Seq(("n", "1", "10")))
     assert(rw.count() === 9)
     assert(rw.where($"k" === "k3").count() === 0,
       "a stats-pruned read must never resurrect a DV-deleted row")
@@ -829,13 +857,15 @@ class TxLogSpec extends SparkSpec {
     // evolved read: manifest-schema planning composes with subtraction
     assert(TxLog.readEvolved(spark, t, v2).count() === 19)
     // the pre-DV version stays fully readable through every path
-    assert(TxLog.readWhere(spark, t, v1, "n", "1", "10").count() === 10)
+    assert(TxLog.readWhere(spark, t, v1, Seq(("n", "1", "10")))
+      .count() === 10)
     assert(TxLog.readKeys(spark, t, v1, "k", Seq("k3")).count() === 1)
     // and compaction retires the read tax with identical content
     val v3 = TxLog.commitRewrite(t,
       TxLog.stage(TxLog.readMerged(spark, t, v2), t), v2,
       statsCols = Seq("n"))
-    assert(TxLog.readWhere(spark, t, v3, "n", "1", "10").count() === 9)
+    assert(TxLog.readWhere(spark, t, v3, Seq(("n", "1", "10")))
+      .count() === 9)
   }
 
   test("mergeWithRetry: two merges racing from one head BOTH land exactly " +
@@ -948,11 +978,11 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("pindex")
     val idx1 = (1L to 100L).map(i => (i, i % 5)).toDF("vec_id", "cid")
     val v1 = TxLog.commitRewrite(t,
-      TxLog.stagePartitioned(idx1, t, Seq("cid")), 0)
+      TxLog.stage(idx1, t, Seq("cid")), 0)
     // a rebuild commits as v2 — different assignment entirely
     val idx2 = (1L to 100L).map(i => (i, i % 3)).toDF("vec_id", "cid")
     val v2 = TxLog.commitRewrite(t,
-      TxLog.stagePartitioned(idx2, t, Seq("cid")), v1)
+      TxLog.stage(idx2, t, Seq("cid")), v1)
     // the pinned v1 search: plans ONLY v1 files, partition column alive
     val pinned = TxLog.readPartitioned(spark, t, v1)
       .where($"cid" === 2L)
