@@ -145,12 +145,15 @@ object CasLog {
     TxLog.files(catalogLog(table), v)
 
   /** True when version v's manifest object is a `#delta` manifest — the
-    * write-cost audit hook. */
+    * write-cost audit hook. A retention cut maps its version to the
+    * full checkpoint object, so, like [[TxLog.isDeltaManifest]], it
+    * reads false after the vacuum that cut there. */
   def isDeltaManifest(table: String, v: Int): Boolean =
     TxLog.isDelta(catalogLog(table)(v))
 
   /** Raw line count of version v's manifest OBJECT — what the commit
-    * actually wrote (the O(batch) vs O(table-files) distinction). */
+    * actually wrote (the O(batch) vs O(table-files) distinction) until
+    * a retention cut checkpoints it, as [[TxLog.manifestLineCount]]. */
   def manifestLineCount(table: String, v: Int): Int =
     catalogLog(table)(v).size
 

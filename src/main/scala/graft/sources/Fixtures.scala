@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-JVM artifacts built from a corpus dir: staged tables, streaming
+/** Per-JVM artifacts built from a corpus dir: the corpus tables' parquet
+  * footer schemas ([[Tables.footerSchema]]), staged tables, streaming
   * landing dirs, codebooks, the BPE vocab. Each is built once per
   * (application, corpus dir, name) and handed back unchanged afterwards.
   *

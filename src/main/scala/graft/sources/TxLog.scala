@@ -197,15 +197,19 @@ object TxLog {
   private[sources] def isDelta(lines: Seq[String]): Boolean =
     lines.exists(_.startsWith("#delta"))
 
-  /** True when version v committed as a DELTA manifest (append-only
-    * lines replayed over v-1) — the write-cost audit hook. */
+  /** True when version v resolves through a DELTA manifest (append-only
+    * lines replayed over v-1) — the write-cost audit hook. Both hooks
+    * read the resolved lookup, as [[CasLog]]'s do: a retention cut's
+    * version resolves through its full checkpoint once vacuum wrote one,
+    * so it reads false from then on under either protocol. */
   def isDeltaManifest(table: String, v: Int): Boolean =
-    isDelta(manifestLines(table, v))
+    isDelta(onDisk(table)(v))
 
-  /** Raw line count of version v's manifest file — what the commit
-    * actually WROTE (the O(|delta|) vs O(table-files) distinction). */
+  /** Raw line count of the manifest version v resolves through — what
+    * its commit WROTE (the O(|delta|) vs O(table-files) distinction)
+    * until a retention cut checkpoints it. */
   def manifestLineCount(table: String, v: Int): Int =
-    manifestLines(table, v).size
+    onDisk(table)(v).size
 
   /** True when version v has a checkpoint sidecar. */
   def hasCheckpoint(table: String, v: Int): Boolean =

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * Spark's batch/streaming unification means every transform here is
   * shared with the batch path; only the source (`readStream` file source)
   * and sink differ. File-source streaming needs an explicit schema — it is
-  * declared to match the events parquet footer (ts is epoch-ns read as
-  * bigint under the nanosAsLong flag, SURVEY §1.3).
+  * the one the batch loader infers from the events parquet footer (ts is
+  * epoch-ns read as bigint under the nanosAsLong flag, SURVEY §1.3).
   *
   * Scale notes (real cluster):
   *  - the file source discovers new files per micro-batch → at 100 TB the
@@ -27,24 +27,19 @@ import org.apache.spark.sql.types._
   */
 object StreamingJobs {
 
-  /** events parquet schema. File streams cannot infer, so the schema is
-    * probed from the parquet footer with a one-off batch read — this keeps
-    * the stream correct across both corpus vintages (ts as epoch-ns bigint
-    * under `nanosAsLong`, or native TIMESTAMP(MICROS) → TIMESTAMP_NTZ).
-    */
-  def eventsSchema(spark: SparkSession, sfDir: String): StructType = {
-    graft.sources.Tables.ensureEventsConf(spark)
-    spark.read.parquet(s"$sfDir/events.parquet").schema
-  }
-
   /** Streaming scan of the events parquet dir, normalized to the same
     * shape the batch loader ([[graft.sources.Tables.apply]]) produces:
     * `ts` epoch-ns bigint + `ts_us` µs timestamp, whatever the on-disk
-    * vintage.
+    * vintage. File streams cannot infer, so the stream declares the
+    * footer schema the batch loader reads under
+    * ([[graft.sources.Tables.footerSchema]], inferred once per JVM) —
+    * this keeps the stream correct across both corpus vintages (ts as
+    * epoch-ns bigint under `nanosAsLong`, or native TIMESTAMP(MICROS) →
+    * TIMESTAMP_NTZ).
     */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     graft.sources.Tables.ensureEventsConf(spark)
-    val footer = eventsSchema(spark, sfDir)
+    val footer = graft.sources.Tables.footerSchema(spark, sfDir, "events")
     // `events.parquet` is a single FILE in the driver corpus but a
     // DIRECTORY of part-files in any written-out corpus (ScaleCheck's 8x
     // replica, a real table) — and the two layouts need different stream

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.sources.{Fixtures, Formats, Tables, TmpDirs}
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 class SourcesSpec extends SparkSpec {
 
@@ -100,6 +106,60 @@ class SourcesSpec extends SparkSpec {
       assert(conf.get("spark.sql.session.timeZone") === "UTC")
       assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     }
+  }
+
+  /** `body`'s value and the Spark jobs started while it ran, the listener
+    * bus drained on both sides so the count is exactly its own. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val v = body
+      GraftListenerBus.drain(spark.sparkContext)
+      (v, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val loaders: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "region" -> Tables.region _, "nation" -> Tables.nation _,
+    "customer" -> Tables.customer _, "supplier" -> Tables.supplier _,
+    "part" -> Tables.part _, "orders" -> Tables.orders _,
+    "lineitem" -> Tables.lineitem _, "documents" -> Tables.documents _,
+    "embeddings" -> Tables.embeddings _,
+    "events" -> ((s: SparkSession, d: String) => Tables(s, d, "events")))
+
+  private def normalisedPlan(df: DataFrame): String =
+    df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "#")
+
+  test("a repeated table read starts no job and matches an uncached read") {
+    for ((t, load) <- loaders) {
+      load(spark, sfDir) // the first read may infer the footer schema
+      val (df, jobs) = jobsDuring(load(spark, sfDir))
+      assert(jobs === 0, s"$t: a repeated read started $jobs job(s)")
+      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
+      val ref =
+        if (t != "events" || raw.schema("ts").dataType == LongType) raw
+        else raw.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000L"))
+      assert(df.schema === ref.schema, s"$t: schema")
+      assert(normalisedPlan(df) === normalisedPlan(ref), s"$t: optimized plan")
+      assert(df.collect().map(_.toString).sorted.toSeq ===
+        ref.collect().map(_.toString).sorted.toSeq, s"$t: rows")
+    }
+  }
+
+  test("the footer schema is keyed on the session's parquet inference confs") {
+    val child = Sessions.scoped(spark,
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+    def orderDate(df: DataFrame) = df.schema("o_orderdate").dataType
+    Tables.orders(spark, sfDir) // the parent's schema is cached first
+    assert(orderDate(Tables.orders(child, sfDir)) === TimestampType)
+    assert(Tables.orders(child, sfDir).schema ===
+      child.read.parquet(s"$sfDir/orders.parquet").schema)
+    assert(orderDate(Tables.orders(spark, sfDir)) === TimestampNTZType)
   }
 
   test("Fixtures build once per (dir, name), nest, retry a throw; fresh empties") {

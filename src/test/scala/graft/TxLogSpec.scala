@@ -467,6 +467,30 @@ class TxLogSpec extends SparkSpec {
     assert(CasLog.files(t, v4).nonEmpty)
   }
 
+  test("the audit hooks agree across protocols after a delta-cut vacuum") {
+    import graft.sources.CasLog
+    val t = freshTable("cas_audit")
+    CasLog.reset(t)
+    val tx = freshTable("tx_audit")
+    var (c, x) = (0, 0)
+    for (rows <- Seq(Seq(1L -> "a", 2L -> "b"), Seq(3L -> "c"), Seq(4L -> "d"))) {
+      c = CasLog.commit(t, TxLog.stage(df(rows: _*), t), c)
+      x = TxLog.commit(tx, TxLog.stage(df(rows: _*), tx), x)
+    }
+    assert(CasLog.isDeltaManifest(t, 2) && TxLog.isDeltaManifest(tx, 2))
+    CasLog.vacuum(t, keepLast = 2)
+    TxLog.vacuum(tx, keepLast = 2)
+    // the cut (v2, a delta) now resolves through its full checkpoint
+    assert(TxLog.hasCheckpoint(tx, 2))
+    for (v <- Seq(2, 3)) {
+      assert(CasLog.isDeltaManifest(t, v) === TxLog.isDeltaManifest(tx, v),
+        s"isDeltaManifest v$v")
+      assert(CasLog.manifestLineCount(t, v) === TxLog.manifestLineCount(tx, v),
+        s"manifestLineCount v$v")
+    }
+    assert(!TxLog.isDeltaManifest(tx, 2) && TxLog.isDeltaManifest(tx, 3))
+  }
+
   test("commitWithRetry: two appends racing from one head BOTH land, " +
       "serialized by the commit point; a rewrite has no retry helper " +
       "by design") {
