@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** The one SparkSession factory for every graft main and the test suites.
   *
@@ -51,5 +52,21 @@ object Sessions {
     }
     confs.foreach { case (k, v) => child.conf.set(k, v) }
     child
+  }
+
+  /** The one broadcast-size election: do `rows` observed rows of `schema`
+    * (at its default row size) fit `spark`'s auto-broadcast join
+    * threshold? A negative threshold means never. Logs `[broadcast]
+    * <what> rows=… bytes=… threshold=… fits=…` to stderr (never stdout:
+    * Bench's two-line protocol).
+    */
+  def fitsBroadcast(spark: SparkSession, what: String, rows: Long,
+      schema: StructType): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = rows * schema.defaultSize
+    val fits = threshold >= 0 && bytes <= threshold
+    System.err.println(
+      s"[broadcast] $what rows=$rows bytes=$bytes threshold=$threshold fits=$fits")
+    fits
   }
 }

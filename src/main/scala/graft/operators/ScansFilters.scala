@@ -870,8 +870,9 @@ object ScansFilters {
   // manifest count; (2) STATS-DRIVEN JOIN STRATEGY — the dim side's
   // cardinality is answered by `TxLog.rowCountOf` from the manifest's
   // per-file `#rows#` entries (ONE manifest read: no footers, no scan,
-  // no size listing), and the broadcast decision is taken from THAT —
-  // the key plans with Spark's size-based auto-broadcast DISABLED, so
+  // no size listing), and the broadcast decision is taken from THAT
+  // (`Sessions.fitsBroadcast` against the caller's threshold) — the key
+  // plans with Spark's size-based auto-broadcast DISABLED, so
   // the REQUIRED BroadcastHashJoin can only come from the
   // manifest-driven hint. Both reads plan from the manifest schema
   // (readEvolved — zero footer opens on the read path). At 100 TB this
@@ -947,11 +948,13 @@ object ScansFilters {
     require(pruned.inputFiles.length < TxLog.files(factT, fv).length,
       "two-column stats pruning did not skip any file")
     // the CBO step: cardinality from the MANIFEST, not from file sizes
-    // or footers — and the broadcast election taken from it
+    // or footers — and the broadcast election taken from it against the
+    // CALLER's threshold (the scoped `s` keeps -1 by design)
     val dimRows = TxLog.rowCountOf(dimT, dv)
       .getOrElse(sys.error("dim manifest must carry row counts"))
     val dimDf = TxLog.readEvolved(s, dimT, dv)
-    val wantBroadcast = dimRows <= 1000000L
+    val wantBroadcast = graft.Sessions.fitsBroadcast(
+      spark, "a37 dim", dimRows, dimDf.schema)
     val dimSide = if (wantBroadcast) broadcast(dimDf) else dimDf
     val out = pruned.join(dimSide, $"o_custkey" === $"c_custkey")
       .groupBy($"c_mktsegment")
@@ -961,7 +964,7 @@ object ScansFilters {
     // with size-based auto-broadcast OFF, a BroadcastHashJoin in the
     // plan can only have come from the manifest-driven hint above —
     // asserted only when the stats actually elected one, so a scale
-    // factor whose dim exceeds the cutoff degrades to a shuffle join
+    // factor whose dim exceeds the threshold degrades to a shuffle join
     // instead of failing the key (the election, not the broadcast, is
     // what this key grades)
     require(!wantBroadcast ||

@@ -106,7 +106,8 @@ object Dedup {
   // all-pairs enumeration would give) → exact-Jaccard verification of
   // each edge → connected components over verified edges (a driver-side
   // union-find under the broadcast threshold, bounded pointer jumping
-  // above it) → emit doc → component representative.
+  // above it unless the contraction's first quotient fits) → emit doc →
+  // component representative.
   //
   // Never enumerate intra-bucket pairs: that is quadratic in bucket size
   // (this corpus has a 31-word vocabulary, so band signatures collide into
@@ -170,7 +171,8 @@ object Dedup {
     // exact connected components over the verified edges
     // ([[graft.operators.Components]]: a driver-side union-find while the
     // edge list is under the broadcast threshold — 1,303 edges at sf0.1 —
-    // and the distributed label loop above it) — the surviving
+    // and the distributed label loop above it, unless the contraction's
+    // first quotient is under it) — the surviving
     // approximation in g3 is only the chain-edge candidate generation
     val comp = graft.operators.Components.connectedComponents(
       toks.select($"doc_id"), verified)
@@ -983,10 +985,11 @@ object Dedup {
   // must match the window-derived truth exactly. Up to sf0.1 the edge
   // list (135,001 edges, 2.2 MB) is under the default broadcast
   // threshold, so the graph is finished by the driver-side union-find;
-  // from sf1 (~1.4M edges, ~22 MB) the contraction, the alternating-key
-  // passes and the pointer-jumping loop run for real on ~chain-shaped
-  // components (the WORST case for label propagation — diameter =
-  // component size).
+  // above it (sf0.1 × 8: 1,080,008 edges, 17 MB) the contraction passes
+  // run on ~chain-shaped components (the WORST case for label
+  // propagation — diameter = component size) and the driver finishes the
+  // quotient they leave when it fits; otherwise the pointer-jumping loop
+  // runs to the fixpoint.
   private val g40 = graded(
     "g40_components_label",
     """SELECT o_orderkey,
@@ -1001,17 +1004,8 @@ object Dedup {
       .withColumn("prev", lag($"o_orderkey", 1).over(w))
       .where($"prev".isNotNull)
       .select($"prev".as("s"), $"o_orderkey".as("d"))
-    // contractPasses = 7 (loop path only, i.e. above the broadcast
-    // threshold): this graph is the deliberate label-propagation worst
-    // case — each customer's chain scatters over the whole orderkey
-    // range, so the default 3 passes leave straddles that cost a third
-    // join round (~6 scheduled jobs); four more ~2-job contraction passes
-    // retire it (r15, measured at sf0.1 before its graph was finished on
-    // the driver: 3 → 2 non-empty rounds, ~1.5 s). The LSH dedup callers
-    // keep the default — their banded edges are id-local and converge
-    // at 3.
     graft.operators.Components.connectedComponents(
-        orders.select($"o_orderkey"), edges, contractPasses = 7)
+        orders.select($"o_orderkey"), edges)
       .toDF("o_orderkey", "rep")
       .orderBy("o_orderkey")
   }

@@ -126,7 +126,7 @@ object StreamingJobs {
     * its state yanked mid-run. Safe here because the streaming keys run
     * strictly sequentially (Bench/Verify/Probe are single-threaded and
     * the test suites drive one stream at a time — the same documented
-    * contract as Components.lastRunNonEmptyRounds); a multi-tenant
+    * contract as Components.lastPath); a multi-tenant
     * deployment would scope the unload to the drained query's providers
     * instead.
     */

@@ -6,14 +6,26 @@ class ComponentsSpec extends SparkSpec {
 
   private val threshold = "spark.sql.autoBroadcastJoinThreshold"
 
-  /** `body` at the session's default broadcast threshold (these graphs are
-    * small, so the driver finish) and under -1 (the label loop): both
-    * results must be equal.
+  /** A threshold `edgeRows` pairs of 16 B exceed by one row: the edge
+    * list takes the label loop, and a first quotient smaller than the
+    * edge list is finished on the driver.
     */
-  private def bothPaths[T](body: => T): T = {
+  private def quotientFinish(edgeRows: Int): String = (16L * (edgeRows - 1)).toString
+
+  /** `body` at the session's default broadcast threshold (these graphs are
+    * small, so the driver finish), under -1 (the label loop alone) and
+    * under [[quotientFinish]] (contraction, then the driver finish of the
+    * first quotient, unless it is already empty): all three results must
+    * be equal.
+    */
+  private def allPaths[T](edgeRows: Int)(body: => T): T = {
     val atDefault = body
     val underLoop = withConf(threshold -> "-1")(body)
+    val quotientFinished = withConf(threshold -> quotientFinish(edgeRows))(body)
+    val p = Components.lastPath
+    assert(p.loop && p.rounds == 0, p)
     assert(atDefault == underLoop, "driver finish and label loop disagree")
+    assert(atDefault == quotientFinished, "driver finish and quotient finish disagree")
     atDefault
   }
 
@@ -22,7 +34,7 @@ class ComponentsSpec extends SparkSpec {
 
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    bothPaths(labelMap(Components.connectedComponents(
+    allPaths(edges.size)(labelMap(Components.connectedComponents(
       nodes.toDF("id"), edges.toDF("src", "dst"))))
   }
 
@@ -62,7 +74,7 @@ class ComponentsSpec extends SparkSpec {
     val n = 2048
     val labels = withConf(threshold -> "-1")(labelMap(Components.connectedComponents(
       (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d"))))
-    assert(Components.lastRunNonEmptyRounds <= 10)
+    assert(Components.lastPath.rounds <= 10)
     assert(labels.size === n)
     assert(labels.values.forall(_ == 0L)) // one component, min id 0
   }
@@ -70,17 +82,40 @@ class ComponentsSpec extends SparkSpec {
   test("the broadcast threshold elects the driver finish or the label loop") {
     // the same scattered path: at the default threshold its 2047 edges
     // (32 KB) are finished on the driver with no loop round; under -1 the
-    // loop runs at least one round. The labels are equal either way.
+    // loop runs at least one round and finishes without the driver; one
+    // row under the edge list, the loop starts and its first quotient
+    // (~1,600 rows) is finished on the driver. At 1,024 rows that
+    // quotient does not fit, and the loop runs to the empty quotient
+    // although the next one (~560 rows) would fit: a finish after a
+    // propagation round mislabels nodes (class doc). The labels are
+    // equal every way.
     import spark.implicits._
     val n = 2048
     def run(): Map[Long, Long] = labelMap(Components.connectedComponents(
       (0L until n.toLong).toDF("id"), scatteredPath(n).toDF("s", "d")))
     val atDefault = run()
-    assert(Components.lastRunNonEmptyRounds === 0)
+    assert(Components.lastPath === Components.Path(loop = false, rounds = 0, driverFinish = true))
     val underLoop = withConf(threshold -> "-1")(run())
-    assert(Components.lastRunNonEmptyRounds >= 1)
-    assert(atDefault === underLoop)
+    assert(Components.lastPath.loop && Components.lastPath.rounds >= 1)
+    assert(!Components.lastPath.driverFinish)
+    val quotientFinished = withConf(threshold -> quotientFinish(n - 1))(run())
+    assert(Components.lastPath.loop && Components.lastPath.driverFinish)
+    assert(Components.lastPath.rounds === 0)
+    val loopToFixpoint = withConf(threshold -> (16 * 1024).toString)(run())
+    assert(Components.lastPath.loop && Components.lastPath.rounds >= 1)
+    assert(!Components.lastPath.driverFinish)
+    assert(Seq(underLoop, quotientFinished, loopToFixpoint).forall(_ === atDefault))
     assert(atDefault.size === n && atDefault.values.forall(_ == 0L))
+  }
+
+  test("fitsBroadcast: rows x row size against the threshold, -1 never") {
+    import org.apache.spark.sql.types._
+    val pair = StructType(Seq(StructField("s", LongType), StructField("d", LongType)))
+    def fits(t: String, rows: Long) = withConf(threshold -> t)(
+      Sessions.fitsBroadcast(spark, "spec", rows, pair))
+    assert(!fits("-1", 0L))
+    assert(fits("160", 10L))  // 10 × 16 B = the threshold
+    assert(!fits("159", 10L)) // one byte over
   }
 
   test("disjoint cliques and singletons keep separate representatives") {
@@ -99,7 +134,7 @@ class ComponentsSpec extends SparkSpec {
     // assertions (above) cannot see that, so pin the raw row count
     import spark.implicits._
     val n = 200L
-    bothPaths {
+    allPaths(n.toInt - 1) {
       val labels = Components.connectedComponents(
         (1L to n).toDF("id"), (1L until n).map(i => (i, i + 1)).toDF("src", "dst"))
       assert(labels.count() === n)
@@ -153,7 +188,7 @@ class ComponentsSpec extends SparkSpec {
       // ever collapses this scattered chain completely, the early-exit
       // path returns seed labels at session width — that is an
       // improvement, not a sizing regression, and this assert names it.
-      assert(Components.lastRunNonEmptyRounds >= 1,
+      assert(Components.lastPath.rounds >= 1,
         "fixture no longer defeats local contraction (loop ran 0 non-empty " +
           "rounds) — pick a harder fixture for the adaptive-width test")
       assert(labels.rdd.getNumPartitions === expected,

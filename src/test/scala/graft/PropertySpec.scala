@@ -135,18 +135,25 @@ class PropertySpec extends SparkSpec {
     val edges = edgeGen.sample.get
     val nodes = (0L until 30L)
     // the session default finishes this graph on the driver, -1 forces
-    // the label loop: the law holds on both paths
+    // the label loop, and a threshold one edge row under the edge list
+    // takes the loop path and finishes its first quotient on the driver
+    // when that fits: the law holds on all three paths, with equal labels
     val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    for (t <- Seq(spark.conf.get(threshold), "-1")) withConf(threshold -> t) {
-      val labels = operators.Components.connectedComponents(
-        nodes.toDF("id"), edges.toDF("s", "d"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels.keySet === nodes.toSet)            // exactly one row per node
-      assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
-      assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
-      assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
-      assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
-    }
+    val quotientFinish = math.max(0L, 16L * (edges.size - 1)).toString
+    val runs = for (t <- Seq(spark.conf.get(threshold), "-1", quotientFinish))
+      yield withConf(threshold -> t) {
+        val labels = operators.Components.connectedComponents(
+          nodes.toDF("id"), edges.toDF("s", "d"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(labels.keySet === nodes.toSet)            // exactly one row per node
+        assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
+        assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
+        assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
+        assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
+        labels
+      }
+    assert(operators.Components.lastPath.loop)
+    assert(runs.distinct.size === 1)
   }
 
   test("h12 interval-union laws: merged covers inputs, busy bounded by span") {
