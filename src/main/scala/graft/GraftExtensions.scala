@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -13,8 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Every session on the cluster then resolves the engine's functions with
   * no per-query registration call. (The pipelines also self-register via
-  * [[graft.functions.SortedIntersectSize.register]] so they work against
-  * a vanilla session, e.g. the harness-built one.)
+  * [[GraftExtensions.register]] so they work against a vanilla session,
+  * e.g. the harness-built one.)
   *
   * The injection points used/available here:
   *  - `injectFunction` — native expressions (used: sorted_intersect_size)
@@ -28,23 +28,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.sortedIntersectSize)
-    ext.injectFunction(GraftExtensions.vecCosine)
-    ext.injectFunction(GraftExtensions.charShingles)
-    ext.injectFunction(GraftExtensions.minHashSigs)
-    ext.injectFunction(GraftExtensions.bloomAgg)
-    ext.injectFunction(GraftExtensions.bloomMightContain)
-    ext.injectFunction(graft.functions.GkSketch.sketchAgg)
-    ext.injectFunction(graft.functions.GkSketch.mergeAgg)
-    ext.injectFunction(graft.functions.GkSketch.quantile)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRule)
   }
 }
 
 object GraftExtensions {
+  /** A function's (name, info, builder) triple, as the registry takes it. */
+  type Fn = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** Register `fns` into the session's FunctionRegistry (idempotent): the
+    * self-registration that lets a key run on a vanilla session, or on its
+    * own `Sessions.scoped` child. */
+  def register(spark: SparkSession, fns: Fn*): Unit =
+    fns.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+    }
+
   /** (name, info, builder) triple for sorted_intersect_size. */
-  val sortedIntersectSize: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val sortedIntersectSize: Fn = (
     FunctionIdentifier("sorted_intersect_size"),
     new ExpressionInfo(
       classOf[graft.functions.SortedIntersectSize].getName,
@@ -53,8 +55,7 @@ object GraftExtensions {
       graft.functions.SortedIntersectSize(exprs(0), exprs(1)))
 
   /** (name, info, builder) triple for char_shingles (Generator/UDTF). */
-  val charShingles: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val charShingles: Fn = (
     FunctionIdentifier("char_shingles"),
     new ExpressionInfo(
       classOf[graft.functions.CharShingles].getName,
@@ -63,8 +64,7 @@ object GraftExtensions {
       graft.functions.CharShingles(exprs(0), exprs(1)))
 
   /** (name, info, builder) triple for minhash_sigs. */
-  val minHashSigs: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val minHashSigs: Fn = (
     FunctionIdentifier("minhash_sigs"),
     new ExpressionInfo(
       classOf[graft.functions.MinHashSigs].getName,
@@ -83,8 +83,7 @@ object GraftExtensions {
     * (bloom, xxhash64(k))` probes it — the bloom side must be foldable
     * or a scalar subquery, exactly like the injected-runtime-filter
     * form, which keeps the probe broadcast-shaped by construction. */
-  val bloomAgg: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val bloomAgg: Fn = (
     FunctionIdentifier("bloom_agg"),
     new ExpressionInfo(
       classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
@@ -93,8 +92,7 @@ object GraftExtensions {
       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
         exprs(0), exprs(1), exprs(2)))
 
-  val bloomMightContain: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val bloomMightContain: Fn = (
     FunctionIdentifier("bloom_might_contain"),
     new ExpressionInfo(
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
@@ -104,12 +102,16 @@ object GraftExtensions {
         exprs(0), exprs(1)))
 
   /** (name, info, builder) triple for vec_cosine. */
-  val vecCosine: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val vecCosine: Fn = (
     FunctionIdentifier("vec_cosine"),
     new ExpressionInfo(
       classOf[graft.functions.VecCosine].getName,
       "vec_cosine"),
     (exprs: Seq[Expression]) =>
       graft.functions.VecCosine(exprs(0), exprs(1)))
+
+  /** Every function the extension injects, in injection order. */
+  val functions: Seq[Fn] = Seq(sortedIntersectSize, vecCosine, charShingles,
+    minHashSigs, bloomAgg, bloomMightContain, graft.functions.GkSketch.sketchAgg,
+    graft.functions.GkSketch.mergeAgg, graft.functions.GkSketch.quantile)
 }

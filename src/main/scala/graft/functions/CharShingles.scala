@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -75,14 +74,4 @@ case class CharShingles(child: Expression, kExpr: Expression)
     copy(child = newChildren(0), kExpr = newChildren(1))
 
   override def prettyName: String = "char_shingles"
-}
-
-object CharShingles {
-  /** Register into the session's FunctionRegistry (idempotent); cluster
-    * deploys get it via `spark.sql.extensions=graft.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val (name, info, builder) = graft.GraftExtensions.charShingles
-    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
-  }
 }

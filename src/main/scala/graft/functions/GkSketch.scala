@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -139,26 +138,18 @@ object GkSketch {
         l: Expression, r: Expression): GkQuantile = copy(left = l, right = r)
   }
 
-  val sketchAgg: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val sketchAgg: graft.GraftExtensions.Fn = (
     FunctionIdentifier("gk_sketch"),
     new ExpressionInfo(classOf[GkSketchAgg].getName, "gk_sketch"),
     (exprs: Seq[Expression]) => GkSketchAgg(exprs.head))
 
-  val mergeAgg: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val mergeAgg: graft.GraftExtensions.Fn = (
     FunctionIdentifier("gk_merge"),
     new ExpressionInfo(classOf[GkMergeAgg].getName, "gk_merge"),
     (exprs: Seq[Expression]) => GkMergeAgg(exprs.head))
 
-  val quantile: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
+  val quantile: graft.GraftExtensions.Fn = (
     FunctionIdentifier("gk_quantile"),
     new ExpressionInfo(classOf[GkQuantile].getName, "gk_quantile"),
     (exprs: Seq[Expression]) => GkQuantile(exprs(0), exprs(1)))
-
-  def register(spark: SparkSession): Unit =
-    Seq(sketchAgg, mergeAgg, quantile).foreach { case (n, i, b) =>
-      spark.sessionState.functionRegistry.registerFunction(n, i, b)
-    }
 }

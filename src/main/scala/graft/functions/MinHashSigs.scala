@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -119,15 +118,4 @@ case class MinHashSigs(child: Expression, kExpr: Expression)
     copy(child = newLeft, kExpr = newRight)
 
   override def prettyName: String = "minhash_sigs"
-}
-
-object MinHashSigs {
-  /** Register into the session's FunctionRegistry (idempotent); cluster
-    * deploys get the same function via `spark.sql.extensions=
-    * graft.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val (name, info, builder) = graft.GraftExtensions.minHashSigs
-    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
-  }
 }

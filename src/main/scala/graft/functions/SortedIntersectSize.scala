@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -78,16 +76,4 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "sorted_intersect_size"
-}
-
-object SortedIntersectSize {
-  /** Register into the session's FunctionRegistry so pipelines call it as
-    * `expr("sorted_intersect_size(a, b)")`. Idempotent. Cluster deploys
-    * get the same function via `spark.sql.extensions=graft.GraftExtensions`
-    * ([[graft.GraftExtensions]] shares this builder).
-    */
-  def register(spark: SparkSession): Unit = {
-    val (name, info, builder) = graft.GraftExtensions.sortedIntersectSize
-    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
-  }
 }

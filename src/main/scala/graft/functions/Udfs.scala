@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions
 import graft.QueryDef
 import graft.QueryDef.graded
 import graft.sources.Tables
@@ -129,7 +130,7 @@ object Udfs {
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.charShingles)
     Tables.documents(spark, dir)
       .select($"doc_id", expr("char_shingles(text, 3)").as("sh"))
       .groupBy($"doc_id")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -82,15 +81,4 @@ case class VecCosine(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "vec_cosine"
-}
-
-object VecCosine {
-  /** Register into the session's FunctionRegistry (idempotent); cluster
-    * deploys get the same function via `spark.sql.extensions=
-    * graft.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val (name, info, builder) = graft.GraftExtensions.vecCosine
-    spark.sessionState.functionRegistry.registerFunction(name, info, builder)
-  }
 }

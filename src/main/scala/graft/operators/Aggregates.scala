@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftExtensions
 import graft.QueryDef
 import graft.QueryDef.{benchOnly, graded}
 import graft.pipeline.Tokens
@@ -2110,7 +2111,8 @@ object Aggregates {
   // rollup merges the ≤32 group sketches in a single sorted partition.
   private val d47 = benchOnly("d47_gk_sketch_agg") { (spark, dir) =>
     import spark.implicits._
-    graft.functions.GkSketch.register(spark)
+    GraftExtensions.register(spark, graft.functions.GkSketch.sketchAgg,
+      graft.functions.GkSketch.mergeAgg, graft.functions.GkSketch.quantile)
     val qcols = Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75",
       0.95 -> "p95")
     val li = Tables.lineitem(spark, dir)

@@ -769,11 +769,8 @@ object Joins {
       |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
     // c10's view rule; the functions go where the query runs
     val s = graft.Sessions.scoped(spark)
-    for (f <- Seq(graft.GraftExtensions.bloomAgg,
-        graft.GraftExtensions.bloomMightContain)) {
-      val (name, info, builder) = f
-      s.sessionState.functionRegistry.registerFunction(name, info, builder)
-    }
+    graft.GraftExtensions.register(s, graft.GraftExtensions.bloomAgg,
+      graft.GraftExtensions.bloomMightContain)
     Tables.orders(s, dir).createOrReplaceTempView("graft_c20_orders")
     Tables.lineitem(s, dir).createOrReplaceTempView("graft_c20_lineitem")
     s.sql(

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryDef.graded
+import graft.pipeline.Dedup
 import graft.sources.{Fixtures, Tables, TmpDirs}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1608,23 +1609,15 @@ object ScansFilters {
     import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "catalog")
     // each invocation grades a fresh commit cycle
-    val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"))
-    // one-row driver fetch driving the base/delta split — control flow,
-    // not data (the g88 precedent, restated identically in the oracle)
-    val k = Tables.documentsDist(spark, dir)
-      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
-    val base = docs.where($"doc_id" <= k)
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    // the base/delta split, with its one-row driver fetch (the g88
+    // precedent, restated identically in the oracle)
+    val (base, delta) = Dedup.fpSplit(spark, dir)
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
     // the reader pins v1 here: version → concrete immutable file list
     val pinnedFiles = TxLog.files(table, v1)
     // concurrent append: delta probes the v1 snapshot ON DISK, commits v2
-    val delta = docs.where($"doc_id" > k)
-      .join(TxLog.read(spark, table, v1).select($"fp"), Seq("fp"),
-        "left_anti")
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
-    val v2 = TxLog.commit(table, TxLog.stage(delta, table), v1)
+    val v2 = TxLog.commit(table,
+      TxLog.stage(delta(TxLog.read(spark, table, v1)), table), v1)
     require(v2 == v1 + 1)
     // pinned read constructed AFTER v2 is live — isolation, graded
     val pinned = spark.read.parquet(pinnedFiles: _*)
@@ -1669,18 +1662,10 @@ object ScansFilters {
     import spark.implicits._
     import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "vacuum")
-    val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"))
-    val k = Tables.documentsDist(spark, dir)
-      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
-    val base = docs.where($"doc_id" <= k)
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    val (base, delta) = Dedup.fpSplit(spark, dir)
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
-    val delta = docs.where($"doc_id" > k)
-      .join(TxLog.read(spark, table, v1).select($"fp"), Seq("fp"),
-        "left_anti")
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
-    val v2 = TxLog.commit(table, TxLog.stage(delta, table), v1)
+    val v2 = TxLog.commit(table,
+      TxLog.stage(delta(TxLog.read(spark, table, v1)), table), v1)
     // compaction-rewrite: the g88 clustering discipline as a COMMIT
     val compacted = TxLog.read(spark, table, v2)
       .repartition(1).sortWithinPartitions($"fp")
@@ -1731,18 +1716,10 @@ object ScansFilters {
     import spark.implicits._
     import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "cdc")
-    val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"))
-    val k = Tables.documentsDist(spark, dir)
-      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
-    val base = docs.where($"doc_id" <= k)
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    val (base, delta) = Dedup.fpSplit(spark, dir)
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
-    val delta = docs.where($"doc_id" > k)
-      .join(TxLog.read(spark, table, v1).select($"fp"), Seq("fp"),
-        "left_anti")
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
-    val v2 = TxLog.commit(table, TxLog.stage(delta, table), v1)
+    val v2 = TxLog.commit(table,
+      TxLog.stage(delta(TxLog.read(spark, table, v1)), table), v1)
     // pure compaction rewrite: same rows, new physical layout
     val compacted = TxLog.read(spark, table, v2)
       .repartition(1).sortWithinPartitions($"fp")
@@ -1792,21 +1769,13 @@ object ScansFilters {
     import spark.implicits._
     import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "evolve")
-    val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"),
-        length($"text").cast("bigint").as("src_len"))
-    val k = Tables.documentsDist(spark, dir)
-      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
-    val base = docs.where($"doc_id" <= k)
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    val (base, delta) = Dedup.fpSplit(spark, dir,
+      extra = Seq(length($"text").cast("bigint").as("src_len")),
+      deltaAggs = Seq(min($"src_len").cast("bigint").as("src_len")))
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
     // the widening append: delta files carry the NEW src_len column
-    val delta = docs.where($"doc_id" > k)
-      .join(TxLog.read(spark, table, v1).select($"fp"), Seq("fp"),
-        "left_anti")
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"),
-        min($"src_len").cast("bigint").as("src_len"))
-    val v2 = TxLog.commit(table, TxLog.stage(delta, table), v1)
+    val v2 = TxLog.commit(table,
+      TxLog.stage(delta(TxLog.read(spark, table, v1)), table), v1)
     TxLog.readEvolved(spark, table, v2)
       .select($"fp", $"first_doc", $"src_len")
       .orderBy($"fp")

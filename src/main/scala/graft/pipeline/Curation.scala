@@ -479,11 +479,8 @@ object Curation {
     // the view, the functions and the query live on the key's own
     // session, not the caller's
     val s = graft.Sessions.scoped(spark)
-    for (f <- Seq(graft.GraftExtensions.bloomAgg,
-        graft.GraftExtensions.bloomMightContain)) {
-      val (name, info, builder) = f
-      s.sessionState.functionRegistry.registerFunction(name, info, builder)
-    }
+    graft.GraftExtensions.register(s, graft.GraftExtensions.bloomAgg,
+      graft.GraftExtensions.bloomMightContain)
     Tables.documents(s, dir).createOrReplaceTempView("graft_g50_docs")
     // 1M-item / 8M-bit sizing: ~1 MB filter, FPR ≈ 2% at capacity and
     // far below it under capacity — generous headroom for the sf sweep

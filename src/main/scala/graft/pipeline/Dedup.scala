@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import graft.GraftExtensions
 import graft.QueryDef
 import graft.QueryDef.{benchOnly, graded}
 import graft.operators.Banding
 import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,7 +72,7 @@ object Dedup {
       |WHERE jac >= 0.9
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     // tokens hashed to int64 and pre-sorted per doc: the pairwise kernel is
     // then the zero-allocation sorted_intersect_size two-pointer merge
     // (jaccard over an injectively-hashed set equals jaccard over the
@@ -135,10 +137,10 @@ object Dedup {
     * rounds while costing ~2 s of extra windows/joins at sf0.1. The
     * round count is instead controlled by Components' multi-jump.)
     */
-  private def lshVerifiedEdges(toks: org.apache.spark.sql.DataFrame,
+  private def lshVerifiedEdges(toks: DataFrame,
       nHashes: Int = 16, bandRows: Int = 4, threshold: Double = 0.9)
-      : org.apache.spark.sql.DataFrame = {
-    graft.functions.MinHashSigs.register(toks.sparkSession)
+      : DataFrame = {
+    GraftExtensions.register(toks.sparkSession, GraftExtensions.minHashSigs)
     val sig = toks.select(col("doc_id"),
       expr(s"minhash_sigs(tk, $nHashes)").as("s"))
     val bandCols = (0 until nHashes / bandRows).map { bnd =>
@@ -218,6 +220,65 @@ object Dedup {
 
   private[pipeline] def duckHex8(col: String): String = duckHex8At(col, 1)
 
+  /** The exact MinHash signature of g13, g47, g79 and g89: per doc_id over
+    * its (doc_id, word) rows, token hash h = the first 8 hex digits of
+    * md5(word) as a 32-bit unsigned value, and column mh<i> = min((a·h + b)
+    * mod [[mhP]]) for the i-th (a, b) of `ab`. Multipliers stay < 2^30, so
+    * a·h never overflows int64.
+    */
+  private def minhashSig(words: DataFrame, ab: Seq[(Long, Long)])
+      : DataFrame = {
+    import words.sparkSession.implicits._
+    val hashed = words.withColumn("h",
+      conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
+    val mins = ab.zipWithIndex.map { case ((a, b), i) =>
+      min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
+    }
+    hashed.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** The pair sides of g47 and g89, from `docs` (doc_id, t: distinct
+    * tokens): the k=8 signature joined on doc_id with the exact set `ts`
+    * (int64-hashed and sorted, so the pair kernel is the two-pointer
+    * sorted_intersect_size merge, g2's injective-hash rule), with every
+    * column suffixed `_a` on the first side and `_b` on the second. */
+  private def sigSetSides(docs: DataFrame): (DataFrame, DataFrame) = {
+    import docs.sparkSession.implicits._
+    val sig = minhashSig(
+      docs.select($"doc_id", explode($"t").as("word")), mhAB8)
+    val sets = docs.select($"doc_id",
+      sort_array(expr("transform(t, w -> xxhash64(w))")).as("ts"))
+    val side = sig.join(sets, "doc_id")
+    (side.toDF(side.columns.map(_ + "_a"): _*),
+      side.toDF(side.columns.map(_ + "_b"): _*))
+  }
+
+  /** The fingerprint base/delta split of the catalog cycles (g88 and the
+    * TxLog keys a23, a25, a26, a28): documents keyed by fp = md5(text),
+    * plus `extra` per-doc columns, cut at k = ⌊2·max(doc_id)/3⌋ — a one-row
+    * driver fetch, control flow rather than data (the Components/SkewJoin
+    * precedent), restated in each oracle as `(max(doc_id) * 2) // 3`.
+    * Returns the base (first_doc per fp with doc_id ≤ k) and the delta
+    * for a catalog: first_doc per fp with doc_id > k whose fp `catalog`
+    * does not hold, with `deltaAggs` beside first_doc.
+    */
+  private[graft] def fpSplit(spark: SparkSession, dir: String,
+      extra: Seq[Column] = Nil, deltaAggs: Seq[Column] = Nil)
+      : (DataFrame, DataFrame => DataFrame) = {
+    import spark.implicits._
+    val docs = Tables.documentsDist(spark, dir)
+      .select($"doc_id" +: md5($"text").as("fp") +: extra: _*)
+    val k = Tables.documentsDist(spark, dir)
+      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
+    val base = docs.where($"doc_id" <= k)
+      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    def delta(catalog: DataFrame): DataFrame = docs.where($"doc_id" > k)
+      .join(catalog.select($"fp"), Seq("fp"), "left_anti")
+      .groupBy($"fp")
+      .agg(min($"doc_id").as("first_doc"), deltaAggs: _*)
+    (base, delta)
+  }
+
   private val g13 = graded(
     "g13_minhash_sig", {
       val mins = mhAB.zipWithIndex.map { case ((a, b), i) =>
@@ -238,11 +299,7 @@ object Dedup {
     import spark.implicits._
     val tok = Tables.documents(spark, dir)
       .select($"doc_id", explode(array_distinct(Tokens.words($"text"))).as("word"))
-    val hashed = tok.withColumn("h", conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
-    val mins = mhAB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
-    }
-    hashed.groupBy($"doc_id").agg(mins.head, mins.tail: _*).orderBy("doc_id")
+    minhashSig(tok, mhAB).orderBy("doc_id")
   }
 
   // g14 — character-3-gram Jaccard near-dup (shingling catches
@@ -265,7 +322,7 @@ object Dedup {
       |WHERE jac >= 0.75
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     // grams are hashed to int64 and pre-sorted per doc: the pairwise kernel
     // is the zero-allocation sorted_intersect_size two-pointer merge
     // instead of a per-pair hash set. Jaccard over an injectively-hashed
@@ -326,7 +383,7 @@ object Dedup {
       |)""".stripMargin
 
   /** Spark side of the SimHash signature: doc_id, sh_lo, sh_hi. */
-  private def simhashSig(spark: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def simhashSig(spark: SparkSession, dir: String) = {
     import spark.implicits._
     val tok = Tables.documentsDist(spark, dir)
       .select($"doc_id", explode(array_distinct(Tokens.words($"text"))).as("word"))
@@ -406,8 +463,8 @@ object Dedup {
   /** Spark side of the verified SimHash pair set (doc_a, doc_b, hamming),
     * unordered — g16 presents it sorted, g46 feeds it to components.
     */
-  private def simhashPairsDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def simhashPairsDf(spark: SparkSession,
+      dir: String): DataFrame = {
     import spark.implicits._
     val sig = simhashSig(spark, dir)
     // Collapse IDENTICAL signatures first: a low-entropy corpus (31-word
@@ -493,15 +550,15 @@ object Dedup {
 
   /** A parquet snapshot, only if its write COMPLETED (_SUCCESS marker —
     * a half-written dir from a crashed run must never serve reads). */
-  private def readIfComplete(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[org.apache.spark.sql.DataFrame] =
+  private def readIfComplete(spark: SparkSession,
+      path: String): Option[DataFrame] =
     if (new java.io.File(s"$path/_SUCCESS").exists())
       Some(spark.read.parquet(path))
     else None
 
   /** Verified SimHash pair set: snapshot when present, inline otherwise. */
-  private def simhashPairs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private def simhashPairs(spark: SparkSession,
+      dir: String): DataFrame =
     readIfComplete(spark, s"${snapDir(dir)}/simhash_pairs")
       .getOrElse(simhashPairsDf(spark, dir))
 
@@ -511,10 +568,10 @@ object Dedup {
     * intersect); g2 itself stays inline because it also grades the jac
     * VALUES.
     */
-  private[pipeline] def jaccPairsDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private[pipeline] def jaccPairsDf(spark: SparkSession,
+      dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     // toks is persisted for the self-join's two scans; the blocks are
     // released by the harness's per-key clearCache (Bench/Verify call it
     // after every key) — a long-lived-session caller reads a21's parquet
@@ -534,8 +591,8 @@ object Dedup {
   }
 
   /** Jaccard pair set: snapshot when present, inline otherwise. */
-  private[pipeline] def jaccPairs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private[pipeline] def jaccPairs(spark: SparkSession,
+      dir: String): DataFrame =
     readIfComplete(spark, s"${snapDir(dir)}/jacc_pairs")
       .getOrElse(jaccPairsDf(spark, dir))
 
@@ -544,8 +601,8 @@ object Dedup {
     * survivor per cluster. The single definition under g46, a21 and the
     * g84 audit.
     */
-  private def survivorshipDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def survivorshipDf(spark: SparkSession,
+      dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documentsDist(spark, dir)
     val pairs = simhashPairs(spark, dir).select($"doc_a", $"doc_b")
@@ -563,8 +620,8 @@ object Dedup {
   }
 
   /** Verdict table: snapshot when present, inline otherwise. */
-  private def verdicts(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private def verdicts(spark: SparkSession,
+      dir: String): DataFrame =
     readIfComplete(spark, s"${snapDir(dir)}/verdicts")
       .getOrElse(survivorshipDf(spark, dir))
 
@@ -737,7 +794,7 @@ object Dedup {
     * path's cached listings invalidated. Factored so the graded key can
     * skip it when a complete snapshot already exists in this JVM.
     */
-  private def writeSnapshots(spark: org.apache.spark.sql.SparkSession,
+  private def writeSnapshots(spark: SparkSession,
       dir: String, base: String): Unit = {
     // The Jaccard pair table is INDEPENDENT of the simhash→verdict chain,
     // so its write is submitted concurrently (plain multi-threaded job
@@ -930,7 +987,7 @@ object Dedup {
       |WHERE cont >= 0.9
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val toks = Tables.documentsDist(spark, dir)
       .select($"doc_id", Tokens.hashedSet.as("tk"))
       .persist()
@@ -1061,24 +1118,12 @@ object Dedup {
       |ORDER BY e.doc_a""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
-    // signatures: one token shuffle keyed on doc_id (g13's machinery, k=8)
-    val hashed = docs.select($"doc_id", explode($"t").as("word"))
-      .withColumn("h",
-        conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
-    val mins = mhAB8.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
-    }
-    val sig = hashed.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
-    // exact sets: int64-hashed + sorted so the pair kernel is the
-    // two-pointer sorted_intersect_size merge (g2's injective-hash rule)
-    val sets = docs.select($"doc_id",
-      sort_array(expr("transform(t, w -> xxhash64(w))")).as("ts"))
-    val side = sig.join(sets, "doc_id")
-    val a = side.toDF(side.columns.map(_ + "_a"): _*)
-    val b = side.toDF(side.columns.map(_ + "_b"): _*)
+    // signatures: one token shuffle keyed on doc_id (g13's machinery,
+    // k=8), beside the exact sets
+    val (a, b) = sigSetSides(docs)
     val agree = (0 until mhAB8.length)
       .map(i => when(col(s"mh${i}_a") === col(s"mh${i}_b"), 1).otherwise(0))
       .reduce(_ + _)
@@ -1357,22 +1402,16 @@ object Dedup {
       |FROM top WHERE rn = 1 ORDER BY doc_id""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    val hashed = Tables.documentsDist(spark, dir)
+    val sig = minhashSig(Tables.documentsDist(spark, dir)
       .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
-      .select($"doc_id", explode($"t").as("word"))
-      .withColumn("h",
-        conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
-    val mins = mhAB8.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
-    }
-    val sig = hashed.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
+      .select($"doc_id", explode($"t").as("word")), mhAB8)
     val mh = (0 until 8).map(i => col(s"mh$i"))
     // distinct-signature tables: candidates scale with distinct content,
     // not with how many times a text was crawled (the hot-bucket fix)
     val newSigs = sig.where($"doc_id" % 5 === 4).select(mh: _*).distinct()
     val oldSigs = sig.where($"doc_id" % 5 =!= 4)
       .groupBy(mh: _*).agg(min($"doc_id").as("doc_old"))
-    def bandify(df: org.apache.spark.sql.DataFrame) = df
+    def bandify(df: DataFrame) = df
       .withColumn("i", explode(sequence(lit(0), lit(3))))
       .withColumn("v1", expr(
         "CASE i WHEN 0 THEN mh0 WHEN 1 THEN mh2 WHEN 2 THEN mh4 ELSE mh6 END"))
@@ -1515,7 +1554,7 @@ object Dedup {
     * n_triangles, global_cc).
     */
   private[graft] def triangleCensus(
-      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      pairs: DataFrame): DataFrame = {
     import pairs.sparkSession.implicits._
     val p = pairs.select($"doc_a", $"doc_b").persist()
     val deg = p.select($"doc_a".as("doc_id"))
@@ -1732,8 +1771,8 @@ object Dedup {
     * spans and aggregate to the span-oracle output schema. A gap is
     * pos − prev > L (fixed window length makes the running max end
     * lag(pos)+L), and each merged span covers e−s+L chars. */
-  private def mergeDupSpans(p: org.apache.spark.sql.DataFrame, L: Int)
-      : org.apache.spark.sql.DataFrame = {
+  private def mergeDupSpans(p: DataFrame, L: Int)
+      : DataFrame = {
     val wl = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val run = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     p.withColumn("prev", lag(col("pos"), 1).over(wl))
@@ -1802,8 +1841,8 @@ object Dedup {
     * the confirmed cross-doc duplicate window positions
     * (doc_id, n_chars, pos). g90 aggregates them to the span-coverage
     * report; g91 emits the maximal merged spans themselves. */
-  private def suffixDupPositions(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def suffixDupPositions(spark: SparkSession,
+      dir: String): DataFrame = {
     import spark.implicits._
     val L = SuffixDup.L
     // CONTENT-ADDRESSED sharding (not doc_id): identical and
@@ -1968,22 +2007,12 @@ object Dedup {
     import spark.implicits._
     // each invocation grades a fresh cycle
     val cat = graft.sources.TmpDirs.fresh(snapshotRoot, dir, "catalog")
-    val docs = Tables.documentsDist(spark, dir)
-      .select($"doc_id", md5($"text").as("fp"))
-    // one-row driver fetch to drive the split — control flow, not data
-    // (the Components/SkewJoin precedent)
-    val k = Tables.documentsDist(spark, dir)
-      .agg(max($"doc_id").cast("bigint")).head().getLong(0) * 2 / 3
-    docs.where($"doc_id" <= k)
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
-      .withColumn("origin", lit("base"))
+    val (base, delta) = fpSplit(spark, dir)
+    base.withColumn("origin", lit("base"))
       .write.mode("overwrite").parquet(s"$cat/store")
     // the UPDATE: probe the catalog as it exists ON DISK, append only
     // genuinely new fingerprints
-    val catalog = spark.read.parquet(s"$cat/store")
-    docs.where($"doc_id" > k)
-      .join(catalog.select($"fp"), Seq("fp"), "left_anti")
-      .groupBy($"fp").agg(min($"doc_id").as("first_doc"))
+    delta(spark.read.parquet(s"$cat/store"))
       .withColumn("origin", lit("delta"))
       .write.mode("append").parquet(s"$cat/store")
     // compaction: rewrite the accumulated base+delta files clustered by
@@ -2065,21 +2094,10 @@ object Dedup {
       |ORDER BY jac_bucket""".stripMargin
     }) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val docs = Tables.documentsDist(spark, dir)
       .select($"doc_id", array_distinct(Tokens.words($"text")).as("t"))
-    val hashed = docs.select($"doc_id", explode($"t").as("word"))
-      .withColumn("h",
-        conv(substring(md5($"word"), 1, 8), 16, 10).cast("bigint"))
-    val mins = mhAB8.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * $"h" + lit(b)) % lit(mhP)).as(s"mh$i")
-    }
-    val sig = hashed.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
-    val sets = docs.select($"doc_id",
-      sort_array(expr("transform(t, w -> xxhash64(w))")).as("ts"))
-    val side = sig.join(sets, "doc_id")
-    val a = side.toDF(side.columns.map(_ + "_a"): _*)
-    val b = side.toDF(side.columns.map(_ + "_b"): _*)
+    val (a, b) = sigSetSides(docs)
     val detected = (0 until 4).map { bnd =>
       (col(s"mh${2 * bnd}_a") === col(s"mh${2 * bnd}_b")) &&
         (col(s"mh${2 * bnd + 1}_a") === col(s"mh${2 * bnd + 1}_b"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.QueryDef
 import graft.QueryDef.{benchOnly, graded}
 import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** M: multimodal columns — images/audio/video as opaque binary columns
@@ -151,23 +152,11 @@ object Multimodal {
     /** Deterministic per-document image: dimensions from doc_id, pixels
       * from the document's UTF-8 bytes tiled over the raster. The rule is
       * deliberately SQL-expressible so the m5 oracle can recompute the
-      * decoded metadata from first principles.
+      * decoded metadata from first principles. The one-frame container of
+      * [[encodeFrames]] (frame 0's offset adds nothing), byte for byte.
       */
-    def encode(docId: Long, text: String): Array[Byte] = {
-      val w = (8 + docId % 8).toInt
-      val h = (8 + docId % 5).toInt
-      val src = if (text.isEmpty) Array(' '.toByte)
-        else text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val header = s"P5\n$w $h\n255\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val out = new Array[Byte](header.length + w * h)
-      System.arraycopy(header, 0, out, 0, header.length)
-      var i = 0
-      while (i < w * h) {
-        out(header.length + i) = src(i % src.length)
-        i += 1
-      }
-      out
-    }
+    def encode(docId: Long, text: String): Array[Byte] =
+      encodeFrames(docId, text, 1)
 
     /** Decoded record: dimensions, maxval, mean brightness in [0, 1]. */
     final case class Decoded(width: Long, height: Long, maxval: Long,
@@ -181,22 +170,7 @@ object Multimodal {
         spaceFrac: Double)
 
     def decodeStats(bytes: Array[Byte]): RasterStats = {
-      require(bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '5',
-        "not a P5 PGM")
-      var pos = 2
-      def nextInt(): Long = {
-        while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-        val start = pos
-        while (pos < bytes.length && !bytes(pos).toChar.isWhitespace) pos += 1
-        require(pos > start, "truncated PGM header")
-        new String(bytes, start, pos - start,
-          java.nio.charset.StandardCharsets.US_ASCII).toLong
-      }
-      val w = nextInt(); val h = nextInt(); val maxval = nextInt()
-      pos += 1
-      require(maxval == 255, s"unsupported maxval $maxval")
-      require(bytes.length - pos == w * h,
-        s"raster size ${bytes.length - pos} != ${w * h}")
+      val (w, h, pos) = image(bytes)
       val seen = new Array[Boolean](256)
       var mn = 256L; var mx = -1L; var spaces = 0L; var distinct = 0L
       var i = pos
@@ -216,22 +190,7 @@ object Multimodal {
       * non-negative BIGINT halves (rows 0–3 → hi, 4–7 → lo).
       */
     def dHash(bytes: Array[Byte]): (Long, Long) = {
-      require(bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '5',
-        "not a P5 PGM")
-      var pos = 2
-      def nextInt(): Long = {
-        while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-        val start = pos
-        while (pos < bytes.length && !bytes(pos).toChar.isWhitespace) pos += 1
-        require(pos > start, "truncated PGM header")
-        new String(bytes, start, pos - start,
-          java.nio.charset.StandardCharsets.US_ASCII).toLong
-      }
-      val w = nextInt(); val h = nextInt(); val maxval = nextInt()
-      pos += 1
-      require(maxval == 255, s"unsupported maxval $maxval")
-      require(bytes.length - pos == w * h,
-        s"raster size ${bytes.length - pos} != ${w * h}")
+      val (w, h, pos) = image(bytes)
       def px(r: Long, c: Long): Int = {
         val idx = (r * h / 8) * w + (c * w / 9)
         java.lang.Byte.toUnsignedInt(bytes(pos + idx.toInt))
@@ -263,22 +222,7 @@ object Multimodal {
       * outW ≤ w and outH ≤ h (every block nonempty).
       */
     def boxResize(bytes: Array[Byte], outW: Int, outH: Int): Array[Int] = {
-      require(bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '5',
-        "not a P5 PGM")
-      var pos = 2
-      def nextInt(): Long = {
-        while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-        val start = pos
-        while (pos < bytes.length && !bytes(pos).toChar.isWhitespace) pos += 1
-        require(pos > start, "truncated PGM header")
-        new String(bytes, start, pos - start,
-          java.nio.charset.StandardCharsets.US_ASCII).toLong
-      }
-      val w = nextInt(); val h = nextInt(); val maxval = nextInt()
-      pos += 1
-      require(maxval == 255, s"unsupported maxval $maxval")
-      require(bytes.length - pos == w * h,
-        s"raster size ${bytes.length - pos} != ${w * h}")
+      val (w, h, pos) = image(bytes)
       require(outW <= w && outH <= h,
         s"box resize cannot upscale: ${w}x$h -> ${outW}x$outH")
       val out = new Array[Int](outW * outH)
@@ -312,9 +256,26 @@ object Multimodal {
       * fails loudly, it does not fabricate pixels.
       */
     def decode(bytes: Array[Byte]): Decoded = {
-      require(bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '5',
-        "not a P5 PGM")
-      var pos = 2
+      val (w, h, pos) = image(bytes)
+      var sum = 0L
+      var i = pos
+      while (i < bytes.length) {
+        sum += java.lang.Byte.toUnsignedInt(bytes(i)); i += 1
+      }
+      Decoded(w, h, 255L, sum.toDouble / (w * h) / 255.0)
+    }
+
+    /** The P5 header at `off`, the one header walk every decoder runs:
+      * magic, then width, height and maxval as whitespace-separated ASCII
+      * ints, then the single whitespace byte ending the header. Every
+      * advance is bounds-checked, so a payload cut mid-header fails the
+      * documented way (require -> IllegalArgumentException). Returns
+      * (w, h, raster start); maxval must be 255.
+      */
+    private def header(bytes: Array[Byte], off: Int): (Long, Long, Int) = {
+      require(bytes.length - off >= 2 && bytes(off) == 'P' && bytes(off + 1) == '5',
+        s"not a P5 PGM at offset $off")
+      var pos = off + 2
       def nextInt(): Long = {
         while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
         val start = pos
@@ -324,16 +285,16 @@ object Multimodal {
           java.nio.charset.StandardCharsets.US_ASCII).toLong
       }
       val w = nextInt(); val h = nextInt(); val maxval = nextInt()
-      pos += 1 // the single whitespace byte terminating the header
       require(maxval == 255, s"unsupported maxval $maxval")
+      (w, h, pos + 1)
+    }
+
+    /** A single-image payload: the header, then exactly w·h raster bytes. */
+    private def image(bytes: Array[Byte]): (Long, Long, Int) = {
+      val (w, h, pos) = header(bytes, 0)
       require(bytes.length - pos == w * h,
         s"raster size ${bytes.length - pos} != ${w * h}")
-      var sum = 0L
-      var i = pos
-      while (i < bytes.length) {
-        sum += java.lang.Byte.toUnsignedInt(bytes(i)); i += 1
-      }
-      Decoded(w, h, maxval, sum.toDouble / (w * h) / 255.0)
+      (w, h, pos)
     }
 
     /** Multi-frame payload: `n` concatenated P5 frames sharing the m5
@@ -369,27 +330,8 @@ object Multimodal {
       val frames = scala.collection.mutable.ArrayBuffer.empty[Decoded]
       var off = 0
       while (off < bytes.length) {
-        require(bytes.length - off > 2 && bytes(off) == 'P' && bytes(off + 1) == '5',
-          s"not a P5 frame at offset $off")
-        // scan past the three whitespace-separated header ints, reading
-        // width and height as we go; header ends at the byte after the
-        // maxval terminator. Every advance is bounds-checked so a
-        // container truncated mid-header fails the documented way
-        // (require -> IllegalArgumentException), like Pgm.decode.
-        var pos = off + 2
-        val dims = new Array[Long](3)
-        var ints = 0
-        while (ints < 3) {
-          while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-          val start = pos
-          while (pos < bytes.length && !bytes(pos).toChar.isWhitespace) pos += 1
-          require(pos > start && pos < bytes.length, "truncated frame header")
-          dims(ints) = new String(bytes, start, pos - start,
-            java.nio.charset.StandardCharsets.US_ASCII).toLong
-          ints += 1
-        }
-        pos += 1
-        val raster = dims(0) * dims(1)
+        val (w, h, pos) = header(bytes, off)
+        val raster = w * h
         require(raster >= 0 && raster <= bytes.length - pos,
           "truncated frame raster")
         val end = pos + raster.toInt
@@ -687,8 +629,7 @@ object Multimodal {
   /** Spark side of the dHash signature set (doc_id, dhash_hi, dhash_lo),
     * unordered — the real-codec path shared by m9 and m10.
     */
-  private def dhashSigDf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def dhashSigDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documentsDist(spark, dir)
       .select($"doc_id", $"text")
@@ -698,6 +639,33 @@ object Multimodal {
         (id, hi, lo)
       })
       .toDF("doc_id", "dhash_hi", "dhash_lo")
+  }
+
+  /** The dHash candidate join of m10, m11 and m13: the 64 bits split
+    * into 8 blocks of 8, a hash join on (block index, block value) with
+    * doc_a < doc_b, each side's halves as hi_a/lo_a and hi_b/lo_b, and the
+    * exact Hamming distance of every candidate pair as `hamming`. The
+    * pigeonhole bound (why the block join misses no pair at distance ≤ 7)
+    * is m10's comment.
+    */
+  private def dhashCandidates(sig: DataFrame): DataFrame = {
+    import sig.sparkSession.implicits._
+    val blocks = sig
+      .select($"doc_id", $"dhash_hi", $"dhash_lo",
+        explode(sequence(lit(0), lit(7))).as("blk"))
+      .withColumn("bv",
+        when($"blk" < 4, expr("shiftright(dhash_hi, cast(blk * 8 as int))"))
+          .otherwise(expr("shiftright(dhash_lo, cast((blk - 4) * 8 as int))"))
+          .bitwiseAND(255))
+    val a = blocks.select($"blk", $"bv", $"doc_id".as("doc_a"),
+      $"dhash_hi".as("hi_a"), $"dhash_lo".as("lo_a"))
+    val b = blocks.select($"blk", $"bv", $"doc_id".as("doc_b"),
+      $"dhash_hi".as("hi_b"), $"dhash_lo".as("lo_b"))
+    a.join(b, Seq("blk", "bv"))
+      .where($"doc_a" < $"doc_b")
+      .withColumn("hamming",
+        (bit_count($"hi_a".bitwiseXOR($"hi_b"))
+          + bit_count($"lo_a".bitwiseXOR($"lo_b"))).cast("bigint"))
   }
 
   private val m9 = graded(
@@ -738,23 +706,7 @@ object Multimodal {
       |SELECT doc_a, doc_b, hamming FROM prs
       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sig = dhashSigDf(spark, dir)
-    val blocks = sig
-      .select($"doc_id", $"dhash_hi", $"dhash_lo",
-        explode(sequence(lit(0), lit(7))).as("blk"))
-      .withColumn("bv",
-        when($"blk" < 4, expr("shiftright(dhash_hi, cast(blk * 8 as int))"))
-          .otherwise(expr("shiftright(dhash_lo, cast((blk - 4) * 8 as int))"))
-          .bitwiseAND(255))
-    val a = blocks.select($"blk", $"bv", $"doc_id".as("doc_a"),
-      $"dhash_hi".as("hi_a"), $"dhash_lo".as("lo_a"))
-    val b = blocks.select($"blk", $"bv", $"doc_id".as("doc_b"),
-      $"dhash_hi".as("hi_b"), $"dhash_lo".as("lo_b"))
-    a.join(b, Seq("blk", "bv"))
-      .where($"doc_a" < $"doc_b")
-      .withColumn("hamming",
-        (bit_count($"hi_a".bitwiseXOR($"hi_b"))
-          + bit_count($"lo_a".bitwiseXOR($"lo_b"))).cast("bigint"))
+    dhashCandidates(dhashSigDf(spark, dir))
       .where($"hamming" <= 6)
       .select($"doc_a", $"doc_b", $"hamming")
       .distinct()
@@ -788,23 +740,7 @@ object Multimodal {
       |FROM prs GROUP BY hamming
       |ORDER BY hamming""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val sig = dhashSigDf(spark, dir)
-    val blocks = sig
-      .select($"doc_id", $"dhash_hi", $"dhash_lo",
-        explode(sequence(lit(0), lit(7))).as("blk"))
-      .withColumn("bv",
-        when($"blk" < 4, expr("shiftright(dhash_hi, cast(blk * 8 as int))"))
-          .otherwise(expr("shiftright(dhash_lo, cast((blk - 4) * 8 as int))"))
-          .bitwiseAND(255))
-    val a = blocks.select($"blk", $"bv", $"doc_id".as("doc_a"),
-      $"dhash_hi".as("hi_a"), $"dhash_lo".as("lo_a"))
-    val b = blocks.select($"blk", $"bv", $"doc_id".as("doc_b"),
-      $"dhash_hi".as("hi_b"), $"dhash_lo".as("lo_b"))
-    a.join(b, Seq("blk", "bv"))
-      .where($"doc_a" < $"doc_b")
-      .withColumn("hamming",
-        (bit_count($"hi_a".bitwiseXOR($"hi_b"))
-          + bit_count($"lo_a".bitwiseXOR($"lo_b"))).cast("bigint"))
+    dhashCandidates(dhashSigDf(spark, dir))
       .where($"hamming" <= 16)
       .select($"doc_a", $"doc_b", $"hamming")
       .distinct()
@@ -958,21 +894,8 @@ object Multimodal {
         $"a.fp" === $"b.fp" && $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
         lit(true).as("is_text"))
-    val blocks = sig
-      .select($"doc_id", $"dhash_hi", $"dhash_lo",
-        explode(sequence(lit(0), lit(7))).as("blk"))
-      .withColumn("bv",
-        when($"blk" < 4, expr("shiftright(dhash_hi, cast(blk * 8 as int))"))
-          .otherwise(expr("shiftright(dhash_lo, cast((blk - 4) * 8 as int))"))
-          .bitwiseAND(255))
-    val ba = blocks.select($"blk", $"bv", $"doc_id".as("doc_a"),
-      $"dhash_hi".as("hi_a"), $"dhash_lo".as("lo_a"))
-    val bb = blocks.select($"blk", $"bv", $"doc_id".as("doc_b"),
-      $"dhash_hi".as("hi_b"), $"dhash_lo".as("lo_b"))
-    val pp = ba.join(bb, Seq("blk", "bv"))
-      .where($"doc_a" < $"doc_b")
-      .where(bit_count($"hi_a".bitwiseXOR($"hi_b"))
-        + bit_count($"lo_a".bitwiseXOR($"lo_b")) <= 6)
+    val pp = dhashCandidates(sig)
+      .where($"hamming" <= 6)
       .select($"doc_a", $"doc_b", lit(false).as("is_text"))
       .distinct()
     val u = tp.unionByName(pp)

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.GraftExtensions
 import graft.QueryDef
 import graft.QueryDef.graded
 import graft.operators.Banding
@@ -46,7 +47,7 @@ object Similarity {
     s"list_sum(list_transform(list_zip($a, $b), p -> p[1] * p[2]))"
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     Tables.embeddingsDist(spark, dir)
   }
 
@@ -208,6 +209,34 @@ object Similarity {
     * per-dim on this corpus. */
   private[graft] val ivfIters: Int = 4
 
+  /** IVF assignment, the argmax of trainedCodebook, g17, g92, g93 and g98:
+    * cross `e` with the (cid, ce) codebook `cents` broadcast as ONE
+    * cid-sorted array cell `cbook` (then with each of `rides`), score
+    * every centroid inside the scan projection (`cscores`) and map the
+    * first maximum back through its struct to `cid` — the (cscore DESC,
+    * cid ASC) tiebreak, no shuffle (g17's comment has the why).
+    */
+  private def ivfAssign(e: DataFrame, cents: DataFrame,
+      rides: DataFrame*): DataFrame = {
+    val codebook = broadcast(cents
+      .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
+    rides.foldLeft(e.crossJoin(codebook))(_.crossJoin(_))
+      .withColumn("cscores",
+        expr("transform(cbook, c -> vec_cosine(embedding, c.ce))"))
+      .withColumn("cid", expr(
+        "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
+  }
+
+  /** The query's [[ivfNprobe]] nearest centroids (cscore DESC, cid ASC)
+    * as one `cid` column, for the one-row query `q` (qe). */
+  private def ivfProbes(cents: DataFrame, q: DataFrame): DataFrame = {
+    import q.sparkSession.implicits._
+    cents.crossJoin(broadcast(q))
+      .withColumn("cscore", cos("ce", "qe"))
+      .orderBy($"cscore".desc, $"cid").limit(ivfNprobe)
+      .select($"cid")
+  }
+
   /** K-MEANS-TRAINED IVF codebook over the corpus (the r11 verdict's #1:
     * the fixture "first 16 vectors" codebook neither scales C with n nor
     * concentrates neighbors) — g66's graded Lloyd step iterated
@@ -231,7 +260,7 @@ object Similarity {
   private[graft] def trainedCodebook(spark: SparkSession, dir: String)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     // a fixture: g17/g92/g93 and the recall specs share one training run
     val rows = Fixtures.once(spark, dir, "ivf_codebook") {
       val e = Tables.embeddingsDist(spark, dir)
@@ -241,13 +270,7 @@ object Similarity {
         .select($"vec_id", $"embedding").as[(Long, Array[Float])]
         .collect().sortBy(_._1)
       for (_ <- 1 to ivfIters) {
-        val cbDf = broadcast(cb.toSeq.toDF("cid", "ce")
-          .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
-        val trained = e.crossJoin(cbDf)
-          .withColumn("cscores",
-            expr("transform(cbook, cc -> vec_cosine(embedding, cc.ce))"))
-          .withColumn("cid", expr(
-            "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
+        val trained = ivfAssign(e, cb.toSeq.toDF("cid", "ce"))
           .select($"cid", posexplode($"embedding").as(Seq("dim", "x")))
           .groupBy($"cid", $"dim")
           .agg(round(avg($"x".cast("double")), 6).as("cm"))
@@ -287,20 +310,10 @@ object Similarity {
     // makes array_position's first-max rule reproduce the
     // (cscore DESC, cid ASC) tiebreak. At 100 TB the build stage is then
     // scan → project → write, nothing crossing the wire but the output.
-    val codebook = broadcast(cents
-      .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
-    val assigned = e.crossJoin(codebook)
-      .withColumn("cscores",
-        expr("transform(cbook, c -> vec_cosine(embedding, c.ce))"))
-      .withColumn("cid", expr(
-        "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
-      .select($"vec_id", $"cid", $"embedding")
+    val assigned = ivfAssign(e, cents).select($"vec_id", $"cid", $"embedding")
     // search: query = vec_id 0; probe its nprobe best centroids
     val q = e.where($"vec_id" === 0).select($"embedding".as("qe"))
-    val probes = cents.crossJoin(broadcast(q))
-      .withColumn("cscore", cos("ce", "qe"))
-      .orderBy($"cscore".desc, $"cid").limit(ivfNprobe)
-      .select($"cid")
+    val probes = ivfProbes(cents, q)
     assigned.join(broadcast(probes), "cid")
       .crossJoin(broadcast(q))
       .where($"vec_id" =!= 0)
@@ -337,8 +350,6 @@ object Similarity {
     import graft.sources.TxLog
     val e = embeddings(spark, dir)
     val cents = trainedCodebook(spark, dir)
-    val codebook = broadcast(cents
-      .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
     // build: g17's argmax assignment, staged cid-partitioned and
     // published as ONE rewrite commit — readers never see it half-built.
     // The committed index is READ-ONLY after construction (an index
@@ -348,21 +359,13 @@ object Similarity {
     // still pins the returned version, so a concurrent rebuild could
     // never change what a pinned search plans.
     val (table, v) = Fixtures.dir(spark, dir, "ivf_index") { t =>
-      val assigned = e.crossJoin(codebook)
-        .withColumn("cscores",
-          expr("transform(cbook, c -> vec_cosine(embedding, c.ce))"))
-        .withColumn("cid", expr(
-          "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
-        .select($"vec_id", $"embedding", $"cid")
+      val assigned = ivfAssign(e, cents).select($"vec_id", $"embedding", $"cid")
       TxLog.commitRewrite(t, TxLog.stage(assigned, t, Seq("cid")), 0)
     }
     // search: the query's nprobe probe ids — a tiny driver fetch steering
     // partition pruning, not data flow — against the PINNED version
     val q = e.where($"vec_id" === 0).select($"embedding".as("qe"))
-    val probeIds = cents.crossJoin(broadcast(q))
-      .withColumn("cscore", cos("ce", "qe"))
-      .orderBy($"cscore".desc, $"cid").limit(ivfNprobe)
-      .select($"cid").as[Long].collect().toSeq
+    val probeIds = ivfProbes(cents, q).as[Long].collect().toSeq
     TxLog.readPartitioned(spark, table, v)
       .where($"cid".isin(probeIds: _*))
       .crossJoin(broadcast(q))
@@ -396,15 +399,8 @@ object Similarity {
     import spark.implicits._
     val e = embeddings(spark, dir)
     val cents = trainedCodebook(spark, dir)
-    val codebook = broadcast(cents
-      .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
-    val scored = e.crossJoin(codebook)
-      .withColumn("cscores",
-        expr("transform(cbook, c -> vec_cosine(embedding, c.ce))"))
-    val assigned = scored
-      .withColumn("cid", expr(
-        "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
-      .select($"vec_id", $"cid", $"embedding")
+    val scored = ivfAssign(e, cents)
+    val assigned = scored.select($"vec_id", $"cid", $"embedding")
     // probe list: top-nprobe centroids per query, derived from the SAME
     // cscores array — (-score, cid) structs sort to (score DESC, cid
     // ASC), g17's exact tiebreak
@@ -627,8 +623,6 @@ object Similarity {
     val e = embeddings(spark, dir)
     val cents = trainedCodebook(spark, dir)
     val pq = pqCodebook(spark, dir)
-    val codebook = broadcast(cents
-      .agg(expr("sort_array(collect_list(struct(cid, ce)))").as("cbook")))
     val pqbook = broadcast(pq
       .agg(expr("sort_array(collect_list(struct(m, code, ce)))").as("pqc")))
     // build: one pass, both index halves — IVF list id + PQ codes.
@@ -636,11 +630,7 @@ object Similarity {
     // per JVM, every search still partition-prunes it from parquet.
     val (table, _) = Fixtures.dir(spark, dir, "ivfadc_index") {
       t =>
-      e.crossJoin(codebook).crossJoin(pqbook)
-        .withColumn("cscores",
-          expr("transform(cbook, c -> vec_cosine(embedding, c.ce))"))
-        .withColumn("cid", expr(
-          "element_at(cbook, cast(array_position(cscores, array_max(cscores)) as int)).cid"))
+      ivfAssign(e, cents, pqbook)
         .withColumn("codes", expr(
           s"""transform(sequence(0, ${pqM - 1}), m ->
              |  array_min(transform(slice(pqc, m * $pqK + 1, $pqK), c ->
@@ -656,10 +646,7 @@ object Similarity {
     }
     // search: probe ids (driver control flow, the g93 discipline) …
     val q = e.where($"vec_id" === 0).select($"embedding".as("qe"))
-    val probeIds = cents.crossJoin(broadcast(q))
-      .withColumn("cscore", cos("ce", "qe"))
-      .orderBy($"cscore".desc, $"cid").limit(ivfNprobe)
-      .select($"cid").as[Long].collect().toSeq
+    val probeIds = ivfProbes(cents, q).as[Long].collect().toSeq
     // … the ADC LUT (G97's query side) …
     val lut = broadcast(pq.crossJoin(broadcast(q))
       .select($"m", $"code",
@@ -757,6 +744,22 @@ object Similarity {
       .orderBy("label", "dim")
   }
 
+  /** Nearest-prototype argmax of g32, g66 and g80: every vector against
+    * the K = 8 lowest-id vectors (broadcast), vec_cosine per (row,
+    * prototype) as `cs`, one row_number window partitioned by vec_id, ties
+    * to the smaller cid. Keeps vec_id, `carry`, cid, cs and rn. */
+  private def nearestPrototype(e: DataFrame, carry: Column*): DataFrame = {
+    import e.sparkSession.implicits._
+    val cents = e.where($"vec_id" < 8)
+      .select($"vec_id".as("cid"), $"embedding".as("ce"))
+    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cid")
+    e.crossJoin(broadcast(cents))
+      .select($"vec_id" +: carry :+ $"cid" :+
+        cos("embedding", "ce").as("cs"): _*)
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+  }
+
   // g32 — nearest-prototype assignment (the E-step of k-means / the
   // coarse-quantizer training loop of an IVF index): every vector is
   // assigned to the most-cosine-similar of K fixed prototypes (the K
@@ -784,13 +787,7 @@ object Similarity {
       |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val e = embeddings(spark, dir)
-    val cents = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cid")
-    e.crossJoin(broadcast(cents))
-      .select($"vec_id", $"cid", cos("embedding", "ce").as("cs"))
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1)
+    nearestPrototype(e)
       .select($"vec_id", $"cid".as("cluster"), round($"cs", 6).as("cos_sim"))
       .orderBy("vec_id")
   }
@@ -1160,13 +1157,7 @@ object Similarity {
       |ORDER BY cluster, dim""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val e = embeddings(spark, dir)
-    val cents = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cid")
-    e.crossJoin(broadcast(cents))
-      .select($"vec_id", $"embedding", $"cid", cos("embedding", "ce").as("cs"))
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1)
+    nearestPrototype(e, $"embedding")
       .select($"cid".as("cluster"),
         posexplode($"embedding").as(Seq("dim", "x")))
       .groupBy($"cluster", $"dim")
@@ -1207,13 +1198,7 @@ object Similarity {
       |ORDER BY g.cluster""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val e = embeddings(spark, dir)
-    val cents = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cid")
-    val g = e.crossJoin(broadcast(cents))
-      .select($"vec_id", $"cid", cos("embedding", "ce").as("cs"))
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1)
+    val g = nearestPrototype(e)
       .groupBy($"cid".as("cluster"))
       .agg(count(lit(1)).cast("bigint").as("n"))
     val t = g.agg(sum($"n").cast("bigint").as("total"),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.GraftExtensions
 import graft.QueryDef
 import graft.QueryDef.graded
 import graft.pipeline.Tokens.{stopSqlIn, stopSqlList}
@@ -483,7 +484,7 @@ object TextAnalysis {
       |ORDER BY n DESC, pair
       |LIMIT 20""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.charShingles)
     Tokens.docWords(Tables.documentsDist(spark, dir), keys = Nil)
       .where(length($"word") >= 2)
       .groupBy($"word").agg(count(lit(1)).as("wn"))

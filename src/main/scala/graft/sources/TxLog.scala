@@ -436,18 +436,23 @@ object TxLog {
         case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          // full-jitter exponential backoff, capped at ~160 ms: sleep a
-          // uniform draw from [0, 10ms << min(attempt-1, 4)) — losing a
-          // race means someone committed, so the head is fresh and a
-          // LONG sleep would only add latency; the cap keeps the
-          // 10-attempt worst case under a second
-          val cap = 10L << math.min(attempt - 1, 4)
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(cap))
+          backoff(attempt)
           base = currentVersion(table).getOrElse(0)
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Full-jitter exponential backoff after the `attempt`-th lost race,
+    * capped at ~160 ms: sleep a uniform draw from [0, 10ms <<
+    * min(attempt-1, 4)) — losing a race means someone committed, so the
+    * head is fresh and a LONG sleep would only add latency; the cap keeps
+    * the 10-attempt worst case under a second. [[commitWithRetry]] and
+    * [[mergeWithRetry]] both back off through it. */
+  private def backoff(attempt: Int): Unit = {
+    val cap = 10L << math.min(attempt - 1, 4)
+    Thread.sleep(
+      java.util.concurrent.ThreadLocalRandom.current().nextLong(cap))
   }
 
   /** SHALLOW CLONE (Delta's CLONE shape): publish version 1 of the empty
@@ -852,9 +857,7 @@ object TxLog {
         case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          val cap = 10L << math.min(attempt - 1, 4)
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(cap))
+          backoff(attempt)
       }
     }
     throw new IllegalStateException("unreachable")

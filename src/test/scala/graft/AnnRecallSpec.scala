@@ -43,7 +43,7 @@ class AnnRecallSpec extends SparkSpec {
   test("g92 batched IVF (trained √n codebook, 4 probes, ALL queries): " +
       "mean recall@5 vs exact brute force") {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     // exact ground truth: per-query top-5 over every pair (the g21 shape
     // without the query-set restriction) — affordable at sf0.01, which is
     // the point of having the approximate operator at all beyond it
@@ -108,7 +108,7 @@ class AnnRecallSpec extends SparkSpec {
 
   test("bucketed kNN over the g21 query set: mean recall@3") {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     // the g12 bucketing generalized to a query SET: per-query top-3
     // restricted to the query's radius-1 multiprobe buckets, vs g21's
     // exact top-3

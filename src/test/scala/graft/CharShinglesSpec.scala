@@ -9,7 +9,7 @@ class CharShinglesSpec extends SparkSpec {
 
   test("generator output equals the explode(transform(sequence)) formulation") {
     import spark.implicits._
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.charShingles)
     val docs = Seq((1L, "abcdef"), (2L, "xy"), (3L, "aaaa"), (4L, ""))
       .toDF("id", "t")
     val gen = docs.select($"id", expr("char_shingles(t, 3)").as("sh"))
@@ -24,7 +24,7 @@ class CharShinglesSpec extends SparkSpec {
 
   test("non-BMP text shingles by code point, matching Spark substring") {
     import spark.implicits._
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.charShingles)
     // 😀 and 𝄞 are supplementary-plane (2 UTF-16 units each): UTF-16-unit
     // slicing would split surrogate pairs and emit 5 mangled shingles for
     // the first doc; code-point slicing emits 3 clean ones
@@ -41,7 +41,7 @@ class CharShinglesSpec extends SparkSpec {
 
   test("position order and overlap semantics") {
     import spark.implicits._
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.charShingles)
     val got = Seq(Tuple1("abcd")).toDF("t")
       .select(expr("char_shingles(t, 2)").as("sh"))
       .collect().map(_.getString(0)).toSeq

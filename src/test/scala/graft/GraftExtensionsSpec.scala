@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("runtime registration exposes the same function through SQL") {
-    graft.functions.SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val got = spark.sql(
       "SELECT sorted_intersect_size(array(1L, 2L, 5L), array(2L, 5L, 8L))")
       .head().getInt(0)
@@ -25,8 +25,8 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("vec_cosine and char_shingles register and evaluate through SQL") {
-    graft.functions.VecCosine.register(spark)
-    graft.functions.CharShingles.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine,
+      GraftExtensions.charShingles)
     val cos = spark.sql(
       """SELECT vec_cosine(cast(array(1.0, 0.0) as array<float>),
         |                  cast(array(1.0, 0.0) as array<float>))""".stripMargin)

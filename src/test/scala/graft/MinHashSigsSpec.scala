@@ -11,7 +11,7 @@ class MinHashSigsSpec extends SparkSpec {
 
   test("fused signatures equal the HOF formulation on real corpus tokens") {
     import spark.implicits._
-    graft.functions.MinHashSigs.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.minHashSigs)
     val k = 16
     val toks = graft.sources.Tables.documents(spark, sfDir)
       .select($"doc_id", array_distinct(split($"text", " ")).as("tk"))
@@ -28,7 +28,7 @@ class MinHashSigsSpec extends SparkSpec {
 
   test("null tokens are skipped; empty and all-null arrays yield NULL") {
     import spark.implicits._
-    graft.functions.MinHashSigs.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.minHashSigs)
     val df = Seq(
       (1L, Seq[String]("a", "b")),
       (2L, Seq[String](null, "a")),

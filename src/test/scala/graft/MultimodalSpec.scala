@@ -59,6 +59,25 @@ class MultimodalSpec extends SparkSpec {
     intercept[IllegalArgumentException](Pgm.decode(blob.dropRight(1))) // truncated raster
     intercept[IllegalArgumentException](
       Pgm.decode("P5\n2 1\n65535\n12".getBytes)) // unsupported maxval
+    // every decoder walks the same header, so each rejects the same four
+    // bad payloads (the cut one is "P5\n12 10\n255\n…" stopped inside 10)
+    val bad = Seq(
+      "wrong magic" -> "P6\n2 1\n255\n12".getBytes("US-ASCII"),
+      "header cut mid-integer" -> "P5\n12 1".getBytes("US-ASCII"),
+      "maxval != 255" -> "P5\n2 1\n65535\n12".getBytes("US-ASCII"),
+      "raster one byte short" -> blob.dropRight(1))
+    val decoders = Seq[(String, Array[Byte] => Any)](
+      "decode" -> Pgm.decode, "decodeStats" -> Pgm.decodeStats,
+      "dHash" -> Pgm.dHash, "boxResize" -> (Pgm.boxResize(_, 1, 1)),
+      "decodeFrames" -> Pgm.decodeFrames)
+    for ((dn, dec) <- decoders; (what, bytes) <- bad)
+      withClue(s"$dn on $what: ") {
+        intercept[IllegalArgumentException](dec(bytes))
+      }
+    // the single-image encoder is the one-frame container, byte for byte
+    for ((id, t) <- Seq(0L -> "", 13L -> "abc def", 42L -> "The quick brown fox"))
+      assert(Pgm.encode(id, t) sameElements Pgm.encodeFrames(id, t, 1),
+        s"id=$id text='$t'")
   }
 
   test("dHash: gradient bits on known rasters, halves non-negative, rejects junk") {

@@ -41,11 +41,13 @@ class PropertySpec extends SparkSpec {
       val got = docs.toDF("w")
         .select($"w", pipeline.Tokens.ngrams("w", n).as("g"))
         .collect().map(r => r.getSeq[String](0) -> r.getSeq[String](1))
-      assert(got.length === docs.length)
-      for ((w, g) <- got) {
-        val expected =
-          if (w.length < n) Seq.empty else w.sliding(n).map(_.mkString(" ")).toSeq
-        assert(g === expected, s"n=$n words=$w")
+      withClue(s"n=$n drawn docs=$docs: ") {
+        assert(got.length === docs.length)
+        for ((w, g) <- got) {
+          val expected =
+            if (w.length < n) Seq.empty else w.sliding(n).map(_.mkString(" ")).toSeq
+          assert(g === expected, s"n=$n words=$w")
+        }
       }
     }
     // DuckDB's string_split(text, ' ') gives the same three tokens; a
@@ -68,7 +70,9 @@ class PropertySpec extends SparkSpec {
       .selectExpr("v",
         "width_bucket(v, 0.0, 600000.0, 24) AS wb",
         "cast(floor((v - 0.0) / ((600000.0 - 0.0) / 24)) + 1 as bigint) AS fl")
-    assert(df.where("wb <> fl").count() === 0)
+    withClue(s"drawn cents=$cents: ") {
+      assert(df.where("wb <> fl").count() === 0)
+    }
   }
 
   test("g33 int8 quantization: codes bounded, reconstruction error <= scale/254") {
@@ -86,17 +90,19 @@ class PropertySpec extends SparkSpec {
           |  ELSE cast(floor(x / scale * 127.0 + 0.5) as bigint) END) AS qv"""
           .stripMargin)
     val rows = q.collect()
-    for (r <- rows) {
-      val v = r.getSeq[Double](1)
-      val scale = r.getDouble(2)
-      val qv = r.getSeq[Long](3)
-      assert(qv.forall(c => c >= -127 && c <= 127),
-        s"code out of int8 range: $qv")
-      if (scale > 0) {
-        val maxErr = v.zip(qv).map { case (x, c) =>
-          math.abs(c * scale / 127.0 - x) }.max
-        // worst case = half a quantization step = scale/127/2
-        assert(maxErr <= scale / 254.0 + 1e-12, s"err $maxErr vs ${scale / 254.0}")
+    withClue(s"drawn vecs=$vecs: ") {
+      for (r <- rows) {
+        val v = r.getSeq[Double](1)
+        val scale = r.getDouble(2)
+        val qv = r.getSeq[Long](3)
+        assert(qv.forall(c => c >= -127 && c <= 127),
+          s"code out of int8 range: $qv")
+        if (scale > 0) {
+          val maxErr = v.zip(qv).map { case (x, c) =>
+            math.abs(c * scale / 127.0 - x) }.max
+          // worst case = half a quantization step = scale/127/2
+          assert(maxErr <= scale / 254.0 + 1e-12, s"err $maxErr vs ${scale / 254.0}")
+        }
       }
     }
   }
@@ -113,8 +119,10 @@ class PropertySpec extends SparkSpec {
     }
     val once = dedup(df).collect().toSet
     val twice = dedup(dedup(df)).collect().toSet
-    assert(once.map(r => (r.getLong(0), r.getLong(1))) ===
-      twice.map(r => (r.getLong(0), r.getLong(1))))
+    withClue(s"drawn rows=$rows: ") {
+      assert(once.map(r => (r.getLong(0), r.getLong(1))) ===
+        twice.map(r => (r.getLong(0), r.getLong(1))))
+    }
   }
 
   test("rollup row-count law: |rollup| == |groups| + |first-key groups| + 1") {
@@ -125,7 +133,9 @@ class PropertySpec extends SparkSpec {
     val full = df.groupBy($"a", $"b").count().count()
     val firstOnly = df.groupBy($"a").count().count()
     val rolled = df.rollup($"a", $"b").count().count()
-    assert(rolled === full + firstOnly + 1)
+    withClue(s"drawn rows=$rows: ") {
+      assert(rolled === full + firstOnly + 1)
+    }
   }
 
   test("components: rep <= id, rep is a member, labels constant across edges") {
@@ -145,15 +155,19 @@ class PropertySpec extends SparkSpec {
         val labels = operators.Components.connectedComponents(
           nodes.toDF("id"), edges.toDF("s", "d"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(labels.keySet === nodes.toSet)            // exactly one row per node
-        assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
-        assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
-        assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
-        assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
+        withClue(s"threshold=$t drawn edges=$edges: ") {
+          assert(labels.keySet === nodes.toSet)            // exactly one row per node
+          assert(labels.forall { case (id, rep) => rep <= id }) // min-based label
+          assert(labels.values.forall(labels.keySet.contains))  // rep is a real node
+          assert(edges.forall { case (s, d) => labels(s) == labels(d) }) // fixpoint
+          assert(labels.forall { case (_, rep) => labels(rep) == rep })  // rep is root
+        }
         labels
       }
-    assert(operators.Components.lastPath.loop)
-    assert(runs.distinct.size === 1)
+    withClue(s"drawn edges=$edges: ") {
+      assert(operators.Components.lastPath.loop)
+      assert(runs.distinct.size === 1)
+    }
   }
 
   test("h12 interval-union laws: merged covers inputs, busy bounded by span") {
@@ -305,10 +319,8 @@ class PropertySpec extends SparkSpec {
 
   test("g50 bloom laws: zero false negatives, bounded FPR, merge-order invariance") {
     import spark.implicits._
-    for (f <- Seq(GraftExtensions.bloomAgg, GraftExtensions.bloomMightContain)) {
-      val (name, info, builder) = f
-      spark.sessionState.functionRegistry.registerFunction(name, info, builder)
-    }
+    GraftExtensions.register(spark, GraftExtensions.bloomAgg,
+      GraftExtensions.bloomMightContain)
     // synthetic keyspace with a GUARANTEED overlap (the corpus-derived
     // fixture can have few/no members at small sf): corpus = 1..2000,
     // probes = 1001..6000 → members 1001..2000, non-members 2001..6000

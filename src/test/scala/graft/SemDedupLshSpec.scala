@@ -29,7 +29,7 @@ class SemDedupLshSpec extends SparkSpec {
 
   private lazy val measured: (Double, Double) = {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     val e = Tables.embeddings(spark, sf01)
     val n = e.count()
     // exact θ-graph by brute force (all ordered pairs — fine at 500 rows,
@@ -72,7 +72,7 @@ class SemDedupLshSpec extends SparkSpec {
     // set with the same generator, solve components with a driver-side
     // union-find (3rd algorithm, after Spark's label loop and the
     // oracle's recursive closure), compare labels exactly
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     val e = Tables.embeddings(spark, sf01)
     val banded = e.select($"vec_id",
       posexplode(array(Similarity.lshBandVals(

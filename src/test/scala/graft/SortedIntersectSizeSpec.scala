@@ -1,13 +1,12 @@
 package graft
 
-import graft.functions.SortedIntersectSize
 import org.apache.spark.sql.functions._
 
 class SortedIntersectSizeSpec extends SparkSpec {
 
   test("equals size(array_intersect) on random sorted-distinct long arrays") {
     import spark.implicits._
-    SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(500)((
       rnd.shuffle((0L to 60L).toList).take(rnd.nextInt(30) + 1).distinct.sorted,
@@ -20,7 +19,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
 
   test("empty and disjoint arrays") {
     import spark.implicits._
-    SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val df = Seq(
       (Seq.empty[Long], Seq(1L, 2L)),
       (Seq(1L, 2L), Seq.empty[Long]),
@@ -32,7 +31,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
 
   test("null input propagates null (not a crash, not zero)") {
     import spark.implicits._
-    SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val df = Seq((Some(Seq(1L)), None: Option[Seq[Long]])).toDF("a", "b")
     val got = df.select(expr("sorted_intersect_size(a, b)")).collect()
     assert(got.head.isNullAt(0))
@@ -40,7 +39,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
 
   test("interpreted path (eval) agrees with codegen path") {
     import spark.implicits._
-    SortedIntersectSize.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.sortedIntersectSize)
     val df = Seq((Seq(1L, 5L, 9L), Seq(1L, 9L, 11L))).toDF("a", "b")
     // force interpreted evaluation
     withConf("spark.sql.codegen.wholeStage" -> "false",

@@ -20,7 +20,7 @@ class VecCosineSpec extends SparkSpec {
 
   test("bit-identical to the HOF formulation on random vectors") {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((
       Array.fill(64)(rnd.nextFloat() - 0.5f),
@@ -33,7 +33,7 @@ class VecCosineSpec extends SparkSpec {
 
   test("null inputs yield null, real corpus scores are in [-1, 1]") {
     import spark.implicits._
-    graft.functions.VecCosine.register(spark)
+    GraftExtensions.register(spark, GraftExtensions.vecCosine)
     val n = Seq((Option.empty[Array[Float]], Option(Array(1f, 2f))))
       .toDF("a", "b")
       .select(expr("vec_cosine(a, b)")).collect()
