@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.QueryDef.graded
 import graft.pipeline.Dedup
-import graft.sources.{Fixtures, Tables, TmpDirs}
+import graft.sources.{Fixtures, Tables, TmpDirs, TxLog}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -167,19 +167,44 @@ object ScansFilters {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
 
+  /** The six orders columns [[maintenanceOracle]] selects. */
+  private def maintenanceCols(orders: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+      col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
+
   private def maintenanceRoundTrip(tag: String, nFrag: Int)(
       rewrite: (org.apache.spark.sql.SparkSession, String, String) => Unit)
       : (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
     (spark, dir) => {
-      import spark.implicits._
       val frag = TmpDirs.fresh(s"graft_$tag", dir, "fragmented")
       val out = TmpDirs.fresh(s"graft_$tag", dir, "rewritten")
       Tables.orders(spark, dir).repartition(nFrag)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(frag)
       rewrite(spark, frag, out)
-      spark.read.parquet(out)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
-          $"o_orderdate", $"o_orderpriority")
+      maintenanceCols(spark.read.parquet(out)).orderBy("o_orderkey")
+    }
+
+  /** Shared scaffold for the interchange-format round trips (a9 ORC, a10
+    * CSV, a22 JSONL, a29 XML): write the [[maintenanceCols]] of orders
+    * in `format` with `opts`, read them back with the same options and
+    * the source schema — inference is an extra full scan, never at
+    * 100 TB, and would widen types by sampling — and emit them in key
+    * order. TimestampNTZ crosses a text boundary through an explicit
+    * microsecond format (the default would truncate o_orderdate's
+    * sub-second digits silently); ORC's typed columns ignore it. */
+  private def formatRoundTrip(tag: String, format: String,
+      opts: (String, String)*)
+      : (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+    (spark, dir) => {
+      val out = TmpDirs.fresh(s"graft_$tag", dir, "orders")
+      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+      val src = maintenanceCols(Tables.orders(spark, dir))
+      src.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .options(opts.toMap).option("timestampNTZFormat", fmt)
+        .format(format).save(out)
+      spark.read.options(opts.toMap).option("timestampNTZFormat", fmt)
+        .schema(src.schema).format(format).load(out)
         .orderBy("o_orderkey")
     }
 
@@ -234,16 +259,8 @@ object ScansFilters {
   // puts orc content equality — including TimestampNTZ, the corpus's
   // trickiest dtype — under the DuckDB gate). Same content-preservation
   // invariant as A6/A7, so the same oracle.
-  private val a9 = QueryDef.graded("a9_orc_roundtrip", maintenanceOracle) {
-    (spark, dir) =>
-      import spark.implicits._
-      val out = TmpDirs.fresh("graft_orc", dir, "orders")
-      Tables.orders(spark, dir)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
-          $"o_orderdate", $"o_orderpriority")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).orc(out)
-      spark.read.orc(out).orderBy("o_orderkey")
-  }
+  private val a9 = QueryDef.graded("a9_orc_roundtrip", maintenanceOracle)(
+    formatRoundTrip("orc", "orc"))
 
   // A10 — CSV round trip, graded: the text-format sink/source under the
   // same content-equality gate. Schema is passed explicitly on read (the
@@ -252,21 +269,8 @@ object ScansFilters {
   // explicit microsecond format: CSV has no type system, so a lossy
   // default format (second precision, locale-dependent) would corrupt
   // o_orderdate silently — precisely the hazard this key pins.
-  private val a10 = QueryDef.graded("a10_csv_roundtrip", maintenanceOracle) {
-    (spark, dir) =>
-      import spark.implicits._
-      val out = TmpDirs.fresh("graft_csvrt", dir, "orders")
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val src = Tables.orders(spark, dir)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
-          $"o_orderdate", $"o_orderpriority")
-      src.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("header", "true").option("timestampNTZFormat", fmt)
-        .csv(out)
-      spark.read.option("header", "true").option("timestampNTZFormat", fmt)
-        .schema(src.schema).csv(out)
-        .orderBy("o_orderkey")
-  }
+  private val a10 = QueryDef.graded("a10_csv_roundtrip", maintenanceOracle)(
+    formatRoundTrip("csvrt", "csv", "header" -> "true"))
 
   // A22 — JSONL round trip, graded: the third text/interchange sink
   // next to a9's ORC and a10's CSV, and the one an LLM-data pipeline
@@ -279,21 +283,8 @@ object ScansFilters {
   // explicitly on read (schema inference is an extra full scan, never
   // at 100 TB — and JSON inference would widen o_totalprice doubles
   // that happen to be integral into BIGINT, a silent type flip).
-  private val a22 = QueryDef.graded("a22_jsonl_roundtrip", maintenanceOracle) {
-    (spark, dir) =>
-      import spark.implicits._
-      val out = TmpDirs.fresh("graft_jsonrt", dir, "orders")
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val src = Tables.orders(spark, dir)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
-          $"o_orderdate", $"o_orderpriority")
-      src.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("timestampNTZFormat", fmt)
-        .json(out)
-      spark.read.option("timestampNTZFormat", fmt)
-        .schema(src.schema).json(out)
-        .orderBy("o_orderkey")
-  }
+  private val a22 = QueryDef.graded("a22_jsonl_roundtrip", maintenanceOracle)(
+    formatRoundTrip("jsonrt", "json"))
 
   // A29 — XML ROUND TRIP, graded: the FIFTH interchange format next to
   // A9 ORC / A10 CSV / A22 JSONL / A3 parquet, through Spark 4's
@@ -306,23 +297,8 @@ object ScansFilters {
   // XML-specific: the writer needs rowTag (every record one element);
   // values land as element TEXT, so round-tripping is a parse, not a
   // cast — which is exactly why it must be graded, not assumed.
-  private val a29 = QueryDef.graded("a29_xml_roundtrip", maintenanceOracle) {
-    (spark, dir) =>
-      import spark.implicits._
-      val out = TmpDirs.fresh("graft_xmlrt", dir, "orders")
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val src = Tables.orders(spark, dir)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
-          $"o_orderdate", $"o_orderpriority")
-      src.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("rowTag", "order")
-        .option("timestampNTZFormat", fmt)
-        .format("xml").save(out)
-      spark.read.option("rowTag", "order")
-        .option("timestampNTZFormat", fmt)
-        .schema(src.schema).format("xml").load(out)
-        .orderBy("o_orderkey")
-  }
+  private val a29 = QueryDef.graded("a29_xml_roundtrip", maintenanceOracle)(
+    formatRoundTrip("xmlrt", "xml", "rowTag" -> "order"))
 
   // A30 — RAW TEXT-LINE ROUND TRIP, graded: the SIXTH interchange
   // format and the rawest one an LLM pipeline meets — newline-delimited
@@ -382,7 +358,6 @@ object ScansFilters {
       |GROUP BY 1
       |ORDER BY month""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "statsprune")
     // date-range clustering gives each staged file a tight o_orderdate
     // extent — the layout that makes min/max stats selective (a7/a13's
@@ -491,7 +466,6 @@ object ScansFilters {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "deltalog")
     // localCheckpoint once: the 12 batch filters below re-read this
     // 3-column projection, and scanning it from block storage beats 12
@@ -578,7 +552,6 @@ object ScansFilters {
       |  WHERE st <> 'F'
       |ORDER BY version""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val o = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderdate", $"o_orderstatus",
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
@@ -604,6 +577,51 @@ object ScansFilters {
         .select(lit(v).as("version"), $"n_rows", $"rev_cents")
     }.reduce(_ unionByName _).orderBy("version")
   }
+
+  /** v1 of `table`: a shallow clone of the per-JVM fixture that commits
+    * orders' (o_orderkey, o_orderpriority, o_totalprice), range-clustered
+    * into 8 files with o_orderkey stats — the base a34 and a42 merge
+    * into. */
+  private def keystatsBaseV1(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String): Int = {
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_keystats") {
+      t =>
+        val base = Tables.orders(spark, dir)
+          .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
+          .repartitionByRange(8, col("o_orderkey"))
+        TxLog.commit(t, TxLog.stage(base, t), 0, statsCols = Seq("o_orderkey"))
+    }
+    TxLog.cloneAsV1(fixT, fixV, table)
+  }
+
+  /** v1 of `table`: a shallow clone of the per-JVM fixture that commits
+    * orders as (k = string o_orderkey, o_orderpriority, cents,
+    * o_orderkey), range-clustered into 8 files — the base a39 and a41
+    * delete from. The o_orderkey stats (r16) let [[ordersMaxKey]] fold
+    * the manifest instead of scheduling an orders scan; the MERGE key is
+    * the STRING k, so probe pruning stays deliberately off (the
+    * statsKeep lexicographic rule). */
+  private def dvBaseV1(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String): Int = {
+    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_dvbase") { t =>
+      val base = Tables.orders(spark, dir)
+        .select(col("o_orderkey").cast("string").as("k"), col("o_orderpriority"),
+          round(col("o_totalprice") * 100, 0).cast("bigint").as("cents"),
+          col("o_orderkey"))
+        .repartitionByRange(8, col("o_orderkey"))
+      TxLog.commit(t, TxLog.stage(base, t), 0, statsCols = Seq("o_orderkey"))
+    }
+    TxLog.cloneAsV1(fixT, fixV, table)
+  }
+
+  /** max(o_orderkey) of version `v` of a plain orders commit, folded from
+    * its manifest's o_orderkey stats on the driver; an orders scan only
+    * when a file lacks them ([[graft.sources.TxLog.statsMaxLong]]). */
+  private def ordersMaxKey(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String, v: Int): Long =
+    TxLog.statsMaxLong(table, v, "o_orderkey").getOrElse(
+      Tables.orders(spark, dir)
+        .agg(max(col("o_orderkey")).cast("bigint")).head().getLong(0))
 
   // A34 — MERGE INTO THROUGH THE TRANSACTION LOG (the r12 verdict's #1:
   // a5 grades upsert algebra, a15 SCD2, a27 COW delete — but the ONE
@@ -662,26 +680,16 @@ object ScansFilters {
       |GROUP BY side, o_orderpriority
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "merge")
-    val base = Tables.orders(spark, dir)
-      .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-      .repartitionByRange(8, $"o_orderkey")
     // base-as-v1 is staged once per JVM and shallow-cloned here; the
     // merge cycle below still commits fresh on this invocation's own log
-    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_keystats") {
-      t => TxLog.commit(t, TxLog.stage(base, t), 0,
-        statsCols = Seq("o_orderkey"))
-    }
-    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
+    val v1 = keystatsBaseV1(spark, dir, table)
     // the change-batch split point: v1 is a full plain commit with
     // o_orderkey stats, so its manifest max IS max(o_orderkey) — a
     // driver-side stats fold instead of a scheduled orders scan (r16,
     // the a37/a38 manifest-as-CBO discipline; scan fallback if a
     // statless file ever appears)
-    val mk = TxLog.statsMaxLong(table, v1, "o_orderkey").getOrElse(
-      Tables.orders(spark, dir)
-        .agg(max($"o_orderkey").cast("bigint")).head().getLong(0))
+    val mk = ordersMaxKey(spark, dir, table, v1)
     val mid = mk / 2
     val low = TxLog.read(spark, table, v1).where($"o_orderkey" <= mid)
     val changes =
@@ -818,7 +826,6 @@ object ScansFilters {
       |FROM cat c JOIN probes p ON c.fp = p.fp
       |ORDER BY c.fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     // the bloom catalog is read-only after its commit, so it is a shared
     // per-JVM fixture; the point-lookup probe below runs per invocation.
     // ~64 keys/file (FP rate ≈ 6e-8 at the 16 Kibit sizing); HASH
@@ -876,7 +883,7 @@ object ScansFilters {
   // plans with Spark's size-based auto-broadcast DISABLED, so
   // the REQUIRED BroadcastHashJoin can only come from the
   // manifest-driven hint. Both reads plan from the manifest schema
-  // (readEvolved — zero footer opens on the read path). At 100 TB this
+  // (as every log read does — zero footer opens). At 100 TB this
   // is the planner loop a lakehouse actually runs: file skipping from
   // log stats, build-side election from log cardinalities — the scan
   // and the catalog never disagree because they are the same artifact.
@@ -934,9 +941,7 @@ object ScansFilters {
     // mid from the fact manifest's own o_orderkey stats (r16 — the
     // key's whole point is manifest-as-CBO; the fact is a full plain
     // commit, so the stats max IS the table max; scan fallback kept)
-    val mid = TxLog.statsMaxLong(factT, fv, "o_orderkey").getOrElse(
-      Tables.orders(spark, dir)
-        .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
+    val mid = ordersMaxKey(spark, dir, factT, fv) / 2
     val dLo = java.time.LocalDate.of(1995, 1, 1).toEpochDay
     val dHi = java.time.LocalDate.of(1995, 12, 31).toEpochDay
     // the read, the join and the require below plan on a session with
@@ -953,7 +958,7 @@ object ScansFilters {
     // CALLER's threshold (the scoped `s` keeps -1 by design)
     val dimRows = TxLog.rowCountOf(dimT, dv)
       .getOrElse(sys.error("dim manifest must carry row counts"))
-    val dimDf = TxLog.readEvolved(s, dimT, dv)
+    val dimDf = TxLog.readMerged(s, dimT, dv)
     val wantBroadcast = graft.Sessions.fitsBroadcast(
       spark, "a37 dim", dimRows, dimDf.schema)
     val dimSide = if (wantBroadcast) broadcast(dimDf) else dimDf
@@ -1124,26 +1129,11 @@ object ScansFilters {
       |SELECT side, o_orderpriority, n, cents FROM r
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "dv")
-    val base = Tables.orders(spark, dir)
-      .select($"o_orderkey".cast("string").as("k"), $"o_orderpriority",
-        round($"o_totalprice" * 100, 0).cast("bigint").as("cents"),
-        $"o_orderkey")
-      .repartitionByRange(8, $"o_orderkey")
     // base-as-v1 shared per JVM (shallow clone); the DV delete and the
     // compaction below still commit fresh on this invocation's own log
-    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_dvbase")(
-      // o_orderkey stats on the base (r16): lets `mid` below fold the
-      // manifest instead of scheduling an orders scan; the MERGE key is
-      // the STRING k, so probe pruning stays deliberately off (the
-      // statsKeep lexicographic rule) — only the driver-side max moves
-      t => TxLog.commit(t, TxLog.stage(base, t), 0,
-        statsCols = Seq("o_orderkey")))
-    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
-    val mid = TxLog.statsMaxLong(table, v1, "o_orderkey").getOrElse(
-      Tables.orders(spark, dir)
-        .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
+    val v1 = dvBaseV1(spark, dir, table)
+    val mid = ordersMaxKey(spark, dir, table, v1) / 2
     // the MoR delete: one sidecar of keys, zero data files rewritten
     val delKeys = TxLog.read(spark, table, v1)
       .where($"o_orderkey" <= mid && $"o_orderkey" % 13 === 5)
@@ -1203,7 +1193,6 @@ object ScansFilters {
       |FROM cut
       |ORDER BY cut.version""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val o = Tables.orders(spark, dir)
       .select(year($"o_orderdate").as("yr"),
         round($"o_totalprice" * 100, 0).cast("bigint").as("cents"))
@@ -1306,25 +1295,10 @@ object ScansFilters {
       |FROM ch GROUP BY side, o_orderpriority
       |ORDER BY side, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "dvmerge")
-    val base = Tables.orders(spark, dir)
-      .select($"o_orderkey".cast("string").as("k"), $"o_orderpriority",
-        round($"o_totalprice" * 100, 0).cast("bigint").as("cents"),
-        $"o_orderkey")
-      .repartitionByRange(8, $"o_orderkey")
-    // SAME fixture layout as a39 — one staged base serves both cycles
-    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_dvbase")(
-      // o_orderkey stats on the base (r16): lets `mid` below fold the
-      // manifest instead of scheduling an orders scan; the MERGE key is
-      // the STRING k, so probe pruning stays deliberately off (the
-      // statsKeep lexicographic rule) — only the driver-side max moves
-      t => TxLog.commit(t, TxLog.stage(base, t), 0,
-        statsCols = Seq("o_orderkey")))
-    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
-    val mid = TxLog.statsMaxLong(table, v1, "o_orderkey").getOrElse(
-      Tables.orders(spark, dir)
-        .agg(max($"o_orderkey").cast("bigint")).head().getLong(0)) / 2
+    // SAME fixture base as a39 — one staged base serves both cycles
+    val v1 = dvBaseV1(spark, dir, table)
+    val mid = ordersMaxKey(spark, dir, table, v1) / 2
     // standing DVs TABLE-WIDE: the upper files the merge never touches
     // must carry sidecars through it
     val v2 = TxLog.commitDeleteVectors(spark, table, v1, "k",
@@ -1411,17 +1385,9 @@ object ScansFilters {
       |SELECT version, o_orderpriority, n, cents FROM u
       |ORDER BY version, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "mergerace")
-    val base = Tables.orders(spark, dir)
-      .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-      .repartitionByRange(8, $"o_orderkey")
-    // SAME fixture layout as a34 — one staged base serves both cycles
-    val (fixT, fixV) = Fixtures.dir(spark, dir, "orders_rbr8_keystats") {
-      t => TxLog.commit(t, TxLog.stage(base, t), 0,
-        statsCols = Seq("o_orderkey"))
-    }
-    val v1 = TxLog.cloneAsV1(fixT, fixV, table)
+    // SAME fixture base as a34 — one staged base serves both cycles
+    val v1 = keystatsBaseV1(spark, dir, table)
     // both writers compute their change batches from the SAME base v1 —
     // deterministic content, so the recompute re-reads identical changes
     val v1df = TxLog.read(spark, table, v1)
@@ -1606,7 +1572,6 @@ object ScansFilters {
       |  UNION ALL SELECT 2 AS version, fp, first_doc FROM delta) u
       |ORDER BY version, fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "catalog")
     // each invocation grades a fresh commit cycle
     // the base/delta split, with its one-row driver fetch (the g88
@@ -1660,7 +1625,6 @@ object ScansFilters {
       |  UNION ALL SELECT fp, first_doc FROM delta) u
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "vacuum")
     val (base, delta) = Dedup.fpSplit(spark, dir)
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
@@ -1714,7 +1678,6 @@ object ScansFilters {
       |FROM delta
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "cdc")
     val (base, delta) = Dedup.fpSplit(spark, dir)
     val v1 = TxLog.commit(table, TxLog.stage(base, table), 0)
@@ -1743,10 +1706,8 @@ object ScansFilters {
   // new column null for every pre-widening row, populated for the
   // delta's. A pinned v1 reader is untouched by the widening (its
   // manifest lists only old-schema files — TxLogSpec law). Scale: the
-  // merged read pays one footer read per file for schema union — fine
-  // at a6-compaction-bounded file counts; production formats persist
-  // the schema IN the log (noted at TxLog.readEvolved), which is the
-  // O(1) form of exactly this read.
+  // merged read plans from the union schema the commit persisted IN the
+  // log (TxLog.readMerged), the O(1) form of a per-footer schema union.
   private val a28 = QueryDef.graded(
     "a28_txlog_schema_evolve",
     """WITH mx AS (SELECT (max(doc_id) * 2) // 3 AS k FROM documents),
@@ -1767,7 +1728,6 @@ object ScansFilters {
       |  UNION ALL SELECT fp, first_doc, src_len FROM delta) u
       |ORDER BY fp""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "evolve")
     val (base, delta) = Dedup.fpSplit(spark, dir,
       extra = Seq(length($"text").cast("bigint").as("src_len")),
@@ -1776,7 +1736,7 @@ object ScansFilters {
     // the widening append: delta files carry the NEW src_len column
     val v2 = TxLog.commit(table,
       TxLog.stage(delta(TxLog.read(spark, table, v1)), table), v1)
-    TxLog.readEvolved(spark, table, v2)
+    TxLog.readMerged(spark, table, v2)
       .select($"fp", $"first_doc", $"src_len")
       .orderBy($"fp")
   }
@@ -1813,7 +1773,6 @@ object ScansFilters {
       |GROUP BY change, o_orderpriority
       |ORDER BY change, o_orderpriority""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    import graft.sources.TxLog
     val table = TmpDirs.fresh("graft_txlog", dir, "delete")
     val base = Tables.orders(spark, dir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")

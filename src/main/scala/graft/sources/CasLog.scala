@@ -132,10 +132,14 @@ object CasLog {
     * catalog (`no CAS manifest v…`), never partially on disk (r14
     * advice — the scaladoc used to promise in-window stability the
     * delta-cut path did not deliver). */
-  def files(h: Head): Seq[String] =
-    try TxLog.files(logOf(h.history), h.version)
+  def files(h: Head): Seq[String] = pinned(h)(TxLog.files(_, h.version))
+
+  /** `resolve` over the Head's own history, or over the catalog's when a
+    * vacuum swept an object of the pinned chain (see [[files(h*]]). */
+  private def pinned[A](h: Head)(resolve: TxLog.Lookup => A): A =
+    try resolve(logOf(h.history))
     catch {
-      case _: java.io.FileNotFoundException => files(h.table, h.version)
+      case _: java.io.FileNotFoundException => resolve(catalogLog(h.table))
     }
 
   /** Version-pinned file list, resolved through the current catalog
@@ -157,8 +161,10 @@ object CasLog {
   def manifestLineCount(table: String, v: Int): Int =
     catalogLog(table)(v).size
 
+  /** [[TxLog.read]] on a pinned Head: its files, RAW (no DV
+    * subtraction), under the version's manifest schema. */
   def read(spark: SparkSession, h: Head): DataFrame =
-    spark.read.parquet(files(h): _*)
+    pinned(h)(TxLog.read(spark, _, h.version))
 
   /** [[TxLog.readWhere]] on a CAS-committed version: the file list
     * prunes BEFORE Spark plans, missing stats keep the file, and kept

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Mini transaction log: manifest-based ATOMIC multi-file commit +
   * snapshot-isolation reads over a plain parquet directory — the
@@ -81,8 +82,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sidecar (same full format, same exclusive publish) for the oldest
   * retained version before dropping the expired manifests its delta
   * chain passed through, so retention never breaks reconstruction;
-  * resolution prefers a checkpoint when one exists. Legacy manifests
-  * (bare path lists, or `#schema`+paths) parse as full snapshots.
+  * resolution prefers a checkpoint when one exists.
   */
 object TxLog {
 
@@ -139,7 +139,7 @@ object TxLog {
   def currentVersion(table: String): Option[Int] =
     listVersions(table).lastOption
 
-  /** Manifest line format (v3, backward-compatible):
+  /** Manifest line format (v3):
     * {{{
     *   #schema\t<StructType json>        -- metadata line(s), '#'-prefixed
     *   #delta                            -- marks a DELTA manifest (below)
@@ -149,8 +149,7 @@ object TxLog {
     * }}}
     * A FULL manifest lists the version's complete file set; a DELTA
     * manifest (append commit) lists only the staged files, and readers
-    * replay it over version v-1's resolution. A v1 manifest (bare path
-    * list) parses as full.
+    * replay it over version v-1's resolution.
     */
   private def manifestLines(table: String, v: Int): Seq[String] = {
     val mf = manifestPath(table, v)
@@ -256,22 +255,33 @@ object TxLog {
   /** The exact file list of a committed version. */
   def files(table: String, v: Int): Seq[String] = files(onDisk(table), v)
 
-  private[sources] def schemaOf(log: Lookup, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
+  private[sources] def schemaOf(log: Lookup, v: Int): StructType =
     log(v).collectFirst {
       case l if l.startsWith("#schema\t") =>
         org.apache.spark.sql.types.DataType
           .fromJson(l.substring("#schema\t".length))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
+          .asInstanceOf[StructType]
+    }.getOrElse(throw new IllegalArgumentException(
+      s"manifest v$v carries no #schema line"))
 
   /** The schema a committed version persisted IN its manifest (Delta/
     * Iceberg discipline: readers must never need an O(files) footer pass
-    * to learn the table schema). None for pre-schema (v1-format)
-    * manifests. */
-  def schemaOf(table: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
+    * to learn the table schema). Every commit writes it; a manifest
+    * without one fails loudly. */
+  def schemaOf(table: String, v: Int): StructType =
     schemaOf(onDisk(table), v)
+
+  /** The schema every read of version v plans with: its [[schemaOf]]
+    * with every field nullable, so files staged before a widening read
+    * the newer columns as nulls. */
+  private[sources] def schemaAt(log: Lookup, v: Int): StructType =
+    StructType(schemaOf(log, v).fields.map(_.copy(nullable = true)))
+
+  /** The one reader of committed files: `fs` under `schema`, so Spark
+    * plans the scan without opening a footer (no inference job). */
+  private def readFiles(spark: SparkSession, schema: StructType,
+      fs: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(fs: _*)
 
   private[sources] def statsOf(log: Lookup, v: Int)
       : Map[String, Map[String, (String, String)]] =
@@ -395,9 +405,10 @@ object TxLog {
   private[sources] def appendBody(log: Lookup, base: Int,
       staged: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String] = Nil): Seq[String] = {
+    val stagedS = stagedSchema(staged)
     val schema = mergedSchemaJson(
-      if (base == 0) None else schemaOf(log, base), staged)
-    val newLines = renderDataLines(staged, statsCols, bloomCols)
+      if (base == 0) None else Some(schemaOf(log, base)), stagedS)
+    val newLines = renderDataLines(staged, stagedS, statsCols, bloomCols)
     manifestBody(schema,
       if (base == 0 || (base + 1) % checkpointInterval == 0)
         (if (base == 0) Nil else dataLines(log, base)) ++ newLines
@@ -470,48 +481,23 @@ object TxLog {
     * data/ dir). */
   def cloneAsV1(src: String, srcV: Int, dst: String): Int =
     commitManifest(dst,
-      manifestBody(schemaOf(src, srcV).map(_.json), dataLines(src, srcV)), 0)
+      manifestBody(Some(schemaOf(src, srcV).json), dataLines(src, srcV)), 0)
 
   /** Snapshot-isolated read of a pinned version: exactly that manifest's
     * files, whatever has committed since. RAW by contract — deletion
-    * vectors are NOT subtracted here (cdc's internal empty-frame scaffold
-    * and the pre-DV keys depend on the raw view); every other public
-    * read path — [[readMerged]], [[readEvolved]], [[readWhere]],
-    * [[readKeys]], [[mergeInto]]'s rewrite — subtracts sidecars itself
-    * through [[dvGroupedRead]], so only a caller who explicitly asks
-    * for the raw view can ever see a deleted row. */
+    * vectors are NOT subtracted here (the pre-DV keys and the DV
+    * commit's own touched-file probe depend on the raw view); every
+    * other public read path — [[readMerged]], [[readWhere]],
+    * [[readKeys]], [[cdc]], [[mergeInto]]'s rewrite — reads through
+    * [[snapshot]], so only a caller who explicitly asks for the raw view
+    * can ever see a deleted row. Like every read of the log it plans
+    * from the manifest's schema ([[schemaAt]]), never from a footer. */
   def read(spark: SparkSession, table: String, v: Int): DataFrame =
-    spark.read.parquet(files(table, v): _*)
+    read(spark, onDisk(table), v)
 
-  /** Evolved snapshot read — the read path a schema-widening append
-    * needs: a commit may stage files carrying MORE columns than history
-    * (the a8 evolution discipline composed through the log), and the
-    * union schema must surface with nulls for pre-widening rows.
-    *
-    * The schema comes FROM THE MANIFEST ([[schemaOf]] — every commit
-    * persists the union schema as a `#schema` line, the Delta/Iceberg
-    * discipline), so the evolved read plans from ONE manifest read:
-    * no footer sampling, no O(files) mergeSchema pass — at 100 TB that
-    * pass opened every footer in the table on every evolved read (the
-    * r11 verdict's missing item #2, now retired). Fields are read
-    * nullable (pre-widening files lack the new columns). A pre-schema
-    * (v1-format) manifest falls back to the mergeSchema footer pass.
-    * [[read]] deliberately stays schema-free (footer sampling — correct
-    * for homogeneous tables and independent of manifest vintage).
-    * DV-AWARE (r14 — the r13 guard refused DV versions; subtracting is
-    * strictly better than refusing): dv-carrying files read minus their
-    * own sidecar's keys via [[dvGroupedRead]]. */
-  def readEvolved(spark: SparkSession, table: String, v: Int): DataFrame = {
-    val reader: Seq[String] => DataFrame = schemaOf(table, v) match {
-      case Some(s) =>
-        val nullable = org.apache.spark.sql.types.StructType(
-          s.fields.map(_.copy(nullable = true)))
-        fs => spark.read.schema(nullable).parquet(fs: _*)
-      case None =>
-        fs => spark.read.option("mergeSchema", "true").parquet(fs: _*)
-    }
-    dvGroupedRead(spark, statsOf(table, v), files(table, v), reader)
-  }
+  private[sources] def read(spark: SparkSession, log: Lookup, v: Int)
+      : DataFrame =
+    readFiles(spark, schemaAt(log, v), files(log, v))
 
   /** STATS-PRUNED snapshot read (data skipping through the log): keep
     * only the manifest files whose persisted [min, max] intersects EVERY
@@ -542,10 +528,7 @@ object TxLog {
     require(preds.nonEmpty, "readWhere needs at least one predicate")
     val stats = statsOf(log, v)
     val keep = statsKeep(files(log, v), stats, preds)
-    val base =
-      if (keep.isEmpty) emptyAt(spark, log, v)
-      else dvGroupedRead(spark, stats, keep, g => spark.read.parquet(g: _*))
-    preds.foldLeft(base) {
+    preds.foldLeft(snapshot(spark, log, v, keep)) {
       case (df, (column, lo, hi)) =>
         df.where(col(column) >= lit(lo) && col(column) <= lit(hi))
     }
@@ -595,10 +578,8 @@ object TxLog {
     // the deleted keys' bits, so a kept file may hold DV-deleted rows —
     // the sidecar subtraction removes them before the exact IN-list, so
     // a point lookup can never resurrect a deleted key
-    val base =
-      if (keep.isEmpty) emptyAt(spark, onDisk(table), v)
-      else dvGroupedRead(spark, stats, keep, g => spark.read.parquet(g: _*))
-    base.where(col(column).isin(keys.map(lit): _*))
+    snapshot(spark, onDisk(table), v, keep)
+      .where(col(column).isin(keys.map(lit): _*))
   }
 
   /** Sum of the manifest's per-file `#rows#` counts — table cardinality
@@ -612,15 +593,6 @@ object TxLog {
       stats.get(normPath(p)).flatMap(_.get("#rows#")).map(_._1.toLong))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
-
-  /** What a pruned read (readWhere/readKeys) yields when pruning
-    * removed every file: an empty frame in the table schema. */
-  private def emptyAt(spark: SparkSession, log: Lookup, v: Int): DataFrame =
-    schemaOf(log, v) match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => spark.read.parquet(files(log, v): _*).limit(0)
-    }
 
   /** The conjunctive data-skipping KEEP rule of [[readWhere]] and
     * [[mergeInto]]'s pre-prune: a file survives only if its persisted
@@ -664,10 +636,11 @@ object TxLog {
   private[sources] def rewriteBody(log: Lookup, base: Int,
       staged: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String] = Nil): Seq[String] = {
-    val lines = renderDataLines(staged, statsCols, bloomCols)
+    val stagedS = stagedSchema(staged)
+    val lines = renderDataLines(staged, stagedS, statsCols, bloomCols)
     manifestBody(
-      mergedSchemaJson(None, staged)
-        .orElse(if (base == 0) None else schemaOf(log, base).map(_.json)),
+      stagedS.orElse(if (base == 0) None else Some(schemaOf(log, base)))
+        .map(_.json),
       lines)
   }
 
@@ -769,7 +742,7 @@ object TxLog {
       }
     val touched =
       if (probeFiles.isEmpty) Set.empty[String]
-      else spark.read.parquet(probeFiles: _*)
+      else readFiles(spark, schemaAt(onDisk(table), base), probeFiles)
         .withColumn("__file", input_file_name())
         .join(changeKeys, Seq(keyCol), "left_semi")
         .select(col("__file")).distinct()
@@ -780,33 +753,19 @@ object TxLog {
     // pass 2: rewrite ONLY the touched rows — survivors (anti join on
     // the key) ⊎ the change batch's upsert rows (matched updates AND
     // not-matched inserts in one leg)
-    // read the touched files under the MANIFEST schema (the readEvolved
-    // discipline): with footer sampling, a schema-evolved table's
-    // touched set mixing old and new vintages would take whichever
-    // footer Spark sampled — and survivors from wide files would lose
-    // their real values to the null-fill, nondeterministically.
-    // The footer-sampled fallback reader is built only INSIDE its branch:
-    // spark.read.parquet resolves its schema eagerly at DataFrame
-    // construction, so building it unconditionally charged every
-    // manifest-schema merge a redundant footer pass over the touched
-    // files that the Some(s) branch then discarded (r13 advice).
-    val mkReader: Seq[String] => DataFrame = schemaOf(table, base) match {
-      case Some(s) =>
-        val nullable = org.apache.spark.sql.types.StructType(
-          s.fields.map(_.copy(nullable = true)))
-        fs => spark.read.schema(nullable).parquet(fs: _*)
-      case None => fs => spark.read.parquet(fs: _*)
-    }
+    // the touched files read under the MANIFEST schema ([[snapshot]]):
+    // with footer sampling, a schema-evolved table's touched set mixing
+    // old and new vintages would take whichever footer Spark sampled —
+    // and survivors from wide files would lose their real values to the
+    // null-fill, nondeterministically.
     // DV-aware: each touched file group reads through ITS OWN sidecar
-    // subtraction ([[dvGroupedRead]]) so a DV-deleted row can never
-    // resurrect as a survivor; the rewrite retires those sidecars — the
-    // new lines carry no #dv#, and untouched lines keep theirs verbatim.
-    val touchedDf =
-      if (touchedFiles.isEmpty) read(spark, table, base).limit(0)
-      else dvGroupedRead(spark, statsOf(table, base), touchedFiles, mkReader)
+    // subtraction so a DV-deleted row can never resurrect as a survivor;
+    // the rewrite retires those sidecars — the new lines carry no #dv#,
+    // and untouched lines keep theirs verbatim.
+    val touchedDf = snapshot(spark, onDisk(table), base, touchedFiles)
     // schema-widening merge (Delta's mergeSchema-on-MERGE): a change
     // batch may carry columns the target lacks — survivors take nulls
-    // there, and the commit's union schema widens so readEvolved
+    // there, and the commit's union schema widens so readMerged
     // surfaces the new column with nulls on every untouched file too
     val have = touchedDf.columns.toSet
     require(have.subsetOf(dataCols.toSet),
@@ -823,10 +782,11 @@ object TxLog {
       .unionByName(changes.where(checkedOp === lit("upsert"))
         .select(dataCols.map(col): _*))
     val staged = stage(merged, table)
-    val lines = keptLines ++ renderDataLines(staged, statsCols, bloomCols)
-    commitManifest(table,
-      manifestBody(mergedSchemaJson(schemaOf(table, base), staged), lines),
-      base)
+    val stagedS = stagedSchema(staged)
+    val lines = keptLines ++
+      renderDataLines(staged, stagedS, statsCols, bloomCols)
+    commitManifest(table, manifestBody(
+      mergedSchemaJson(Some(schemaOf(table, base)), stagedS), lines), base)
   }
 
   /** MERGE with optimistic-concurrency RETRY — the recompute loop a
@@ -878,11 +838,17 @@ object TxLog {
     * — a million-row delete on a 100 TB table moves megabytes; the read
     * tax is an anti-join on the dv'd files only, and the a6/a25
     * compaction cycle retires it (TxLogSpec law: MoR read ≡ post-COW
-    * read). Key column must be string-typed (the bloom contract) and
-    * unique per row for exact semantics. */
+    * read). Key column must be string-typed (the bloom contract),
+    * unique per row for exact semantics, and typed as the table's own
+    * column (sidecars read under the manifest's type for it). */
   def commitDeleteVectors(spark: SparkSession, table: String, base: Int,
       keyCol: String, deleteKeys: DataFrame): Int = {
     import org.apache.spark.sql.functions.{col, input_file_name}
+    val schema = schemaOf(table, base)
+    val keyType = deleteKeys.schema(keyCol).dataType
+    require(keyType == schema(keyCol).dataType,
+      s"delete keys' $keyCol is ${keyType.simpleString}, the table's is " +
+        schema(keyCol).dataType.simpleString)
     val keys = deleteKeys.select(col(keyCol)).distinct()
     val touched = read(spark, table, base)
       .withColumn("__file", input_file_name())
@@ -899,7 +865,7 @@ object TxLog {
     val allKeys =
       if (priorDvs.isEmpty) keys
       else keys.unionByName(
-        spark.read.parquet(priorDvs: _*).select(col(keyCol))).distinct()
+        sidecarKeys(spark, schema, keyCol, priorDvs)).distinct()
     // one part file: a sidecar is small by contract (keys, not data) and
     // a single object keeps the manifest entry and the read-side open
     // O(1) per dv'd file group
@@ -920,51 +886,56 @@ object TxLog {
         path + "\t" + renderStats(merged)
       }
     }
-    commitManifest(table,
-      manifestBody(schemaOf(table, base).map(_.json), lines), base)
+    commitManifest(table, manifestBody(Some(schema.json), lines), base)
   }
 
   /** Merge-on-read snapshot: dv-carrying files read minus their sidecar
     * keys (one anti-join per distinct sidecar), clean files read as-is.
     * The subtraction happens per sidecar GROUP, so the anti-join's build
     * side is each sidecar's own key set — never a union of all deletes
-    * against all files. */
+    * against all files. The read plans from the manifest's schema
+    * ([[schemaAt]]): a version whose commit widened the schema (a
+    * widening append or merge — the a8 evolution discipline composed
+    * through the log) surfaces the union schema, in manifest order, with
+    * nulls for the rows of files staged before the widening — no footer
+    * sampling, no O(files) mergeSchema pass. */
   def readMerged(spark: SparkSession, table: String, v: Int): DataFrame = {
-    require(files(table, v).nonEmpty, s"version $v of $table has no files")
-    mergedRead(spark, table, v, files(table, v))
+    val fs = files(table, v)
+    require(fs.nonEmpty, s"version $v of $table has no files")
+    snapshot(spark, onDisk(table), v, fs)
   }
 
-  /** The DV-subtracting read over a FILE SUBSET of version v: dv-free
-    * files read raw, each sidecar group anti-joined against its own
-    * sidecar keys. Shared by [[readMerged]] (the whole version) and
-    * [[cdc]]'s rewrite diff (the removed/added sides). */
-  private def mergedRead(spark: SparkSession, table: String, v: Int,
-      fs: Seq[String]): DataFrame =
-    dvGroupedRead(spark, statsOf(table, v), fs,
-      g => spark.read.parquet(g: _*))
-
-  /** The one DV-subtraction shape every sidecar-aware read composes
-    * with: group `fs` by their `#dv#` entry, read each group through
-    * `reader` (raw, or the manifest-schema reader — caller's choice),
-    * and anti-join each dv'd group against ITS OWN sidecar's keys —
-    * never a union of all deletes against all files. Shared by
-    * [[readMerged]], [[mergeInto]]'s touched-file rewrite, and the
-    * skipping reads ([[readWhere]]/[[readKeys]]/[[readEvolved]]), so
-    * "subtract the sidecar" has exactly one implementation to get
-    * wrong. Caller guarantees `fs` nonempty. */
-  private def dvGroupedRead(spark: SparkSession,
-      stats: Map[String, Map[String, (String, String)]], fs: Seq[String],
-      reader: Seq[String] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    fs.groupBy(p => stats.get(normPath(p)).flatMap(_.get("#dv#")))
+  /** The one DV-aware snapshot over a FILE SUBSET `fs` of version v,
+    * under v's manifest schema: group `fs` by their `#dv#` entry, read
+    * each group, and anti-join each dv'd group against ITS OWN sidecar's
+    * keys — never a union of all deletes against all files. Empty `fs`
+    * yields an empty frame in that schema. Shared by [[readMerged]] (the
+    * whole version), the skipping reads ([[readWhere]]/[[readKeys]]),
+    * [[cdc]]'s rewrite diff and [[mergeInto]]'s touched-file rewrite,
+    * so "subtract the sidecar" has exactly one implementation to get
+    * wrong. */
+  private def snapshot(spark: SparkSession, log: Lookup, v: Int,
+      fs: Seq[String]): DataFrame = {
+    val schema = schemaAt(log, v)
+    val stats = statsOf(log, v)
+    if (fs.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row], schema)
+    else fs.groupBy(p => stats.get(normPath(p)).flatMap(_.get("#dv#")))
       .toSeq.sortBy(_._1.map(_._1)).map {
-        case (None, g) => reader(g)
+        case (None, g) => readFiles(spark, schema, g)
         case (Some((sidecar, keyCol)), g) =>
-          reader(g).join(
-            spark.read.parquet(sidecar).select(col(keyCol)),
+          readFiles(spark, schema, g).join(
+            sidecarKeys(spark, schema, keyCol, Seq(sidecar)),
             Seq(keyCol), "left_anti")
       }.reduceLeft(_ unionByName _)
   }
+
+  /** The key column of `#dv#` sidecars, read under the table's type for
+    * it (a sidecar holds that one column). */
+  private def sidecarKeys(spark: SparkSession, schema: StructType,
+      keyCol: String, sidecars: Seq[String]): DataFrame =
+    readFiles(spark, StructType(Seq(schema(keyCol))), sidecars)
 
   /** Publish `body` as version `base + 1`: write it to a hidden temp
     * name, then [[publishExclusive]] it under the versioned name. */
@@ -1022,9 +993,11 @@ object TxLog {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
 
   /** Schema of the staged files — ONE footer read (staged files come
-    * from one `df.write`, so they are schema-homogeneous). */
-  private def stagedSchema(staged: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
+    * from one `df.write`, so they are schema-homogeneous), the only
+    * schema inference in the log: the commit persists it (widened) as
+    * the `#schema` line, and its stats and bloom passes read the staged
+    * files under it. */
+  private def stagedSchema(staged: Seq[String]): Option[StructType] =
     if (staged.isEmpty) None
     else activeSpark.map(_.read.parquet(staged.head).schema)
 
@@ -1033,10 +1006,9 @@ object TxLog {
     * computed at COMMIT time from one footer instead of at READ time
     * from all of them. A dataType conflict on a shared column is a
     * corrupt commit and fails loudly. */
-  private def mergedSchemaJson(
-      base: Option[org.apache.spark.sql.types.StructType],
-      staged: Seq[String]): Option[String] =
-    (base, stagedSchema(staged)) match {
+  private def mergedSchemaJson(base: Option[StructType],
+      staged: Option[StructType]): Option[String] =
+    (base, staged) match {
       case (Some(b), Some(a)) =>
         b.fields.foreach { f =>
           a.fields.find(_.name == f.name).foreach { g =>
@@ -1046,7 +1018,7 @@ object TxLog {
           }
         }
         val known = b.fieldNames.toSet
-        Some(org.apache.spark.sql.types.StructType(
+        Some(StructType(
           b.fields ++ a.fields.filterNot(f => known(f.name))).json)
       case (b, a) => a.orElse(b).map(_.json)
     }
@@ -1077,11 +1049,11 @@ object TxLog {
     * BITMAP IS RENDERED IN THE EXECUTORS (a typed map over the per-file
     * groups), so the driver collects O(files × bloomBytes) base64
     * strings — manifest-sized traffic, never O(keys). */
-  private def bloomB64(spark: SparkSession, staged: Seq[String],
+  private def bloomB64(spark: SparkSession, stagedDf: DataFrame,
       column: String): Map[String, String] = {
     import org.apache.spark.sql.functions.{col, explode, input_file_name}
     import spark.implicits._
-    spark.read.parquet(staged: _*)
+    stagedDf
       .where(col(column).isNotNull)
       .select(input_file_name().as("f"),
         explode(bloomPositions(col(column))).as("pos"))
@@ -1110,10 +1082,12 @@ object TxLog {
     * it), feeding [[rowCountOf]]'s manifest-only cardinality; and each
     * `bloomCols` column lands as `#bloom#<col>` → [base64 bits, "m,k"]
     * for [[readKeys]]' point-lookup skipping. Pseudo-entry keys start
-    * with '#', which [[readWhere]]'s real-column lookups never match. */
-  private def renderDataLines(staged: Seq[String],
-      statsCols: Seq[String], bloomCols: Seq[String] = Nil): Seq[String] =
-    if ((statsCols.isEmpty && bloomCols.isEmpty) || staged.isEmpty) staged
+    * with '#', which [[readWhere]]'s real-column lookups never match.
+    * The staged files read under `schema`, their [[stagedSchema]] (None
+    * only when nothing was staged). */
+  private def renderDataLines(staged: Seq[String], schema: Option[StructType],
+      statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] =
+    if ((statsCols.isEmpty && bloomCols.isEmpty) || schema.isEmpty) staged
     else {
       import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
       val spark = activeSpark.getOrElse(throw new IllegalStateException(
@@ -1122,7 +1096,8 @@ object TxLog {
         min(col(c)).cast("string").as(s"mn_$c"),
         max(col(c)).cast("string").as(s"mx_$c"))) :+
         count(lit(1)).cast("string").as("n_rows")
-      val byPath = spark.read.parquet(staged: _*)
+      val stagedDf = readFiles(spark, schema.get, staged)
+      val byPath = stagedDf
         .groupBy(input_file_name().as("f"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -1138,7 +1113,7 @@ object TxLog {
           normPath(r.getString(0)) -> (st :+ ("#rows#" -> ((n, n))))
         }.toMap
       val blooms: Seq[(String, Map[String, String])] =
-        bloomCols.map(c => c -> bloomB64(spark, staged, c))
+        bloomCols.map(c => c -> bloomB64(spark, stagedDf, c))
       // a staged path missing from the aggregate is only provably empty
       // if reading it yields zero rows — a future path-normalization or
       // listing mismatch between byPath keys and `staged` must fail
@@ -1147,7 +1122,7 @@ object TxLog {
       // the probe runs only when zero-row part files exist at all.
       val bare = staged.filterNot(p => byPath.contains(normPath(p)))
       if (bare.nonEmpty)
-        require(spark.read.parquet(bare: _*).isEmpty,
+        require(readFiles(spark, schema.get, bare).isEmpty,
           s"staged files missing from the stats aggregate are not empty — " +
             s"path-normalization mismatch? ${bare.take(3).mkString(", ")}")
       staged.map { p =>
@@ -1257,27 +1232,22 @@ object TxLog {
       : DataFrame = {
     import org.apache.spark.sql.functions.lit
     require(vFrom < vTo, s"cdc needs vFrom < vTo, got $vFrom → $vTo")
-    val fromSet = files(table, vFrom).toSet
-    val to = files(table, vTo)
+    val log = onDisk(table)
+    val fromSet = files(log, vFrom).toSet
+    val to = files(log, vTo)
     val added = to.filterNot(fromSet)
     val removed = (fromSet -- to.toSet).toSeq.sorted
-    def readOrEmpty(fs: Seq[String]) =
-      if (fs.isEmpty) read(spark, table, vTo).limit(0)
-      else spark.read.parquet(fs: _*)
-    // a rewrite's content diff must compare MERGED views: a removed
-    // file that carried a deletion vector contributes only its live
-    // rows — reading it raw would re-report every DV-deleted row as a
-    // spurious 'delete' when a compaction retires the sidecars (and
+    // a rewrite's content diff must compare MERGED views ([[snapshot]]):
+    // a removed file that carried a deletion vector contributes only its
+    // live rows — reading it raw would re-report every DV-deleted row as
+    // a spurious 'delete' when a compaction retires the sidecars (and
     // break the pure-compaction-yields-zero-rows law on MoR tables)
-    def mergedSide(fs: Seq[String], v: Int): DataFrame =
-      if (fs.isEmpty) readOrEmpty(fs)
-      else mergedRead(spark, table, v, fs)
     val fileDiff =
       if (removed.isEmpty)
-        mergedSide(added, vTo).withColumn("change", lit("insert"))
+        snapshot(spark, log, vTo, added).withColumn("change", lit("insert"))
       else {
-        val before = mergedSide(removed, vFrom)
-        val after = mergedSide(added, vTo)
+        val before = snapshot(spark, log, vFrom, removed)
+        val after = snapshot(spark, log, vTo, added)
         after.exceptAll(before).withColumn("change", lit("insert"))
           .unionByName(
             before.exceptAll(after).withColumn("change", lit("delete")))
@@ -1287,24 +1257,24 @@ object TxLog {
     // The deleted rows are recoverable exactly: (new sidecar keys ∖ old)
     // semi-joined against the files the new sidecar governs — O(dv'd
     // files + sidecars), the honest CDF read for a DV delete.
-    val stF = statsOf(table, vFrom)
-    val stT = statsOf(table, vTo)
+    val stF = statsOf(log, vFrom)
+    val stT = statsOf(log, vTo)
     val dvGroups = to.filter(fromSet)
       .map(p => (stF.get(normPath(p)).flatMap(_.get("#dv#")),
         stT.get(normPath(p)).flatMap(_.get("#dv#")), p))
       .collect { case (o, Some(n), p) if !o.contains(n) => ((o, n), p) }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq
       .sortBy(_._1._2._1)
+    val sTo = schemaAt(log, vTo)
     val dvDeletes = dvGroups.map { case ((oldDv, (sidecar, keyCol)), fs) =>
-      import org.apache.spark.sql.functions.col
-      val newKeys = spark.read.parquet(sidecar).select(col(keyCol))
+      val newKeys = sidecarKeys(spark, sTo, keyCol, Seq(sidecar))
       val newly = oldDv match {
         case Some((oldSc, _)) => newKeys.join(
-          spark.read.parquet(oldSc).select(col(keyCol)),
+          sidecarKeys(spark, schemaAt(log, vFrom), keyCol, Seq(oldSc)),
           Seq(keyCol), "left_anti")
         case None => newKeys
       }
-      spark.read.parquet(fs: _*).join(newly, Seq(keyCol), "left_semi")
+      readFiles(spark, sTo, fs).join(newly, Seq(keyCol), "left_semi")
         .withColumn("change", lit("delete"))
     }
     dvDeletes.foldLeft(fileDiff)(_ unionByName _)

@@ -448,18 +448,19 @@ object StreamingJobs {
     * BOTH directions — exactly what Spark needs to evict join state: a
     * buffered view can be dropped once the purchase-side watermark passes
     * `v_ts + 1 hour`, so state is bounded at any scale. The same
-    * expression tree runs in batch (`streaming = false`) and
-    * `StreamingSpec` asserts stream ≡ batch on the finite stream.
+    * expression tree runs in batch (the optimizer drops a batch
+    * watermark) and `StreamingSpec` asserts stream ≡ batch on the finite
+    * stream.
     */
-  def attributionJoin(events: DataFrame, streaming: Boolean = true): DataFrame = {
-    val views0 = events.where(col("event_type") === "view")
+  def attributionJoin(events: DataFrame): DataFrame = {
+    val views = events.where(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("ts_us").as("v_ts"))
-    val purch0 = events.where(col("event_type") === "purchase")
+      .withWatermark("v_ts", "1 hour")
+    val purch = events.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts_us").as("p_ts"), col("value"))
-    val views = if (streaming) views0.withWatermark("v_ts", "1 hour") else views0
-    val purch = if (streaming) purch0.withWatermark("p_ts", "1 hour") else purch0
+      .withWatermark("p_ts", "1 hour")
     views.join(purch,
       expr("""v_user = p_user AND
              |p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour""".stripMargin))
@@ -469,19 +470,18 @@ object StreamingJobs {
 
   /** Per-user session windows (1 h inactivity gap) via the native
     * `session_window` expression. The SAME call works on a batch
-    * DataFrame — `sessionCounts(batchEvents, streaming = false)` — which
-    * is Spark's batch/streaming unification in one line; `StreamingSpec`
-    * asserts the two agree. In streaming, state for a session is evicted
-    * once the watermark passes its close — bounded memory at any scale.
+    * DataFrame — `sessionCounts(batchEvents)`, whose watermark the
+    * optimizer drops — which is Spark's batch/streaming unification in
+    * one line; `StreamingSpec` asserts the two agree. In streaming, state
+    * for a session is evicted once the watermark passes its close —
+    * bounded memory at any scale.
     */
-  def sessionCounts(events: DataFrame, streaming: Boolean = true): DataFrame = {
-    val src = if (streaming) events.withWatermark("ts_us", "1 hour") else events
-    src
+  def sessionCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts_us", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts_us"), "1 hour").as("sw"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"))
-  }
 
   /** Per-event debounce verdict for [[debounceMonitor]]. */
   final case class DebounceVerdict(event_id: Long, kept: Boolean)

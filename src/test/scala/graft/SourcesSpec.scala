@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.sources.{Fixtures, Formats, Tables, TmpDirs}
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -106,22 +102,6 @@ class SourcesSpec extends SparkSpec {
       assert(conf.get("spark.sql.session.timeZone") === "UTC")
       assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     }
-  }
-
-  /** `body`'s value and the Spark jobs started while it ran, the listener
-    * bus drained on both sides so the count is exactly its own. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val v = body
-      GraftListenerBus.drain(spark.sparkContext)
-      (v, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private val loaders: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

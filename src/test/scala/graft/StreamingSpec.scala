@@ -30,7 +30,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = key(StreamingJobs.drainToMemory(
       StreamingJobs.sessionCounts(stream), "h4_sessions", "append"))
     val batchEvents = graft.sources.Tables.eventsUs(spark, sfDir)
-    val batch = key(StreamingJobs.sessionCounts(batchEvents, streaming = false))
+    val batch = key(StreamingJobs.sessionCounts(batchEvents))
     assert(streamed.nonEmpty)
     // append mode only emits sessions closed by the final watermark (max
     // event time − 1 h gap): everything emitted must match batch exactly,
@@ -101,7 +101,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = key(StreamingJobs.drainToMemory(
       StreamingJobs.attributionJoin(stream), "h4_attr", "append"))
     val batch = key(StreamingJobs.attributionJoin(
-      graft.sources.Tables.eventsUs(spark, sfDir), streaming = false))
+      graft.sources.Tables.eventsUs(spark, sfDir)))
     assert(batch.nonEmpty)
     // an inner stream-stream join emits a pair as soon as both rows have
     // arrived — on a finite AvailableNow stream every pair is emitted

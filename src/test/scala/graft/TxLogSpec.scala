@@ -252,38 +252,35 @@ class TxLogSpec extends SparkSpec {
     // old reader: untouched by the widening (its files are old-schema)
     assert(TxLog.read(spark, t, v1).columns.toSeq === Seq("id", "v"))
     // merged head: union schema, null where history predates the column
-    val head = TxLog.readEvolved(spark, t, v2)
+    val head = TxLog.readMerged(spark, t, v2)
     assert(head.columns.sorted.toSeq === Seq("extra", "id", "v"))
     assert(head.collect().map(_.toSeq).toSet ===
       Set(Seq(1L, "a", null), Seq(2L, "b", 7L)))
   }
 
-  test("the commit persists the union schema IN the manifest; evolved " +
-      "reads plan from it, legacy manifests fall back to footer merge") {
+  test("the commit persists the union schema IN the manifest; merged " +
+      "reads plan from it") {
     import org.apache.spark.sql.functions.lit
     val t = freshTable("schema_line")
     val v1 = TxLog.commit(t, TxLog.stage(df(1L -> "a"), t), 0)
-    assert(TxLog.schemaOf(t, v1).map(_.fieldNames.toSeq) ===
-      Some(Seq("id", "v")), "every commit records its schema")
+    assert(TxLog.schemaOf(t, v1).fieldNames.toSeq ===
+      Seq("id", "v"), "every commit records its schema")
     val wide = df(2L -> "b").withColumn("extra", lit(7L))
     val v2 = TxLog.commit(t, TxLog.stage(wide, t), v1)
-    assert(TxLog.schemaOf(t, v2).map(_.fieldNames.toSeq) ===
-      Some(Seq("id", "v", "extra")),
+    assert(TxLog.schemaOf(t, v2).fieldNames.toSeq ===
+      Seq("id", "v", "extra"),
       "a widening append widens the PERSISTED schema (base ++ new)")
-    val head = TxLog.readEvolved(spark, t, v2)
+    val head = TxLog.readMerged(spark, t, v2)
     assert(head.schema.fieldNames.toSeq === Seq("id", "v", "extra"),
-      "the evolved read's schema is the manifest's, in manifest order")
+      "the merged read's schema is the manifest's, in manifest order")
     assert(head.collect().map(_.toSeq).toSet ===
       Set(Seq(1L, "a", null), Seq(2L, "b", 7L)))
-    // legacy (pre-schema, bare path list) manifest: schemaOf is None and
-    // readEvolved falls back to the O(files) mergeSchema footer pass
+    // a manifest without its #schema line (a bare path list) has no
+    // schema to plan from: reads fail loudly, never sample a footer
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$t/_manifests/v3.manifest"),
       (TxLog.files(t, v2).mkString("\n") + "\n").getBytes("UTF-8"))
-    assert(TxLog.schemaOf(t, 3) === None)
-    assert(TxLog.readEvolved(spark, t, 3).columns.sorted.toSeq ===
-      Seq("extra", "id", "v"),
-      "legacy manifests must still read evolved via footer merging")
+    intercept[IllegalArgumentException](TxLog.read(spark, t, 3))
   }
 
   test("per-file [min,max] stats in the manifest prune a predicate read " +
@@ -573,8 +570,7 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.files(t, 5) === files5,
       "a retained delta above the cut replays through the checkpoint")
     intercept[IllegalArgumentException](TxLog.files(t, 3))
-    assert(TxLog.schemaOf(t, 4).map(_.fieldNames.toSeq) ===
-      Some(Seq("id", "v")))
+    assert(TxLog.schemaOf(t, 4).fieldNames.toSeq === Seq("id", "v"))
     // vacuum is idempotent at the same cut
     TxLog.vacuum(t, keepLast = 2)
     assert(TxLog.read(spark, t, 5).count() === 5)
@@ -658,7 +654,7 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("mergeInto widens schema: survivors take nulls in the new " +
-      "column; readEvolved surfaces it across untouched files; a merge " +
+      "column; readMerged surfaces it across untouched files; a merge " +
       "never drops columns") {
     val t = freshTable("merge_evolve")
     val base = (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -668,7 +664,7 @@ class TxLogSpec extends SparkSpec {
     val changes = Seq((5L, "V5", 99L, "upsert"), (60L, "NEW", 42L, "upsert"))
       .toDF("id", "v", "extra", "op")
     val v2 = TxLog.mergeInto(spark, t, v1, changes, "id")
-    val out = TxLog.readEvolved(spark, t, v2)
+    val out = TxLog.readMerged(spark, t, v2)
     assert(out.columns.toSeq === Seq("id", "v", "extra"),
       "the union schema must widen in base-then-new order")
     val byId = out.collect().map(r =>
@@ -858,7 +854,7 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, t, v4).count() === 85)
   }
 
-  test("skipping reads are DV-aware: readWhere/readKeys/readEvolved " +
+  test("skipping reads are DV-aware: readWhere/readKeys/readMerged " +
       "subtract the sidecar after pruning — a deleted key can never " +
       "resurrect through a pruned read (r14: subtract beats refuse)") {
     val t = freshTable("dv_guard")
@@ -878,8 +874,8 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.readKeys(spark, t, v2, "k", Seq("k3")).count() === 0,
       "a bloom-pruned lookup must never resurrect a DV-deleted key")
     assert(TxLog.readKeys(spark, t, v2, "k", Seq("k4", "k3")).count() === 1)
-    // evolved read: manifest-schema planning composes with subtraction
-    assert(TxLog.readEvolved(spark, t, v2).count() === 19)
+    // merged read: manifest-schema planning composes with subtraction
+    assert(TxLog.readMerged(spark, t, v2).count() === 19)
     // the pre-DV version stays fully readable through every path
     assert(TxLog.readWhere(spark, t, v1, Seq(("n", "1", "10")))
       .count() === 10)
@@ -1031,5 +1027,29 @@ class TxLogSpec extends SparkSpec {
     // the head search sees the rebuild
     assert(TxLog.readPartitioned(spark, t, v2).where($"cid" === 2L)
       .count() === (1L to 100L).count(_ % 3 == 2))
+  }
+
+  test("a log read starts no job: every read of a committed version " +
+      "plans from its manifest schema, never from a footer") {
+    import graft.sources.CasLog
+    val t = freshTable("no_job_reads")
+    val v1 = TxLog.commit(t,
+      TxLog.stage((1L to 20L).map(i => (s"k$i", i)).toDF("k", "n"), t), 0,
+      statsCols = Seq("n"), bloomCols = Seq("k"))
+    val v2 = TxLog.commitDeleteVectors(spark, t, v1, "k",
+      Seq(Tuple1("k3")).toDF("k"))
+    val c = freshTable("no_job_cas")
+    CasLog.commit(c, TxLog.stage(df(1L -> "a"), c), 0)
+    val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "read" -> (() => TxLog.read(spark, t, v2)),
+      "readMerged" -> (() => TxLog.readMerged(spark, t, v2)),
+      "readWhere" -> (() => TxLog.readWhere(spark, t, v2, Seq(("n", "1", "10")))),
+      "readKeys" -> (() => TxLog.readKeys(spark, t, v2, "k", Seq("k4"))),
+      "cdc" -> (() => TxLog.cdc(spark, t, v1, v2)),
+      "CasLog.read" -> (() => CasLog.read(spark, CasLog.head(c).get)))
+    for ((name, build) <- reads) {
+      val (_, jobs) = jobsDuring(build())
+      assert(jobs === 0, s"building $name started $jobs job(s)")
+    }
   }
 }
